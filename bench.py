@@ -20,6 +20,7 @@ import json
 import os
 import sys
 import time
+from collections.abc import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -76,7 +77,8 @@ def _host_load(a: dict | None, b: dict | None, wall: float) -> dict:
 # attempt was contended it self-marks {"contended": true} so no reader
 # can mistake the number for a quiet-window measurement.
 STEAL_RETRY_PCT = 1.0
-MAX_ATTEMPTS = int(os.environ.get("SPARK_GRAFT_BENCH_MAX_ATTEMPTS", "3"))
+# at least one attempt: a value <= 0 would leave nothing to pick from
+MAX_ATTEMPTS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_MAX_ATTEMPTS", "3")))
 
 
 def _contention_verdict(
@@ -106,6 +108,25 @@ def _pick_best_attempt(attempts: list[dict]) -> int:
         return (s is None, s if s is not None else 0.0, i)
 
     return min(range(len(attempts)), key=key)
+
+
+def _run_attempts(run_sweep: Callable[[], dict], max_attempts: int) -> list[dict]:
+    """Run the sweep until an attempt is uncontended or ``max_attempts``
+    attempts have run; every attempt is returned."""
+    attempts: list[dict] = []
+    for attempt in range(1, max_attempts + 1):
+        attempts.append(run_sweep())
+        retry, _ = _contention_verdict(attempts[-1]["host_load"], attempt, max_attempts)
+        if not retry:
+            break
+        print(
+            f"# bench attempt {attempt} contended "
+            f"(steal {attempts[-1]['host_load'].get('steal_pct')}% > "
+            f"{STEAL_RETRY_PCT}%): re-running sweep "
+            f"({max_attempts - attempt} retr{'y' if max_attempts - attempt == 1 else 'ies'} left)",
+            file=sys.stderr,
+        )
+    return attempts
 
 
 def main() -> None:
@@ -261,23 +282,7 @@ def main() -> None:
             ),
         }
 
-    attempts: list[dict] = []
-    contended = False
-    for attempt in range(1, MAX_ATTEMPTS + 1):
-        attempts.append(run_sweep())
-        retry, contended = _contention_verdict(
-            attempts[-1]["host_load"], attempt, MAX_ATTEMPTS
-        )
-        if not retry:
-            break
-        print(
-            f"# bench attempt {attempt} contended "
-            f"(steal {attempts[-1]['host_load'].get('steal_pct')}% > "
-            f"{STEAL_RETRY_PCT}%): re-running sweep "
-            f"({MAX_ATTEMPTS - attempt} retr{'y' if MAX_ATTEMPTS - attempt == 1 else 'ies'} left)",
-            file=sys.stderr,
-        )
-
+    attempts = _run_attempts(run_sweep, MAX_ATTEMPTS)
     best_i = _pick_best_attempt(attempts)
     chosen = attempts[best_i]
     # re-judge the CHOSEN attempt (it may be an earlier, quieter one)

@@ -16,6 +16,17 @@ Every helper swallows its own failures (a missing sf0.001 checkout or
 MLlib edge must not kill a bench run); callers pass ``log`` to surface
 the skip.
 
+``warm_all`` runs the five classes concurrently, one thread each,
+longest (ALS) first, and returns once all have finished.  They share no
+state, and one class alone leaves most cores idle on JIT, class loading
+and Python worker start-up, so overlapping them shortens fresh-session
+setup.  Import rule: everything a helper needs is imported at the top
+of this module, never inside a helper.  A process's first import of
+``pyspark.ml`` is not thread-safe: concurrent first imports fail with
+``ImportError`` (partially initialized ``pyspark.ml.wrapper``) or
+``KeyError: 'pyspark.ml'``, and the helper would log a failure and warm
+nothing.
+
 Warmup classes and why each exists:
 - ``warm_parquet``: footer/codec initialization for the sweep's input.
 - ``warm_als``: the first REAL MLlib ALS fit in a JVM pays JIT across
@@ -36,6 +47,17 @@ Warmup classes and why each exists:
 from __future__ import annotations
 
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
+from functools import partial
+
+from pyspark.ml.clustering import KMeans
+from pyspark.ml.evaluation import RegressionEvaluator
+from pyspark.ml.feature import VectorAssembler
+from pyspark.ml.recommendation import ALS
+from pyspark.sql import functions as F
+
+from .operators.graph import pagerank, pagerank_weighted
+from .operators.similarity import arrow_dot_topk
 
 
 def _noop(msg: str) -> None:  # pragma: no cover - trivial
@@ -51,10 +73,6 @@ def warm_parquet(spark, sf_dir: str, log: Callable[[str], None] = _noop) -> None
 
 def warm_als(spark, log: Callable[[str], None] = _noop) -> None:
     try:
-        from pyspark.ml.evaluation import RegressionEvaluator
-        from pyspark.ml.recommendation import ALS
-        from pyspark.sql import functions as F
-
         try:
             warm = (
                 spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
@@ -97,10 +115,6 @@ def warm_als(spark, log: Callable[[str], None] = _noop) -> None:
 
 def warm_kmeans(spark, log: Callable[[str], None] = _noop) -> None:
     try:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.feature import VectorAssembler
-        from pyspark.sql import functions as F
-
         pts = spark.range(256).select(
             (F.col("id") % 17).cast("double").alias("x"),
             (F.col("id") % 13).cast("double").alias("y"),
@@ -114,10 +128,6 @@ def warm_kmeans(spark, log: Callable[[str], None] = _noop) -> None:
 
 def warm_arrow(spark, log: Callable[[str], None] = _noop) -> None:
     try:
-        from pyspark.sql import functions as F
-
-        from .operators.similarity import arrow_dot_topk
-
         toy = spark.range(256).select(
             F.col("id").cast("int").alias("id"),
             F.array(
@@ -131,10 +141,6 @@ def warm_arrow(spark, log: Callable[[str], None] = _noop) -> None:
 
 def warm_iterative(spark, log: Callable[[str], None] = _noop) -> None:
     try:
-        from pyspark.sql import functions as F
-
-        from .operators.graph import pagerank, pagerank_weighted
-
         nodes = spark.range(101).select(F.col("id"))
         tedges = spark.range(3000).select(
             (F.col("id") % 97).alias("u"),
@@ -148,9 +154,15 @@ def warm_iterative(spark, log: Callable[[str], None] = _noop) -> None:
 
 
 def warm_all(spark, sf_dir: str, log: Callable[[str], None] = _noop) -> None:
-    """Every warmup class, in bench.py's canonical order."""
-    warm_parquet(spark, sf_dir, log)
-    warm_als(spark, log)
-    warm_kmeans(spark, log)
-    warm_arrow(spark, log)
-    warm_iterative(spark, log)
+    """Every warmup class at once, one thread each, longest first."""
+    classes = (
+        partial(warm_als, spark, log),
+        partial(warm_parquet, spark, sf_dir, log),
+        partial(warm_iterative, spark, log),
+        partial(warm_arrow, spark, log),
+        partial(warm_kmeans, spark, log),
+    )
+    with ThreadPoolExecutor(max_workers=len(classes)) as pool:
+        futures = [pool.submit(c) for c in classes]
+    for f in futures:
+        f.result()

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
@@ -13,7 +14,7 @@ from hypothesis import settings
 settings.register_profile("deterministic", derandomize=True)
 settings.load_profile("deterministic")
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from movie_recommendation_engine_spark.session import get_spark
 

@@ -12,11 +12,19 @@ import os
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-spec = importlib.util.spec_from_file_location(
-    "bench_under_test", os.path.join(_ROOT, "bench.py")
-)
-bench = importlib.util.module_from_spec(spec)
-spec.loader.exec_module(bench)
+
+def _load_bench():
+    """A fresh bench.py module: its settings are read from the
+    environment at import."""
+    spec = importlib.util.spec_from_file_location(
+        "bench_under_test", os.path.join(_ROOT, "bench.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+bench = _load_bench()
 
 
 def test_quiet_window_no_retry_no_mark():
@@ -86,3 +94,18 @@ def test_chosen_quiet_attempt_unmarks_contended():
         attempts[best]["host_load"], bench.MAX_ATTEMPTS, bench.MAX_ATTEMPTS
     )
     assert not contended
+
+
+def test_max_attempts_zero_runs_exactly_one_attempt(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_MAX_ATTEMPTS", "0")
+    b = _load_bench()
+    assert b.MAX_ATTEMPTS == 1
+    calls = []
+
+    def sweep():
+        calls.append(1)
+        return _attempt(4.17)  # contended: retried while attempts remain
+
+    attempts = b._run_attempts(sweep, b.MAX_ATTEMPTS)
+    assert len(calls) == 1 and len(attempts) == 1
+    assert b._pick_best_attempt(attempts) == 0

@@ -6,6 +6,7 @@ lengths) is preserved exactly."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -13,13 +14,14 @@ import pytest
 from pyspark.sql import functions as F
 
 SRC = "/root/testdata/sf0.001"
+TOOLS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
 
 
 @pytest.fixture(scope="module")
 def gen_dir(spark):
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import gen_scale_sf
 
     d = tempfile.mkdtemp(prefix="gen_sf_")
@@ -101,7 +103,7 @@ def test_k_out_of_bounds_is_rejected(bad_k):
     exact-duplicate cliques and corrupt the dedup scale probe."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import gen_scale_sf
 
     with pytest.raises(SystemExit):
@@ -116,7 +118,7 @@ def test_k_26_passes_argument_validation():
     expect is the nonexistent --src path, NOT SystemExit from ap.error."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import gen_scale_sf
 
     with pytest.raises(Exception) as exc_info:

@@ -14,13 +14,14 @@ import pytest
 from pyspark.sql import functions as F
 
 SRC = "/root/testdata/sf0.001"
+TOOLS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
 
 
 @pytest.fixture(scope="module")
 def skew_dir(spark):
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import gen_skew_sf
 
     d = tempfile.mkdtemp(prefix="gen_skew_")
@@ -91,7 +92,7 @@ def test_untouched_tables_byte_identical(skew_dir):
 def test_pct_out_of_bounds_rejected():
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import gen_skew_sf
 
     for bad in (0, 101):

@@ -29,9 +29,6 @@ TS_QUERIES = [
 
 @pytest.mark.parametrize("name", TS_QUERIES)
 def test_gated_output_is_session_tz_independent(spark, name):
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from tools.check_oracle import canon_hash
 
     con = duckdb.connect()

@@ -127,7 +127,7 @@ def _retime(names: list[str]) -> dict[str, float]:
     # confirm a false regression.
     from movie_recommendation_engine_spark.warmups import warm_all
 
-    warm_all(spark, sf_dir)
+    warm_all(spark, sf_dir, log=lambda m: print(m, file=sys.stderr))
     out: dict[str, float] = {}
     for name in names:
         fn = QUERIES.get(name)

@@ -9,13 +9,12 @@ Usage: python tools/check_oracle.py [query_name ...]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
-
-import os
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_CHECK_SF_DIR", "/root/testdata/sf0.01")
 TABLES = (
