@@ -7,14 +7,22 @@ Reference behavior reproduced, Spark-first:
 - S3 positional naming (``toDF(...)``) is subsumed by schema-at-read.
 - S6 Parquet-first storage (the reference only ever *intended* this —
   split_script.py:16-17 comment).
+- Driver testdata (``read_testdata``) is schema-at-read as well: the
+  declared ``TESTDATA_SCHEMAS`` are checked against each parquet footer,
+  then handed to the scan, so no relation resolution infers a schema.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
+import glob
+import os
 
-from .schemas import RATINGS_SCHEMA, TESTDATA_TABLES
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
+
+from .schemas import RATINGS_SCHEMA, TESTDATA_SCHEMAS, TESTDATA_TABLES
 
 
 def read_csv(
@@ -69,30 +77,63 @@ def read_json(
     return reader.json(path)
 
 
+def _footer_schema(path: str):
+    """Arrow schema from the parquet footer at ``path``: the file itself,
+    or the first ``*.parquet`` part file of a Spark-written directory."""
+    import pyarrow.parquet as pq
+
+    if os.path.isdir(path):
+        parts = sorted(glob.glob(os.path.join(path, "*.parquet")))
+        if not parts:
+            raise FileNotFoundError(f"no *.parquet part file under {path}")
+        path = parts[0]
+    return pq.read_schema(path)
+
+
+def _ddl(schema: T.StructType) -> str:
+    return ", ".join(
+        f"{f.name} {f.dataType.simpleString()}{'' if f.nullable else ' not null'}"
+        for f in schema
+    )
+
+
 def read_testdata(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    """Load one driver testdata table (TESTDATA.md).
+    """Load one driver testdata table (TESTDATA.md) with its declared
+    schema (``TESTDATA_SCHEMAS``), so resolving it launches no Spark job.
+
+    The parquet footer is read locally with pyarrow first: it
+    must convert to exactly the declared schema (names, order, types,
+    nullability), else ``ValueError`` names the table and both schemas.
 
     ``events.ts`` has been written two ways across driver testdata
-    generations: parquet TIMESTAMP(NANOS) (which Spark's vectorized
-    reader rejects — read it as a long via the legacy conf and convert)
-    and plain TIMESTAMP(MICROS) (reads natively).  Handle both by
-    checking the landed dtype.  When converting, the ns->µs step MUST be
-    integer division (``ts DIV 1000``): dividing the int64 nanosecond
-    value as a double loses precision past the 53-bit mantissa (ulp ≈
-    256 ns at 2024 epochs), landing ~12% of rows on the wrong
-    microsecond vs DuckDB's exact integer truncation.
+    generations: TIMESTAMP(MICROS), which reads natively, and
+    TIMESTAMP(NANOS), which Spark cannot read as a timestamp.  The
+    footer's unit decides: nanos are read as the raw long (a declared
+    long needs no session conf) and converted to the declared
+    TIMESTAMP_NTZ by ``ts DIV 1000`` microseconds.  The ns->µs step MUST
+    be integer division: dividing the int64 nanosecond value as a double
+    loses precision past the 53-bit mantissa (ulp ≈ 256 ns at 2024
+    epochs), landing ~12% of rows on the wrong microsecond vs DuckDB's
+    exact integer truncation.
     """
-    if table not in TESTDATA_TABLES:
+    if table not in TESTDATA_SCHEMAS:
         raise ValueError(f"unknown testdata table {table!r}; know {TESTDATA_TABLES}")
-    if table == "events":
-        from pyspark.sql import functions as F
-
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/events.parquet")
-        if isinstance(df.schema["ts"].dataType, T.LongType):
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-        return df.select("event_id", "ts", "user_id", "event_type", "value", "props")
-    return spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    path = f"{sf_dir}/{table}.parquet"
+    schema = TESTDATA_SCHEMAS[table]
+    footer = _footer_schema(path)
+    found = from_arrow_schema(footer, prefer_timestamp_ntz=True)
+    if found != schema:
+        raise ValueError(
+            f"testdata table {table!r} ({path}) does not match its declared schema: "
+            f"footer has [{_ddl(found)}], declared [{_ddl(schema)}]"
+        )
+    if table == "events" and footer.field("ts").type.unit == "ns":
+        raw = T.StructType([T.StructField(f.name, T.LongType()) if f.name == "ts" else f
+                            for f in schema])
+        return spark.read.schema(raw).parquet(path).withColumn(
+            "ts", F.expr("TIMESTAMP_NTZ'1970-01-01' + (ts DIV 1000) * INTERVAL '0.000001' SECOND")
+        )
+    return spark.read.schema(schema).parquet(path)
 
 
 def load_star(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
