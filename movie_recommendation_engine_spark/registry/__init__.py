@@ -181,163 +181,9 @@ from .core import flagship  # noqa: E402,F401
 # verdict: queries WITHOUT a driver-green row in any CORRECTNESS_r*.json
 # so far are registered first (self-maintaining — each round's results
 # shrink the pending set automatically); already-green queries cede
-# their slot and keep their local-mirror checks.  _GATE_FIRST below is
-# the priority order WITHIN the pending set (it pins this round's
-# must-gate queries ahead of later additions).
-_GATE_FIRST = [
-    # Round-3 verdict tasks: the upgraded/new oracle-paired queries that
-    # MUST receive a driver hash verdict this round.  (Round-4 status:
-    # these are all driver-green; the round-4 window is the 50 oldest of
-    # the 62 pending, and the expected round-5 remainder is the 10
-    # round-3 leftovers listed at the end of _GATE_LAST plus the two
-    # round-4 *_invariants additions — 12 queries, well inside one
-    # window.  The rotation keeps itself correct as CORRECTNESS_r04
-    # lands; nothing to edit between rounds.)
-    "movielens_e2e_cli",
-    "als_recommend_invariants",
-    "als_rmse_invariants",
-    # 44 queries registered at positions 51-94 in round 1 — never gated.
-    "events_click_attribution",
-    "events_json_props_stats",
-    "events_gap_filled_30m",
-    "events_funnel",
-    "events_time_features",
-    "events_sessionized_dynamic",
-    "events_value_outliers",
-    "multimodal_byte_features",
-    "multimodal_frame_sample",
-    "parts_returned_and_accepted",
-    "parts_returned_and_accepted_all",
-    "sql_interface_revenue",
-    "customer_order_counts_outer",
-    "orders_never_returned",
-    "lineitems_above_part_avg",
-    "rollup_flag_status",
-    "pivot_priority_by_status",
-    "csv_roundtrip_agg",
-    "json_roundtrip_agg",
-    "events_running_stats",
-    "asof_purchase_attribution",
-    "range_join_price_band",
-    "upsert_customer_balances",
-    "grouped_quantity_quartiles",
-    "cube_flag_status",
-    "lineitem_profile",
-    "salted_agg_per_part",
-    "pricing_summary",
-    "part_cooccurrence_top20",
-    "dq_lineitem_audit",
-    "price_histogram_20",
-    "lineitem_metrics_unpivot",
-    "top1_supplier_per_nation",
-    "grouping_sets_quantity",
-    "acctbal_peer_density",
-    "acctbal_quartiles_per_nation",
-    "quantity_dispersion_stats",
-    "embedding_norm_stats",
-    "customer_order_gaps",
-    "top_order_per_customer_lateral",
-    "recency_weighted_customer_value",
-    "events_trailing_30m_avg",
-    "part_name_string_features",
-    "winsorized_price_stats",
-    # 6 queries gated-but-red in round 1, fixed this round: 3 driver-canon
-    # crashes on raw array columns (now serialized) + 3 DuckDB HUGEINT
-    # hash mismatches (now CAST ... AS BIGINT in the oracle).
-    "order_part_lists",
-    "order_items_in_line_order",
-    "lineitem_approx_stats",
-    "balanced_docs_by_lang",
-    "pii_redaction_audit",
-    "split_contamination",
-]
-
-
-# Pending queries that YIELD their window slot to older pending ones:
-# round-3 additions beyond the must-gate set — the window holds 50 and
-# the 45 never-driver-gated queries from rounds 1-2 go first (they are
-# all pre-verified green on the local mirror; these three gate next
-# round via the same self-maintaining rotation).
-_GATE_LAST = [
-    "hll_mergeable_distinct",
-    "semantic_dedup_semdedup",
-    "ann_sq8_top5",
-    "events_cohort_retention",
-    "events_transition_matrix",
-    "doc_pack_sequences",
-    "incremental_rollup_maintenance",
-    "heavy_hitters_mg",
-    "interval_overlap_ship_windows",
-    "ann_jl_top5",
-    "sliding_7d_active_users",
-    "text_log_roundtrip_agg",
-    "part_triangle_count",
-    # round-3 session-2 additions
-    "doc_vocab_coverage",
-    "doc_bigram_logprob",
-    "doc_boolean_search",
-    "customer_pareto_frontier",
-    "customer_snapshot_diff",
-    "part_feature_hashing",
-    "brand_target_encoding",
-    "doc_bpe_merges",
-    "embedding_top_pc_power",
-    "item_item_cf_neighbors",
-    "doc_rrf_fusion",
-    "events_forward_fill",
-    "corpus_curation_e2e",
-    "doc_bpe_encoding",
-    "lineitem_feature_scaling",
-    "customer_time_travel",
-    "customer_hierarchy_depth",
-    "customer_link_prediction_aa",
-    "doc_unicode_cleaning",
-    "grouped_price_trimmed_mean_arrow",
-    "revenue_mom_growth",
-    "doc_bm25_search",
-    "events_rolling_median5",
-    "qty_discount_histogram_2d",
-    "label_centroid_similarity",
-    "part_entity_golden_records",
-    "customer_scd2_point_in_time",
-    "order_price_percentile_ranks",
-    "incremental_star_join_maintenance",
-    "order_price_drift_psi",
-    "kfold_assignment",
-    # round-3 session-3 additions
-    "basket_association_rules",
-    "customer_rfm_segments",
-    "customer_revenue_gini",
-    "returnflag_priority_chi2",
-    "brand_return_info_gain",
-    "monthly_seasonal_forecast",
-    "customer_order_history_features",
-    "order_price_mad_outliers",
-    "customer_repeat_survival",
-    "customer_negative_samples",
-    "monthly_revenue_decomposition",
-    "part_abc_classification",
-    "ab_test_urgent_orders",
-    "multimodal_audio_energy",
-    "embedding_mmr_top5",
-    "revenue_share_hierarchy",
-    "order_price_drift_ks",
-    # round-4 additions (verdict task 7: invariant gates for the two
-    # remaining rows-only ALS/ANN exports) — they yield to every older
-    # pending query so the round-4 window stays the 50 the round-3
-    # verdict pre-verified; they gate in round 5 with the 10 leftovers.
-    "als_item_neighbors_invariants",
-    "ann_ivf_kmeans_invariants",
-    # round-5 additions (round-4 verdict task 6: VALUE gates for both
-    # rows-only ALS exports — neighbor cosels/affinities and per-user
-    # recommend scores).  Appended at the END so they never displace
-    # older pending queries from the 50-slot window (memory: unpinned
-    # pending sorts by registration order AHEAD of _GATE_LAST entries).
-    "als_rank1_item_neighbors",
-    "als_rank1_recommend_top5",
-]
-
-
+# their slot and keep their local-mirror checks.  Pending queries sort
+# by registration order.
+#
 # Already-green queries that lead the window's SPARE slots: after the
 # pending set, the driver's remaining slots re-check previously-green
 # queries.  Round-8 rework (round-7 verdict task 1 — the hand-rotated
@@ -420,21 +266,13 @@ def _driver_green() -> set[str]:
 def _apply_gate_order() -> None:
     green_round = _green_rounds()
     green = set(green_round)
-    prio = {n: i for i, n in enumerate(_GATE_FIRST)}
     names = list(QUERIES)
     pending = [n for n in names if n not in green]
     done = [n for n in names if n in green]
-    # pending first (pinned _GATE_FIRST order, then registration order),
-    # then the already-green remainder: code-changed pins first
-    # (_RECHECK_FIRST), then STALEST driver evidence first — the window
-    # rotates itself, so no green query's last check can silently age
-    # (round-7 verdict task 1).
-    last = {n: i for i, n in enumerate(_GATE_LAST)}
-    pending.sort(
-        key=lambda n: (0, prio[n])
-        if n in prio
-        else ((2, last[n]) if n in last else (1, names.index(n)))
-    )
+    # pending first (registration order), then the already-green
+    # remainder: code-changed pins first (_RECHECK_FIRST), then the
+    # STALEST gate evidence first — the window rotates itself, so no
+    # green query's last check can silently age (round-7 verdict task 1).
     recheck = {n: i for i, n in enumerate(_RECHECK_FIRST)}
     done.sort(
         key=lambda n: (0, recheck[n])

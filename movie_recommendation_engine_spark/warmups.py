@@ -3,14 +3,15 @@
 Per-query bench figures must measure PLANS, not whichever query happens
 to run first after session start: the first execution of each cost
 class pays JIT/codegen, worker-pool spawn, or solver initialization
-that later executions don't (measured 5-35 s per class).  bench.py,
-tools/bench_check.py's fresh-session retime, and
-tools/rebaseline_probe.py all warm the SAME classes through these
-helpers, so committed budgets, sweep figures, and adjudication retimes
-share one reproducible execution context (round-12: the three files
-had drifted — bench_check's toy ALS fit under-warmed relative to
-bench.py's real fit, and the iterative class was pasted verbatim into
-all three).
+that later executions don't (measured 5-35 s per class).  Two callers
+warm through ``warm_all``: perfbench/worker.py, and
+``session(warm=True)`` in tools/harness.py, which bench.py,
+tools/bench_check.py's fresh-session retime and
+tools/rebaseline_probe.py all use.  So committed budgets, sweep
+figures, and adjudication retimes share one reproducible execution
+context (round-12: three separate copies had drifted — bench_check's
+toy ALS fit under-warmed relative to bench.py's real fit, and the
+iterative class was pasted verbatim into all three).
 
 Every helper swallows its own failures (a missing sf0.001 checkout or
 MLlib edge must not kill a bench run); callers pass ``log`` to surface

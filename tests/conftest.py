@@ -14,7 +14,9 @@ from hypothesis import settings
 settings.register_profile("deterministic", derandomize=True)
 settings.load_profile("deterministic")
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# tools/ scripts import their shared timing core as ``harness``
+sys.path[:0] = [_ROOT, os.path.join(_ROOT, "tools")]
 
 from movie_recommendation_engine_spark.session import get_spark
 

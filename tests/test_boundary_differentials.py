@@ -287,12 +287,17 @@ def test_interval_overlap_join_matches_bruteforce_once_each(
     assert want
 
 
-# ------------------------------------------------- concurrency probe names
+# ------------------------------------------------------ probe query names
 
 
 @pytest.mark.parametrize(
     "tool,min_n",
-    [("concurrency_probe", 20), ("fragmentation_probe", 12)],
+    [
+        ("concurrency_probe", 20),
+        ("fragmentation_probe", 12),
+        ("skew_probe", 15),
+        ("dup_clique_probe", 10),
+    ],
 )
 def test_probe_default_queries_exist_in_registry(tool, min_n):
     """Name-rot guard: every query a probe tool exercises must still be

@@ -1,18 +1,15 @@
 """Static guards on the driver-gate rotation lists (no Spark needed).
 
-The rotation in registry/__init__.py is driven by three hand-maintained
-name lists (_GATE_FIRST, _GATE_LAST, _RECHECK_FIRST).  A typo'd or
-renamed entry does not error — the sort just silently ignores it — so
-the window composition can rot without any test noticing.  These checks
-make list/registry drift loud.
+The rotation in registry/__init__.py is pinned by one hand-maintained
+name list (_RECHECK_FIRST).  A typo'd or renamed entry does not error —
+the sort just silently ignores it — so the window composition can rot
+without any test noticing.  These checks make list/registry drift loud.
 """
 
 from __future__ import annotations
 
 from movie_recommendation_engine_spark.registry import QUERIES, ORACLES
 from movie_recommendation_engine_spark.registry import (
-    _GATE_FIRST,
-    _GATE_LAST,
     _RECHECK_FIRST,
     _driver_green,
     _green_rounds,
@@ -22,24 +19,13 @@ WINDOW = 50  # the driver gates the first 50 registered queries per round
 
 
 def test_gate_list_names_are_registered():
-    names = set(QUERIES)
-    for lst, label in (
-        (_GATE_FIRST, "_GATE_FIRST"),
-        (_GATE_LAST, "_GATE_LAST"),
-        (_RECHECK_FIRST, "_RECHECK_FIRST"),
-    ):
-        unknown = [n for n in lst if n not in names]
-        assert not unknown, f"{label} references unregistered queries: {unknown}"
+    unknown = [n for n in _RECHECK_FIRST if n not in QUERIES]
+    assert not unknown, f"_RECHECK_FIRST references unregistered queries: {unknown}"
 
 
 def test_gate_lists_have_no_duplicates():
-    for lst, label in (
-        (_GATE_FIRST, "_GATE_FIRST"),
-        (_GATE_LAST, "_GATE_LAST"),
-        (_RECHECK_FIRST, "_RECHECK_FIRST"),
-    ):
-        dupes = sorted({n for n in lst if lst.count(n) > 1})
-        assert not dupes, f"{label} has duplicate entries: {dupes}"
+    dupes = sorted({n for n in _RECHECK_FIRST if _RECHECK_FIRST.count(n) > 1})
+    assert not dupes, f"_RECHECK_FIRST has duplicate entries: {dupes}"
 
 
 def test_pending_queries_lead_the_window():

@@ -104,44 +104,23 @@ def _full(bench: dict) -> dict:
 
 
 def _retime(names: list[str]) -> dict[str, float]:
-    """Steady-state wall time (min of RETIME_RUNS) per query, one fresh
-    local[32] session, ALS/parquet warmup like bench.py."""
-    import gc
-    import time
-
-    sys.path.insert(0, ROOT)
+    """Steady-state wall time (min of RETIME_RUNS) per query, in one
+    fresh session warmed like bench.py's (``harness.session``): budgets
+    are calibrated in that context, so the adjudication retime must run
+    in it too — a weaker warm set here (the pre-round-12 toy ALS fit,
+    no iterative warmup) billed the missing JIT to whichever flagged
+    query ran first and could confirm a false regression."""
+    from harness import best_of, session
     from movie_recommendation_engine_spark.registry import QUERIES
-    from movie_recommendation_engine_spark.session import get_spark
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(
-        "bench_retime", master=f"local[{cpus}]", shuffle_partitions=int(cpus)
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    # same warmup classes as bench.py (shared movie_recommendation_
-    # engine_spark.warmups): budgets are calibrated in that context, so
-    # the adjudication retime must run in it too — a weaker set here
-    # (the pre-round-12 toy ALS fit, no iterative warmup) billed the
-    # missing JIT to whichever flagged query ran first and could
-    # confirm a false regression.
-    from movie_recommendation_engine_spark.warmups import warm_all
-
-    warm_all(spark, sf_dir, log=lambda m: print(m, file=sys.stderr))
+    spark, sf_dir = session("bench_retime", warm=True)
     out: dict[str, float] = {}
     for name in names:
-        fn = QUERIES.get(name)
-        if fn is None:
-            continue
         try:
-            best = float("inf")
-            for _ in range(RETIME_RUNS):
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).count()
-                best = min(best, time.perf_counter() - t0)
-                gc.collect()
-            out[name] = round(best, 3)
-        except Exception:
+            out[name] = round(
+                best_of(lambda: QUERIES[name](spark, sf_dir).count(), RETIME_RUNS), 3
+            )
+        except Exception:  # unregistered or raising: stays a regression
             continue
     spark.stop()
     return out

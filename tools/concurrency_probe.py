@@ -34,15 +34,12 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
 import sys
 import time
 from concurrent.futures import ThreadPoolExecutor
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-from check_oracle import canon_hash  # noqa: E402  (same dir)
+from check_oracle import canon_hash
+from harness import session
 
 # A diverse mid-weight slice: the two fixed-name temp-view SQL queries,
 # all three sink round-trips (staging paths), joins/aggs/windows,
@@ -82,9 +79,7 @@ def main() -> int:
     args = ap.parse_args()
 
     import __spark_entry__ as e
-    from movie_recommendation_engine_spark.session import get_spark
-
-    spark = get_spark("concurrency-probe")
+    spark, _ = session("concurrency-probe")
     qs = e.queries()
     names = args.names or DEFAULT_QUERIES
     unknown = [n for n in names if n not in qs]

@@ -1,5 +1,6 @@
 """Duplicate-clique probe (round-8 verdict task 1): time the dedup
-family on uniform sf0.1 AND on the duplicate-heavy variant
+family on uniform $SPARK_GRAFT_SF_DIR (default sf0.1) AND on the
+duplicate-heavy variant
 (tools/gen_dup_sf.py: ~20% of documents near-exact copies of one
 template — a ~1000-member near-dup clique) and report the wall-clock
 ratio.
@@ -34,20 +35,17 @@ Usage:
     python tools/dup_clique_probe.py          # default query set
     python tools/dup_clique_probe.py name...  # explicit list
 Writes a "## Duplicate-clique probe" section into BENCH_SCALE.md.
-Env: SPARK_GRAFT_DUP_DIR overrides the variant location.
+Env: SPARK_GRAFT_DUP_DIR overrides the variant location
+(`gen_dup_sf.py --src` should match $SPARK_GRAFT_SF_DIR).
 """
 
 from __future__ import annotations
 
-import gc
 import os
 import sys
-import time
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
+from harness import ROOT, best_of, session, splice_section
 
-SF_UNIFORM = "/root/testdata/sf0.1"
 SF_DUP = os.environ.get(
     "SPARK_GRAFT_DUP_DIR", os.path.join(ROOT, ".scale", "sf0.1-dup")
 )
@@ -90,10 +88,9 @@ def main(argv: list[str]) -> int:
     from pyspark.sql import functions as F
 
     from movie_recommendation_engine_spark.registry import QUERIES
-    from movie_recommendation_engine_spark.session import get_spark
 
-    spark = get_spark("dup_probe", master="local[32]", shuffle_partitions=32)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark, sf_uniform = session("dup_probe")
+    master = spark.sparkContext.master
 
     docs = spark.read.parquet(f"{SF_DUP}/documents.parquet")
     n_docs = docs.count()
@@ -103,7 +100,7 @@ def main(argv: list[str]) -> int:
         F.col("text").startswith("breaking news update the markets")
     ).count()
 
-    for sf_dir in (SF_UNIFORM, SF_DUP):  # warm footers + python workers
+    for sf_dir in (sf_uniform, SF_DUP):  # warm footers + python workers
         spark.read.parquet(f"{sf_dir}/documents.parquet").agg(
             F.sum(F.length("text"))
         ).collect()
@@ -114,17 +111,15 @@ def main(argv: list[str]) -> int:
             print(f"# unknown query {name}, skipping", file=sys.stderr)
             continue
         row: dict = {}
-        for tag, sf_dir in (("uniform", SF_UNIFORM), ("dup", SF_DUP)):
-            best = float("inf")
-            for i in range(RUNS):
-                t0 = time.perf_counter()
-                out_rows = QUERIES[name](spark, sf_dir).count()
-                best = min(best, time.perf_counter() - t0)
-                gc.collect()
-                if best > SLOW_SKIP_S:
-                    break  # the magnitude is the finding; retries add nothing
+        for tag, sf_dir in (("uniform", sf_uniform), ("dup", SF_DUP)):
+
+            def run():
+                row[f"{tag}_rows"] = QUERIES[name](spark, sf_dir).count()
+
+            best = best_of(run, 1)
+            if best <= SLOW_SKIP_S:  # past it the magnitude is the finding
+                best = min(best, best_of(run, RUNS - 1))
             row[tag] = round(best, 3)
-            row[f"{tag}_rows"] = out_rows
         row["ratio"] = round(row["dup"] / row["uniform"], 2)
         results[name] = row
         print(
@@ -143,15 +138,15 @@ def main(argv: list[str]) -> int:
         key=lambda n: -results[n]["ratio"],
     )
     lines = [
-        "",
         "## Duplicate-clique probe (round 9)",
         "",
-        "Dedup family on uniform sf0.1 vs the duplicate-heavy variant "
+        f"Dedup family on uniform {os.path.basename(sf_uniform)} vs the "
+        "duplicate-heavy variant "
         f"(`tools/gen_dup_sf.py`: {clique}/{n_docs} documents are "
         "near-exact copies of one template — one ~0.92-Jaccard clique, "
         "the hot-LSH-bucket shape the uniform scale generator never "
         f"produces).  min of {RUNS} runs (single run past "
-        f"{SLOW_SKIP_S:.0f}s), one local[32] JVM.  `ratio` = "
+        f"{SLOW_SKIP_S:.0f}s), one {master} JVM.  `ratio` = "
         "dup/uniform wall-clock.  Bounded queries (capped LSH pairs, "
         f"star-edge components) must stay <= {THRESHOLD}x; exact pair "
         "ENUMERATION on a k-clique emits Theta(k^2) output rows by "
@@ -183,15 +178,7 @@ def main(argv: list[str]) -> int:
     ]
 
     path = os.path.join(ROOT, "BENCH_SCALE.md")
-    with open(path) as fh:
-        doc = fh.read()
-    marker = "\n## Duplicate-clique probe"
-    if marker in doc:
-        start = doc.index(marker)
-        nxt = doc.find("\n## ", start + 1)
-        doc = doc[:start] + (doc[nxt:] if nxt != -1 else "")
-    with open(path, "w") as fh:
-        fh.write(doc.rstrip("\n") + "\n" + "\n".join(lines))
+    splice_section(path, "## Duplicate-clique probe", lines)
     print(f"# wrote Duplicate-clique probe section to {path}", file=sys.stderr)
     return 1 if flagged else 0
 

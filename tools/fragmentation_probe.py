@@ -1,5 +1,5 @@
-"""Many-small-files probe: the same queries on sf0.1 vs a copy of it
-shattered into ~500-row parquet files.
+"""Many-small-files probe: the same queries on $SPARK_GRAFT_SF_DIR
+(default sf0.1) vs a copy of it shattered into ~500-row parquet files.
 
 A 100 TB landing zone is rarely 200 tidy 1 GB files — streaming
 ingestion, hourly partitions, and compaction lag produce millions of
@@ -32,15 +32,12 @@ Env: SPARK_GRAFT_FRAG_DIR overrides the fragmented-copy location.
 
 from __future__ import annotations
 
-import gc
+import json
 import os
 import sys
-import time
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
+from harness import ROOT, best_of, session, splice_section, warm_scan
 
-SF_UNIFORM = "/root/testdata/sf0.1"
 SF_FRAG = os.environ.get(
     "SPARK_GRAFT_FRAG_DIR", os.path.join(ROOT, ".scale", "sf0.1-frag")
 )
@@ -75,43 +72,44 @@ DEFAULT_QUERIES = [
 MARKER = os.path.join(SF_FRAG, "_DERIVE_COMPLETE.json")
 
 
-def _marker_ok() -> bool:
-    """True iff a prior derive COMPLETED under the same settings.
+def _marker(src: str) -> dict:
+    return {"rows_per_file": ROWS_PER_FILE, "tables": list(TABLES), "src": src}
+
+
+def _marker_ok(src: str) -> bool:
+    """True iff a prior derive of ``src`` COMPLETED under the same
+    settings.
 
     Existence of lineitem.parquet alone is not enough (round-8
     advisory): a crashed half-written derive, or one built under a
-    different SPARK_GRAFT_FRAG_ROWS_PER_FILE, would be silently reused
-    and skew the uniform-vs-fragmented comparison.  The marker is
-    written LAST, after every table lands, and records the knobs.
+    different SPARK_GRAFT_FRAG_ROWS_PER_FILE or from a different
+    source dir, would be silently reused and skew the uniform-vs-
+    fragmented comparison.  The marker is written LAST, after every
+    table lands, and records the knobs.
     """
-    import json
-
     try:
         with open(MARKER) as fh:
             m = json.load(fh)
-        return m.get("rows_per_file") == ROWS_PER_FILE and m.get("tables") == list(
-            TABLES
-        )
+        return m == _marker(src)
     except Exception:
         return False
 
 
-def _derive(spark) -> None:
-    import json
+def _derive(spark, src: str) -> None:
     import shutil
 
     shutil.rmtree(SF_FRAG, ignore_errors=True)  # stale/partial prior copy
     os.makedirs(SF_FRAG, exist_ok=True)
     for t in TABLES:
-        src = spark.read.parquet(f"{SF_UNIFORM}/{t}.parquet")
-        n = src.count()
+        df = spark.read.parquet(f"{src}/{t}.parquet")
+        n = df.count()
         files = max(1, n // ROWS_PER_FILE)
-        src.repartition(files).write.mode("overwrite").parquet(
+        df.repartition(files).write.mode("overwrite").parquet(
             f"{SF_FRAG}/{t}.parquet"
         )
         print(f"# fragmented {t}: {n} rows -> {files} files", file=sys.stderr)
     with open(MARKER, "w") as fh:
-        json.dump({"rows_per_file": ROWS_PER_FILE, "tables": list(TABLES)}, fh)
+        json.dump(_marker(src), fh)
 
 
 def _file_count(d: str) -> int:
@@ -128,22 +126,16 @@ def _file_count(d: str) -> int:
 def main(argv: list[str]) -> int:
     names = argv or DEFAULT_QUERIES
 
-    from pyspark.sql import functions as F
-
     from movie_recommendation_engine_spark.registry import QUERIES
-    from movie_recommendation_engine_spark.session import get_spark
 
-    spark = get_spark("frag_probe", master="local[32]", shuffle_partitions=32)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark, sf_uniform = session("frag_probe")
+    master = spark.sparkContext.master
 
-    if not _marker_ok():
-        _derive(spark)
+    if not _marker_ok(sf_uniform):
+        _derive(spark, sf_uniform)
 
-    n_files = {"uniform": _file_count(SF_UNIFORM), "frag": _file_count(SF_FRAG)}
-
-    for sf_dir in (SF_UNIFORM, SF_FRAG):  # warm footers + shuffle machinery
-        df = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        df.groupBy("l_orderkey").agg(F.count("*").alias("n")).agg(F.sum("n")).collect()
+    n_files = {"uniform": _file_count(sf_uniform), "frag": _file_count(SF_FRAG)}
+    warm_scan(spark, [sf_uniform, SF_FRAG])
 
     results: dict[str, dict[str, float]] = {}
     mismatches: list[str] = []
@@ -153,14 +145,12 @@ def main(argv: list[str]) -> int:
             continue
         row: dict[str, float] = {}
         counts: dict[str, int] = {}
-        for tag, sf_dir in (("uniform", SF_UNIFORM), ("frag", SF_FRAG)):
-            best = float("inf")
-            for _ in range(RUNS):
-                t0 = time.perf_counter()
+        for tag, sf_dir in (("uniform", sf_uniform), ("frag", SF_FRAG)):
+
+            def run():
                 counts[tag] = QUERIES[name](spark, sf_dir).count()
-                best = min(best, time.perf_counter() - t0)
-                gc.collect()
-            row[tag] = round(best, 3)
+
+            row[tag] = round(best_of(run, RUNS), 3)
         if counts["uniform"] != counts["frag"]:
             mismatches.append(
                 f"{name}: {counts['uniform']} vs {counts['frag']} rows"
@@ -179,13 +169,13 @@ def main(argv: list[str]) -> int:
         key=lambda n: -results[n]["ratio"],
     )
     lines = [
-        "",
         "## Fragmentation probe (round 9)",
         "",
-        "Scan-heavy queries on sf0.1 vs a content-identical copy "
+        f"Scan-heavy queries on {os.path.basename(sf_uniform)} vs a "
+        "content-identical copy "
         f"shattered into ~{ROWS_PER_FILE}-row parquet files "
         f"({n_files['uniform']} files -> {n_files['frag']} files across "
-        f"the star schema; min of {RUNS} runs each, one local[32] JVM).  "
+        f"the star schema; min of {RUNS} runs each, one {master} JVM).  "
         "The many-small-files landing zone is where per-file task "
         "scheduling or per-footer overhead would detonate a 100 TB scan; "
         "Spark's maxPartitionBytes file-packing + openCostInBytes "
@@ -216,16 +206,9 @@ def main(argv: list[str]) -> int:
         "",
     ]
 
-    path = os.path.join(ROOT, "BENCH_SCALE.md")
-    with open(path) as fh:
-        doc = fh.read()
-    marker = "\n## Fragmentation probe"
-    if marker in doc:
-        start = doc.index(marker)
-        nxt = doc.find("\n## ", start + 1)
-        doc = doc[:start] + (doc[nxt:] if nxt != -1 else "")
-    with open(path, "w") as fh:
-        fh.write(doc.rstrip("\n") + "\n" + "\n".join(lines))
+    splice_section(
+        os.path.join(ROOT, "BENCH_SCALE.md"), "## Fragmentation probe", lines
+    )
     print("\n".join(lines))
     return 1 if flagged or mismatches else 0
 

@@ -32,19 +32,11 @@ import sys
 import tempfile
 import time
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
+from harness import ROOT, splice_section
+from scale_probe import pick_heaviest
 
 SF1 = os.environ.get("SPARK_GRAFT_SF1_DIR", os.path.join(ROOT, ".scale", "sf1"))
 HEAP = os.environ.get("SPARK_GRAFT_SOAK_MEM", "4g")
-E2E = {"movielens_e2e_cli", "corpus_curation_e2e", "dedup_pipeline_summary"}
-
-
-def pick_heaviest(n: int) -> list[str]:
-    with open(os.path.join(ROOT, "tools", "bench_budget.json")) as fh:
-        budget = json.load(fh)["queries"]
-    ranked = sorted(budget.items(), key=lambda kv: -kv[1])
-    return [name for name, _ in ranked if name not in E2E][:n]
 
 
 def spill_from_event_log(log_dir: str) -> dict[str, int]:
@@ -166,7 +158,6 @@ def main(argv: list[str]) -> int:
               file=sys.stderr, flush=True)
 
     lines = [
-        "",
         "## Memory soak (round 8)",
         "",
         f"Heaviest queries at sf1 (~10x sf0.1) inside a {HEAP} JVM heap, "
@@ -198,18 +189,7 @@ def main(argv: list[str]) -> int:
         "",
     ]
 
-    path = os.path.join(ROOT, "BENCH_SCALE.md")
-    with open(path) as fh:
-        doc = fh.read()
-    # splice out ONLY this tool's previous section (up to the next "## "
-    # heading), preserving sections other tools own
-    marker = "\n## Memory soak"
-    if marker in doc:
-        start = doc.index(marker)
-        nxt = doc.find("\n## ", start + 1)
-        doc = doc[:start] + (doc[nxt:] if nxt != -1 else "")
-    with open(path, "w") as fh:
-        fh.write(doc.rstrip("\n") + "\n" + "\n".join(lines))
+    splice_section(os.path.join(ROOT, "BENCH_SCALE.md"), "## Memory soak", lines)
     print("\n".join(lines))
     return 1 if failed else 0
 

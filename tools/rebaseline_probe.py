@@ -1,11 +1,11 @@
 """Fresh-session min-of-N steady probe for budget re-baselining.
 
-Mirrors bench.py's warmup set (parquet footers, real ALS fit, KMeans,
-Arrow/mapInPandas, iterative-checkpoint) so the measured figures
-represent the same execution context the bench sweep and the
-bench_check retime run in — the round-11 verdict's requirement that
-budgets come from a REPRODUCIBLE context (fresh-session quiet steady),
-not from a lucky deep-warm sweep position.
+Runs in bench.py's execution context (``harness.session(warm=True)``:
+the same warmup classes), so the measured figures represent the
+context the bench sweep and the bench_check retime run in — the
+round-11 verdict's requirement that budgets come from a REPRODUCIBLE
+context (fresh-session quiet steady), not from a lucky deep-warm sweep
+position.
 
     python tools/rebaseline_probe.py QUERY [QUERY...] [--runs 3]
 
@@ -15,18 +15,9 @@ steal over the probe window.
 
 from __future__ import annotations
 
-import gc
-import os
 import sys
-import time
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
-
-
-def _cpu():
-    v = [int(x) for x in open("/proc/stat").readline().split()[1:]]
-    return sum(v), v[7] if len(v) > 7 else 0
+from harness import best_of, host_window, session
 
 
 def main(argv: list[str]) -> int:
@@ -39,37 +30,15 @@ def main(argv: list[str]) -> int:
     assert names, "usage: rebaseline_probe.py QUERY... [--runs N]"
 
     from movie_recommendation_engine_spark.registry import QUERIES
-    from movie_recommendation_engine_spark.session import get_spark
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(
-        "rebaseline", master=f"local[{cpus}]", shuffle_partitions=int(cpus)
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # bench.py's exact warmup classes (shared module — the probe exists
-    # to measure budgets in bench.py's execution context, so the set
-    # must be identical by construction, not by copy)
-    from movie_recommendation_engine_spark.warmups import warm_all
-
-    warm_all(spark, sf_dir, log=lambda m: print(m, file=sys.stderr))
-
-    a = _cpu()
-    t_start = time.perf_counter()
-    for name in names:
-        fn = QUERIES[name]
-        ts = []
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).count()
-            ts.append(round(time.perf_counter() - t0, 3))
-            gc.collect()
-        print(f"{name}: runs={ts} min={min(ts)}", flush=True)
-    b = _cpu()
-    steal = 100.0 * (b[1] - a[1]) / max(1, b[0] - a[0])
-    print(f"# probe window {round(time.perf_counter() - t_start, 1)}s "
-          f"steal {steal:.3f}%")
+    spark, sf_dir = session("rebaseline", warm=True)
+    with host_window() as load:
+        for name in names:
+            fn = QUERIES[name]
+            ts = [round(best_of(lambda: fn(spark, sf_dir).count(), 1), 3)
+                  for _ in range(runs)]
+            print(f"{name}: runs={ts} min={min(ts)}", flush=True)
+    print(f"# probe window {load['wall_sec']}s steal {load.get('steal_pct')}%")
     spark.stop()
     return 0
 

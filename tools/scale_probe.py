@@ -31,14 +31,11 @@ Env: SPARK_GRAFT_SF1_DIR overrides the sf1 location.
 
 from __future__ import annotations
 
-import gc
 import json
 import os
 import sys
-import time
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
+from harness import ROOT, best_of, session, splice_section, warm_scan
 
 SF_SMALL = "/root/testdata/sf0.01"
 SF_BIG = "/root/testdata/sf0.1"
@@ -66,9 +63,7 @@ def main(argv: list[str]) -> int:
     else:
         names = pick_heaviest(int(argv[0]) if argv else 12)
 
-    have_xl = os.path.isdir(SF_XL) and os.path.isdir(
-        os.path.join(SF_XL, "lineitem.parquet")
-    )
+    have_xl = os.path.isdir(os.path.join(SF_XL, "lineitem.parquet"))
     sf_dirs = [SF_SMALL, SF_BIG] + ([SF_XL] if have_xl else [])
     if not have_xl:
         print(
@@ -78,50 +73,31 @@ def main(argv: list[str]) -> int:
         )
 
     from movie_recommendation_engine_spark.registry import QUERIES
-    from movie_recommendation_engine_spark.session import get_spark
 
-    from pyspark.sql import functions as F
+    spark, _ = session("scale_probe")
+    master = spark.sparkContext.master
+    warm_scan(spark, sf_dirs)
 
-    spark = get_spark("scale_probe", master="local[32]", shuffle_partitions=32)
-    spark.sparkContext.setLogLevel("ERROR")
-    for sf_dir in sf_dirs:
-        # warm parquet footers AND the shuffle machinery at each SF: the
-        # first real shuffle at a new data scale pays one-time JVM costs
-        # (codegen, exec-memory pool growth) that otherwise bill to
-        # whichever query the ordering puts first — measured round 6:
-        # the first pagerank-family query at sf1 read x14.7-x20.9 while
-        # the same query warm read x5
-        df = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        df.count()
-        df.groupBy("l_orderkey").agg(F.count("*").alias("n")).agg(
-            F.sum("n")
-        ).collect()
+    def time_row(name: str, row: dict[str, float], label: str) -> None:
+        """Min of RUNS per SF, merged into ``row`` (mins only ever
+        lower a sample), then the per-decade ratios."""
+        for sf_dir in sf_dirs:
+            t = round(best_of(lambda: QUERIES[name](spark, sf_dir).count(), RUNS), 3)
+            row[sf_dir] = min(row.get(sf_dir, t), t)
+        row["ratio1"] = round(row[SF_BIG] / row[SF_SMALL], 2)
+        msg = f"# {label}: {row[SF_SMALL]}s -> {row[SF_BIG]}s (x{row['ratio1']})"
+        if have_xl:
+            row["ratio2"] = round(row[SF_XL] / row[SF_BIG], 2)
+            msg += f" -> {row[SF_XL]}s (x{row['ratio2']})"
+        print(msg, file=sys.stderr)
 
     results: dict[str, dict[str, float]] = {}
     for name in names:
         if name not in QUERIES:
             print(f"# unknown query {name}, skipping", file=sys.stderr)
             continue
-        row: dict[str, float] = {}
-        for sf_dir in sf_dirs:
-            best = float("inf")
-            for _ in range(RUNS):
-                df = None
-                t0 = time.perf_counter()
-                df = QUERIES[name](spark, sf_dir)
-                df.count()
-                best = min(best, time.perf_counter() - t0)
-                df = None
-                gc.collect()
-            row[sf_dir] = round(best, 3)
-        row["ratio1"] = round(row[SF_BIG] / row[SF_SMALL], 2)
-        if have_xl:
-            row["ratio2"] = round(row[SF_XL] / row[SF_BIG], 2)
-        results[name] = row
-        msg = f"# {name}: {row[SF_SMALL]}s -> {row[SF_BIG]}s (x{row['ratio1']})"
-        if have_xl:
-            msg += f" -> {row[SF_XL]}s (x{row['ratio2']})"
-        print(msg, file=sys.stderr)
+        results[name] = {}
+        time_row(name, results[name], name)
 
     def worst_of(row: dict[str, float]) -> float:
         return max(row.get("ratio1", 0.0), row.get("ratio2", 0.0))
@@ -140,20 +116,7 @@ def main(argv: list[str]) -> int:
         print(f"# retiming {len(flagged)} flagged warm: {', '.join(flagged)}",
               file=sys.stderr)
         for name in flagged:
-            row = results[name]
-            for sf_dir in sf_dirs:
-                for _ in range(RUNS):
-                    t0 = time.perf_counter()
-                    QUERIES[name](spark, sf_dir).count()
-                    row[sf_dir] = min(row[sf_dir], round(time.perf_counter() - t0, 3))
-                    gc.collect()
-            row["ratio1"] = round(row[SF_BIG] / row[SF_SMALL], 2)
-            if have_xl:
-                row["ratio2"] = round(row[SF_XL] / row[SF_BIG], 2)
-            msg = f"# retimed {name}: {row[SF_SMALL]}s -> {row[SF_BIG]}s (x{row['ratio1']})"
-            if have_xl:
-                msg += f" -> {row[SF_XL]}s (x{row['ratio2']})"
-            print(msg, file=sys.stderr)
+            time_row(name, results[name], f"retimed {name}")
     spark.stop()
 
     lines = [
@@ -161,7 +124,7 @@ def main(argv: list[str]) -> int:
         "",
         f"Heaviest queries timed at sf0.01, sf0.1"
         + (", and sf1" if have_xl else "")
-        + f" (min of {RUNS} runs per SF, one local[32] JVM, per-SF "
+        + f" (min of {RUNS} runs per SF, one {master} JVM, per-SF "
         "shuffle warmups, and an end-of-session warm retime of any "
         "query whose first-pass ratio exceeded the data growth; "
         "`tools/scale_probe.py`).  Each decade grows the data 10x "
@@ -207,21 +170,10 @@ def main(argv: list[str]) -> int:
         f"Worst observed per-decade ratio: {worst} (data growth {DATA_GROWTH}).",
         "",
     ]
-    out = "\n".join(lines)
-    # preserve the sections other tools own (skew probe, memory soak):
-    # this tool rewrites only the leading cross-SF table — everything
-    # from the first "\n## " heading onward carries over
-    path = os.path.join(ROOT, "BENCH_SCALE.md")
-    tail = ""
-    if os.path.exists(path):
-        with open(path) as fh:
-            doc = fh.read()
-        cut = doc.find("\n## ")
-        if cut != -1:
-            tail = doc[cut:]
-    with open(path, "w") as fh:
-        fh.write(out.rstrip("\n") + "\n" + tail)
-    print(out)
+    # this tool owns only the leading cross-SF table; the sections
+    # other tools own (skew probe, memory soak, ...) carry over
+    splice_section(os.path.join(ROOT, "BENCH_SCALE.md"), lines[0], lines)
+    print("\n".join(lines))
     return 0
 
 

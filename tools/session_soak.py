@@ -36,8 +36,7 @@ import os
 import sys
 import time
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
+from harness import ROOT, session, splice_section
 
 
 def monotonic_excess(vals: list[float], factor: float) -> bool:
@@ -82,10 +81,8 @@ def main() -> int:
     args = ap.parse_args()
 
     from movie_recommendation_engine_spark.registry import QUERIES
-    from movie_recommendation_engine_spark.session import get_spark
 
-    spark = get_spark("session_soak", master="local[32]", shuffle_partitions=32)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark, _ = session("session_soak")
 
     baseline = jvm_state(spark)
     print(f"# baseline: {baseline}", file=sys.stderr)
@@ -117,7 +114,6 @@ def main() -> int:
         flags.append("query errors during soak")
 
     lines = [
-        "",
         "## Session soak (round 10)",
         "",
         f"The full registry ({len(QUERIES)} queries) swept "
@@ -151,16 +147,7 @@ def main() -> int:
         "",
     ]
 
-    path = os.path.join(ROOT, "BENCH_SCALE.md")
-    with open(path) as fh:
-        doc = fh.read()
-    marker = "\n## Session soak"
-    if marker in doc:
-        start = doc.index(marker)
-        nxt = doc.find("\n## ", start + 1)
-        doc = doc[:start] + (doc[nxt:] if nxt != -1 else "")
-    with open(path, "w") as fh:
-        fh.write(doc.rstrip("\n") + "\n" + "\n".join(lines))
+    splice_section(os.path.join(ROOT, "BENCH_SCALE.md"), "## Session soak", lines)
     print("\n".join(lines))
     print(json.dumps({"probe": "session_soak", "snapshots": snapshots, "flags": flags}))
     return 1 if flags else 0

@@ -1,5 +1,6 @@
 """Skewed-key probe (round-7 verdict task 3): time the heavy join/agg/
-window queries on the uniform sf0.1 testdata AND on the Zipf-skewed
+window queries on the uniform $SPARK_GRAFT_SF_DIR testdata (default
+sf0.1) AND on the Zipf-skewed
 variant (tools/gen_skew_sf.py: one hot order/part/customer/user holds
 ~20% of its table's rows) and report the wall-clock ratio.
 
@@ -20,20 +21,17 @@ Usage:
     python tools/skew_probe.py               # default query set
     python tools/skew_probe.py name...       # explicit list
 Writes a "## Skew probe" section into BENCH_SCALE.md.
-Env: SPARK_GRAFT_SKEW_DIR overrides the skewed-variant location.
+Env: SPARK_GRAFT_SKEW_DIR overrides the skewed-variant location
+(`gen_skew_sf.py --src` should match $SPARK_GRAFT_SF_DIR).
 """
 
 from __future__ import annotations
 
-import gc
 import os
 import sys
-import time
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
+from harness import ROOT, best_of, session, splice_section, warm_scan
 
-SF_UNIFORM = "/root/testdata/sf0.1"
 SF_SKEW = os.environ.get(
     "SPARK_GRAFT_SKEW_DIR", os.path.join(ROOT, ".scale", "sf0.1-skew")
 )
@@ -82,10 +80,9 @@ def main(argv: list[str]) -> int:
     from pyspark.sql import functions as F
 
     from movie_recommendation_engine_spark.registry import QUERIES
-    from movie_recommendation_engine_spark.session import get_spark
 
-    spark = get_spark("skew_probe", master="local[32]", shuffle_partitions=32)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark, sf_uniform = session("skew_probe")
+    master = spark.sparkContext.master
 
     hot_shares = {}
     for t, c in [
@@ -98,9 +95,7 @@ def main(argv: list[str]) -> int:
         top = df.groupBy(c).count().orderBy(F.desc("count")).first()
         hot_shares[f"{t}.{c}"] = round(100.0 * top["count"] / df.count(), 1)
 
-    for sf_dir in (SF_UNIFORM, SF_SKEW):  # warm footers + shuffle machinery
-        df = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        df.groupBy("l_orderkey").agg(F.count("*").alias("n")).agg(F.sum("n")).collect()
+    warm_scan(spark, [sf_uniform, SF_SKEW])
 
     results: dict[str, dict[str, float]] = {}
     for name in names:
@@ -108,14 +103,10 @@ def main(argv: list[str]) -> int:
             print(f"# unknown query {name}, skipping", file=sys.stderr)
             continue
         row: dict[str, float] = {}
-        for tag, sf_dir in (("uniform", SF_UNIFORM), ("skew", SF_SKEW)):
-            best = float("inf")
-            for _ in range(RUNS):
-                t0 = time.perf_counter()
-                QUERIES[name](spark, sf_dir).count()
-                best = min(best, time.perf_counter() - t0)
-                gc.collect()
-            row[tag] = round(best, 3)
+        for tag, sf_dir in (("uniform", sf_uniform), ("skew", SF_SKEW)):
+            row[tag] = round(
+                best_of(lambda: QUERIES[name](spark, sf_dir).count(), RUNS), 3
+            )
         row["ratio"] = round(row["skew"] / row["uniform"], 2)
         results[name] = row
         print(
@@ -130,14 +121,14 @@ def main(argv: list[str]) -> int:
         key=lambda n: -results[n]["ratio"],
     )
     lines = [
-        "",
         "## Skew probe (round 8)",
         "",
-        "Same queries on uniform sf0.1 vs the Zipf-skewed variant "
+        f"Same queries on uniform {os.path.basename(sf_uniform)} vs the "
+        "Zipf-skewed variant "
         "(`tools/gen_skew_sf.py`: one hot key per axis holds ~20% of its "
         "table — measured shares "
         + ", ".join(f"{k} {v}%" for k, v in hot_shares.items())
-        + f"; min of {RUNS} runs each, one local[32] JVM, AQE skew-join "
+        + f"; min of {RUNS} runs each, one {master} JVM, AQE skew-join "
         "on).  `ratio` = skew/uniform wall-clock; above "
         f"{THRESHOLD}x needs a plan fix or a documented bound.",
         "",
@@ -158,18 +149,7 @@ def main(argv: list[str]) -> int:
         "",
     ]
 
-    path = os.path.join(ROOT, "BENCH_SCALE.md")
-    with open(path) as fh:
-        doc = fh.read()
-    # splice out ONLY this tool's previous section (up to the next "## "
-    # heading), preserving sections other tools own
-    marker = "\n## Skew probe"
-    if marker in doc:
-        start = doc.index(marker)
-        nxt = doc.find("\n## ", start + 1)
-        doc = doc[:start] + (doc[nxt:] if nxt != -1 else "")
-    with open(path, "w") as fh:
-        fh.write(doc.rstrip("\n") + "\n" + "\n".join(lines))
+    splice_section(os.path.join(ROOT, "BENCH_SCALE.md"), "## Skew probe", lines)
     print("\n".join(lines))
     return 1 if flagged else 0
 

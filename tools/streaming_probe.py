@@ -43,8 +43,7 @@ import sys
 import tempfile
 import time
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
+from harness import ROOT, session, splice_section
 
 DEFAULT_EVENTS = os.path.join(ROOT, ".scale", "sf0.1-frag", "events.parquet")
 
@@ -91,6 +90,34 @@ def _state_stamps(q) -> dict:
     return {"state_rows_peak": rows, "state_mb_peak": round(mem / 1e6, 2)}
 
 
+def _replay(spark, build, mode: str, events: str, fpt: int, ckpt: str) -> dict:
+    """Drain ``events`` once through ``build``: ``fpt`` files per
+    micro-batch, ``trigger(availableNow)``, a counting foreachBatch
+    sink and a fresh checkpoint at ``ckpt``."""
+    from movie_recommendation_engine_spark.streaming.events import (
+        read_events_stream,
+    )
+
+    counts = {"batches": 0, "out_rows": 0}
+
+    def sink(df, epoch):
+        counts["batches"] += 1
+        counts["out_rows"] += df.count()
+
+    stream = read_events_stream(spark, events, max_files_per_trigger=fpt)
+    t0 = time.perf_counter()
+    q = (
+        build(stream)
+        .writeStream.outputMode(mode)
+        .foreachBatch(sink)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return {"wall_s": round(time.perf_counter() - t0, 2), **counts, **_state_stamps(q)}
+
+
 HOT_EVENTS = os.path.join(ROOT, ".scale", "sf0.1-hot-events", "events.parquet")
 HOT_MARKER = os.path.join(ROOT, ".scale", "sf0.1-hot-events", "_DERIVE_COMPLETE")
 
@@ -102,8 +129,6 @@ def _derive_hot_events(spark, src: str) -> None:
     user (one mega-session / one serialized python fold).  Same
     md5-mask recipe as gen_skew_sf.py; written as many small files so
     maxFilesPerTrigger yields real micro-batches."""
-    import shutil
-
     from pyspark.sql import functions as F
 
     shutil.rmtree(os.path.dirname(HOT_EVENTS), ignore_errors=True)
@@ -137,13 +162,8 @@ def main() -> int:
         )
         return 2
 
-    from movie_recommendation_engine_spark.session import get_spark
-    from movie_recommendation_engine_spark.streaming.events import (
-        read_events_stream,
-    )
-
-    spark = get_spark("streaming_probe", master="local[32]", shuffle_partitions=32)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark, _ = session("streaming_probe")
+    master = spark.sparkContext.master
 
     n_input = spark.read.parquet(args.events).count()
     n_files = sum(
@@ -157,17 +177,8 @@ def main() -> int:
         running_user_totals,
     )
 
-    warm = (
-        running_user_totals(
-            read_events_stream(spark, args.events, max_files_per_trigger=100)
-        )
-        .writeStream.outputMode("update")
-        .foreachBatch(lambda df, i: df.count())
-        .option("checkpointLocation", os.path.join(scratch, "warm"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    warm.awaitTermination()
+    _replay(spark, running_user_totals, "update", args.events, 100,
+            os.path.join(scratch, "warm"))
 
     ops = probe_ops()
     if args.names:
@@ -183,34 +194,9 @@ def main() -> int:
     for name, build, mode in ops:
         row: dict = {}
         for tag, fpt in (("small", fpt_small), ("large", fpt_large)):
-            counts = {"batches": 0, "rows": 0}
-
-            def sink(df, epoch, counts=counts):
-                counts["batches"] += 1
-                counts["rows"] += df.count()
-
-            ckpt = os.path.join(scratch, f"{name}_{tag}")
-            stream = read_events_stream(
-                spark, args.events, max_files_per_trigger=fpt
-            )
-            t0 = time.perf_counter()
-            q = (
-                build(stream)
-                .writeStream.outputMode(mode)
-                .foreachBatch(sink)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            wall = time.perf_counter() - t0
-            row[tag] = {
-                "wall_s": round(wall, 2),
-                "batches": counts["batches"],
-                "out_rows": counts["rows"],
-                "rows_per_s": int(n_input / wall),
-                **_state_stamps(q),
-            }
+            r = _replay(spark, build, mode, args.events, fpt,
+                        os.path.join(scratch, f"{name}_{tag}"))
+            row[tag] = {**r, "rows_per_s": int(n_input / r["wall_s"])}
         results[name] = row
         print(f"# {name}: {row}", file=sys.stderr)
 
@@ -234,32 +220,8 @@ def main() -> int:
         build = by_name[name][0]
         srow: dict = {}
         for tag, events_dir in (("uniform", args.events), ("hot", HOT_EVENTS)):
-            counts = {"batches": 0, "rows": 0}
-
-            def sink(df, epoch, counts=counts):
-                counts["batches"] += 1
-                counts["rows"] += df.count()
-
-            ckpt = os.path.join(scratch, f"skew_{name}_{tag}")
-            stream = read_events_stream(
-                spark, events_dir, max_files_per_trigger=fpt_large
-            )
-            t0 = time.perf_counter()
-            q = (
-                build(stream)
-                .writeStream.outputMode(mode)
-                .foreachBatch(sink)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            wall = time.perf_counter() - t0
-            srow[tag] = {
-                "wall_s": round(wall, 2),
-                "out_rows": counts["rows"],
-                **_state_stamps(q),
-            }
+            srow[tag] = _replay(spark, build, mode, events_dir, fpt_large,
+                                os.path.join(scratch, f"skew_{name}_{tag}"))
         srow["state_ratio"] = round(
             srow["hot"]["state_rows_peak"]
             / max(1, srow["uniform"]["state_rows_peak"]),
@@ -272,7 +234,6 @@ def main() -> int:
     shutil.rmtree(scratch, ignore_errors=True)
 
     lines = [
-        "",
         "## Streaming throughput probe (round 9)",
         "",
         f"The events table ({n_input} rows as {n_files} files) replayed "
@@ -284,7 +245,7 @@ def main() -> int:
         "commit overhead (plan + state checkpoint) is a fixed cost: "
         "small batches measure the overhead floor, large ones the "
         "processing rate, and the gap is the latency/throughput dial.  "
-        "`rows/s` = input rows / wall to drain, single-host local[32]; "
+        f"`rows/s` = input rows / wall to drain, single-host {master}; "
         "on a cluster the file source shards by file and the state "
         "store by key.  Python-state operators "
         "(applyInPandasWithState) pay Arrow transfer per key-batch — "
@@ -336,16 +297,9 @@ def main() -> int:
         )
     lines.append("")
 
-    path = os.path.join(ROOT, "BENCH_SCALE.md")
-    with open(path) as fh:
-        doc = fh.read()
-    marker = "\n## Streaming throughput probe"
-    if marker in doc:
-        start = doc.index(marker)
-        nxt = doc.find("\n## ", start + 1)
-        doc = doc[:start] + (doc[nxt:] if nxt != -1 else "")
-    with open(path, "w") as fh:
-        fh.write(doc.rstrip("\n") + "\n" + "\n".join(lines))
+    splice_section(
+        os.path.join(ROOT, "BENCH_SCALE.md"), "## Streaming throughput probe", lines
+    )
     print("\n".join(lines))
     print(json.dumps({"probe": "streaming_throughput", "results": results,
                       "skew": skew_results}))
