@@ -163,34 +163,18 @@ def cmd_evaluate(args) -> int:
         out = p.evaluate(k=args.k)
         # The three metric plans are independent of each other (RMSE,
         # ranking summary, popularity hit-ratio) and each is a straggler-
-        # tailed job; collect them from a small thread pool so the next
-        # job's tasks back-fill cores freed by the current job's tail
-        # instead of serializing three ramp-downs.  Plans are built on
-        # this thread; only the actions run concurrently (Spark's
-        # scheduler is designed for concurrent jobs — FIFO back-fill).
-        from concurrent.futures import ThreadPoolExecutor
+        # tailed job; collect them concurrently so the next job's tasks
+        # back-fill cores freed by the current job's tail instead of
+        # serializing three ramp-downs.  Plans are built on this thread;
+        # only the actions run concurrently (Spark's scheduler is
+        # designed for concurrent jobs — FIFO back-fill).
+        from .session import run_concurrently
 
         hit_plan = p.popularity_hit_ratio(args.k, ranked=ranked)
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_rmse = pool.submit(out["rmse"].collect)
-            f_rank = pool.submit(out["ranking"].collect)
-            f_hit = pool.submit(hit_plan.collect)
-            try:
-                row = {
-                    "rmse": f_rmse.result()[0][0],
-                    **f_rank.result()[0].asDict(),
-                    "popularity_hit_ratio": f_hit.result()[0][0],
-                }
-            except BaseException:
-                # fail fast: without this the with-block's shutdown
-                # (wait=True) would let the sibling Spark jobs run to
-                # completion before the error surfaces — a failed
-                # evaluate could burn minutes of cluster time first
-                # (round-13 advisory).  cancel_futures stops the
-                # not-yet-started submissions; already-running jobs
-                # finish but are no longer awaited.
-                pool.shutdown(wait=False, cancel_futures=True)
-                raise
+        rmse, ranking, hit = run_concurrently(
+            spark, "evaluate", out["rmse"].collect, out["ranking"].collect, hit_plan.collect
+        )
+        row = {"rmse": rmse[0][0], **ranking[0].asDict(), "popularity_hit_ratio": hit[0][0]}
     finally:
         p.unpersist()
     print(json.dumps(row))

@@ -37,9 +37,11 @@ import io
 import json
 import os
 import shutil
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..session import run_concurrently
 from . import _t, duck_hash_sql, register
 
 _H_ML = duck_hash_sql("split", "userId", "movieId")
@@ -157,8 +159,6 @@ def q_movielens_e2e_cli(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-user-window jobs becoming partition-pruned parquet scans
     # (round-9 judge defect #1: the cache-leak fix exposed the
     # re-splits as a ~1.7x e2e regression).
-    from concurrent.futures import ThreadPoolExecutor
-
     cli_main(["split", "--ratings", csv_path, "--out", split_dir])
     # popularity and als are INDEPENDENT consumers of the split verb's
     # output (the evaluate verb below needs both artifacts) — run the
@@ -169,23 +169,13 @@ def q_movielens_e2e_cli(spark: SparkSession, sf_dir: str) -> DataFrame:
     # over its own parquet read; job descriptions are thread-local.
     # Overlapped, the verb pair costs ~max of the two instead of their
     # sum (per-verb timings in OPTIMIZATION_r14.md).
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_pop = pool.submit(
-            cli_main,
-            ["popularity", "--splits", split_dir, "--k", "100", "--out", pop_dir],
-        )
-        f_als = pool.submit(
-            cli_main,
-            ["als", "--splits", split_dir, "--rank", "8", "--max-iter", "4",
-             "--reg", "0.1", "--k", "5", "--save-model", model_dir,
-             "--out", recs_dir],
-        )
-        try:
-            f_pop.result()
-            f_als.result()
-        except BaseException:
-            pool.shutdown(wait=False, cancel_futures=True)
-            raise
+    run_concurrently(
+        spark, "e2e-verbs",
+        partial(cli_main, ["popularity", "--splits", split_dir, "--k", "100", "--out", pop_dir]),
+        partial(cli_main, ["als", "--splits", split_dir, "--rank", "8", "--max-iter", "4",
+                           "--reg", "0.1", "--k", "5", "--save-model", model_dir,
+                           "--out", recs_dir]),
+    )
     # evaluate reuses ALL THREE upstream artifacts: the split verb's
     # partitioned parquet (--splits, round 10), the popularity verb's
     # top-100 table (--popularity, round 11 — without it the hit-ratio
@@ -202,14 +192,12 @@ def q_movielens_e2e_cli(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # fold the verb artifacts into the summary row.  The four fold-up
     # aggregates are independent small jobs over different artifacts;
-    # submit them from a thread pool so each job's straggler tail is
+    # run them concurrently so each job's straggler tail is
     # back-filled by the next one's tasks (guide-§2.6 overlap).  The
     # three independent plans are built up front on this thread; the
     # dependent base-RMSE pair (mu collect -> scored_val aggregate) is
-    # inherently sequential, so it builds AND runs inside its own pool
-    # task (py4j plan construction is thread-safe).
-    from concurrent.futures import ThreadPoolExecutor
-
+    # inherently sequential, so it builds AND runs inside its own
+    # thread (py4j plan construction is thread-safe).
     labeled = spark.read.parquet(split_dir)
     counts_plan = labeled.groupBy("split").agg(F.count("*").alias("n"))
     pop_plan = spark.read.parquet(pop_dir).agg(
@@ -226,7 +214,7 @@ def q_movielens_e2e_cli(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ALS invariant baseline: train-global-mean RMSE on the same scored
     # subset the model was evaluated on (validation rows whose user AND
     # item appear in train == coldStartStrategy='drop').  mu -> base_rmse
-    # is a dependent pair, so it runs as one sequential task in the pool.
+    # is a dependent pair, so it runs as one sequential task.
     train = labeled.filter(F.col("split") == "train")
     val = labeled.filter(F.col("split") == "validation")
 
@@ -241,22 +229,11 @@ def q_movielens_e2e_cli(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sqrt(F.avg(F.pow(F.col("rating") - F.lit(mu), 2)))
         ).collect()[0][0]
 
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        f_counts = pool.submit(counts_plan.collect)
-        f_pop = pool.submit(lambda: pop_plan.collect()[0])
-        f_recs = pool.submit(lambda: rec_stats_plan.collect()[0])
-        f_base = pool.submit(_base_rmse)
-        try:
-            counts = {r["split"]: r["n"] for r in f_counts.result()}
-            pop = f_pop.result()
-            rec_stats = f_recs.result()
-            base_rmse = f_base.result()
-        except BaseException:
-            # fail fast instead of letting the with-block's shutdown
-            # (wait=True) run every sibling job to completion before the
-            # error surfaces (round-13 advisory on the evaluate pool)
-            pool.shutdown(wait=False, cancel_futures=True)
-            raise
+    counts, pop, rec_stats, base_rmse = run_concurrently(
+        spark, "e2e-fold", counts_plan.collect, lambda: pop_plan.collect()[0],
+        lambda: rec_stats_plan.collect()[0], _base_rmse,
+    )
+    counts = {r["split"]: r["n"] for r in counts}
 
     rmse, map_at_k = float(metrics["rmse"]), float(metrics["map_at_k"])
     shutil.rmtree(scratch, ignore_errors=True)

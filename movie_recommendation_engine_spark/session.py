@@ -14,7 +14,11 @@ provided (reference shell_setup.sh:1-7).  Here every knob that matters at
 from __future__ import annotations
 
 import os
+import uuid
+from collections.abc import Callable
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -55,3 +59,38 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def run_concurrently(spark: SparkSession, label: str, *fns: Callable[[], object]) -> list:
+    """Run each fn on its own thread; return their results in argument order.
+
+    PySpark's pinned-thread mode starts a plain thread with no local
+    properties, so each fn is wrapped to inherit the caller's job group,
+    description and tags, plus one tag unique to this call.  On the
+    first failure that tag is cancelled again and again until every
+    sibling has finished: a cancel reaches only the jobs running at that
+    moment, and a sibling between two jobs (AQE runs a map-stage job,
+    then the result job) would start the next one after it.  The failing
+    fn's own exception is raised, noted with ``label``.
+    """
+    sc = spark.sparkContext
+    tag = f"{label}-{uuid.uuid4().hex}"
+
+    def tagged(fn):
+        def run():
+            sc.addJobTag(tag)
+            return fn()
+
+        return inheritable_thread_target(spark)(run)
+
+    with ThreadPoolExecutor(max_workers=len(fns)) as pool:
+        futures = [pool.submit(tagged(fn)) for fn in fns]
+        done, pending = wait(futures, return_when=FIRST_EXCEPTION)
+        while pending:  # a fn raised: stop its siblings' jobs
+            sc.cancelJobsWithTag(tag)
+            pending = wait(pending, timeout=0.05).not_done
+    for f in futures:
+        if f in done and f.exception() is not None:
+            f.exception().add_note(label)
+            raise f.exception()
+    return [f.result() for f in futures]

@@ -13,27 +13,27 @@ context (round-12: three separate copies had drifted — bench_check's
 toy ALS fit under-warmed relative to bench.py's real fit, and the
 iterative class was pasted verbatim into all three).
 
-Every helper swallows its own failures (a missing sf0.001 checkout or
-MLlib edge must not kill a bench run); callers pass ``log`` to surface
-the skip.
+Every helper swallows its own failures (a missing input or MLlib edge
+must not kill a bench run); callers pass ``log`` to surface the skip.
 
-``warm_all`` runs the five classes concurrently, one thread each,
-longest (ALS) first, and returns once all have finished.  They share no
-state, and one class alone leaves most cores idle on JIT, class loading
-and Python worker start-up, so overlapping them shortens fresh-session
-setup.  Import rule: everything a helper needs is imported at the top
-of this module, never inside a helper.  A process's first import of
-``pyspark.ml`` is not thread-safe: concurrent first imports fail with
-``ImportError`` (partially initialized ``pyspark.ml.wrapper``) or
-``KeyError: 'pyspark.ml'``, and the helper would log a failure and warm
-nothing.
+``warm_all`` runs the five classes through ``session.run_concurrently``,
+one thread each, longest (ALS) first, and returns once all have
+finished.  They share no state, and one class alone leaves most cores
+idle on JIT, class loading and Python worker start-up, so overlapping
+them shortens fresh-session setup.  Import rule: everything a helper
+needs is imported at the top of this module (and ``run_concurrently``'s
+at the top of ``session.py``), never inside a helper.  A process's first
+import of ``pyspark.ml`` is not thread-safe: concurrent first imports
+fail with ``ImportError`` (partially initialized ``pyspark.ml.wrapper``)
+or ``KeyError: 'pyspark.ml'``, and the helper would log a failure and
+warm nothing.
 
 Warmup classes and why each exists:
 - ``warm_parquet``: footer/codec initialization for the sweep's input.
 - ``warm_als``: the first REAL MLlib ALS fit in a JVM pays JIT across
   block/solver/checkpoint paths a toy 200-row fit never touches
-  (round-4: ~28 s billed to the first ALS query without it); falls
-  back to a synthetic frame when sf0.001 is absent.
+  (round-4: ~28 s billed to the first ALS query without it), on a
+  seeded ``spark.range`` frame shaped like sf0.001 lineitem.
 - ``warm_kmeans``: same class for the IVF-kmeans quantizer fits.
 - ``warm_arrow``: first mapInPandas spawns the Python worker pool and
   initializes the Arrow lanes (round-10: 5-35 s).
@@ -48,7 +48,6 @@ Warmup classes and why each exists:
 from __future__ import annotations
 
 from collections.abc import Callable
-from concurrent.futures import ThreadPoolExecutor
 from functools import partial
 
 from pyspark.ml.clustering import KMeans
@@ -59,6 +58,7 @@ from pyspark.sql import functions as F
 
 from .operators.graph import pagerank, pagerank_weighted
 from .operators.similarity import arrow_dot_topk
+from .session import run_concurrently
 
 
 def _noop(msg: str) -> None:  # pragma: no cover - trivial
@@ -74,26 +74,14 @@ def warm_parquet(spark, sf_dir: str, log: Callable[[str], None] = _noop) -> None
 
 def warm_als(spark, log: Callable[[str], None] = _noop) -> None:
     try:
-        try:
-            warm = (
-                spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-                .select(
-                    F.col("l_orderkey").cast("int").alias("user"),
-                    F.col("l_partkey").cast("int").alias("item"),
-                    F.col("l_quantity").cast("float").alias("rating"),
-                )
-                .dropDuplicates(["user", "item"])
-            )
-        except Exception:  # no sf0.001 checkout: synthesize a small one
-            warm = spark.createDataFrame(
-                [
-                    (u, i, float((u * i) % 5 + 1))
-                    for u in range(200)
-                    for i in range(40)
-                    if (u + i) % 3
-                ],
-                "user int, item int, rating float",
-            )
+        # the shape of sf0.001 lineitem's (orderkey, partkey, quantity):
+        # 6,000 unique (user, item) pairs, 1,473 users, 200 items,
+        # ratings 1-50, one partition
+        warm = spark.range(0, 6000, 1, 1).select(
+            (F.col("id") % 1473).cast("int").alias("user"),
+            (F.col("id") % 200).cast("int").alias("item"),
+            (F.floor(F.rand(seed=1) * 50) + 1).cast("float").alias("rating"),
+        )
         m = ALS(
             rank=8,
             maxIter=4,
@@ -163,7 +151,4 @@ def warm_all(spark, sf_dir: str, log: Callable[[str], None] = _noop) -> None:
         partial(warm_arrow, spark, log),
         partial(warm_kmeans, spark, log),
     )
-    with ThreadPoolExecutor(max_workers=len(classes)) as pool:
-        futures = [pool.submit(c) for c in classes]
-    for f in futures:
-        f.result()
+    run_concurrently(spark, "warmup", *classes)
