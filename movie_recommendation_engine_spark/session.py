@@ -18,7 +18,7 @@ import uuid
 from collections.abc import Callable
 from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 
-from pyspark import inheritable_thread_target
+from pyspark import SparkContext, inheritable_thread_target
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -29,8 +29,17 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
+    log_level: str = "WARN",
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession with scale-aware defaults."""
+    """Build a SparkSession with scale-aware defaults, or return the
+    live one untouched.
+
+    The arguments apply only when this call starts the SparkContext: a
+    library call (a CLI verb, a generator driven from a test) must not
+    re-apply confs or the log level to its caller's session.
+    """
+    if SparkContext._active_spark_context is not None:
+        return SparkSession.builder.getOrCreate()
     master = master or os.environ.get(
         "SPARK_GRAFT_MASTER", f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
     )
@@ -57,7 +66,7 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark.sparkContext.setLogLevel(log_level)
     return spark
 
 

@@ -113,3 +113,87 @@ def test_session_rejects_sf_dir_without_lineitem(no_spark, monkeypatch):
 
 def test_env_accepts_valid_values(no_spark):
     assert harness._env() == (str(no_spark), 4)
+
+
+def _report(tmp_path, probe, results, note=""):
+    path = tmp_path / "BENCH_SCALE.md"
+    path.unlink(missing_ok=True)
+    flagged = probe.report(results, "intro", note=note, path=str(path))
+    return flagged, path.read_text().splitlines()
+
+
+def _fake(s, ratios, rows=(7, 7, 7)):
+    return {"s": list(s), "rows": list(rows[: len(s)]), "ratios": list(ratios)}
+
+
+def test_two_sided_probe_sections_keep_their_headings_and_verdicts(tmp_path):
+    """Each probe's section has the heading, header row, verdict words
+    and Flagged line it had before the probes shared one writer."""
+    import dup_clique_probe
+    import fragmentation_probe
+    import skew_probe
+
+    results = {"calm": _fake([1.0, 1.5], [1.5]), "hot": _fake([1.0, 9.0], [9.0])}
+    flagged, lines = _report(tmp_path, skew_probe.PROBE, results)
+    assert flagged == ["hot"]
+    assert lines[:6] == [
+        "## Skew probe (round 8)", "", "intro", "",
+        "| query | uniform (s) | skew (s) | ratio | verdict |",
+        "|---|---|---|---|---|",
+    ]
+    assert lines[6:] == [
+        "| hot | 1.0 | 9.0 | 9.0 | FLAG |", "| calm | 1.0 | 1.5 | 1.5 | ok |",
+        "", "Flagged (> 3.0x): hot.",
+    ]
+
+    flagged, lines = _report(
+        tmp_path, fragmentation_probe.PROBE, {"calm": _fake([2.0, 3.0], [1.5])},
+        note="  ROW-COUNT MISMATCHES: calm: 7 vs 8 rows",
+    )
+    assert flagged == []
+    assert lines[0] == "## Fragmentation probe (round 9)"
+    assert lines[4] == "| query | uniform (s) | fragmented (s) | ratio | verdict |"
+    assert lines[6:] == [
+        "| calm | 2.0 | 3.0 | 1.5 | ok |", "",
+        "Flagged (> 2.0x): none.  ROW-COUNT MISMATCHES: calm: 7 vs 8 rows",
+    ]
+
+    results = {
+        "dedup_simhash": _fake([1.0, 50.0], [50.0], rows=(10, 900)),
+        "dedup_exact": _fake([1.0, 4.0], [4.0], rows=(10, 10)),
+    }
+    flagged, lines = _report(tmp_path, dup_clique_probe.PROBE, results)
+    assert flagged == ["dedup_exact"]
+    assert lines[0] == "## Duplicate-clique probe (round 9)"
+    assert lines[4] == "| query | uniform (s) / rows | dup (s) / rows | ratio | verdict |"
+    assert lines[6:] == [
+        "| dedup_simhash | 1.0 / 10 | 50.0 / 900 | 50.0 | inherent-k^2-output |",
+        "| dedup_exact | 1.0 / 10 | 4.0 / 10 | 4.0 | FLAG |",
+        "", "Flagged bounded queries (> 3.0x): dedup_exact.",
+    ]
+
+
+def test_scale_probe_section_keeps_its_table(tmp_path):
+    from dataclasses import replace
+
+    import scale_probe
+
+    probe = scale_probe.PROBE
+    results = {"a": _fake([0.5, 1.0, 12.0], [2.0, 12.0]), "b": _fake([1.0, 2.0, 16.0], [2.0, 8.0])}
+    flagged, lines = _report(tmp_path, probe, results, note="Worst: 12.0.")
+    assert flagged == []
+    assert lines[0] == "# BENCH_SCALE — cross-SF scaling probe"
+    assert lines[4:] == [
+        "| query | sf0.01 (s) | sf0.1 (s) | ratio1 | sf1 (s) | ratio2 | grade |",
+        "|---|---|---|---|---|---|---|",
+        "| a | 0.5 | 1.0 | 2.0 | 12.0 | 12.0 | SUPER-LINEAR |",
+        "| b | 1.0 | 2.0 | 2.0 | 16.0 | 8.0 | linear |",
+        "", "Worst: 12.0.",
+    ]
+    one_decade = replace(probe, labels=probe.labels[:2])
+    _, lines = _report(tmp_path, one_decade, {"a": _fake([0.5, 1.0], [2.0])})
+    assert lines[4:7] == [
+        "| query | sf0.01 (s) | sf0.1 (s) | ratio1 | grade |",
+        "|---|---|---|---|---|",
+        "| a | 0.5 | 1.0 | 2.0 | sub-linear |",
+    ]

@@ -35,8 +35,9 @@ Usage:
     python tools/dup_clique_probe.py          # default query set
     python tools/dup_clique_probe.py name...  # explicit list
 Writes a "## Duplicate-clique probe" section into BENCH_SCALE.md.
-Env: SPARK_GRAFT_DUP_DIR overrides the variant location
-(`gen_dup_sf.py --src` should match $SPARK_GRAFT_SF_DIR).
+The variant (default ``.scale/<SF name>-dup``, or $SPARK_GRAFT_DUP_DIR)
+is used only when its derive marker names $SPARK_GRAFT_SF_DIR and the
+default --pct; otherwise the probe derives it first (gen_dup_sf.derive).
 """
 
 from __future__ import annotations
@@ -44,11 +45,9 @@ from __future__ import annotations
 import os
 import sys
 
-from harness import ROOT, best_of, session, splice_section
+import gen_dup_sf
+from harness import Probe, session, variant_dir
 
-SF_DUP = os.environ.get(
-    "SPARK_GRAFT_DUP_DIR", os.path.join(ROOT, ".scale", "sf0.1-dup")
-)
 RUNS = 2
 THRESHOLD = 3.0
 SLOW_SKIP_S = 90.0  # one run past this: record it, skip the retries
@@ -75,71 +74,48 @@ DEFAULT_QUERIES = [
 ]
 
 
+def _verdict(name: str, ratio: float) -> str:
+    if name in QUADRATIC_OUTPUT:
+        return "inherent-k^2-output"
+    return "FLAG" if ratio > THRESHOLD else "ok"
+
+
+PROBE = Probe(
+    "## Duplicate-clique probe (round 9)",
+    ("uniform", "dup"),
+    RUNS,
+    THRESHOLD,
+    verdict=_verdict,
+    flag_label="Flagged bounded queries",
+    rows_in_cells=True,
+    slow_skip_s=SLOW_SKIP_S,
+)
+
+
 def main(argv: list[str]) -> int:
-    names = argv or DEFAULT_QUERIES
-
-    if not os.path.exists(os.path.join(SF_DUP, "documents.parquet")):
-        print(
-            f"# {SF_DUP} missing — run: python tools/gen_dup_sf.py",
-            file=sys.stderr,
-        )
-        return 2
-
     from pyspark.sql import functions as F
-
-    from movie_recommendation_engine_spark.registry import QUERIES
 
     spark, sf_uniform = session("dup_probe")
     master = spark.sparkContext.master
+    sf_dup = variant_dir("SPARK_GRAFT_DUP_DIR", sf_uniform, "dup")
+    gen_dup_sf.derive(spark, sf_uniform, sf_dup)
 
-    docs = spark.read.parquet(f"{SF_DUP}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dup}/documents.parquet")
     n_docs = docs.count()
     # clique size = docs whose text starts with the shared template
-    # prefix (the unique suffix keeps fingerprints distinct)
-    clique = docs.filter(
-        F.col("text").startswith("breaking news update the markets")
-    ).count()
+    # (the unique suffix keeps fingerprints distinct)
+    clique = docs.filter(F.col("text").startswith(gen_dup_sf.TEMPLATE)).count()
 
-    for sf_dir in (sf_uniform, SF_DUP):  # warm footers + python workers
+    dirs = [sf_uniform, sf_dup]
+    for sf_dir in dirs:  # warm footers + python workers
         spark.read.parquet(f"{sf_dir}/documents.parquet").agg(
             F.sum(F.length("text"))
         ).collect()
-
-    results: dict[str, dict] = {}
-    for name in names:
-        if name not in QUERIES:
-            print(f"# unknown query {name}, skipping", file=sys.stderr)
-            continue
-        row: dict = {}
-        for tag, sf_dir in (("uniform", sf_uniform), ("dup", SF_DUP)):
-
-            def run():
-                row[f"{tag}_rows"] = QUERIES[name](spark, sf_dir).count()
-
-            best = best_of(run, 1)
-            if best <= SLOW_SKIP_S:  # past it the magnitude is the finding
-                best = min(best, best_of(run, RUNS - 1))
-            row[tag] = round(best, 3)
-        row["ratio"] = round(row["dup"] / row["uniform"], 2)
-        results[name] = row
-        print(
-            f"# {name}: uniform {row['uniform']}s ({row['uniform_rows']} rows)"
-            f" -> dup {row['dup']}s ({row['dup_rows']} rows) x{row['ratio']}",
-            file=sys.stderr,
-        )
+    results = PROBE.time(spark, argv or DEFAULT_QUERIES, dirs)
     spark.stop()
 
-    flagged = sorted(
-        (
-            n
-            for n, r in results.items()
-            if r["ratio"] > THRESHOLD and n not in QUADRATIC_OUTPUT
-        ),
-        key=lambda n: -results[n]["ratio"],
-    )
-    lines = [
-        "## Duplicate-clique probe (round 9)",
-        "",
+    flagged = PROBE.report(
+        results,
         f"Dedup family on uniform {os.path.basename(sf_uniform)} vs the "
         "duplicate-heavy variant "
         f"(`tools/gen_dup_sf.py`: {clique}/{n_docs} documents are "
@@ -152,34 +128,8 @@ def main(argv: list[str]) -> int:
         "ENUMERATION on a k-clique emits Theta(k^2) output rows by "
         "semantics, so those two report their measured cost instead of "
         "a flag — clique-heavy corpora route through the capped/star "
-        "paths (as the curation pipeline does).",
-        "",
-        "| query | uniform (s) / rows | dup (s) / rows | ratio | verdict |",
-        "|---|---|---|---|---|",
-    ]
-    for name, row in sorted(results.items(), key=lambda kv: -kv[1]["ratio"]):
-        if name in QUADRATIC_OUTPUT:
-            verdict = "inherent-k^2-output"
-        elif row["ratio"] > THRESHOLD:
-            verdict = "FLAG"
-        else:
-            verdict = "ok"
-        lines.append(
-            f"| {name} | {row['uniform']} / {row['uniform_rows']} "
-            f"| {row['dup']} / {row['dup_rows']} | {row['ratio']} "
-            f"| {verdict} |"
-        )
-    lines += [
-        "",
-        f"Flagged bounded queries (> {THRESHOLD}x): "
-        + (", ".join(flagged) if flagged else "none")
-        + ".",
-        "",
-    ]
-
-    path = os.path.join(ROOT, "BENCH_SCALE.md")
-    splice_section(path, "## Duplicate-clique probe", lines)
-    print(f"# wrote Duplicate-clique probe section to {path}", file=sys.stderr)
+        "paths (as the curation pipeline does)."
+    )
     return 1 if flagged else 0
 
 

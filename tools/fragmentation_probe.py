@@ -27,27 +27,27 @@ Usage:
     python tools/fragmentation_probe.py            # default query set
     python tools/fragmentation_probe.py name...    # explicit list
 Writes a "## Fragmentation probe" section into BENCH_SCALE.md.
-Env: SPARK_GRAFT_FRAG_DIR overrides the fragmented-copy location.
+The copy (default ``.scale/<SF name>-frag``, or $SPARK_GRAFT_FRAG_DIR)
+is reused only when its derive marker names $SPARK_GRAFT_SF_DIR and
+the rows-per-file setting.
 """
 
 from __future__ import annotations
 
-import json
+import glob
 import os
 import sys
 
-from harness import ROOT, best_of, session, splice_section, warm_scan
+from harness import Probe, derive_variant, session, variant_dir, warm_scan
 
-SF_FRAG = os.environ.get(
-    "SPARK_GRAFT_FRAG_DIR", os.path.join(ROOT, ".scale", "sf0.1-frag")
-)
+from movie_recommendation_engine_spark.sources.schemas import TESTDATA_TABLES
+
 ROWS_PER_FILE = int(os.environ.get("SPARK_GRAFT_FRAG_ROWS_PER_FILE", "500"))
 RUNS = 3
 THRESHOLD = 2.0
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+PROBE = Probe(
+    "## Fragmentation probe (round 9)", ("uniform", "fragmented"), RUNS, THRESHOLD
+)
 
 # Scan-dominated queries: full-table profiles/aggregates, wide
 # projections, and text/token scans — the shapes where per-file
@@ -69,108 +69,42 @@ DEFAULT_QUERIES = [
 ]
 
 
-MARKER = os.path.join(SF_FRAG, "_DERIVE_COMPLETE.json")
-
-
-def _marker(src: str) -> dict:
-    return {"rows_per_file": ROWS_PER_FILE, "tables": list(TABLES), "src": src}
-
-
-def _marker_ok(src: str) -> bool:
-    """True iff a prior derive of ``src`` COMPLETED under the same
-    settings.
-
-    Existence of lineitem.parquet alone is not enough (round-8
-    advisory): a crashed half-written derive, or one built under a
-    different SPARK_GRAFT_FRAG_ROWS_PER_FILE or from a different
-    source dir, would be silently reused and skew the uniform-vs-
-    fragmented comparison.  The marker is written LAST, after every
-    table lands, and records the knobs.
-    """
-    try:
-        with open(MARKER) as fh:
-            m = json.load(fh)
-        return m == _marker(src)
-    except Exception:
-        return False
-
-
-def _derive(spark, src: str) -> None:
-    import shutil
-
-    shutil.rmtree(SF_FRAG, ignore_errors=True)  # stale/partial prior copy
-    os.makedirs(SF_FRAG, exist_ok=True)
-    for t in TABLES:
-        df = spark.read.parquet(f"{src}/{t}.parquet")
-        n = df.count()
-        files = max(1, n // ROWS_PER_FILE)
-        df.repartition(files).write.mode("overwrite").parquet(
-            f"{SF_FRAG}/{t}.parquet"
-        )
-        print(f"# fragmented {t}: {n} rows -> {files} files", file=sys.stderr)
-    with open(MARKER, "w") as fh:
-        json.dump(_marker(src), fh)
+def _shatter(table, df):
+    n = df.count()
+    files = max(1, n // ROWS_PER_FILE)
+    print(f"# fragmented {table}: {n} rows -> {files} files", file=sys.stderr)
+    return df.repartition(files)
 
 
 def _file_count(d: str) -> int:
-    total = 0
-    for t in TABLES:
-        p = f"{d}/{t}.parquet"
-        if os.path.isdir(p):
-            total += sum(1 for f in os.listdir(p) if f.endswith(".parquet"))
-        else:
-            total += 1
-    return total
+    """Parquet files of the star schema: one per single-file table, else
+    the part files of its directory."""
+    return sum(
+        len(glob.glob(f"{d}/{t}.parquet/*.parquet")) or 1 for t in TESTDATA_TABLES
+    )
 
 
 def main(argv: list[str]) -> int:
-    names = argv or DEFAULT_QUERIES
-
-    from movie_recommendation_engine_spark.registry import QUERIES
-
     spark, sf_uniform = session("frag_probe")
     master = spark.sparkContext.master
+    sf_frag = variant_dir("SPARK_GRAFT_FRAG_DIR", sf_uniform, "frag")
+    params = {"variant": "frag", "rows_per_file": ROWS_PER_FILE}
+    derive_variant(spark, sf_uniform, sf_frag, params, _shatter)
 
-    if not _marker_ok(sf_uniform):
-        _derive(spark, sf_uniform)
-
-    n_files = {"uniform": _file_count(sf_uniform), "frag": _file_count(SF_FRAG)}
-    warm_scan(spark, [sf_uniform, SF_FRAG])
-
-    results: dict[str, dict[str, float]] = {}
-    mismatches: list[str] = []
-    for name in names:
-        if name not in QUERIES:
-            print(f"# unknown query {name}, skipping", file=sys.stderr)
-            continue
-        row: dict[str, float] = {}
-        counts: dict[str, int] = {}
-        for tag, sf_dir in (("uniform", sf_uniform), ("frag", SF_FRAG)):
-
-            def run():
-                counts[tag] = QUERIES[name](spark, sf_dir).count()
-
-            row[tag] = round(best_of(run, RUNS), 3)
-        if counts["uniform"] != counts["frag"]:
-            mismatches.append(
-                f"{name}: {counts['uniform']} vs {counts['frag']} rows"
-            )
-        row["ratio"] = round(row["frag"] / row["uniform"], 2)
-        results[name] = row
-        print(
-            f"# {name}: uniform {row['uniform']}s -> frag {row['frag']}s "
-            f"(x{row['ratio']})",
-            file=sys.stderr,
-        )
+    n_files = {"uniform": _file_count(sf_uniform), "frag": _file_count(sf_frag)}
+    dirs = [sf_uniform, sf_frag]
+    warm_scan(spark, dirs)
+    results = PROBE.time(spark, argv or DEFAULT_QUERIES, dirs)
     spark.stop()
 
-    flagged = sorted(
-        (n for n, r in results.items() if r["ratio"] > THRESHOLD),
-        key=lambda n: -results[n]["ratio"],
-    )
-    lines = [
-        "## Fragmentation probe (round 9)",
-        "",
+    # layout independence is the correctness claim: equal row counts
+    mismatches = [
+        f"{name}: {r['rows'][0]} vs {r['rows'][1]} rows"
+        for name, r in results.items()
+        if r["rows"][0] != r["rows"][1]
+    ]
+    flagged = PROBE.report(
+        results,
         f"Scan-heavy queries on {os.path.basename(sf_uniform)} vs a "
         "content-identical copy "
         f"shattered into ~{ROWS_PER_FILE}-row parquet files "
@@ -183,33 +117,8 @@ def main(argv: list[str]) -> int:
         "query through plain parquet reads.  `ratio` = fragmented/uniform "
         f"wall-clock; above {THRESHOLD}x flags a plan paying per-file "
         "costs.  Row counts verified equal across layouts per query.",
-        "",
-        "| query | uniform (s) | fragmented (s) | ratio | verdict |",
-        "|---|---|---|---|---|",
-    ]
-    for name, row in sorted(results.items(), key=lambda kv: -kv[1]["ratio"]):
-        verdict = "FLAG" if row["ratio"] > THRESHOLD else "ok"
-        lines.append(
-            f"| {name} | {row['uniform']} | {row['frag']} | {row['ratio']} "
-            f"| {verdict} |"
-        )
-    lines += [
-        "",
-        f"Flagged (> {THRESHOLD}x): "
-        + (", ".join(flagged) if flagged else "none")
-        + "."
-        + (
-            "  ROW-COUNT MISMATCHES: " + "; ".join(mismatches)
-            if mismatches
-            else ""
-        ),
-        "",
-    ]
-
-    splice_section(
-        os.path.join(ROOT, "BENCH_SCALE.md"), "## Fragmentation probe", lines
+        note="  ROW-COUNT MISMATCHES: " + "; ".join(mismatches) if mismatches else "",
     )
-    print("\n".join(lines))
     return 1 if flagged or mismatches else 0
 
 

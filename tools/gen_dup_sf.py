@@ -32,22 +32,17 @@ Usage:
     python tools/gen_dup_sf.py [--src /root/testdata/sf0.1]
                                [--out .scale/sf0.1-dup]
                                [--pct 20]
+Runs ``local[$SPARK_GRAFT_CPUS]``.  ``harness.derive_variant`` writes
+the variant: a finished derive of the same --src and --pct is reused.
 """
 
 from __future__ import annotations
 
 import argparse
 import os
-import shutil
 import sys
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from harness import ROOT, derive_variant, local_spark
 
 TEMPLATE = (
     "breaking news update the markets opened higher today as investors "
@@ -59,6 +54,32 @@ TEMPLATE = (
 )
 
 
+def derive(spark, src: str, out: str, pct: int = 20) -> None:
+    """Derive (or reuse) the duplicate-clique variant of ``src`` at ``out``."""
+    from pyspark.sql import functions as F
+
+    mod = max(1, round(100 / pct))
+
+    def dup(table, df):
+        if table != "documents":
+            return None
+        mask = (
+            F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
+            .cast("long") % mod == 0
+        )
+        dup_text = F.concat(
+            F.lit(TEMPLATE), F.lit(" tok"), F.col("doc_id").cast("string")
+        )
+        return df.withColumn(
+            "text", F.when(mask, dup_text).otherwise(F.col("text"))
+        ).withColumn(
+            "n_chars",
+            F.when(mask, F.length("text")).otherwise(F.col("n_chars")),
+        )
+
+    derive_variant(spark, src, out, {"variant": "dup", "pct": pct}, dup, single_file=True)
+
+
 def main(argv: list[str] | None = None, stop_spark: bool = False) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--src", default="/root/testdata/sf0.1")
@@ -68,44 +89,9 @@ def main(argv: list[str] | None = None, stop_spark: bool = False) -> int:
     args = ap.parse_args(argv)
     if not 1 <= args.pct <= 100:
         ap.error(f"--pct must be in [1, 100], got {args.pct}")
-    mod = max(1, round(100 / args.pct))
 
-    from pyspark.sql import functions as F
-
-    from movie_recommendation_engine_spark.session import get_spark
-
-    spark = get_spark("gen_dup_sf", master="local[16]", shuffle_partitions=16)
-    spark.sparkContext.setLogLevel("ERROR")
-    os.makedirs(args.out, exist_ok=True)
-
-    for t in TABLES:
-        src_path = os.path.join(args.src, f"{t}.parquet")
-        out_path = os.path.join(args.out, f"{t}.parquet")
-        if t != "documents":
-            if os.path.isfile(src_path):
-                shutil.copyfile(src_path, out_path)
-            else:
-                spark.read.parquet(src_path).write.mode("overwrite").parquet(out_path)
-            continue
-        df = spark.read.parquet(src_path)
-        mask = (
-            F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-            .cast("long") % mod == 0
-        )
-        dup_text = F.concat(
-            F.lit(TEMPLATE), F.lit(" tok"), F.col("doc_id").cast("string")
-        )
-        df = df.withColumn(
-            "text", F.when(mask, dup_text).otherwise(F.col("text"))
-        ).withColumn(
-            "n_chars",
-            F.when(mask, F.length("text")).otherwise(F.col("n_chars")),
-        )
-        df.coalesce(1).write.mode("overwrite").parquet(out_path + ".tmp")
-        part = [f for f in os.listdir(out_path + ".tmp") if f.endswith(".parquet")]
-        shutil.move(os.path.join(out_path + ".tmp", part[0]), out_path)
-        shutil.rmtree(out_path + ".tmp", ignore_errors=True)
-
+    spark = local_spark("gen_dup_sf")
+    derive(spark, args.src, args.out, args.pct)
     if stop_spark:
         spark.stop()
     print(f"wrote duplicate-clique variant to {args.out}", file=sys.stderr)

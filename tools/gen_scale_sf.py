@@ -47,52 +47,78 @@ rotation exists to prevent.  ``main`` rejects k outside [1, 26].
 Usage:
     python tools/gen_scale_sf.py [--src /root/testdata/sf0.1] \
         [--out .scale/sf1] [--k 10]
+Runs ``local[$SPARK_GRAFT_CPUS]``.  ``harness.derive_variant`` writes
+the SF: a finished derive of the same --src and --k is reused.
 """
 
 from __future__ import annotations
 
 import argparse
+import functools
 import os
 import string
 import sys
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
+from harness import ROOT, derive_variant, local_spark
 
-# (table, [key columns to shift by this table's own stride]) — strides
-# are derived from the SOURCE's max key per entity so cross-table
-# references stay aligned
-ENTITY_KEYS = {
-    "customer": "c_custkey",
-    "supplier": "s_suppkey",
-    "part": "p_partkey",
-    "orders": "o_orderkey",
-    "events": "event_id",
-    "documents": "doc_id",
-    "embeddings": "vec_id",
-}
-# table -> {column: entity whose stride shifts it}
+# table -> {column: (table, key) whose stride shifts it}.  A stride is
+# the SOURCE's max key + 1, so cross-table references stay aligned;
+# tables not listed (region, nation) are copied once.
+CUSTOMER, ORDERS = ("customer", "c_custkey"), ("orders", "o_orderkey")
+PART, SUPPLIER = ("part", "p_partkey"), ("supplier", "s_suppkey")
 SHIFTS = {
-    "customer": {"c_custkey": "customer"},
-    "supplier": {"s_suppkey": "supplier"},
-    "part": {"p_partkey": "part"},
-    "orders": {"o_orderkey": "orders", "o_custkey": "customer"},
-    "lineitem": {
-        "l_orderkey": "orders",
-        "l_partkey": "part",
-        "l_suppkey": "supplier",
-    },
-    "events": {"event_id": "events", "user_id": "events_user"},
-    "documents": {"doc_id": "documents"},
-    "embeddings": {"vec_id": "embeddings"},
+    "customer": {"c_custkey": CUSTOMER},
+    "supplier": {"s_suppkey": SUPPLIER},
+    "part": {"p_partkey": PART},
+    "orders": {"o_orderkey": ORDERS, "o_custkey": CUSTOMER},
+    "lineitem": {"l_orderkey": ORDERS, "l_partkey": PART, "l_suppkey": SUPPLIER},
+    "events": {"event_id": ("events", "event_id"), "user_id": ("events", "user_id")},
+    "documents": {"doc_id": ("documents", "doc_id")},
+    "embeddings": {"vec_id": ("embeddings", "vec_id")},
 }
-COPY_ONLY = ["region", "nation"]
+
+
+def derive(spark, src: str, out: str, k: int = 10) -> None:
+    """Derive (or reuse) the ``k``-fold replication of ``src`` at ``out``."""
+    from pyspark.sql import DataFrame
+    from pyspark.sql import functions as F
+
+    @functools.cache
+    def stride(table: str, key: str) -> int:
+        df = spark.read.parquet(f"{src}/{table}.parquet")
+        return int(df.agg(F.max(key)).collect()[0][0]) + 1
+
+    lower, upper = string.ascii_lowercase, string.ascii_uppercase
+
+    def replicate(table, df):
+        if table not in SHIFTS:
+            return df
+        reps = []
+        for i in range(k):
+            rep = df
+            for col, entity in SHIFTS[table].items():
+                t = rep.schema[col].dataType.simpleString()
+                rep = rep.withColumn(
+                    col, (F.col(col) + F.lit(i * stride(*entity))).cast(t)
+                )
+            if table == "documents" and i > 0:
+                rot_l = lower[i:] + lower[:i]
+                rot_u = upper[i:] + upper[:i]
+                rep = rep.withColumn(
+                    "text", F.translate("text", lower + upper, rot_l + rot_u)
+                )
+            reps.append(rep)
+        # partition count scales with the replication so downstream scans
+        # see sf-proportional parallelism, mirroring the source layout
+        union = functools.reduce(DataFrame.unionByName, reps)
+        return union.repartition(df.rdd.getNumPartitions() * k)
+
+    derive_variant(spark, src, out, {"variant": "scale", "k": k}, replicate)
 
 
 def main(argv: list[str] | None = None, stop_spark: bool = False) -> int:
-    """``stop_spark`` only from the CLI entry: get_spark getOrCreates,
-    so stopping unconditionally would kill a caller's live session
-    (the pytest fixture drives this as a library)."""
+    """``stop_spark`` only from the CLI entry: the session may be the
+    caller's (the pytest fixture drives this as a library)."""
     ap = argparse.ArgumentParser()
     ap.add_argument("--src", default="/root/testdata/sf0.1")
     ap.add_argument("--out", default=os.path.join(ROOT, ".scale", "sf1"))
@@ -105,62 +131,8 @@ def main(argv: list[str] | None = None, stop_spark: bool = False) -> int:
             "earlier replicas' text verbatim and inflate dedup candidates"
         )
 
-    from pyspark.sql import functions as F
-
-    from movie_recommendation_engine_spark.session import get_spark
-
-    spark = get_spark("gen_scale_sf", master="local[16]", shuffle_partitions=16)
-    spark.sparkContext.setLogLevel("ERROR")
-    os.makedirs(args.out, exist_ok=True)
-
-    # strides: max key + 1 per entity, from the source
-    strides: dict[str, int] = {}
-    for table, key in ENTITY_KEYS.items():
-        df = spark.read.parquet(f"{args.src}/{table}.parquet")
-        strides[table] = int(df.agg(F.max(key)).collect()[0][0]) + 1
-    strides["events_user"] = (
-        int(
-            spark.read.parquet(f"{args.src}/events.parquet")
-            .agg(F.max("user_id"))
-            .collect()[0][0]
-        )
-        + 1
-    )
-
-    for table in COPY_ONLY:
-        df = spark.read.parquet(f"{args.src}/{table}.parquet")
-        df.write.mode("overwrite").parquet(f"{args.out}/{table}.parquet")
-        print(f"# {table}: copied {df.count()} rows", file=sys.stderr)
-
-    lower, upper = string.ascii_lowercase, string.ascii_uppercase
-    for table, shift_map in SHIFTS.items():
-        src = spark.read.parquet(f"{args.src}/{table}.parquet")
-        reps = []
-        for i in range(args.k):
-            rep = src
-            for col, entity in shift_map.items():
-                t = rep.schema[col].dataType.simpleString()
-                rep = rep.withColumn(
-                    col, (F.col(col) + F.lit(i * strides[entity])).cast(t)
-                )
-            if table == "documents" and i > 0:
-                rot_l = lower[i:] + lower[:i]
-                rot_u = upper[i:] + upper[:i]
-                rep = rep.withColumn(
-                    "text", F.translate("text", lower + upper, rot_l + rot_u)
-                )
-            reps.append(rep)
-        out = reps[0]
-        for rep in reps[1:]:
-            out = out.unionByName(rep)
-        # partition count scales with the replication so downstream scans
-        # see sf-proportional parallelism, mirroring the source layout
-        n_src = src.rdd.getNumPartitions()
-        out.repartition(n_src * args.k).write.mode("overwrite").parquet(
-            f"{args.out}/{table}.parquet"
-        )
-        print(f"# {table}: {src.count()} -> {args.k}x replicated", file=sys.stderr)
-
+    spark = local_spark("gen_scale_sf")
+    derive(spark, args.src, args.out, args.k)
     if stop_spark:
         spark.stop()
     print(f"# wrote sf (k={args.k}) to {args.out}", file=sys.stderr)

@@ -31,22 +31,21 @@ Usage:
     python tools/gen_skew_sf.py [--src /root/testdata/sf0.1]
                                 [--out .scale/sf0.1-skew]
                                 [--pct 20]
+Runs ``local[$SPARK_GRAFT_CPUS]``.  ``harness.derive_variant`` writes
+the variant: a finished derive of the same --src and --pct is reused.
 """
 
 from __future__ import annotations
 
 import argparse
 import os
-import shutil
 import sys
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
+from harness import ROOT, derive_variant, local_spark
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from movie_recommendation_engine_spark.sources.schemas import TESTDATA_TABLES
+
+TABLES = list(TESTDATA_TABLES)
 
 # table -> [(column to skew, table+column whose MIN supplies the hot key)]
 SKEW = {
@@ -57,40 +56,18 @@ SKEW = {
 }
 
 
-def main(argv: list[str] | None = None, stop_spark: bool = False) -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--src", default="/root/testdata/sf0.1")
-    ap.add_argument("--out", default=os.path.join(ROOT, ".scale", "sf0.1-skew"))
-    ap.add_argument("--pct", type=int, default=20,
-                    help="approx percent of rows remapped onto the hot key")
-    args = ap.parse_args(argv)
-    if not 1 <= args.pct <= 100:
-        ap.error(f"--pct must be in [1, 100], got {args.pct}")
-    mod = max(1, round(100 / args.pct))
-
+def derive(spark, src: str, out: str, pct: int = 20) -> None:
+    """Derive (or reuse) the skewed variant of ``src`` at ``out``."""
     from pyspark.sql import functions as F
 
-    from movie_recommendation_engine_spark.session import get_spark
+    mod = max(1, round(100 / pct))
 
-    spark = get_spark("gen_skew_sf", master="local[16]", shuffle_partitions=16)
-    spark.sparkContext.setLogLevel("ERROR")
-    os.makedirs(args.out, exist_ok=True)
-
-    for t in TABLES:
-        src_path = os.path.join(args.src, f"{t}.parquet")
-        out_path = os.path.join(args.out, f"{t}.parquet")
-        if t not in SKEW:
-            # byte-identical copy (single-file parquet in the testdata
-            # layout; fall back to a spark rewrite for directory layouts)
-            if os.path.isfile(src_path):
-                shutil.copyfile(src_path, out_path)
-            else:
-                spark.read.parquet(src_path).write.mode("overwrite").parquet(out_path)
-            continue
-        df = spark.read.parquet(src_path)
-        for col, (hot_t, hot_c) in SKEW[t]:
+    def skew(table, df):
+        if table not in SKEW:
+            return None
+        for col, (hot_t, hot_c) in SKEW[table]:
             hot = (
-                spark.read.parquet(os.path.join(args.src, f"{hot_t}.parquet"))
+                spark.read.parquet(os.path.join(src, f"{hot_t}.parquet"))
                 .agg(F.min(hot_c))
                 .collect()[0][0]
             )
@@ -102,12 +79,23 @@ def main(argv: list[str] | None = None, stop_spark: bool = False) -> int:
                 .cast("long") % mod == 0
             )
             df = df.withColumn(col, F.when(mask, F.lit(hot)).otherwise(F.col(col)))
-        df.coalesce(1).write.mode("overwrite").parquet(out_path + ".tmp")
-        # keep the single-file layout the probes expect
-        part = [f for f in os.listdir(out_path + ".tmp") if f.endswith(".parquet")]
-        shutil.move(os.path.join(out_path + ".tmp", part[0]), out_path)
-        shutil.rmtree(out_path + ".tmp", ignore_errors=True)
+        return df
 
+    derive_variant(spark, src, out, {"variant": "skew", "pct": pct}, skew, single_file=True)
+
+
+def main(argv: list[str] | None = None, stop_spark: bool = False) -> int:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--src", default="/root/testdata/sf0.1")
+    ap.add_argument("--out", default=os.path.join(ROOT, ".scale", "sf0.1-skew"))
+    ap.add_argument("--pct", type=int, default=20,
+                    help="approx percent of rows remapped onto the hot key")
+    args = ap.parse_args(argv)
+    if not 1 <= args.pct <= 100:
+        ap.error(f"--pct must be in [1, 100], got {args.pct}")
+
+    spark = local_spark("gen_skew_sf")
+    derive(spark, args.src, args.out, args.pct)
     if stop_spark:
         spark.stop()
     print(f"wrote skewed variant to {args.out}", file=sys.stderr)

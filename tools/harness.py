@@ -1,29 +1,42 @@
-"""The timing core shared by bench.py and the tools/ probes: one
-implementation each of session setup (``session``), the min-of-N timer
-(``best_of``), the /proc/stat host stamp (``host_window``), the
-BENCH_SCALE.md section writer (``splice_section``) and the per-SF scan
-warm-up (``warm_scan``).  pyspark is imported only inside the helpers
-that need a session, so the rest runs (and is tested) without a JVM.
+"""The measurement core shared by bench.py and the tools/ probes, one
+implementation of each primitive:
+
+- ``local_spark`` / ``session``: a ``local[$SPARK_GRAFT_CPUS]`` session
+  (``session`` also validates ``$SPARK_GRAFT_SF_DIR`` and can warm it);
+- ``best_of``: the min-of-N timer;
+- ``host_window``: the /proc/stat host-noise stamp;
+- ``splice_section``: the BENCH_SCALE.md section writer;
+- ``warm_scan``: the per-SF scan and shuffle warm-up;
+- ``derive_variant`` / ``derived``: write a variant of an SF dir table
+  by table, and tell whether a finished one is already there;
+- ``Probe``: the ratio core of the variant probes (the same queries on
+  each side, min of N, ratio between consecutive sides, one table).
+
+pyspark is imported only inside the helpers that need a session, so the
+rest runs (and is tested) without a JVM.
 """
 
 from __future__ import annotations
 
 import gc
+import glob
+import json
+import math
 import os
+import shutil
 import sys
 import time
 from collections.abc import Callable, Iterator
 from contextlib import contextmanager
+from dataclasses import dataclass
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
+BENCH_SCALE = os.path.join(ROOT, "BENCH_SCALE.md")
+MARKER = "_DERIVE_COMPLETE.json"
 
 
-def _env() -> tuple[str, int]:
-    """(sf_dir, cpus) from the environment, rejected before any JVM
-    starts: a typo here used to surface minutes later as a Spark error
-    (or as a silently different parallelism)."""
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+def _cpus() -> int:
     raw = os.environ.get("SPARK_GRAFT_CPUS", "32")
     try:
         cpus = int(raw)
@@ -31,9 +44,29 @@ def _env() -> tuple[str, int]:
         cpus = 0
     if cpus < 1:
         raise SystemExit(f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}")
+    return cpus
+
+
+def _env() -> tuple[str, int]:
+    """(sf_dir, cpus) from the environment, rejected before any JVM
+    starts: a typo here used to surface minutes later as a Spark error
+    (or as a silently different parallelism)."""
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    cpus = _cpus()
     if not os.path.exists(os.path.join(sf_dir, "lineitem.parquet")):
         raise SystemExit(f"SPARK_GRAFT_SF_DIR={sf_dir!r} has no lineitem.parquet")
     return sf_dir, cpus
+
+
+def local_spark(app: str):
+    """A ``local[$SPARK_GRAFT_CPUS]`` session at ERROR log level; a live
+    session is returned as it is (see ``get_spark``)."""
+    cpus = _cpus()
+    from movie_recommendation_engine_spark.session import get_spark
+
+    return get_spark(
+        app, master=f"local[{cpus}]", shuffle_partitions=cpus, log_level="ERROR"
+    )
 
 
 def session(app: str, warm: bool = False):
@@ -45,11 +78,8 @@ def session(app: str, warm: bool = False):
     bench_check retime and rebaseline_probe all warm here, so budgets,
     sweep figures and adjudication retimes share one execution context.
     """
-    sf_dir, cpus = _env()
-    from movie_recommendation_engine_spark.session import get_spark
-
-    spark = get_spark(app, master=f"local[{cpus}]", shuffle_partitions=cpus)
-    spark.sparkContext.setLogLevel("ERROR")
+    sf_dir, _ = _env()
+    spark = local_spark(app)
     if warm:
         from movie_recommendation_engine_spark.warmups import warm_all
 
@@ -57,16 +87,20 @@ def session(app: str, warm: bool = False):
     return spark, sf_dir
 
 
-def best_of(fn: Callable[[], object], runs: int) -> float:
-    """Min wall seconds of ``runs`` calls of ``fn``.  A python gc after
-    each call drops the run's DataFrame refs, so localCheckpoint RDDs
-    and broadcasts are released before the next measurement."""
-    best = float("inf")
+def best_of(fn: Callable[[], object], runs: int, stop_after: float = math.inf) -> float:
+    """Min wall seconds of ``runs`` calls of ``fn``; a call slower than
+    ``stop_after`` seconds ends the loop early.  A python gc after each
+    call drops the run's DataFrame refs, so localCheckpoint RDDs and
+    broadcasts are released before the next measurement."""
+    best = math.inf
     for _ in range(runs):
         t0 = time.perf_counter()
         fn()
-        best = min(best, time.perf_counter() - t0)
+        t = time.perf_counter() - t0
+        best = min(best, t)
         gc.collect()
+        if t > stop_after:
+            break
     return best
 
 
@@ -163,3 +197,152 @@ def warm_scan(spark, sf_dirs: list[str]) -> None:
         spark.read.parquet(f"{sf_dir}/lineitem.parquet").groupBy(
             "l_orderkey"
         ).agg(F.count("*").alias("n")).agg(F.sum("n")).collect()
+
+
+def _marker(src: str, params: dict) -> dict:
+    from movie_recommendation_engine_spark.sources.schemas import TESTDATA_TABLES
+
+    return {"src": os.path.abspath(src), "params": params, "tables": list(TESTDATA_TABLES)}
+
+
+def derived(out: str, src: str, params: dict) -> bool:
+    """True iff ``out`` holds a finished derive of ``src`` under ``params``."""
+    try:
+        with open(os.path.join(out, MARKER)) as fh:
+            return json.load(fh) == _marker(src, params)
+    except FileNotFoundError:
+        return False
+
+
+def variant_dir(env_var: str, sf_dir: str, kind: str) -> str:
+    """``$env_var``, else ``.scale/<SF name>-<kind>``: one variant per source SF."""
+    name = os.path.basename(os.path.normpath(sf_dir))
+    return os.environ.get(env_var) or os.path.join(ROOT, ".scale", f"{name}-{kind}")
+
+
+def derive_variant(
+    spark, src: str, out: str, params: dict, transform: Callable, single_file: bool = False
+) -> None:
+    """Write ``out`` as a variant of the SF dir ``src``, table by table:
+    ``transform(table, df)`` returns the new DataFrame, or None to keep
+    the table (byte-identical if one file).  ``single_file`` writes one
+    file per table, like the testdata; else one per partition.
+
+    The marker (src, params, tables) is written after the last table; a
+    finished derive of the same ``src`` and ``params`` is reused, one
+    marked otherwise is replaced.  A non-empty directory without the
+    marker (a crashed derive, or anything else) is never deleted: the
+    call exits naming it.
+    """
+    if derived(out, src, params):
+        print(f"# reusing the finished derive in {out}", file=sys.stderr)
+        return
+    if os.path.isdir(out) and os.listdir(out):
+        if not os.path.exists(os.path.join(out, MARKER)):
+            raise SystemExit(
+                f"{out} is not empty and has no {MARKER}; remove it or derive elsewhere"
+            )
+        shutil.rmtree(out)
+    os.makedirs(out, exist_ok=True)
+    marker = _marker(src, params)
+    for t in marker["tables"]:
+        src_path, out_path = (os.path.join(d, f"{t}.parquet") for d in (src, out))
+        df = spark.read.parquet(src_path)
+        new = transform(t, df)
+        if new is None and os.path.isfile(src_path):
+            shutil.copyfile(src_path, out_path)
+            continue
+        df = df if new is None else new
+        if single_file:
+            df.coalesce(1).write.parquet(out_path + ".tmp")
+            shutil.move(glob.glob(f"{out_path}.tmp/*.parquet")[0], out_path)
+            shutil.rmtree(out_path + ".tmp")
+        else:
+            df.write.parquet(out_path)
+    with open(os.path.join(out, MARKER), "w") as fh:
+        json.dump(marker, fh)
+
+
+@dataclass(frozen=True)
+class Probe:
+    """A variant probe as a spec.  ``time`` runs each query on every SF
+    dir, one per label: min of ``runs`` (a run past ``slow_skip_s`` ends
+    them: past it the magnitude is the finding), the last run's row
+    count, and each dir's ratio to the one before.  ``report`` writes
+    the table, a ``ratio_cols`` column after each label but the first:
+    ``verdict(query, worst ratio)`` names each row (default FLAG above
+    ``threshold``, else ok), and FLAG rows are listed on the
+    ``flag_label`` line.  The BENCH_SCALE.md section it replaces is the
+    one whose heading starts with ``heading`` up to " (".
+    """
+
+    heading: str
+    labels: tuple[str, ...]
+    runs: int
+    threshold: float
+    verdict: Callable[[str, float], str] | None = None
+    flag_label: str | None = "Flagged"
+    ratio_cols: tuple[str, ...] = ("ratio",)
+    verdict_col: str = "verdict"
+    rows_in_cells: bool = False
+    slow_skip_s: float = math.inf
+
+    def time(self, spark, names: list[str], dirs: list[str], results=None) -> dict:
+        """query -> {"s", "rows", "ratios"}; a query already in
+        ``results`` (a retime) keeps the lower of its two times."""
+        from movie_recommendation_engine_spark.registry import QUERIES
+
+        results = {} if results is None else results
+        n = len(dirs)
+        for name in names:
+            if name not in QUERIES:
+                print(f"# unknown query {name}, skipping", file=sys.stderr)
+                continue
+            row = results.setdefault(name, {"s": [math.inf] * n, "rows": [0] * n})
+            for i, sf_dir in enumerate(dirs):
+
+                def run():
+                    row["rows"][i] = QUERIES[name](spark, sf_dir).count()
+
+                t = round(best_of(run, self.runs, self.slow_skip_s), 3)
+                row["s"][i] = min(row["s"][i], t)
+            row["ratios"] = [round(b / a, 2) for a, b in zip(row["s"], row["s"][1:])]
+            print(f"# {name}: {row}", file=sys.stderr)
+        return results
+
+    def report(
+        self, results: dict, intro: str, note: str = "", path: str = BENCH_SCALE
+    ) -> list[str]:
+        """Splice the section into ``path`` and print it; return the
+        FLAG rows, worst first."""
+        suffix = " (s) / rows" if self.rows_in_cells else " (s)"
+        cols = _interleave([label + suffix for label in self.labels], self.ratio_cols)
+        lines = [self.heading, "", intro, "", _row(["query", *cols, self.verdict_col])]
+        lines.append("|" + "---|" * (len(cols) + 2))
+        judge = self.verdict or (lambda _, r: "FLAG" if r > self.threshold else "ok")
+        flagged = []
+        for name, row in sorted(results.items(), key=lambda kv: -max(kv[1]["ratios"])):
+            verdict = judge(name, max(row["ratios"]))
+            if verdict == "FLAG":
+                flagged.append(name)
+            sides = row["s"]
+            if self.rows_in_cells:
+                sides = [f"{t} / {rows}" for t, rows in zip(row["s"], row["rows"])]
+            lines.append(_row([name, *_interleave(sides, row["ratios"]), verdict]))
+        footer = f"{self.flag_label} (> {self.threshold}x): {', '.join(flagged) or 'none'}."
+        lines += ["", (footer if self.flag_label else "") + note, ""]
+        splice_section(path, self.heading.split(" (")[0], lines)
+        print("\n".join(lines))
+        return flagged
+
+
+def _interleave(sides: list, ratios: list) -> list:
+    """[side0, side1, ratio1, side2, ratio2, ...]"""
+    out = sides[:1]
+    for side, ratio in zip(sides[1:], ratios):
+        out += [side, ratio]
+    return out
+
+
+def _row(cells: list) -> str:
+    return "| " + " | ".join(map(str, cells)) + " |"

@@ -12,8 +12,8 @@ do super-linear work as data grows.  Decades probed:
   THIS decade against that smaller growth);
 - sf0.1 -> sf1 (the repo-generated decade: `tools/gen_scale_sf.py`
   key-shifted 10x replication, ALL tables including embeddings grow a
-  true 10x).  Skipped with a note if `.scale/sf1` has not been
-  generated.
+  true 10x).  Skipped with a note unless `.scale/sf1` holds a finished
+  `gen_scale_sf.py --k 10` derive of sf0.1.
 
 Each query runs ``runs`` times per SF in one JVM and reports the MIN
 (steady-state plan cost; the first run pays JIT/codegen — the same
@@ -34,8 +34,9 @@ from __future__ import annotations
 import json
 import os
 import sys
+from dataclasses import replace
 
-from harness import ROOT, best_of, session, splice_section, warm_scan
+from harness import ROOT, Probe, derived, session, warm_scan
 
 SF_SMALL = "/root/testdata/sf0.01"
 SF_BIG = "/root/testdata/sf0.1"
@@ -57,50 +58,44 @@ def pick_heaviest(n: int) -> list[str]:
     return [name for name, _ in ranked if name not in E2E][:n]
 
 
+def _grade(name: str, ratio: float) -> str:
+    """The WORST decade vs the data growth."""
+    if ratio > DATA_GROWTH:
+        return "SUPER-LINEAR"
+    return "linear" if ratio > 0.7 * DATA_GROWTH else "sub-linear"
+
+
+PROBE = Probe(
+    "# BENCH_SCALE — cross-SF scaling probe",
+    ("sf0.01", "sf0.1", "sf1"),
+    RUNS,
+    DATA_GROWTH,
+    verdict=_grade,
+    flag_label=None,
+    ratio_cols=("ratio1", "ratio2"),
+    verdict_col="grade",
+)
+
+
 def main(argv: list[str]) -> int:
     if argv and not argv[0].isdigit():
         names = argv
     else:
         names = pick_heaviest(int(argv[0]) if argv else 12)
 
-    have_xl = os.path.isdir(os.path.join(SF_XL, "lineitem.parquet"))
-    sf_dirs = [SF_SMALL, SF_BIG] + ([SF_XL] if have_xl else [])
+    have_xl = derived(SF_XL, SF_BIG, {"variant": "scale", "k": 10})
     if not have_xl:
         print(
-            f"# {SF_XL} not generated (python tools/gen_scale_sf.py) — "
-            "probing one decade only",
+            f"# {SF_XL} is not a finished 10x derive of {SF_BIG} "
+            "(python tools/gen_scale_sf.py) — probing one decade only",
             file=sys.stderr,
         )
-
-    from movie_recommendation_engine_spark.registry import QUERIES
-
+    probe = PROBE if have_xl else replace(PROBE, labels=PROBE.labels[:2])
+    dirs = [SF_SMALL, SF_BIG, SF_XL][: len(probe.labels)]
     spark, _ = session("scale_probe")
     master = spark.sparkContext.master
-    warm_scan(spark, sf_dirs)
-
-    def time_row(name: str, row: dict[str, float], label: str) -> None:
-        """Min of RUNS per SF, merged into ``row`` (mins only ever
-        lower a sample), then the per-decade ratios."""
-        for sf_dir in sf_dirs:
-            t = round(best_of(lambda: QUERIES[name](spark, sf_dir).count(), RUNS), 3)
-            row[sf_dir] = min(row.get(sf_dir, t), t)
-        row["ratio1"] = round(row[SF_BIG] / row[SF_SMALL], 2)
-        msg = f"# {label}: {row[SF_SMALL]}s -> {row[SF_BIG]}s (x{row['ratio1']})"
-        if have_xl:
-            row["ratio2"] = round(row[SF_XL] / row[SF_BIG], 2)
-            msg += f" -> {row[SF_XL]}s (x{row['ratio2']})"
-        print(msg, file=sys.stderr)
-
-    results: dict[str, dict[str, float]] = {}
-    for name in names:
-        if name not in QUERIES:
-            print(f"# unknown query {name}, skipping", file=sys.stderr)
-            continue
-        results[name] = {}
-        time_row(name, results[name], name)
-
-    def worst_of(row: dict[str, float]) -> float:
-        return max(row.get("ratio1", 0.0), row.get("ratio2", 0.0))
+    warm_scan(spark, dirs)
+    results = probe.time(spark, names, dirs)
 
     # Self-adjudicating retime pass (the same discipline as
     # tools/bench_check.py): any query whose worst decade exceeds the
@@ -111,17 +106,14 @@ def main(argv: list[str]) -> int:
     # query at sf1 read x12-x21 depending on probe order; the identical
     # query re-timed warm reads x5-x8.  Mins merge, so retiming can only
     # correct upward-biased samples, never manufacture a better plan.
-    flagged = [n for n, r in results.items() if worst_of(r) > DATA_GROWTH]
+    flagged = [n for n, r in results.items() if max(r["ratios"]) > DATA_GROWTH]
     if flagged:
         print(f"# retiming {len(flagged)} flagged warm: {', '.join(flagged)}",
               file=sys.stderr)
-        for name in flagged:
-            time_row(name, results[name], f"retimed {name}")
+        probe.time(spark, flagged, dirs, results)
     spark.stop()
 
-    lines = [
-        "# BENCH_SCALE — cross-SF scaling probe",
-        "",
+    intro = (
         f"Heaviest queries timed at sf0.01, sf0.1"
         + (", and sf1" if have_xl else "")
         + f" (min of {RUNS} runs per SF, one {master} JVM, per-SF "
@@ -132,48 +124,24 @@ def main(argv: list[str]) -> int:
         "vectors; the generated sf1 grows them a true 10x).  "
         "`ratio1` = sf0.1/sf0.01, `ratio2` = sf1/sf0.1 wall-clock; "
         "`grade` is sub-linear/linear/SUPER-LINEAR of the WORST decade "
-        "vs the 10x growth (super-linear = ratio > 10).",
-        "",
-    ]
+        "vs the 10x growth (super-linear = ratio > 10)."
+    )
     if have_xl:
-        lines += [
-            "sf1 is `tools/gen_scale_sf.py` key-shifted 10x replication of "
+        intro += (
+            "\n\nsf1 is `tools/gen_scale_sf.py` key-shifted 10x replication of "
             "sf0.1 (join fan-outs and per-key distributions preserved "
             "exactly; document text alphabet-rotated per replica so "
             "near-dup structure grows linearly instead of forming "
-            "cross-replica duplicate cliques).",
-            "",
-            "| query | sf0.01 (s) | sf0.1 (s) | ratio1 | sf1 (s) | ratio2 | grade |",
-            "|---|---|---|---|---|---|---|",
-        ]
-    else:
-        lines += [
-            "| query | sf0.01 (s) | sf0.1 (s) | ratio1 | grade |",
-            "|---|---|---|---|---|",
-        ]
-    for name, row in sorted(results.items(), key=lambda kv: -worst_of(kv[1])):
-        r = worst_of(row)
-        grade = "SUPER-LINEAR" if r > DATA_GROWTH else (
-            "linear" if r > 0.7 * DATA_GROWTH else "sub-linear")
-        if have_xl:
-            lines.append(
-                f"| {name} | {row[SF_SMALL]} | {row[SF_BIG]} | {row['ratio1']} "
-                f"| {row[SF_XL]} | {row['ratio2']} | {grade} |"
-            )
-        else:
-            lines.append(
-                f"| {name} | {row[SF_SMALL]} | {row[SF_BIG]} | {row['ratio1']} | {grade} |"
-            )
-    worst = max((worst_of(r) for r in results.values()), default=0)
-    lines += [
-        "",
-        f"Worst observed per-decade ratio: {worst} (data growth {DATA_GROWTH}).",
-        "",
-    ]
+            "cross-replica duplicate cliques)."
+        )
     # this tool owns only the leading cross-SF table; the sections
     # other tools own (skew probe, memory soak, ...) carry over
-    splice_section(os.path.join(ROOT, "BENCH_SCALE.md"), lines[0], lines)
-    print("\n".join(lines))
+    worst = max((max(r["ratios"]) for r in results.values()), default=0)
+    probe.report(
+        results,
+        intro,
+        note=f"Worst observed per-decade ratio: {worst} (data growth {DATA_GROWTH}).",
+    )
     return 0
 
 

@@ -21,8 +21,9 @@ Usage:
     python tools/skew_probe.py               # default query set
     python tools/skew_probe.py name...       # explicit list
 Writes a "## Skew probe" section into BENCH_SCALE.md.
-Env: SPARK_GRAFT_SKEW_DIR overrides the skewed-variant location
-(`gen_skew_sf.py --src` should match $SPARK_GRAFT_SF_DIR).
+The variant (default ``.scale/<SF name>-skew``, or $SPARK_GRAFT_SKEW_DIR)
+is used only when its derive marker names $SPARK_GRAFT_SF_DIR and the
+default --pct; otherwise the probe derives it first (gen_skew_sf.derive).
 """
 
 from __future__ import annotations
@@ -30,13 +31,12 @@ from __future__ import annotations
 import os
 import sys
 
-from harness import ROOT, best_of, session, splice_section, warm_scan
+import gen_skew_sf
+from harness import Probe, session, variant_dir, warm_scan
 
-SF_SKEW = os.environ.get(
-    "SPARK_GRAFT_SKEW_DIR", os.path.join(ROOT, ".scale", "sf0.1-skew")
-)
 RUNS = 3
 THRESHOLD = 3.0  # skew/uniform ratio above this flags the query
+PROBE = Probe("## Skew probe (round 8)", ("uniform", "skew"), RUNS, THRESHOLD)
 
 # The 15 probed queries: the heaviest registry entries whose plans
 # join, aggregate, or window on the four skewed key columns
@@ -68,61 +68,27 @@ DEFAULT_QUERIES = [
 
 
 def main(argv: list[str]) -> int:
-    names = argv or DEFAULT_QUERIES
-
-    if not os.path.exists(os.path.join(SF_SKEW, "lineitem.parquet")):
-        print(
-            f"# {SF_SKEW} missing — run: python tools/gen_skew_sf.py",
-            file=sys.stderr,
-        )
-        return 2
-
     from pyspark.sql import functions as F
-
-    from movie_recommendation_engine_spark.registry import QUERIES
 
     spark, sf_uniform = session("skew_probe")
     master = spark.sparkContext.master
+    sf_skew = variant_dir("SPARK_GRAFT_SKEW_DIR", sf_uniform, "skew")
+    gen_skew_sf.derive(spark, sf_uniform, sf_skew)
 
     hot_shares = {}
-    for t, c in [
-        ("lineitem", "l_orderkey"),
-        ("lineitem", "l_partkey"),
-        ("orders", "o_custkey"),
-        ("events", "user_id"),
-    ]:
-        df = spark.read.parquet(f"{SF_SKEW}/{t}.parquet")
-        top = df.groupBy(c).count().orderBy(F.desc("count")).first()
-        hot_shares[f"{t}.{c}"] = round(100.0 * top["count"] / df.count(), 1)
+    for t, skewed in gen_skew_sf.SKEW.items():
+        df = spark.read.parquet(f"{sf_skew}/{t}.parquet")
+        for c, _ in skewed:
+            top = df.groupBy(c).count().orderBy(F.desc("count")).first()
+            hot_shares[f"{t}.{c}"] = round(100.0 * top["count"] / df.count(), 1)
 
-    warm_scan(spark, [sf_uniform, SF_SKEW])
-
-    results: dict[str, dict[str, float]] = {}
-    for name in names:
-        if name not in QUERIES:
-            print(f"# unknown query {name}, skipping", file=sys.stderr)
-            continue
-        row: dict[str, float] = {}
-        for tag, sf_dir in (("uniform", sf_uniform), ("skew", SF_SKEW)):
-            row[tag] = round(
-                best_of(lambda: QUERIES[name](spark, sf_dir).count(), RUNS), 3
-            )
-        row["ratio"] = round(row["skew"] / row["uniform"], 2)
-        results[name] = row
-        print(
-            f"# {name}: uniform {row['uniform']}s -> skew {row['skew']}s "
-            f"(x{row['ratio']})",
-            file=sys.stderr,
-        )
+    dirs = [sf_uniform, sf_skew]
+    warm_scan(spark, dirs)
+    results = PROBE.time(spark, argv or DEFAULT_QUERIES, dirs)
     spark.stop()
 
-    flagged = sorted(
-        (n for n, r in results.items() if r["ratio"] > THRESHOLD),
-        key=lambda n: -results[n]["ratio"],
-    )
-    lines = [
-        "## Skew probe (round 8)",
-        "",
+    flagged = PROBE.report(
+        results,
         f"Same queries on uniform {os.path.basename(sf_uniform)} vs the "
         "Zipf-skewed variant "
         "(`tools/gen_skew_sf.py`: one hot key per axis holds ~20% of its "
@@ -130,27 +96,8 @@ def main(argv: list[str]) -> int:
         + ", ".join(f"{k} {v}%" for k, v in hot_shares.items())
         + f"; min of {RUNS} runs each, one {master} JVM, AQE skew-join "
         "on).  `ratio` = skew/uniform wall-clock; above "
-        f"{THRESHOLD}x needs a plan fix or a documented bound.",
-        "",
-        "| query | uniform (s) | skew (s) | ratio | verdict |",
-        "|---|---|---|---|---|",
-    ]
-    for name, row in sorted(results.items(), key=lambda kv: -kv[1]["ratio"]):
-        verdict = "FLAG" if row["ratio"] > THRESHOLD else "ok"
-        lines.append(
-            f"| {name} | {row['uniform']} | {row['skew']} | {row['ratio']} "
-            f"| {verdict} |"
-        )
-    lines += [
-        "",
-        f"Flagged (> {THRESHOLD}x): "
-        + (", ".join(flagged) if flagged else "none")
-        + ".",
-        "",
-    ]
-
-    splice_section(os.path.join(ROOT, "BENCH_SCALE.md"), "## Skew probe", lines)
-    print("\n".join(lines))
+        f"{THRESHOLD}x needs a plan fix or a documented bound."
+    )
     return 1 if flagged else 0
 
 
