@@ -1,4 +1,5 @@
-"""Graph operators: connected components over an edge list.
+"""Graph operators: connected components, PageRank, triangle count and
+forest roots over DataFrame edge lists.
 
 Why this lives in a data-pipeline engine: near-duplicate detection
 (dedup.minhash_lsh_pairs / simhash_pairs / similarity.embedding_neardup
@@ -6,24 +7,19 @@ _pairs) emits PAIRS, but deduplication needs CLUSTERS — "keep one doc
 per group of mutual near-dups" is exactly connected components over the
 pair graph, with the min id as the canonical representative.
 
-Algorithm: iterative min-label propagation expressed as DataFrame
-joins — each round every node takes the minimum label among itself and
-its neighbors; convergence when no label changes.  Rounds are bounded
-by the graph diameter (near-dup graphs are shallow — cliques and short
-chains — so a handful of rounds suffices).  Each round is one shuffle
-join + one aggregation; lineage is truncated with localCheckpoint every
-few rounds so the plan does not grow with the iteration count (the
-reference hit exactly this class of failure with long lineages,
-SURVEY §2.13.5).  For adversarially deep graphs (long paths) switch to
-the large-star/small-star alternation (Kiveris et al., "Connected
-Components in MapReduce and Beyond", SoCC'14) — same join primitives,
-O(log^2 n) rounds — implemented below as
-``connected_components_star`` for when the pair graph is deep.
+Connected components: a driver-side union-find when the observed edge
+count is small, else iterative min-label propagation expressed as
+DataFrame joins — each round every node takes the minimum label among
+itself and its neighbors; convergence when no label changes.  Rounds
+are bounded by the graph diameter (near-dup graphs are shallow —
+cliques and short chains — so a handful of rounds suffices).  Each
+round is one shuffle join + one aggregation; lineage is truncated with
+localCheckpoint every few rounds so the plan does not grow with the
+iteration count (the reference hit exactly this class of failure with
+long lineages, SURVEY §2.13.5).
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F
@@ -116,99 +112,6 @@ def connected_components(
     raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
 
 
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 50,
-) -> DataFrame:
-    """Connected components via large-star/small-star alternation
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — O(log^2 n) rounds regardless of graph DIAMETER, where
-    min-label propagation needs diameter rounds.  This is the scale
-    path for adversarially deep graphs (long chains); for shallow
-    near-dup graphs ``connected_components``'s propagation (or its
-    small-graph union-find) wins on constant factors.
-
-    Each round is two shuffle phases over the edge list only — no
-    separate label table:
-
-    - **large-star**: every node u connects its strictly-larger
-      neighbors to m(u) = min(N(u) ∪ {u});
-    - **small-star**: every node u connects its not-larger neighbors
-      and itself to the minimum among them.
-
-    Convergence: the edge multiset stops changing (checked with a
-    count + order-independent hash-sum signature — one tiny aggregate
-    per round instead of a full except().count() pass).  The final
-    edge set is a star forest: every node points at its component
-    minimum.  Returns (id, comp) for every node appearing in ``edges``.
-    """
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).filter("u <> v")
-    nodes = (
-        e.select(F.explode(F.array("u", "v")).alias("id"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    e = (
-        e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    prev_sig = None
-    for _ in range(max_iter):
-        # large-star: (v, m(u)) for v in N(u), v > u
-        m = (
-            e.groupBy("u")
-            .agg(F.min("v").alias("mn"))
-            .select("u", F.least("mn", "u").alias("m"))
-        )
-        e1 = (
-            e.join(m, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter("u <> v")
-        )
-        e1 = e1.union(e1.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
-        # small-star: u and its smaller neighbors all connect to their min
-        smaller = e1.filter(F.col("v") < F.col("u"))
-        m2 = smaller.groupBy("u").agg(F.min("v").alias("m"))
-        sm = (
-            smaller.join(m2, "u")
-            .select(F.col("v").alias("x"), "m")
-            .union(m2.select(F.col("u").alias("x"), "m"))
-        )
-        e2 = (
-            sm.filter(F.col("x") != F.col("m"))
-            .select(F.col("x").alias("u"), F.col("m").alias("v"))
-            .distinct()
-        )
-        e2 = (
-            e2.union(e2.select(F.col("v").alias("u"), F.col("u").alias("v")))
-            .localCheckpoint(eager=False)
-        )
-        # decimal sum: a BIGINT sum of 64-bit hashes overflows under ANSI
-        sig = tuple(
-            e2.agg(
-                F.count("*"), F.sum(F.xxhash64("u", "v").cast("decimal(38,0)"))
-            ).first()
-        )
-        e = e2
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-    else:
-        raise RuntimeError(f"star alternation did not converge in {max_iter} rounds")
-    comp = (
-        e.filter(F.col("v") < F.col("u"))
-        .groupBy("u")
-        .agg(F.min("v").alias("comp"))
-        .withColumnRenamed("u", "id")
-    )
-    isolated = nodes.join(comp, "id", "left_anti").withColumn("comp", F.col("id"))
-    return comp.unionByName(isolated)
-
-
 def _driver_union_find(spark, e: DataFrame) -> DataFrame:
     """Exact union-find over a collected (small, count-verified) edge
     list; returns the same (id, comp) frame the propagation produces."""
@@ -263,27 +166,28 @@ def dedup_canonical(
     return out
 
 
-# Rank-table broadcast dial for the pagerank loops: below this vertex
-# count the per-iteration rank/contribution tables enter their joins as
-# broadcasts (a ~16 B/row relation: 4M vertices ≈ 64 MB, well under the
-# session's 64 MB auto threshold that the checkpointed-RDD inputs
-# defeat — ExistingRDD carries no size statistics, so without the
-# explicit hint Spark sort-merge-joins and re-shuffles the EDGE LIST
-# every iteration).  Above the dial the loop falls back to exchanging
-# both sides, with a shuffled-hash hint on the small side so the big
-# edge stream at least skips the per-iteration sort (guide §3.1).
-# Env-tunable so a cluster with more executor headroom can raise it.
-_PR_BROADCAST_MAX_VERTICES = int(
-    os.environ.get("SPARK_GRAFT_PR_BROADCAST_MAX_VERTICES", "4000000")
-)
+def _pr_broadcasts(nodes: DataFrame) -> bool:
+    """Whether the pagerank rank and contribution sides enter their joins
+    as broadcasts: when ``nodes.count()`` rows of 24 B (Spark's own
+    per-row estimate for two longs: 8 B of row overhead plus 8 B each)
+    fit the session's ``spark.sql.autoBroadcastJoinThreshold`` — 2.8M
+    vertices at get_spark's 64 MiB.  The explicit hint is needed
+    because the checkpointed inputs carry no size statistics, so Spark
+    would otherwise sort-merge-join and re-shuffle the EDGE LIST every
+    iteration.  Like every auto-broadcast in the session, the figure
+    counts data bytes, not the hashed relation built from them.  A
+    threshold of -1 (or 0) turns broadcasts off."""
+    conf = nodes.sparkSession._jsparkSession.sessionState().conf()
+    threshold = conf.autoBroadcastJoinThreshold()
+    return threshold > 0 and nodes.count() * 24 <= threshold
 
 
 def _pr_small_side(df: DataFrame, small: bool) -> DataFrame:
     """Rank/contribution side of a pagerank-iteration join: broadcast
-    below the vertex dial, shuffled-hash-hinted above it (the edge side
-    is always the bigger stream; sorting it 2x/iteration is the SMJ
-    cost the hint removes — results are join-strategy-independent
-    integer sums)."""
+    when ``_pr_broadcasts`` says it fits, else shuffled-hash-hinted (the
+    edge side is always the bigger stream; sorting it 2x/iteration is
+    the SMJ cost the hint removes, guide §3.1 — results are
+    join-strategy-independent integer sums)."""
     return F.broadcast(df) if small else df.hint("shuffle_hash")
 
 
@@ -295,6 +199,7 @@ def pagerank(
     dst: str = "v",
     iterations: int = 3,
     damping: float = 0.85,
+    weight: str | None = None,
 ) -> DataFrame:
     """Distributed PageRank with ENGINEERED determinism: ranks live in
     integer MICRO-UNITS (1e6 = rank 1.0) and every step is integer
@@ -316,6 +221,13 @@ def pagerank(
     (identically on both sides); vertices without in-edges keep the
     reset floor via the left join.
 
+    ``weight`` names an integer edge-weight column: a vertex then splits
+    its rank in proportion to its out-edge weights, contribution along
+    (j -> i) = ``(pru_j * w_ji) DIV W_j`` with ``W_j`` the vertex's
+    total outgoing weight.  Overflow-safe for pru * w < 2^63 (micro-rank
+    ~1e6 x weights up to ~1e12).  Weights must be positive integers
+    (scale fractional weights up-front).
+
     Physically each iteration is the canonical scale shape: one join of
     the rank table with the (edge, out-degree) list on src — shuffle
     keyed by vertex — and one grouped integer sum keyed by dst, with
@@ -324,22 +236,26 @@ def pagerank(
     0.01 (it is applied as an exact integer percentage).
 
     ``nodes``: one row per vertex (id_col); ``edges``: directed (src,
-    dst) — pass both directions for an undirected graph.  Returns
-    (id_col, pagerank double = micro-rank / 1e6).
+    dst[, weight]) — pass both directions for an undirected graph.
+    Returns (id_col, pagerank double = micro-rank / 1e6).
     """
     pct = int(round(damping * 100))
     if abs(pct - damping * 100) > 1e-9:
         raise ValueError("damping must be a multiple of 0.01")
     reset = 1_000_000 - pct * 10_000  # (1-d) in micro-units, exact
-    # nodes feeds pr0 AND the broadcast dial's count — materialize once
+    # nodes feeds pr0 AND the broadcast decision's count — materialize once
     nodes = nodes.select(F.col(id_col)).localCheckpoint(eager=False)
-    small = nodes.count() <= _PR_BROADCAST_MAX_VERTICES
+    small = _pr_broadcasts(nodes)
     pr = nodes.select(F.col(id_col), F.lit(1_000_000).cast("long").alias("pru"))
     # the edge list feeds BOTH the degree aggregate and the contribution
     # join — truncate its (possibly expensive: pair-generation self-join
     # + distinct) lineage once instead of computing it twice
     edges = edges.localCheckpoint(eager=False, storageLevel=_EDGE_LEVEL)
-    deg = edges.groupBy(src).agg(F.count("*").alias("__outdeg"))
+    if weight is None:
+        out_total, share = F.count("*"), "pru DIV __out"
+    else:
+        out_total, share = F.sum(weight).cast("long"), f"(pru * {weight}) DIV __out"
+    deg = edges.groupBy(src).agg(out_total.alias("__out"))
     e = edges.join(deg, src).localCheckpoint(eager=False, storageLevel=_EDGE_LEVEL)
     for _ in range(iterations):
         contrib = (
@@ -349,69 +265,7 @@ def pagerank(
                 ),
                 e[src] == F.col("__src"),
             )
-            .select(F.col(dst).alias("__dst"), F.expr("pru DIV __outdeg").alias("__c"))
-            .groupBy("__dst")
-            .agg(F.sum("__c").alias("__s"))
-        )
-        pr = (
-            pr.join(_pr_small_side(contrib, small), pr[id_col] == F.col("__dst"), "left")
-            .select(
-                F.col(id_col),
-                (
-                    F.lit(reset).cast("long")
-                    + F.expr(f"({pct} * coalesce(__s, 0L)) DIV 100")
-                ).alias("pru"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return pr.select(
-        F.col(id_col), (F.col("pru").cast("double") / 1_000_000).alias("pagerank")
-    )
-
-
-def pagerank_weighted(
-    nodes: DataFrame,
-    edges: DataFrame,
-    id_col: str = "id",
-    src: str = "u",
-    dst: str = "v",
-    weight: str = "w",
-    iterations: int = 3,
-    damping: float = 0.85,
-) -> DataFrame:
-    """Weighted PageRank, same integer micro-unit engineering as
-    ``pagerank``: a vertex splits its rank across out-edges in
-    proportion to integer edge weights — contribution along (j -> i) is
-    ``(pru_j * w_ji) DIV W_j`` with ``W_j`` the vertex's total outgoing
-    weight.  All-integer, bit-identical cross-engine; overflow-safe for
-    pru * w < 2^63 (micro-rank ~1e6 x weights up to ~1e12).  Weights
-    must be positive integers (scale fractional weights up-front).
-
-    Same per-iteration physical shape as the unweighted form (vertex-
-    keyed join + grouped integer sum, truncated lineage).
-    """
-    pct = int(round(damping * 100))
-    if abs(pct - damping * 100) > 1e-9:
-        raise ValueError("damping must be a multiple of 0.01")
-    reset = 1_000_000 - pct * 10_000
-    nodes = nodes.select(F.col(id_col)).localCheckpoint(eager=False)
-    small = nodes.count() <= _PR_BROADCAST_MAX_VERTICES
-    pr = nodes.select(F.col(id_col), F.lit(1_000_000).cast("long").alias("pru"))
-    edges = edges.localCheckpoint(eager=False, storageLevel=_EDGE_LEVEL)
-    wtot = edges.groupBy(src).agg(F.sum(weight).cast("long").alias("__wtot"))
-    e = edges.join(wtot, src).localCheckpoint(eager=False, storageLevel=_EDGE_LEVEL)
-    for _ in range(iterations):
-        contrib = (
-            e.join(
-                _pr_small_side(
-                    pr.select(F.col(id_col).alias("__src"), "pru"), small
-                ),
-                e[src] == F.col("__src"),
-            )
-            .select(
-                F.col(dst).alias("__dst"),
-                F.expr(f"(pru * {weight}) DIV __wtot").alias("__c"),
-            )
+            .select(F.col(dst).alias("__dst"), F.expr(share).alias("__c"))
             .groupBy("__dst")
             .agg(F.sum("__c").alias("__s"))
         )

@@ -1946,7 +1946,7 @@ def q_price_histogram_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _pagerank_weighted_sql(iters: int, damping: float = 0.85) -> str:
     """Unrolled WEIGHTED integer micro-unit PageRank CTEs: contribution
-    along an edge is (pru * w) // wtot — see graph.pagerank_weighted."""
+    along an edge is (pru * w) // wtot — see graph.pagerank's ``weight``."""
     pct = int(round(damping * 100))
     reset = 1_000_000 - pct * 10_000
     parts = [
@@ -1987,7 +1987,7 @@ def q_part_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts pull proportionally more rank — rank splits by integer
     (pru * w) DIV wtot, keeping every vertex bit-identical to the
     oracle's unrolled CTEs."""
-    from ..operators.graph import pagerank_weighted
+    from ..operators.graph import pagerank
 
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     # dedupe (order, part) FIRST: after it, 'distinct orders per pair'
@@ -2018,7 +2018,7 @@ def q_part_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nodes = li.select(F.col("l_partkey").alias("id")).distinct()
     return (
-        pagerank_weighted(nodes, pairs, "id", "u", "v", "w", iterations=_PR_ITERS)
+        pagerank(nodes, pairs, "id", "u", "v", iterations=_PR_ITERS, weight="w")
         .select(F.col("id").alias("l_partkey"), "pagerank")
         .orderBy("l_partkey")
     )

@@ -56,7 +56,7 @@ from pyspark.ml.feature import VectorAssembler
 from pyspark.ml.recommendation import ALS
 from pyspark.sql import functions as F
 
-from .operators.graph import pagerank, pagerank_weighted
+from .operators.graph import pagerank
 from .operators.similarity import arrow_dot_topk
 from .session import run_concurrently
 
@@ -137,7 +137,7 @@ def warm_iterative(spark, log: Callable[[str], None] = _noop) -> None:
             (F.col("id") % 5 + 1).cast("long").alias("w"),
         )
         pagerank(nodes, tedges, iterations=3).count()
-        pagerank_weighted(nodes, tedges, iterations=3).count()
+        pagerank(nodes, tedges, iterations=3, weight="w").count()
     except Exception as ex:
         log(f"# iterative warmup failed: {ex}")
 

@@ -75,3 +75,33 @@ def test_unmarked_directory_is_refused_and_kept(spark, tmp_path):
     assert trim.calls == []
     assert sorted(os.listdir(out)) == ["lineitem.parquet", "notes.txt"]
     assert (out / "notes.txt").read_text() == "not a variant"
+
+
+def test_one_table_derive_is_marked_with_its_source_and_rate(spark, tmp_path, capsys):
+    """streaming_probe's hot-events variant: one table, reused only for
+    the same ``--events`` source at the same rate."""
+    import streaming_probe
+    from pyspark.sql import functions as F
+
+    def marked(events, pct=20, tables=("events",)):
+        params = {"variant": "hot-events", "events": events, "pct": pct}
+        return harness.derived(out, os.path.dirname(events), params, tables)
+
+    out, sources = str(tmp_path / "hot"), []
+    for name in ("a", "b"):
+        sources.append(str(tmp_path / name / "events.parquet"))
+        spark.read.parquet(f"{SRC}/events.parquet").repartition(4).write.parquet(sources[-1])
+    for events in sources:
+        path = streaming_probe._derive_hot_events(spark, events, out)
+        assert sorted(os.listdir(out)) == [harness.MARKER, "events.parquet"]
+        assert path == os.path.join(out, "events.parquet")
+        assert marked(events)
+        assert not marked(events, tables=None)  # not a whole-SF variant
+        assert not marked(events, pct=10)
+        assert sum(f.endswith(".parquet") for f in os.listdir(path)) == 4
+        hot = spark.read.parquet(path)
+        top = hot.groupBy("event_id").count().agg(F.max("count")).first()[0]
+        assert hot.count() == 1000 and 150 <= top <= 250  # ~20% on one id
+    assert not marked(sources[0])  # replaced by the derive of the second source
+    streaming_probe._derive_hot_events(spark, sources[1], out)
+    assert "reusing" in capsys.readouterr().err

@@ -256,35 +256,6 @@ def test_cross_split_contamination_flags_copied_spans(spark):
     assert got == [10]
 
 
-def test_star_components_equal_union_find(spark):
-    """Large-star/small-star must agree with exact union-find on a long
-    path (propagation's worst case: diameter rounds vs O(log^2 n)),
-    plus random graphs and a clique-with-isolates mix."""
-    import random
-
-    from movie_recommendation_engine_spark.operators.graph import (
-        _driver_union_find,
-        connected_components_star,
-    )
-    from pyspark.sql import functions as F
-
-    cases = [
-        [(i, i + 1) for i in range(60)],                      # 61-node path
-        [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21)],         # chains + pair
-        [(a, b) for a in range(5) for b in range(a + 1, 5)],  # clique
-    ]
-    rng = random.Random(7)
-    cases.append([(rng.randrange(40), rng.randrange(40)) for _ in range(50)])
-    for rows in cases:
-        rows = [(a, b) for a, b in rows if a != b]
-        edges = spark.createDataFrame(rows, "id_a int, id_b int")
-        star = {r.id: r.comp for r in connected_components_star(edges).collect()}
-        e = edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-        e = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
-        want = {r.id: r.comp for r in _driver_union_find(spark, e).collect()}
-        assert star == want, rows
-
-
 def test_repetition_signals_hand_computed(spark):
     rows = [
         (1, "a a a b"),          # max run 3, dup frac 1 - 2/4

@@ -7,8 +7,9 @@ implementation of each primitive:
 - ``host_window``: the /proc/stat host-noise stamp;
 - ``splice_section``: the BENCH_SCALE.md section writer;
 - ``warm_scan``: the per-SF scan and shuffle warm-up;
-- ``derive_variant`` / ``derived``: write a variant of an SF dir table
-  by table, and tell whether a finished one is already there;
+- ``derive_variant`` / ``derived``: write a variant of an SF dir (or of
+  some of its tables) table by table, and tell whether a finished one
+  is already there;
 - ``Probe``: the ratio core of the variant probes (the same queries on
   each side, min of N, ratio between consecutive sides, one table).
 
@@ -199,17 +200,19 @@ def warm_scan(spark, sf_dirs: list[str]) -> None:
         ).agg(F.count("*").alias("n")).agg(F.sum("n")).collect()
 
 
-def _marker(src: str, params: dict) -> dict:
+def _marker(src: str, params: dict, tables: tuple[str, ...] | None) -> dict:
     from movie_recommendation_engine_spark.sources.schemas import TESTDATA_TABLES
 
-    return {"src": os.path.abspath(src), "params": params, "tables": list(TESTDATA_TABLES)}
+    tables = list(tables or TESTDATA_TABLES)
+    return {"src": os.path.abspath(src), "params": params, "tables": tables}
 
 
-def derived(out: str, src: str, params: dict) -> bool:
-    """True iff ``out`` holds a finished derive of ``src`` under ``params``."""
+def derived(out: str, src: str, params: dict, tables: tuple[str, ...] | None = None) -> bool:
+    """True iff ``out`` holds a finished derive of ``src`` under ``params``
+    (of ``tables``, default every testdata table)."""
     try:
         with open(os.path.join(out, MARKER)) as fh:
-            return json.load(fh) == _marker(src, params)
+            return json.load(fh) == _marker(src, params, tables)
     except FileNotFoundError:
         return False
 
@@ -221,12 +224,20 @@ def variant_dir(env_var: str, sf_dir: str, kind: str) -> str:
 
 
 def derive_variant(
-    spark, src: str, out: str, params: dict, transform: Callable, single_file: bool = False
+    spark,
+    src: str,
+    out: str,
+    params: dict,
+    transform: Callable,
+    single_file: bool = False,
+    tables: tuple[str, ...] | None = None,
 ) -> None:
     """Write ``out`` as a variant of the SF dir ``src``, table by table:
     ``transform(table, df)`` returns the new DataFrame, or None to keep
     the table (byte-identical if one file).  ``single_file`` writes one
     file per table, like the testdata; else one per partition.
+    ``tables`` (default every testdata table) names the tables derived,
+    each read from ``src/<table>.parquet``.
 
     The marker (src, params, tables) is written after the last table; a
     finished derive of the same ``src`` and ``params`` is reused, one
@@ -234,7 +245,7 @@ def derive_variant(
     marker (a crashed derive, or anything else) is never deleted: the
     call exits naming it.
     """
-    if derived(out, src, params):
+    if derived(out, src, params, tables):
         print(f"# reusing the finished derive in {out}", file=sys.stderr)
         return
     if os.path.isdir(out) and os.listdir(out):
@@ -244,7 +255,7 @@ def derive_variant(
             )
         shutil.rmtree(out)
     os.makedirs(out, exist_ok=True)
-    marker = _marker(src, params)
+    marker = _marker(src, params, tables)
     for t in marker["tables"]:
         src_path, out_path = (os.path.join(d, f"{t}.parquet") for d in (src, out))
         df = spark.read.parquet(src_path)

@@ -32,10 +32,9 @@ import sys
 import tempfile
 import time
 
-from harness import ROOT, splice_section
-from scale_probe import pick_heaviest
+from harness import ROOT, derived, splice_section
+from scale_probe import SF_BIG, SF_XL as SF1, pick_heaviest
 
-SF1 = os.environ.get("SPARK_GRAFT_SF1_DIR", os.path.join(ROOT, ".scale", "sf1"))
 HEAP = os.environ.get("SPARK_GRAFT_SOAK_MEM", "4g")
 
 
@@ -128,8 +127,12 @@ def main(argv: list[str]) -> int:
     else:
         names = pick_heaviest(int(argv[0]) if argv else 10)
 
-    if not os.path.isdir(SF1):
-        print(f"# {SF1} missing — run tools/gen_scale_sf.py first", file=sys.stderr)
+    if not derived(SF1, SF_BIG, {"variant": "scale", "k": 10}):
+        print(
+            f"# {SF1} is not a finished 10x derive of {SF_BIG} — "
+            "run tools/gen_scale_sf.py first",
+            file=sys.stderr,
+        )
         return 2
 
     rows = []

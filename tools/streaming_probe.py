@@ -43,7 +43,7 @@ import sys
 import tempfile
 import time
 
-from harness import ROOT, session, splice_section
+from harness import ROOT, derive_variant, session, splice_section
 
 DEFAULT_EVENTS = os.path.join(ROOT, ".scale", "sf0.1-frag", "events.parquet")
 
@@ -118,34 +118,41 @@ def _replay(spark, build, mode: str, events: str, fpt: int, ckpt: str) -> dict:
     return {"wall_s": round(time.perf_counter() - t0, 2), **counts, **_state_stamps(q)}
 
 
-HOT_EVENTS = os.path.join(ROOT, ".scale", "sf0.1-hot-events", "events.parquet")
-HOT_MARKER = os.path.join(ROOT, ".scale", "sf0.1-hot-events", "_DERIVE_COMPLETE")
+HOT_DIR = os.path.join(ROOT, ".scale", "sf0.1-hot-events")
+HOT_PCT = 20
 
 
-def _derive_hot_events(spark, src: str) -> None:
-    """Hot-key events variant for the skew leg: ~20% of event_id rows
-    remapped onto ONE id (an at-least-once retry storm — the dedup
-    operator's adversarial input) and ~20% of user_id rows onto ONE
-    user (one mega-session / one serialized python fold).  Same
-    md5-mask recipe as gen_skew_sf.py; written as many small files so
-    maxFilesPerTrigger yields real micro-batches."""
+def _derive_hot_events(spark, events: str, out: str = HOT_DIR) -> str:
+    """Hot-key variant of the ``events`` table for the skew leg, derived
+    into ``out`` once per source (``harness.derive_variant``); returns
+    its path.  ~20% of event_id rows remapped onto ONE id (an
+    at-least-once retry storm — the dedup operator's adversarial input)
+    and ~20% of user_id rows onto ONE user (one mega-session / one
+    serialized python fold).  Same md5-mask recipe as gen_skew_sf.py;
+    written as many small files so maxFilesPerTrigger yields real
+    micro-batches."""
     from pyspark.sql import functions as F
 
-    shutil.rmtree(os.path.dirname(HOT_EVENTS), ignore_errors=True)
-    df = spark.read.parquet(src)
+    events = os.path.abspath(events)
+    src, name = os.path.split(events)
+    table = name.removesuffix(".parquet")
     n_files = max(
-        1, sum(1 for f in os.listdir(src) if f.endswith(".parquet"))
-    ) if os.path.isdir(src) else 200
-    for col in ("event_id", "user_id"):
-        hot = df.agg(F.min(col)).collect()[0][0]
-        mask = (
-            F.conv(F.substring(F.md5(F.col(col).cast("string")), 1, 8), 16, 10)
-            .cast("long") % 5 == 0
-        )
-        df = df.withColumn(col, F.when(mask, F.lit(hot)).otherwise(F.col(col)))
-    df.repartition(n_files).write.mode("overwrite").parquet(HOT_EVENTS)
-    with open(HOT_MARKER, "w") as fh:
-        fh.write("ok")
+        1, sum(1 for f in os.listdir(events) if f.endswith(".parquet"))
+    ) if os.path.isdir(events) else 200
+
+    def hot(_, df):
+        for col in ("event_id", "user_id"):
+            hot_id = df.agg(F.min(col)).collect()[0][0]
+            mask = (
+                F.conv(F.substring(F.md5(F.col(col).cast("string")), 1, 8), 16, 10)
+                .cast("long") % (100 // HOT_PCT) == 0
+            )
+            df = df.withColumn(col, F.when(mask, F.lit(hot_id)).otherwise(F.col(col)))
+        return df.repartition(n_files)
+
+    params = {"variant": "hot-events", "events": events, "pct": HOT_PCT}
+    derive_variant(spark, src, out, params, hot, tables=(table,))
+    return os.path.join(out, f"{table}.parquet")
 
 
 def main() -> int:
@@ -155,9 +162,10 @@ def main() -> int:
     ap.add_argument("names", nargs="*", default=None)
     args = ap.parse_args()
 
-    if not os.path.exists(args.events):
+    if not (os.path.exists(args.events) and os.path.abspath(args.events).endswith(".parquet")):
         print(
-            f"# {args.events} missing — run: python tools/fragmentation_probe.py",
+            f"# {args.events} is no *.parquet table — "
+            "run: python tools/fragmentation_probe.py",
             file=sys.stderr,
         )
         return 2
@@ -205,8 +213,7 @@ def main() -> int:
     # sessionize/EWMA under one mega-user.  The claim probed: state
     # peaks track the WATERMARK WINDOW, not input volume, and a hot key
     # collapses into one state row instead of multiplying them.
-    if not os.path.exists(HOT_MARKER):
-        _derive_hot_events(spark, args.events)
+    hot_events = _derive_hot_events(spark, args.events)
     skew_ops = [
         ("dedup_events_within_watermark", "append"),
         ("sessionize", "append"),
@@ -219,7 +226,7 @@ def main() -> int:
             continue
         build = by_name[name][0]
         srow: dict = {}
-        for tag, events_dir in (("uniform", args.events), ("hot", HOT_EVENTS)):
+        for tag, events_dir in (("uniform", args.events), ("hot", hot_events)):
             srow[tag] = _replay(spark, build, mode, events_dir, fpt_large,
                                 os.path.join(scratch, f"skew_{name}_{tag}"))
         srow["state_ratio"] = round(
