@@ -440,11 +440,13 @@ def arrow_dot_topk(
         else "query_id int, neighbor_id int, score float, rank int"
     )
     qsel = queries.select(id_col, vec_col)
-    # a loaded factor frame inherits the writer's block count (MLlib
-    # saves ~numUserBlocks part-files, default 10) — far below the
-    # session's cores.  The query side is id+rank floats (~5 MB per
-    # million rows at rank 8), so a repartition shuffle is trivially
-    # cheap next to the matmul it parallelizes.
+    # a factor frame has one partition per ALS block (a loaded one, one
+    # part-file per block): the fitting session's defaultParallelism
+    # unless num_blocks pinned it, so a model fitted with fewer blocks
+    # or on a smaller session lands here below this session's cores.
+    # The query side is id+rank floats (~5 MB per million rows at rank
+    # 8), so a repartition shuffle is trivially cheap next to the
+    # matmul it parallelizes.
     par = queries.sparkSession.sparkContext.defaultParallelism
     if qsel.rdd.getNumPartitions() < par:
         qsel = qsel.repartition(par)

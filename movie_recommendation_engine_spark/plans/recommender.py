@@ -7,8 +7,11 @@ coldStartStrategy='drop') plus the knobs that matter at 100 TB and that
 the reference left at defaults (SURVEY §7.3):
 
 - ``num_blocks`` (user/item blocking — ALS cost is block-to-block
-  shuffles, 2 per iteration; size blocks so a factor block fits in
-  executor memory);
+  shuffles, 2 per iteration, one task per block).  Unset, it is the
+  fitting session's ``defaultParallelism``, so every ALS stage runs one
+  task per core; MLlib's own default is a fixed 10 on any cluster.
+  Set it to pin the factors (they depend on the block count) or to
+  make a factor block fit in executor memory;
 - ``checkpoint_interval`` (lineage truncation — without it, long
   iteration chains blow up the DAG at scale);
 - seed (the reference relied on the default).
@@ -21,7 +24,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .metrics import rmse as rmse_agg
 
@@ -113,6 +116,8 @@ class AlsRecommender:
     alpha: float = 1.0  # implicit-feedback confidence scale c = 1 + alpha*r
     cold_start_strategy: str = "drop"
     seed: int = 42
+    # user AND item block count; None = the fitting session's
+    # defaultParallelism (see _estimator)
     num_blocks: int | None = None
     checkpoint_interval: int = 10
     # driver-materialization cap for the Arrow/BLAS serving kernel's
@@ -129,10 +134,15 @@ class AlsRecommender:
     # the Arrow/BLAS kernel for BOTH cases (see recommend_top_k)
     _loaded: bool = field(default=False, repr=False)
 
-    def _estimator(self):
+    def _estimator(self, spark: SparkSession):
+        """The ALS estimator ``fit`` and ``tune`` share, blocked for
+        ``spark`` (the session of the frame it will fit)."""
         from pyspark.ml.recommendation import ALS
 
-        kwargs = dict(
+        blocks = self.num_blocks
+        if blocks is None:
+            blocks = spark.sparkContext.defaultParallelism
+        return ALS(
             rank=self.rank,
             maxIter=self.max_iter,
             regParam=self.reg_param,
@@ -145,14 +155,12 @@ class AlsRecommender:
             coldStartStrategy=self.cold_start_strategy,
             seed=self.seed,
             checkpointInterval=self.checkpoint_interval,
+            numUserBlocks=blocks,
+            numItemBlocks=blocks,
         )
-        if self.num_blocks is not None:
-            kwargs["numUserBlocks"] = self.num_blocks
-            kwargs["numItemBlocks"] = self.num_blocks
-        return ALS(**kwargs)
 
     def fit(self, train: DataFrame) -> "AlsRecommender":
-        self.model = self._estimator().fit(train)
+        self.model = self._estimator(train.sparkSession).fit(train)
         self._loaded = False
         return self
 
@@ -373,7 +381,7 @@ class AlsRecommender:
         from pyspark.ml.evaluation import RegressionEvaluator
         from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
 
-        als = self._estimator()
+        als = self._estimator(train.sparkSession)
         grid = (
             ParamGridBuilder()
             .addGrid(als.rank, list(ranks))

@@ -102,9 +102,9 @@ def _fitted_als(spark: SparkSession, sf_dir: str) -> AlsRecommender:
             max_iter=4,
             reg_param=0.1,
             seed=42,
-            # block count sized to the data: ~50k ratings/block at sf0.1.
-            # ALS cost is block-to-block shuffles; default (= cores)
-            # makes hundreds of near-empty blocks. Raise with volume.
+            # pinned, not the session's defaultParallelism: the factors
+            # depend on the block count, and the oracle-gated outputs
+            # built on them must not move with the session's cores
             num_blocks=8,
         ).fit(train)
     return _ALS_CACHE[key]

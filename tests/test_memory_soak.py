@@ -57,3 +57,29 @@ def test_soak_runs_on_a_finished_sf1(tmp_path, monkeypatch, children):
     _sf1(tmp_path, monkeypatch, harness._marker(memory_soak.SF_BIG, SCALE, None))
     assert memory_soak.main(["pricing_summary"]) == 0
     assert children == ["pricing_summary"]
+
+
+def test_soak_child_runs_at_the_configured_cpus(tmp_path, monkeypatch):
+    """A soak child's session is local[$SPARK_GRAFT_CPUS] with as many
+    shuffle partitions, as every other probe's is."""
+    from movie_recommendation_engine_spark import session
+
+    calls = []
+
+    class Started(Exception):
+        pass
+
+    def get_spark(app, **kwargs):
+        calls.append(kwargs)
+        raise Started
+
+    monkeypatch.setattr(session, "get_spark", get_spark)
+    monkeypatch.setattr(memory_soak.tempfile, "mkdtemp", lambda **_: str(tmp_path))
+    # run_one sets it for its child JVM; setenv restores it afterwards
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "4g")
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    with pytest.raises(Started):
+        memory_soak.run_one("pricing_summary")
+    (kw,) = calls
+    assert (kw["master"], kw["shuffle_partitions"]) == ("local[3]", 3)
+    assert kw["extra_conf"]["spark.eventLog.dir"] == str(tmp_path)

@@ -3,6 +3,7 @@ ratings fixture; numeric quality asserted loosely (ALS is iterative)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from movie_recommendation_engine_spark.plans.recommender import AlsRecommender
@@ -18,6 +19,44 @@ def test_fit_transform_rmse(spark, ratings):
     assert set(preds.columns) == {"userId", "movieId", "rating", "timestamp", "prediction"}
     val = rec.evaluate_rmse(ratings).collect()[0].rmse
     assert 0.0 <= val < 3.0  # fits its own training data reasonably
+
+
+def test_default_blocks_follow_session_parallelism(spark, ratings, monkeypatch):
+    """Unset num_blocks blocks ALS by the session's defaultParallelism
+    (MLlib alone would use 10) for fit and for tune's CrossValidator;
+    an explicit num_blocks wins.  A fitted factor frame has one
+    partition per block."""
+    from pyspark.ml.tuning import CrossValidator
+
+    par = spark.sparkContext.defaultParallelism
+    assert par != 10  # the local[4] fixture tells the rule from MLlib's
+
+    def parts(rec):
+        return (
+            rec.user_factors().rdd.getNumPartitions(),
+            rec.item_factors().rdd.getNumPartitions(),
+        )
+
+    assert parts(_fit(ratings)) == (par, par)
+    pinned = AlsRecommender(rank=4, max_iter=5, reg_param=0.1, seed=7, num_blocks=3)
+    assert parts(pinned.fit(ratings)) == (3, 3)
+
+    seen = []
+
+    class Stop(Exception):
+        pass
+
+    def spy(cv, dataset):
+        seen.append(cv.getEstimator())
+        raise Stop
+
+    monkeypatch.setattr(CrossValidator, "fit", spy)
+    with pytest.raises(Stop):
+        AlsRecommender(rank=2, max_iter=2, seed=7).tune(
+            ratings, ranks=[2], reg_params=[0.1], num_folds=2
+        )
+    (als,) = seen
+    assert (als.getNumUserBlocks(), als.getNumItemBlocks()) == (par, par)
 
 
 def test_recommend_shapes(spark, ratings):

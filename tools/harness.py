@@ -1,6 +1,7 @@
 """The measurement core shared by bench.py and the tools/ probes, one
 implementation of each primitive:
 
+- ``env_cpus``: the validated ``$SPARK_GRAFT_CPUS``;
 - ``local_spark`` / ``session``: a ``local[$SPARK_GRAFT_CPUS]`` session
   (``session`` also validates ``$SPARK_GRAFT_SF_DIR`` and can warm it);
 - ``best_of``: the min-of-N timer;
@@ -37,7 +38,8 @@ BENCH_SCALE = os.path.join(ROOT, "BENCH_SCALE.md")
 MARKER = "_DERIVE_COMPLETE.json"
 
 
-def _cpus() -> int:
+def env_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS`` (default 32), rejected unless a positive int."""
     raw = os.environ.get("SPARK_GRAFT_CPUS", "32")
     try:
         cpus = int(raw)
@@ -53,20 +55,24 @@ def _env() -> tuple[str, int]:
     starts: a typo here used to surface minutes later as a Spark error
     (or as a silently different parallelism)."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = _cpus()
+    cpus = env_cpus()
     if not os.path.exists(os.path.join(sf_dir, "lineitem.parquet")):
         raise SystemExit(f"SPARK_GRAFT_SF_DIR={sf_dir!r} has no lineitem.parquet")
     return sf_dir, cpus
 
 
-def local_spark(app: str):
+def local_spark(app: str, extra_conf: dict[str, str] | None = None):
     """A ``local[$SPARK_GRAFT_CPUS]`` session at ERROR log level; a live
     session is returned as it is (see ``get_spark``)."""
-    cpus = _cpus()
+    cpus = env_cpus()
     from movie_recommendation_engine_spark.session import get_spark
 
     return get_spark(
-        app, master=f"local[{cpus}]", shuffle_partitions=cpus, log_level="ERROR"
+        app,
+        master=f"local[{cpus}]",
+        shuffle_partitions=cpus,
+        extra_conf=extra_conf,
+        log_level="ERROR",
     )
 
 

@@ -3,7 +3,8 @@ queries at sf1 (~6M lineitem rows) inside a 4 GiB JVM heap and record
 completion + spill metrics — the exact axis where the reference died
 (sc.parallelize OOM on a driver-collected list, FinalReport p.2-3 §4).
 
-local[32] puts driver AND executors in one JVM, so
+local[$SPARK_GRAFT_CPUS] (as every probe runs) puts driver AND
+executors in one JVM, so
 ``spark.driver.memory=4g`` constrains the whole engine: execution
 memory pressure forces sort/aggregate/join spills instead of OOM if
 the plans are spill-safe, and any oversized materialization kills the
@@ -18,7 +19,8 @@ stage), parsed by the child from its own log.
 
 Usage:
     python tools/memory_soak.py [N | name...]   # default: 10 heaviest
-Env: SPARK_GRAFT_SOAK_MEM (default 4g), SPARK_GRAFT_SF1_DIR.
+Env: SPARK_GRAFT_SOAK_MEM (default 4g), SPARK_GRAFT_SF1_DIR,
+SPARK_GRAFT_CPUS (default 32).
 Appends a "## Memory soak" section to BENCH_SCALE.md.
 """
 
@@ -32,7 +34,7 @@ import sys
 import tempfile
 import time
 
-from harness import ROOT, derived, splice_section
+from harness import ROOT, derived, env_cpus, local_spark, splice_section
 from scale_probe import SF_BIG, SF_XL as SF1, pick_heaviest
 
 HEAP = os.environ.get("SPARK_GRAFT_SOAK_MEM", "4g")
@@ -77,12 +79,9 @@ def run_one(name: str) -> int:
     os.environ["SPARK_GRAFT_DRIVER_MEM"] = HEAP
 
     from movie_recommendation_engine_spark.registry import QUERIES
-    from movie_recommendation_engine_spark.session import get_spark
 
-    spark = get_spark(
+    spark = local_spark(
         "memory_soak",
-        master="local[32]",
-        shuffle_partitions=32,
         extra_conf={
             "spark.eventLog.enabled": "true",
             "spark.eventLog.dir": log_dir,
@@ -91,7 +90,6 @@ def run_one(name: str) -> int:
             "spark.eventLog.compress": "false",
         },
     )
-    spark.sparkContext.setLogLevel("ERROR")
     jvm_max = spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory()
     spark.read.parquet(f"{SF1}/lineitem.parquet").count()  # warm footers
 
@@ -122,6 +120,7 @@ def run_one(name: str) -> int:
 def main(argv: list[str]) -> int:
     if argv and argv[0] == "--one":
         return run_one(argv[1])
+    cpus = env_cpus()
     if argv and not argv[0].isdigit():
         names = argv
     else:
@@ -164,8 +163,8 @@ def main(argv: list[str]) -> int:
         "## Memory soak (round 8)",
         "",
         f"Heaviest queries at sf1 (~10x sf0.1) inside a {HEAP} JVM heap, "
-        "ONE FRESH JVM PER QUERY (local[32]; driver and executors share "
-        "the heap, so this bounds the whole engine, and isolation keeps "
+        f"ONE FRESH JVM PER QUERY (local[{cpus}]; driver and executors "
+        "share the heap, so this bounds the whole engine, and isolation keeps "
         "one query's OOM from poisoning the next verdict — in local "
         "mode a hard OOM stops the shared SparkContext).  The reference "
         "died on this axis (driver-side sc.parallelize OOM).  Spill "
