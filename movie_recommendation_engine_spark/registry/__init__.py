@@ -57,7 +57,7 @@ _STAGING_DIRS: list[str] = []
 # (name, sf_dir) -> live dirs, newest last.  Bounded at _STAGING_KEEP
 # per key: a long-lived session (the six-sweep soak runs ~8 sink
 # queries per registry sweep) would otherwise accumulate one
-# data-bearing temp dir per invocation until atexit (round-9 advisory).
+# data-bearing temp dir per invocation until atexit.
 # Keeping the newest TWO — not just the current one — stays safe under
 # the concurrency probe, where a second thread may still be lazily
 # reading the PREVIOUS invocation's staged parquet when this one runs.
@@ -66,30 +66,25 @@ _STAGING_KEEP = 2
 # dirs pruned out of the keep window but NOT yet deleted: removal is
 # deferred to the same key's NEXT invocation, so a slow concurrent
 # consumer gets keep-window laps PLUS one full extra lap before its
-# staged parquet can disappear (round-10 advisory: eager rmtree could
-# still race a consumer lagging more than one invocation).
+# staged parquet can disappear.
 _STAGING_RETIRED: dict[tuple[str, str], list[str]] = {}
-# registry mutations happen under one lock: the documented two-thread
-# concurrency probe can interleave staging_dir calls, and unlocked
-# append/pop pairs could transiently over-prune below _STAGING_KEEP
-# (round-10 advisory).
+# registry mutations happen under one lock: the concurrency probe can
+# interleave staging_dir calls, and unlocked append/pop pairs could
+# transiently over-prune below _STAGING_KEEP.
 _STAGING_LOCK = threading.Lock()
 
 
 def staging_dir(name: str, sf_dir: str) -> str:
     """Unique per-invocation scratch dir for the sink round-trip queries.
 
-    uuid-suffixed: the round-8 per-(sf_dir, pid) scheme fixed the
-    cross-process write-then-read race (gate + bench concurrently), but
-    two THREADS in one process running the same query still shared a
-    path, and the dirs were never cleaned up (round-8 advisory).  Every
-    invocation gets its own dir, registered for atexit removal; dirs
-    beyond the newest _STAGING_KEEP per (name, sf_dir) are RETIRED at
-    the next invocation and deleted one invocation later still (their
-    results are long materialized by then), so a long-lived session's
-    temp footprint stays bounded (round-9 advisory) while a consumer
+    uuid-suffixed, so two processes or two threads running the same
+    query never share a path.  Every dir is registered for atexit
+    removal; dirs beyond the newest _STAGING_KEEP per (name, sf_dir) are
+    RETIRED at the next invocation and deleted one invocation later
+    still (their results are long materialized by then), so a
+    long-lived session's temp footprint stays bounded while a consumer
     lagging a full extra lap behind the prune cycle still finds its
-    staged parquet on disk (round-10 advisory).
+    staged parquet on disk.
     """
     import hashlib
     import os
@@ -156,7 +151,8 @@ def duck_hash_sql(salt: str, *cols: str) -> str:
     )
 
 
-# Import query groups for their registration side effects.
+# Import query groups for their registration side effects; QUERIES keeps
+# this order, each module's queries together.
 from . import core  # noqa: E402,F401
 from . import relational  # noqa: E402,F401
 from . import sampling  # noqa: E402,F401
@@ -173,117 +169,5 @@ from . import featurize  # noqa: E402,F401
 from . import analytics  # noqa: E402,F401
 
 from .core import flagship  # noqa: E402,F401
-
-# --- Driver gate window rotation -----------------------------------------
-# The external correctness gate evaluates only the FIRST 50 registered
-# queries per round (verified in round 1: CORRECTNESS_r01 keys ==
-# list(QUERIES)[:50]).  Rotate per round so every query gets a driver
-# verdict: queries WITHOUT a driver-green row in any CORRECTNESS_r*.json
-# so far are registered first (self-maintaining — each round's results
-# shrink the pending set automatically); already-green queries cede
-# their slot and keep their local-mirror checks.  Pending queries sort
-# by registration order.
-#
-# Already-green queries that lead the window's SPARE slots: after the
-# pending set, the driver's remaining slots re-check previously-green
-# queries.  Round-8 rework (round-7 verdict task 1 — the hand-rotated
-# list froze in round 6 and burned the entire r07 window re-checking
-# the r06 names): the spare order is now computed PER ROUND from the
-# CORRECTNESS_r*.json history — stalest last-driver-check first, so
-# the window rotates itself and no query's evidence can silently age.
-# _RECHECK_FIRST survives only as a small manual pin for queries whose
-# CODE PATHS changed this round (they gate ahead of the staleness
-# order); keep it short — every pinned name displaces a stale one.
-_RECHECK_FIRST = [
-    # round 14: the e2e's als verb now fits once at rank 8 and exports
-    # k=5 from the saved model; evaluate reuses it via --model-dir
-    # (output row identical: counts/shape/invariant booleans); the
-    # popularity stamp gained a rows-integrity part (v2,
-    # "<train_fp>|<rows_fp>"); popularity and als verbs run overlapped.
-    "movielens_e2e_cli",
-    # round 14: the df-gate broadcast moved BELOW the common-part
-    # self-join (pre-filter both sides before the pair fan-out) —
-    # oracle-identical (every pair already required the gate).
-    "customer_link_prediction_aa",
-    # round 14: repeated scalar/index subtrees truncated with lazy
-    # localCheckpoints (compute once, reuse): n1 in rfm, c/n1/med in
-    # mad, the prefix posting list in ngram-jaccard.
-    "customer_rfm_segments",
-    "order_price_mad_outliers",
-    "dedup_ngram_jaccard",
-]
-
-
-def _green_rounds(evidence_paths: list[str] | None = None) -> dict[str, int]:
-    """name -> latest round with a passing driver-gate row.
-
-    hash_match=True is green; a rows-only query (err='no_oracle') with a
-    recorded row count is 'checked as designed' and also cedes its slot —
-    UNLESS it has since gained an oracle (it was never hash-verified, so
-    it re-enters the pending window for a real value-hash verdict).
-
-    ``evidence_paths`` pins the CORRECTNESS files to read (round-12
-    gate-order telemetry: tools/gen_gate_order.py records which files a
-    committed window was computed from, and its sync test recomputes
-    from exactly those — the default ALL-files glob would drift the
-    moment the driver writes the next round's results).
-    """
-    import glob
-    import json
-    import os
-    import re
-
-    root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    latest: dict[str, int] = {}
-    if evidence_paths is None:
-        evidence_paths = sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json")))
-    for path in evidence_paths:
-        m = re.search(r"_r(\d+)\.json$", path)
-        rnd = int(m.group(1)) if m else 0
-        try:
-            with open(path) as fh:
-                rows = json.load(fh)
-        except Exception:
-            continue
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            ok = row.get("hash_match") is True or (
-                row.get("err") == "no_oracle"
-                and row.get("spark_rows") is not None
-                and name not in ORACLES
-            )
-            if ok:
-                latest[name] = max(latest.get(name, 0), rnd)
-    return latest
-
-
-def _driver_green() -> set[str]:
-    """Query names with a passing driver-gate row in any round so far."""
-    return set(_green_rounds())
-
-
-def _apply_gate_order() -> None:
-    green_round = _green_rounds()
-    green = set(green_round)
-    names = list(QUERIES)
-    pending = [n for n in names if n not in green]
-    done = [n for n in names if n in green]
-    # pending first (registration order), then the already-green
-    # remainder: code-changed pins first (_RECHECK_FIRST), then the
-    # STALEST gate evidence first — the window rotates itself, so no
-    # green query's last check can silently age (round-7 verdict task 1).
-    recheck = {n: i for i, n in enumerate(_RECHECK_FIRST)}
-    done.sort(
-        key=lambda n: (0, recheck[n])
-        if n in recheck
-        else (1, green_round[n], names.index(n))
-    )
-    reordered = {n: QUERIES[n] for n in [*pending, *done]}
-    QUERIES.clear()
-    QUERIES.update(reordered)
-
-
-_apply_gate_order()
 
 __all__ = ["QUERIES", "ORACLES", "register", "flagship", "duck_hash_sql"]

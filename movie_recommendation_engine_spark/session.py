@@ -21,7 +21,20 @@ from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 from pyspark import SparkContext, inheritable_thread_target
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def env_positive_int(name: str, default: int | None = None) -> int | None:
+    """``$name`` as an int of at least 1, or ``default`` when it is unset;
+    any other value raises a ValueError naming the variable."""
+    raw = os.environ.get(name)
+    if raw is None:
+        return default
+    try:
+        value = int(raw)
+    except ValueError:
+        value = 0
+    if value < 1:
+        raise ValueError(f"{name} must be a positive integer, got {raw!r}")
+    return value
 
 
 def get_spark(
@@ -36,13 +49,14 @@ def get_spark(
 
     The arguments apply only when this call starts the SparkContext: a
     library call (a CLI verb, a generator driven from a test) must not
-    re-apply confs or the log level to its caller's session.
+    re-apply confs or the log level to its caller's session.  Only
+    then is ``$SPARK_GRAFT_CPUS`` read: it sets the default master
+    (``local[*]`` when unset) and shuffle partitions (32 when unset).
     """
     if SparkContext._active_spark_context is not None:
         return SparkSession.builder.getOrCreate()
-    master = master or os.environ.get(
-        "SPARK_GRAFT_MASTER", f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
-    )
+    cpus = env_positive_int("SPARK_GRAFT_CPUS")
+    master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus or '*'}]")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -52,7 +66,7 @@ def get_spark(
         .config("spark.driver.maxResultSize", "4g")
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or cpus or 32),
         )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -1,8 +1,11 @@
 """session.get_spark on a live session: a library call (a CLI verb, a
 generator driven as a library) returns the caller's session as it is,
-without re-applying its own confs or log level."""
+without re-applying its own confs or log level.  $SPARK_GRAFT_CPUS is
+read only when a call starts the context."""
 
 from __future__ import annotations
+
+import pytest
 
 
 def _log_level(spark) -> str:
@@ -25,3 +28,50 @@ def test_get_spark_leaves_a_live_session_alone(spark):
     assert spark.conf.get("spark.sql.shuffle.partitions") == partitions == "4"
     assert spark.conf.get("spark.graft.probe", None) is None
     assert _log_level(spark) == level
+
+
+def test_bad_cpus_env_fails_only_when_a_session_starts():
+    """A malformed $SPARK_GRAFT_CPUS no longer breaks importing the
+    package: it is read when get_spark starts a context, and rejected
+    there naming the variable, before any JVM starts."""
+    import os
+    import subprocess
+    import sys
+
+    script = (
+        "import movie_recommendation_engine_spark.registry\n"
+        "from movie_recommendation_engine_spark.session import get_spark\n"
+        "try:\n"
+        "    get_spark()\n"
+        "except ValueError as ex:\n"
+        "    print(ex)\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=root,
+        env={**os.environ, "SPARK_GRAFT_CPUS": "abc"},
+        capture_output=True,
+        text=True,
+    )
+    assert out.returncode == 0, out.stderr
+    assert "SPARK_GRAFT_CPUS must be a positive integer, got 'abc'" in out.stdout
+
+
+@pytest.mark.parametrize("raw", ["abc", "0", "-2"])
+def test_env_positive_int_rejects_bad_values(monkeypatch, raw):
+    from movie_recommendation_engine_spark.session import env_positive_int
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", raw)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+        env_positive_int("SPARK_GRAFT_CPUS")
+
+
+def test_env_positive_int_reads_valid_and_unset(monkeypatch):
+    from movie_recommendation_engine_spark.session import env_positive_int
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert env_positive_int("SPARK_GRAFT_CPUS", 32) == 3
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    assert env_positive_int("SPARK_GRAFT_CPUS", 32) == 32
+    assert env_positive_int("SPARK_GRAFT_CPUS") is None

@@ -1,7 +1,6 @@
-"""Driver-mimic: run every queries() entry on Spark and its oracle_sql()
-on DuckDB at sf0.01, compare row count, column names, and an
-order-insensitive value hash.  This is the local feedback loop for the
-driver's CORRECTNESS gate.
+"""The all-208 correctness check every change runs: every queries()
+entry on Spark and its oracle_sql() on DuckDB at sf0.01, compared by row
+count, column names, and an order-insensitive value hash.
 
 Usage: python tools/check_oracle.py [query_name ...]
 """
@@ -54,15 +53,14 @@ def canon_hash(pdf) -> str:
 
 def main() -> int:
     import __spark_entry__ as e
+    from harness import env_int
     from movie_recommendation_engine_spark.session import get_spark
 
-    # SPARK_GRAFT_CHECK_CPUS lets a robustness sweep re-run the gate at a
+    # SPARK_GRAFT_CHECK_CPUS lets a robustness sweep re-run the check at a
     # different parallelism: partition-count changes summation order and
     # AQE decisions, which is exactly what shakes out latent
-    # order-sensitivity before the external driver hits it
-    import os
-
-    cpus = int(os.environ.get("SPARK_GRAFT_CHECK_CPUS", "8"))
+    # order-sensitivity
+    cpus = env_int("SPARK_GRAFT_CHECK_CPUS", 8)
     if os.environ.get("SPARK_GRAFT_CHECK_VANILLA"):
         # the driver's environment: a plain SparkSession, default confs
         # (200 shuffle partitions, default tz, no engine tuning) — the
@@ -84,11 +82,11 @@ def main() -> int:
     def _release(i: int) -> None:
         """Drop this query's JVM state before the next one — bench.py's
         per-query hygiene (its comment block documents the measured
-        pile-up), which the CHECK loop also needs: a full-registry sweep
+        pile-up), which the check loop also needs: a full-registry sweep
         in the 1 GiB VANILLA session accumulated enough checkpoint/
         broadcast blocks across ~200 queries that part_pagerank's
-        broadcast build OOMed at sf0.1 while passing standalone
-        (round 10 — position-dependent, the rotation had moved it)."""
+        broadcast build OOMed at sf0.1 while passing standalone — the
+        failure depended on the query's position in the sweep."""
         import gc
 
         gc.collect()

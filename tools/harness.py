@@ -1,7 +1,8 @@
 """The measurement core shared by bench.py and the tools/ probes, one
 implementation of each primitive:
 
-- ``env_cpus``: the validated ``$SPARK_GRAFT_CPUS``;
+- ``env_int`` / ``env_cpus``: a validated positive-int variable, and
+  ``$SPARK_GRAFT_CPUS``;
 - ``local_spark`` / ``session``: a ``local[$SPARK_GRAFT_CPUS]`` session
   (``session`` also validates ``$SPARK_GRAFT_SF_DIR`` and can warm it);
 - ``best_of``: the min-of-N timer;
@@ -14,8 +15,8 @@ implementation of each primitive:
 - ``Probe``: the ratio core of the variant probes (the same queries on
   each side, min of N, ratio between consecutive sides, one table).
 
-pyspark is imported only inside the helpers that need a session, so the
-rest runs (and is tested) without a JVM.
+Only the session helpers start a JVM, so the rest runs (and is tested)
+without one.
 """
 
 from __future__ import annotations
@@ -38,16 +39,20 @@ BENCH_SCALE = os.path.join(ROOT, "BENCH_SCALE.md")
 MARKER = "_DERIVE_COMPLETE.json"
 
 
+def env_int(name: str, default: int) -> int:
+    """``$name`` (``default`` when unset) through ``session.env_positive_int``;
+    a bad value exits naming the variable before any JVM starts."""
+    from movie_recommendation_engine_spark.session import env_positive_int
+
+    try:
+        return env_positive_int(name, default)
+    except ValueError as ex:
+        raise SystemExit(str(ex)) from None
+
+
 def env_cpus() -> int:
     """``$SPARK_GRAFT_CPUS`` (default 32), rejected unless a positive int."""
-    raw = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    try:
-        cpus = int(raw)
-    except ValueError:
-        cpus = 0
-    if cpus < 1:
-        raise SystemExit(f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}")
-    return cpus
+    return env_int("SPARK_GRAFT_CPUS", 32)
 
 
 def _env() -> tuple[str, int]:
