@@ -9,9 +9,9 @@ Scale design notes (the part that matters at 100 TB):
   shuffle the 32-byte digest instead.
 - **n-gram Jaccard**: inverted-index join (doc exploded to distinct
   shingles, self-joined on shingle) — linear in the number of co-shingle
-  pairs, not quadratic in docs.  ``max_df`` drops ubiquitous shingles,
-  which at scale is the difference between a join and a cross product
-  (a shingle appearing in 1M docs contributes 10^12 pairs).
+  pairs, not quadratic in docs — but a shingle in 1M docs still
+  contributes 10^12 pairs, so at scale use the prefix-filtered join
+  (exact, indexes only each doc's rarest shingles) or MinHash LSH.
 - **MinHash LSH**: each shingle is md5-hashed ONCE; the ``n_hashes``
   hash functions are derived from that single digest by affine integer
   rehash ``(a_i*h + b_i) mod p`` (classic universal-hashing MinHash) —
@@ -28,7 +28,7 @@ Scale design notes (the part that matters at 100 TB):
   (block index, block value) with *guaranteed* recall, never an
   O(n^2) nested-loop cross join.
 - **embedding cosine**: see operators.similarity — near-dup is
-  ``similar_pairs`` with a threshold.
+  ``embedding_neardup_pairs`` with a threshold.
 
 Intermediate frames consumed twice within one plan (shingle sets,
 band tables, fingerprints) are persisted with ``localCheckpoint``
@@ -224,19 +224,15 @@ def ngram_jaccard_pairs(
     text_col: str,
     n: int = 2,
     threshold: float = 0.5,
-    max_df: int | None = None,
-    verify_hash_collisions: bool = False,
 ) -> DataFrame:
     """All document pairs (a < b) with word-n-gram Jaccard >= threshold.
 
-    Inverted-index self-join; ``max_df`` (scale guard) removes shingles
-    occurring in more than max_df docs from *candidate generation* —
-    verification still uses full shingle sets, so max_df only affects
-    recall of pairs whose every shared shingle is ubiquitous.  Without
-    max_df the candidate count is O(sum df^2) over the shingle document
-    frequencies — on a Zipfian web-scale corpus ALWAYS set max_df (or
-    use minhash_lsh_pairs, the banded scale path).  For exact results
-    with a pruned index see ``prefix_filtered_jaccard_pairs``.
+    Unpruned inverted-index self-join: the candidate count is O(sum
+    df^2) over the shingle document frequencies, so on a Zipfian
+    web-scale corpus use ``prefix_filtered_jaccard_pairs`` (same
+    result, pruned index) or ``minhash_lsh_pairs`` (the banded scale
+    path).  Kept as the unpruned reference the prefix-filtered join is
+    tested against.
     Output: (id_a, id_b, jaccard).
     """
     sh = _shingled(df, id_col, text_col, n).localCheckpoint(eager=False)
@@ -244,11 +240,16 @@ def ngram_jaccard_pairs(
     # The join key is xxhash64(shingle), not the shingle string: the
     # self-join materializes O(sum df^2) rows and hashing/comparing an
     # 8-byte long instead of a ~16-byte UTF8 string is a measured ~1.6x
-    # on the whole candidate phase at sf0.1.
-    ex_str = sh.select(F.col(id_col).alias("id"), F.explode("shingles").alias("g"))
-    ex = ex_str.select("id", F.xxhash64("g").alias("g")).localCheckpoint(eager=False)
+    # on the whole candidate phase at sf0.1.  `shared` is read straight
+    # off the pair count, so a hash collision (a ~v^2/2^65 event over a
+    # v-shingle vocab) would inflate it.
+    ex = (
+        sh.select(F.col(id_col).alias("id"), F.explode("shingles").alias("g"))
+        .select("id", F.xxhash64("g").alias("g"))
+        .localCheckpoint(eager=False)
+    )
     # pack the (id_a, id_b) pair into ONE long when the id is an
-    # integral type: the pair aggregate/distinct over the O(sum df^2)
+    # integral type: the pair aggregate over the O(sum df^2)
     # join output then hashes and shuffles an 8-byte key instead of two
     # — measured 1.9x on the whole count phase at sf0.1 (29.7 -> 15.9 s).
     # Requires 0 <= id < 2^31; doc ids are — non-integral ids skip it.
@@ -260,51 +261,6 @@ def ngram_jaccard_pairs(
     pk = F.col("a.id").cast("long") * F.lit(4294967296).cast("long") + F.col("b.id").cast(
         "long"
     )
-    if max_df is None and verify_hash_collisions:
-        # optional audit: the exact-count path reads `shared` straight
-        # off the groupBy, so the xxhash64 encoding must be collision-
-        # free over the vocab.  A collision is a ~v^2/2^65 event, so the
-        # check is OFF by default — enabling it runs a vocab-sized
-        # aggregate as an extra job the moment this builder is called.
-        n_str, n_int = ex_str.agg(
-            F.countDistinct("g"), F.countDistinct(F.xxhash64("g"))
-        ).first()
-        if n_str != n_int:  # pragma: no cover - 2^-64-scale event
-            ex = ex_str.localCheckpoint(eager=False)
-    if max_df is not None:
-        # candidate generation only: drop ubiquitous shingles so the
-        # inverted-index join stays near-linear; verification below still
-        # scores full shingle sets, so max_df only costs recall for pairs
-        # whose every shared shingle is ubiquitous
-        rare = ex.groupBy("g").agg(F.count("*").alias("df")).filter(F.col("df") <= max_df)
-        ex = ex.join(rare.select("g"), "g")
-        joined = ex.alias("a").join(
-            ex.alias("b"), (F.col("a.g") == F.col("b.g")) & (F.col("a.id") < F.col("b.id"))
-        )
-        if pack:
-            cand = (
-                joined.select(pk.alias("pk"))
-                .distinct()
-                .select(
-                    F.expr("pk DIV 4294967296").alias("id_a"),
-                    (F.col("pk") % 4294967296).alias("id_b"),
-                )
-            )
-        else:
-            cand = joined.select(
-                F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
-            ).distinct()
-        sa = sh.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a"))
-        sb = sh.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b"))
-        inter = F.size(F.array_intersect("sh_a", "sh_b"))
-        union = F.size("sh_a") + F.size("sh_b") - inter
-        return (
-            cand.join(sa, "id_a")
-            .join(sb, "id_b")
-            .withColumn("jaccard", det_round(inter / union))
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
-        )
     joined = ex.alias("a").join(
         ex.alias("b"), (F.col("a.g") == F.col("b.g")) & (F.col("a.id") < F.col("b.id"))
     )

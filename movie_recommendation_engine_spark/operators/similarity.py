@@ -1,19 +1,17 @@
 """Similarity search over embedding columns (prompt §"Similarity search").
 
-Two paths:
-
-- **brute_force_topk** — exact cosine top-k per query vector.  The
-  reference point for quality; cost is |Q| x |C| dot products.  Keep |Q|
-  bounded (a query set, not all-pairs) — at 100 TB the all-pairs version
-  is never the answer.
-- **lsh_bucketed_topk** — random-hyperplane LSH: each vector gets a
-  b-bit signature (sign of projection onto b fixed pseudo-random
-  hyperplanes); only same-bucket pairs are scored.  The hyperplanes are
-  derived deterministically from md5 (functions.hashing), so buckets are
-  reproducible across engines/runs — the oracle replays them in SQL.
-
-Everything is JVM-side (zip_with/aggregate); no UDFs.  The dot products
-fold in array order, so scores are bit-deterministic.
+- **Exact cosine top-k**: ``brute_force_topk`` scores JVM-side
+  (zip_with/aggregate, folded in array order, so scores are
+  bit-deterministic); ``arrow_brute_force_topk`` returns the same rows
+  from one numpy matmul per candidate batch in ``mapInPandas``.  Keep
+  the query side bounded — all-pairs at 100 TB is never the answer.
+- **ANN top-k**: ``lsh_bucketed_topk`` (random-hyperplane LSH, md5-
+  derived planes the oracle replays in SQL) and ``ivf_topk`` /
+  ``ivf_kmeans_topk`` (inverted-file cells, exact in-cell re-rank).
+- **Dot-product serving**: ``arrow_dot_topk``, the ALS top-k kernel —
+  the item catalog broadcast, users streamed through ``mapInPandas``.
+- Built on those: near-duplicate pairs, SemDeDup, SQ8 and JL
+  compression, MMR re-ranking, nearest-centroid evaluation.
 """
 
 from __future__ import annotations
@@ -23,6 +21,7 @@ import hashlib
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..functions.arrays import cosine_similarity, dot_product, l2_norm
+from ..session import env_positive_int
 from .topk import top_k_per_group
 
 
@@ -262,6 +261,11 @@ def dot_topk_rows(s, ids_c, kk):
     )
 
 
+# query rows per matmul in arrow_dot_topk: a (1024, |C|) float32 score
+# block per task (~80 MB at a 20k-item catalog)
+_DOT_CHUNK = 1024
+
+
 def arrow_dot_topk(
     queries: DataFrame,
     candidates: DataFrame,
@@ -269,119 +273,60 @@ def arrow_dot_topk(
     id_col: str = "id",
     vec_col: str = "features",
     as_lists: bool = False,
-    chunk: int = 1024,
-    max_broadcast_bytes: int | None = None,
 ) -> DataFrame:
     """Distributed dot-product top-k with the CANDIDATE side broadcast —
     the matrix-factorization serving kernel (score = u·v, not cosine).
 
-    The mirror image of ``arrow_brute_force_topk``: there the bounded
-    QUERY set is broadcast and candidates stream; here the bounded
-    CANDIDATE set (an item catalog — factors, not raw data: |I|·rank
-    floats) is broadcast and the query side streams through
-    ``mapInPandas``, so each query row's COMPLETE top-k is computed
-    inside its own batch with one BLAS matmul per chunk.  Zero
-    shuffle, zero window, no driver collect of the query side — the
-    plan is scan → mapInPandas, which scales with executors.
+    The mirror image of ``arrow_brute_force_topk``: the bounded
+    candidate set (an item catalog's factors, |I|·rank floats) is
+    broadcast and the query side streams through ``mapInPandas``, so
+    each query row's complete top-k is computed inside its own batch
+    with one BLAS matmul per chunk.  Zero shuffle, zero window, no
+    driver collect of the query side.
 
-    Boundedness contract: the candidate factor matrix must fit in a
-    broadcast (rank-100 floats: ~4 MB per 10k items, ~4 GB at 10M —
-    beyond that, serve through ``ivf_topk``/``lsh_bucketed_topk`` or
-    slice the query side with ``recommendForUserSubset``).  ENFORCED,
-    not assumed: the estimated DRIVER-side materialization cost is
-    checked against ``max_broadcast_bytes`` (default 512 MiB) before
-    the collect, so a violation raises with the scale paths named
-    instead of surfacing as an unattributed driver OOM.  The estimate
-    models the Arrow collect path this function actually uses (three
-    transient copies of the float32 matrix — Arrow batches, the
-    per-row ndarray Series, the stacked matrix — plus ~256 B/row of
-    Python object overhead), NOT just the final numpy footprint: a
-    round-8 advisory found the old count*(rank*4+8) estimate passing
-    while a Row-based collect() transiently needed ~10x that, so the
-    collect now goes through Arrow and the bound prices what the
-    driver really allocates.  512 MiB estimated ≈ a ~370k-item
-    catalog at rank 100 (~150 MiB resident matrix); raise the cap
-    deliberately for bigger catalogs on big-memory drivers — per call
-    via ``max_broadcast_bytes`` (``AlsRecommender(max_broadcast_bytes=
-    ...)`` threads it through every serving entry point), or
-    process-wide via the ``SPARK_GRAFT_MAX_BROADCAST_BYTES`` env var
-    when the call site isn't yours to edit (``None`` = env var if set,
-    else 512 MiB).  A round-9 advisory flagged the tightened default
-    as unreachable through the plan layer; both override paths close
-    that.
+    Boundedness contract, enforced before the driver collects the
+    candidates: the estimated driver-side cost — three transient
+    float32 copies of the matrix (Arrow batches, per-row Series, the
+    stacked matrix) plus ~256 B/row of Python overhead — must not
+    exceed ``$SPARK_GRAFT_MAX_BROADCAST_BYTES`` (default 512 MiB, about
+    a 370k-item catalog at rank 100).  Over it, the call raises naming
+    the scale paths instead of failing later as a driver OOM.
 
-    Scores are float32 (matching MLlib ALS's float factors/ratings);
-    ties break on candidate id ascending inside the selected top-k.
-    ``as_lists=True`` emits one row per query — (query_id,
-    recs: array<int> ordered by score desc) — the ranking-metrics input
-    shape, still without any aggregation shuffle.
-
-    Replaces the MLlib blocked recommend-all cross for LOADED models
-    (round-7 verdict task 2): a loaded ALSModel's factor frames are
-    parquet scans that the blocked cross re-computes per block pair
-    (measured r06 at sf0.1: evaluate-with-load 116.6 s vs 52.5 s
-    refit); this path reads each side once.
+    Scores are float32 (MLlib ALS's factor type); ties break on
+    candidate id ascending.  Output is (query_id, neighbor_id, score,
+    rank), or with ``as_lists=True`` one row per query — (query_id,
+    recs: array<int> ordered by score desc), the ranking-metrics input
+    shape, still without an aggregation shuffle.
     """
     import numpy as np
     import pandas as pd
 
-    if max_broadcast_bytes is None:
-        import os
-
-        raw = os.environ.get("SPARK_GRAFT_MAX_BROADCAST_BYTES")
-        if raw is None:
-            max_broadcast_bytes = 512 << 20
-        else:
-            # fail with the env var's NAME in the message: a bare
-            # int('512m') ValueError at serving time gives no hint which
-            # knob was malformed, and a non-positive bound would
-            # "disable" serving with a confusing capacity error
-            try:
-                max_broadcast_bytes = int(raw)
-            except ValueError:
-                raise ValueError(
-                    "SPARK_GRAFT_MAX_BROADCAST_BYTES must be an integer "
-                    f"byte count (e.g. 536870912), got {raw!r}"
-                ) from None
-            if max_broadcast_bytes <= 0:
-                raise ValueError(
-                    "SPARK_GRAFT_MAX_BROADCAST_BYTES must be > 0, got "
-                    f"{raw!r} — unset it to use the 512 MiB default"
-                )
-
-    # enforce the boundedness contract BEFORE the collect, where a
-    # violation would otherwise surface as a driver OOM with no hint of
-    # which call killed it.  ONE probe job (count + first(size) folded
-    # into a single aggregate — a round-8 advisory flagged the old
-    # .first()-then-.count() pair as recomputing an uncached candidate
-    # lineage twice before the collect recomputed it a third time),
-    # then an Arrow collect so the driver materializes columnar
-    # buffers, not boxed Python Rows.  The estimate prices the Arrow
-    # path's real transient peak: ~3 float32 copies of the matrix
-    # (Arrow batches -> per-row ndarray Series -> stacked matrix) plus
-    # per-row Python/pandas object overhead.
+    cap = env_positive_int("SPARK_GRAFT_MAX_BROADCAST_BYTES", 512 << 20)
+    schema = (
+        "query_id int, recs array<int>"
+        if as_lists
+        else "query_id int, neighbor_id int, score float, rank int"
+    )
+    spark = queries.sparkSession
+    # one probe job (a global aggregate: always one row) sizes the
+    # catalog before anything is collected
     probe = candidates.agg(
         F.count(F.lit(1)).alias("n"), F.first(F.size(vec_col)).alias("r")
     ).first()
-    n_c = int(probe["n"]) if probe is not None else 0
-    spark = queries.sparkSession
+    n_c = int(probe["n"])
     if n_c == 0:
-        schema = (
-            "query_id int, recs array<int>"
-            if as_lists
-            else "query_id int, neighbor_id int, score float, rank int"
-        )
         return spark.createDataFrame([], schema)
     rank = int(probe["r"])
     est = n_c * (rank * 4 * 3 + 256)
-    if est > max_broadcast_bytes:
+    if est > cap:
         raise ValueError(
             f"arrow_dot_topk: candidate side ~{est / 2**30:.2f} GiB "
             f"estimated driver materialization ({n_c} rows x rank {rank}) "
-            f"exceeds the {max_broadcast_bytes / 2**30:.2f} GiB bound — "
-            "serve through ivf_topk/lsh_bucketed_topk, slice the query "
-            "side (recommend_for_users) and swap sides, or raise "
-            "max_broadcast_bytes deliberately on a big-memory driver"
+            f"exceeds the {cap / 2**30:.2f} GiB bound — serve through "
+            "ivf_topk/lsh_bucketed_topk, slice the query side "
+            "(recommend_top_k(users=...)) and swap sides, or raise "
+            "SPARK_GRAFT_MAX_BROADCAST_BYTES deliberately on a "
+            "big-memory driver"
         )
     cpdf = candidates.select(id_col, vec_col).toPandas()  # Arrow collect
     cids = cpdf[id_col].to_numpy(dtype=np.int64)
@@ -401,11 +346,11 @@ def arrow_dot_topk(
             # tolist + asarray stacks them without a per-row Python loop
             qmat = np.asarray(pdf[vec_col].tolist(), dtype=np.float32)
             out_frames = []
-            for lo in range(0, len(qids), chunk):
-                qc = qmat[lo : lo + chunk]
+            for lo in range(0, len(qids), _DOT_CHUNK):
+                qc = qmat[lo : lo + _DOT_CHUNK]
                 s = qc @ cmT  # (chunk, |C|) float32 — the BLAS hot loop
                 top_i, top_s = dot_topk_rows(s, ids_c, kk)
-                q_slice = qids[lo : lo + chunk]
+                q_slice = qids[lo : lo + _DOT_CHUNK]
                 if as_lists:
                     out_frames.append(
                         pd.DataFrame(
@@ -434,11 +379,6 @@ def arrow_dot_topk(
             if out_frames:
                 yield pd.concat(out_frames, ignore_index=True)
 
-    schema = (
-        "query_id int, recs array<int>"
-        if as_lists
-        else "query_id int, neighbor_id int, score float, rank int"
-    )
     qsel = queries.select(id_col, vec_col)
     # a factor frame has one partition per ALS block (a loaded one, one
     # part-file per block): the fitting session's defaultParallelism
@@ -447,7 +387,7 @@ def arrow_dot_topk(
     # The query side is id+rank floats (~5 MB per million rows at rank
     # 8), so a repartition shuffle is trivially cheap next to the
     # matmul it parallelizes.
-    par = queries.sparkSession.sparkContext.defaultParallelism
+    par = spark.sparkContext.defaultParallelism
     if qsel.rdd.getNumPartitions() < par:
         qsel = qsel.repartition(par)
     return qsel.mapInPandas(score, schema)

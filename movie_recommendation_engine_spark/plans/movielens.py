@@ -24,7 +24,6 @@ from ..sources.readers import read_ratings_csv
 from .metrics import (
     global_hit_ratio,
     per_user_ranking_metrics,
-    rmse,
     summarize_ranking,
 )
 from .popularity import popularity_top_k
@@ -461,7 +460,7 @@ class MovieLensPipeline:
         recs = self.als.recommendation_lists(k=k)
         per_user = per_user_ranking_metrics(recs, truth, k=k, user_col=self.user_col)
         return {
-            "rmse": rmse(self.als.transform(held), label_col=self.rating_col),
+            "rmse": self.als.evaluate_rmse(held),
             "ranking": summarize_ranking(per_user),
         }
 

@@ -120,19 +120,7 @@ class AlsRecommender:
     # defaultParallelism (see _estimator)
     num_blocks: int | None = None
     checkpoint_interval: int = 10
-    # driver-materialization cap for the Arrow/BLAS serving kernel's
-    # broadcast item catalog (operators.similarity.arrow_dot_topk).
-    # None = the kernel's default (SPARK_GRAFT_MAX_BROADCAST_BYTES env
-    # var if set, else 512 MiB ≈ a ~370k-item catalog at rank 100).
-    # Set it here to serve a bigger catalog deliberately on a
-    # big-memory driver — a round-9 advisory flagged the kernel's
-    # tightened default as unreachable through this plan-layer API.
-    max_broadcast_bytes: int | None = None
     model: object = field(default=None, repr=False)
-    # True when the model came from load_model() (vs fit()) — kept as
-    # provenance for callers/tests; flat/lists serving routes through
-    # the Arrow/BLAS kernel for BOTH cases (see recommend_top_k)
-    _loaded: bool = field(default=False, repr=False)
 
     def _estimator(self, spark: SparkSession):
         """The ALS estimator ``fit`` and ``tune`` share, blocked for
@@ -161,7 +149,6 @@ class AlsRecommender:
 
     def fit(self, train: DataFrame) -> "AlsRecommender":
         self.model = self._estimator(train.sparkSession).fit(train)
-        self._loaded = False
         return self
 
     def save_model(self, path: str) -> "AlsRecommender":
@@ -176,28 +163,14 @@ class AlsRecommender:
         """Load a previously saved ALSModel in place of ``fit``.  The
         recommender's rank is restored from the model; the other
         estimator hyper-params only affect fitting and stay as
-        constructed.
-
-        Loaded models serve top-k through the Arrow/BLAS dot-product
-        kernel (``operators.similarity.arrow_dot_topk``) instead of
-        MLlib's blocked recommend-all cross: a loaded model's factor
-        frames are parquet scans that the blocked cross RE-COMPUTES per
-        (user-block x item-block) pair — measured round 6 at sf0.1,
-        evaluate-with-load 116.6 s vs 52.5 s refit even with the frames
-        cached (105 s uncached / 61 s cached vs 43 s in the fitting
-        session, whose factors sit in ALS's cached block-partitioned
-        RDDs).  The Arrow kernel broadcasts the item catalog's factors
-        once and streams user factors through one matmul per chunk —
-        each side is read exactly once, zero shuffle (round-7 verdict
-        task 2).  The factor frames are still cached for transform/
-        RMSE, which join them twice."""
+        constructed.  The factor frames are cached: they are parquet
+        scans, and transform/RMSE join them twice."""
         from pyspark.ml.recommendation import ALSModel
 
         self.model = ALSModel.load(path)
         self.model.userFactors.cache()
         self.model.itemFactors.cache()
         self.rank = self.model.rank
-        self._loaded = True
         return self
 
     def unpersist_factors(self) -> "AlsRecommender":
@@ -220,64 +193,41 @@ class AlsRecommender:
         assert self.model is not None, "fit first"
         return self.model.transform(df)
 
-    def _arrow_topk_flat(self, users: DataFrame | None, k: int) -> DataFrame:
-        """Loaded-model serving: Arrow/BLAS dot top-k over the factor
-        frames — item catalog broadcast once, user factors streamed,
-        zero shuffle (see load_model).  ``users`` bounds the query side
-        (None = all users)."""
+    def _arrow_topk(
+        self, k: int, users: DataFrame | None, as_lists: bool
+    ) -> DataFrame:
+        """The one call into the serving kernel: user factors (only the
+        ids in ``users``, each once, when given) scored against the
+        broadcast item catalog by ``operators.similarity.arrow_dot_topk``."""
         from ..operators.similarity import arrow_dot_topk
 
+        assert self.model is not None, "fit first"
         uf = self.model.userFactors
         if users is not None:
             ids = users.select(F.col(self.user_col).cast("int").alias("id"))
-            uf = uf.join(F.broadcast(ids), "id")
-        out = arrow_dot_topk(
-            uf, self.model.itemFactors, k=k, id_col="id", vec_col="features",
-            max_broadcast_bytes=self.max_broadcast_bytes,
-        )
-        return out.select(
+            uf = uf.join(F.broadcast(ids), "id", "left_semi")
+        return arrow_dot_topk(uf, self.model.itemFactors, k=k, as_lists=as_lists)
+
+    def recommend_top_k(
+        self, k: int = 100, users: DataFrame | None = None
+    ) -> DataFrame:
+        """Top-k items per user (reference als.py:96) as (user, item,
+        score, rank), rank 1 the best.
+
+        ``users`` (a frame with the user id column) serves only that
+        slice, as MLlib's ``recommendForUserSubset`` does: cost scales
+        with the slice, and a user listed twice still gets k rows.
+
+        Served by the Arrow/BLAS kernel for fitted and loaded models
+        alike: it reads each factor frame once, where MLlib's blocked
+        cross re-reads them per block pair and ran out of a 4 GiB heap
+        at sf1.  Ties break on item id asc; MLlib leaves them arbitrary."""
+        return self._arrow_topk(k, users, as_lists=False).select(
             F.col("query_id").alias(self.user_col),
             F.col("neighbor_id").alias(self.item_col),
             "score",
             "rank",
         )
-
-    def recommend_top_k(self, k: int = 100, flat: bool = True) -> DataFrame:
-        """Top-k items per user (reference als.py:96).
-
-        ``flat=False`` returns the reference shape (user,
-        recommendations: array<struct<item,rating>>); ``flat=True``
-        explodes to (user, item, score, rank) — the shape joins and
-        metrics want.
-
-        Physical strategy: flat/lists serving goes through the
-        Arrow/BLAS kernel for BOTH fitted and loaded models — measured
-        faster on both (sf0.1, 147k x 20k rank 8: MLlib blocked cross
-        62-80 s fitted / 105+ s loaded vs 15-25 s through the kernel),
-        and it is the difference between completing and OOM under a
-        constrained heap: MLlib's blocked cross at sf1 killed a 4 GiB
-        JVM from its block read-ahead threads (round-8 soak), while
-        the kernel holds one broadcast item matrix + one score chunk
-        per task.  Ties break deterministically on item id asc, where
-        MLlib leaves them arbitrary.  The reference shape
-        (``flat=False``) still goes through MLlib."""
-        assert self.model is not None, "fit first"
-        if flat:
-            return self._arrow_topk_flat(None, k)
-        return self.model.recommendForAllUsers(k)
-
-    def recommend_for_users(self, users: DataFrame, k: int = 100, flat: bool = True) -> DataFrame:
-        """Top-k items for a SUBSET of users (`recommendForUserSubset`).
-
-        The scale-sane entry point: recommendForAllUsers scores every
-        (user-block x item-block) pair; serving typically needs recs for
-        the active slice only — cost shrinks proportionally.  ``users``
-        needs just the user id column.  Flat serving routes through the
-        Arrow/BLAS kernel (see recommend_top_k)."""
-        assert self.model is not None, "fit first"
-        if flat:
-            return self._arrow_topk_flat(users, k)
-        return self.model.recommendForUserSubset(users.select(self.user_col), k)
 
     def item_neighbors(self, k: int = 10, items: DataFrame | None = None) -> DataFrame:
         """Item-item similarity from the learned factors: cosine top-k
@@ -301,7 +251,7 @@ class AlsRecommender:
         queries = factors
         if items is not None:
             ids = items.select(F.col(self.item_col).alias("id"))
-            queries = factors.join(F.broadcast(ids), "id")
+            queries = factors.join(F.broadcast(ids), "id", "left_semi")
         out = arrow_brute_force_topk(
             queries, factors, k=k, id_col="id", vec_col="features"
         )
@@ -312,31 +262,12 @@ class AlsRecommender:
 
     def recommendation_lists(self, k: int = 100) -> DataFrame:
         """(user, recs: array<item>) ordered by predicted score — the
-        input shape of plans.metrics (reference als.py:120 getField).
-
-        Emitted directly inside the Arrow kernel for both fitted and
-        loaded models (one row per user, no explode/re-aggregate
-        shuffle; see recommend_top_k for the measurements)."""
-        assert self.model is not None, "fit first"
-        from ..operators.similarity import arrow_dot_topk
-
-        return arrow_dot_topk(
-            self.model.userFactors,
-            self.model.itemFactors,
-            k=k,
-            id_col="id",
-            vec_col="features",
-            as_lists=True,
-            max_broadcast_bytes=self.max_broadcast_bytes,
-        ).select(F.col("query_id").alias(self.user_col), "recs")
-
-    def user_factors(self) -> DataFrame:
-        assert self.model is not None, "fit first"
-        return self.model.userFactors
-
-    def item_factors(self) -> DataFrame:
-        assert self.model is not None, "fit first"
-        return self.model.itemFactors
+        input shape of plans.metrics (reference als.py:120 getField),
+        emitted one row per user by the kernel itself (no explode and
+        re-aggregate shuffle)."""
+        return self._arrow_topk(k, None, as_lists=True).select(
+            F.col("query_id").alias(self.user_col), "recs"
+        )
 
     def evaluate_rmse(self, test: DataFrame) -> DataFrame:
         """One-row RMSE over held-out ratings (reference als.py:103)."""

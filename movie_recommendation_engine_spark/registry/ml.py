@@ -207,13 +207,12 @@ def q_popularity_eval_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("als_recommend_top5")
 def q_als_recommend_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ALS fit on the train split, top-5 parts per active order,
-    flattened.  Serves a deterministic user slice via
-    recommendForUserSubset: scoring every (user-block x item-block)
-    pair for ALL users is a batch-export job, not a query — cost
-    scales with the served slice (reference als.py:96 exports all
-    users; recommend_top_k(flat=True) still provides that path, and
-    tests exercise it at small scale).  Rows-only check: factor values
-    are not SQL-expressible."""
+    flattened.  Serves a deterministic user slice
+    (``recommend_top_k(users=...)``): scoring every user is a
+    batch-export job, not a query — cost scales with the served slice
+    (reference als.py:96 exports all users; ``recommend_top_k`` without
+    ``users`` does that, and tests exercise it at small scale).
+    Rows-only check: factor values are not SQL-expressible."""
     rec = _fitted_als(spark, sf_dir)
     labeled = _split_ratings(spark, sf_dir)
     active = (
@@ -223,7 +222,7 @@ def q_als_recommend_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("l_orderkey")
         .limit(_USER_PROBE_CAP)
     )
-    return rec.recommend_for_users(active, k=5, flat=True)
+    return rec.recommend_top_k(5, users=active)
 
 
 @register("als_item_neighbors")
@@ -349,7 +348,7 @@ FROM servable
 """,
 )
 def q_als_recommend_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The MLlib top-k surface under the FULL value-hash gate via its
+    """The ALS top-k surface under the FULL value-hash gate via its
     SQL-expressible invariants: factor VALUES are float/order-dependent,
     but the serving contract is not — exactly the active∩train users get
     rows (coldStartStrategy='drop'), exactly k=5 each, ranks dense 1..5,
@@ -368,7 +367,7 @@ def q_als_recommend_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("l_orderkey")
         .limit(_USER_PROBE_CAP)
     )
-    recs = rec.recommend_for_users(active, k=5, flat=True)
+    recs = rec.recommend_top_k(5, users=active)
     train_items = train.select("l_partkey").distinct().withColumn(
         "__in_cat", F.lit(True)
     )

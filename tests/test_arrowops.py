@@ -183,7 +183,7 @@ def test_dot_topk_rows_hypothesis_vs_bruteforce():
     check()
 
 
-def test_arrow_dot_topk_enforces_broadcast_bound(spark):
+def test_arrow_dot_topk_enforces_broadcast_bound(spark, monkeypatch):
     """The boundedness contract is enforced, not assumed: an over-cap
     candidate catalog must raise (naming the scale paths) BEFORE the
     driver-side collect, and the same catalog passes under the default
@@ -201,21 +201,25 @@ def test_arrow_dot_topk_enforces_broadcast_bound(spark):
         [(10, [1.0, 1.0]), (11, [0.5, 2.0]), (12, [2.0, 0.5])],
         "id int, features array<float>",
     )
+    monkeypatch.setenv("SPARK_GRAFT_MAX_BROADCAST_BYTES", "8")
     with pytest.raises(ValueError, match="ivf_topk"):
-        arrow_dot_topk(q, c, k=2, max_broadcast_bytes=8)
+        arrow_dot_topk(q, c, k=2)
+    monkeypatch.delenv("SPARK_GRAFT_MAX_BROADCAST_BYTES")
     assert arrow_dot_topk(q, c, k=2).count() == 4
 
 
 def test_arrow_dot_topk_env_override_and_plan_layer_cap(spark, monkeypatch):
-    """Both round-9-advisory override paths reach the kernel's bound:
-    SPARK_GRAFT_MAX_BROADCAST_BYTES (process-wide, for call sites you
-    don't own) governs the None default, and
-    AlsRecommender(max_broadcast_bytes=...) threads a per-model cap
-    through every serving entry point."""
+    """SPARK_GRAFT_MAX_BROADCAST_BYTES sets the kernel's bound, is
+    validated by the shared parser (a malformed or non-positive value
+    fails naming the variable), and reaches every recommender serving
+    entry point."""
     import pytest
 
     from movie_recommendation_engine_spark.operators.similarity import (
         arrow_dot_topk,
+    )
+    from movie_recommendation_engine_spark.plans.recommender import (
+        AlsRecommender,
     )
 
     q = spark.createDataFrame(
@@ -224,38 +228,26 @@ def test_arrow_dot_topk_env_override_and_plan_layer_cap(spark, monkeypatch):
     c = spark.createDataFrame(
         [(10, [1.0, 1.0]), (11, [0.5, 2.0])], "id int, features array<float>"
     )
-    # env var tightens the None default below this catalog's estimate
-    monkeypatch.setenv("SPARK_GRAFT_MAX_BROADCAST_BYTES", "8")
-    with pytest.raises(ValueError, match="ivf_topk"):
-        arrow_dot_topk(q, c, k=1)
-    # an explicit kwarg beats the env var
-    assert arrow_dot_topk(q, c, k=1, max_broadcast_bytes=1 << 20).count() == 2
-
-    # round-11 (round-10 advisory): a malformed value must fail NAMING
-    # the env var, and non-positive values must be rejected rather than
-    # silently disabling serving
-    monkeypatch.setenv("SPARK_GRAFT_MAX_BROADCAST_BYTES", "512m")
-    with pytest.raises(ValueError, match="SPARK_GRAFT_MAX_BROADCAST_BYTES"):
-        arrow_dot_topk(q, c, k=1)
-    monkeypatch.setenv("SPARK_GRAFT_MAX_BROADCAST_BYTES", "0")
-    with pytest.raises(ValueError, match="SPARK_GRAFT_MAX_BROADCAST_BYTES"):
-        arrow_dot_topk(q, c, k=1)
-    monkeypatch.delenv("SPARK_GRAFT_MAX_BROADCAST_BYTES")
-
-    # plan layer: the cap set on the recommender reaches the kernel
-    from movie_recommendation_engine_spark.plans.recommender import (
-        AlsRecommender,
-    )
+    monkeypatch.setenv("SPARK_GRAFT_MAX_BROADCAST_BYTES", str(1 << 20))
+    assert arrow_dot_topk(q, c, k=1).count() == 2
+    for raw in ("512m", "0"):
+        monkeypatch.setenv("SPARK_GRAFT_MAX_BROADCAST_BYTES", raw)
+        with pytest.raises(
+            ValueError,
+            match=f"SPARK_GRAFT_MAX_BROADCAST_BYTES must be a positive integer, got '{raw}'",
+        ):
+            arrow_dot_topk(q, c, k=1)
 
     train = spark.createDataFrame(
         [(u, i, float((u * i) % 5 + 1)) for u in range(1, 9) for i in range(1, 7)],
         "userId int, movieId int, rating float",
     )
-    rec = AlsRecommender(rank=2, max_iter=1, max_broadcast_bytes=8).fit(train)
-    with pytest.raises(ValueError, match="max_broadcast_bytes"):
-        rec.recommend_top_k(k=2).count()
-    with pytest.raises(ValueError, match="max_broadcast_bytes"):
-        rec.recommendation_lists(k=2).count()
-    rec.max_broadcast_bytes = None  # back to the default: serves fine
+    rec = AlsRecommender(rank=2, max_iter=1).fit(train)
+    monkeypatch.setenv("SPARK_GRAFT_MAX_BROADCAST_BYTES", "8")
+    with pytest.raises(ValueError, match="ivf_topk"):
+        rec.recommend_top_k(k=2)
+    with pytest.raises(ValueError, match="ivf_topk"):
+        rec.recommendation_lists(k=2)
+    monkeypatch.delenv("SPARK_GRAFT_MAX_BROADCAST_BYTES")  # the default serves
     assert rec.recommend_top_k(k=2).count() > 0
     rec.unpersist_factors()

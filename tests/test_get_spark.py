@@ -75,3 +75,54 @@ def test_env_positive_int_reads_valid_and_unset(monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_CPUS")
     assert env_positive_int("SPARK_GRAFT_CPUS", 32) == 32
     assert env_positive_int("SPARK_GRAFT_CPUS") is None
+
+
+def test_only_session_reads_the_environment():
+    """The package reads environment variables in session.py alone, and
+    every integer one through env_positive_int: outside that parser a
+    read is a string knob, ``os.environ.get(NAME, "default")``, never
+    fed to int() or float().  A knob parsed anywhere else would skip the
+    validation that names a malformed value."""
+    import ast
+    from pathlib import Path
+
+    import movie_recommendation_engine_spark as pkg
+
+    def env_nodes(tree):
+        for n in ast.walk(tree):
+            if (
+                isinstance(n, ast.Attribute)
+                and isinstance(n.value, ast.Name)
+                and n.value.id == "os"
+                and n.attr in ("environ", "getenv")
+            ) or (
+                isinstance(n, ast.ImportFrom)
+                and n.module == "os"
+                and any(a.name in ("environ", "getenv") for a in n.names)
+            ):
+                yield n
+
+    root = Path(pkg.__file__).parent
+    trees = {p.relative_to(root).as_posix(): ast.parse(p.read_text()) for p in root.rglob("*.py")}
+    session = trees.pop("session.py")
+    assert [f"{name}:{n.lineno}" for name, t in trees.items() for n in env_nodes(t)] == []
+
+    parser = next(
+        n for n in session.body if isinstance(n, ast.FunctionDef) and n.name == "env_positive_int"
+    )
+    allowed = {id(n) for n in ast.walk(parser)}
+    for call in ast.walk(session):
+        if not isinstance(call, ast.Call) or id(call) in allowed:
+            continue
+        f, args = call.func, call.args
+        if isinstance(f, ast.Name) and f.id in ("int", "float"):
+            assert list(env_nodes(call)) == [], call.lineno
+        elif (
+            isinstance(f, ast.Attribute)
+            and f.attr == "get"
+            and len(args) == 2
+            and isinstance(args[1], (ast.Constant, ast.JoinedStr))
+            and isinstance(getattr(args[1], "value", ""), str)
+        ):
+            allowed.add(id(f.value))
+    assert [n.lineno for n in env_nodes(session) if id(n) not in allowed] == []

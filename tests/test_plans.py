@@ -32,8 +32,8 @@ ARROW_OK = {
     "als_item_neighbors",
     "als_item_neighbors_invariants",
     "als_rank1_item_neighbors",
-    # deliberate Arrow path since round 8: flat/lists ALS recommend
-    # serves through arrow_dot_topk for fitted AND loaded models
+    # deliberate Arrow path: every ALS top-k (recommend_top_k,
+    # recommendation_lists) serves through arrow_dot_topk
     # (15-25s vs 62-80s blocked cross at sf0.1; completes the sf1 e2e
     # under a 4 GiB heap where the blocked cross OOMs the JVM)
     "als_recommend_invariants",

@@ -33,8 +33,8 @@ def test_default_blocks_follow_session_parallelism(spark, ratings, monkeypatch):
 
     def parts(rec):
         return (
-            rec.user_factors().rdd.getNumPartitions(),
-            rec.item_factors().rdd.getNumPartitions(),
+            rec.model.userFactors.rdd.getNumPartitions(),
+            rec.model.itemFactors.rdd.getNumPartitions(),
         )
 
     assert parts(_fit(ratings)) == (par, par)
@@ -61,7 +61,7 @@ def test_default_blocks_follow_session_parallelism(spark, ratings, monkeypatch):
 
 def test_recommend_shapes(spark, ratings):
     rec = _fit(ratings)
-    flat = rec.recommend_top_k(k=3, flat=True)
+    flat = rec.recommend_top_k(k=3)
     n_users = ratings.select("userId").distinct().count()
     assert flat.count() == 3 * n_users
     assert set(flat.columns) == {"userId", "movieId", "score", "rank"}
@@ -71,15 +71,13 @@ def test_recommend_shapes(spark, ratings):
     )
     assert all(r.lo == 1 and r.hi == 3 and r.n == 3 for r in per.collect())
 
-    nested = rec.recommend_top_k(k=3, flat=False)
-    assert "recommendations" in nested.columns
     lists = rec.recommendation_lists(k=3)
     assert lists.schema["recs"].dataType.simpleString() == "array<int>"
 
 
 def test_factors(spark, ratings):
     rec = _fit(ratings)
-    uf = rec.user_factors()
+    uf = rec.model.userFactors
     assert uf.count() == ratings.select("userId").distinct().count()
     assert len(uf.first().features) == 4
 
@@ -87,11 +85,11 @@ def test_factors(spark, ratings):
 def test_recommend_for_user_subset(spark, ratings):
     rec = _fit(ratings)
     some = ratings.select("userId").distinct().limit(2)
-    flat = rec.recommend_for_users(some, k=3)
+    flat = rec.recommend_top_k(3, users=some)
     assert flat.count() == 3 * 2
     assert set(flat.columns) == {"userId", "movieId", "score", "rank"}
     # subset recs agree with the all-users recs for those users
-    all_flat = rec.recommend_top_k(k=3, flat=True)
+    all_flat = rec.recommend_top_k(k=3)
     uids = [r.userId for r in some.collect()]
     want = {
         (r.userId, r.movieId, r.rank)
@@ -162,35 +160,36 @@ def test_item_neighbors_shape_and_self_exclusion(spark, ratings):
 
 
 def test_loaded_model_serves_identically_via_arrow(spark, ratings, tmp_path):
-    """The Arrow/BLAS serving kernel (round-7 verdict task 2) must
-    reproduce MLlib's recommendForAllUsers output — same items per
-    user (float factors make exact score ties measure-zero on this
-    fixture), same ranks, scores equal to float tolerance — and a
-    save/load round-trip must serve the identical result.  The MLlib
-    reference comes through flat=False (the one shape still served by
-    the blocked cross)."""
+    """The Arrow/BLAS serving kernel must reproduce MLlib's
+    recommendForAllUsers output — same items per user (float factors
+    make exact score ties measure-zero on this fixture), same ranks,
+    scores equal to float tolerance — and a save/load round-trip, and
+    a refit after the load, must serve the identical result."""
     rec = _fit(ratings)
     want = {
         (r.userId, rec_item["movieId"], rank0 + 1): rec_item["rating"]
-        for r in rec.recommend_top_k(k=3, flat=False).collect()
+        for r in rec.model.recommendForAllUsers(3).collect()
         for rank0, rec_item in enumerate(r.recommendations)
     }
 
+    def served(r):
+        return {
+            (row.userId, row.movieId, row.rank): row.score
+            for row in r.recommend_top_k(k=3).collect()
+        }
+
     path = str(tmp_path / "als_model")
     rec.save_model(path)
-    loaded = AlsRecommender().load_model(path)
-    assert loaded._loaded and loaded.rank == rec.rank
-    got = {
-        (r.userId, r.movieId, r.rank): r.score
-        for r in loaded.recommend_top_k(k=3, flat=True).collect()
-    }
+    loaded = AlsRecommender(rank=4, max_iter=5, reg_param=0.1, seed=7).load_model(path)
+    assert loaded.rank == rec.rank
+    got = served(loaded)
     assert set(got) == set(want)
     for key, score in got.items():
         assert abs(score - want[key]) < 1e-4
 
     # the physical plan really is the Arrow kernel: no blocked cross,
     # a mapInPandas node instead
-    plan = loaded.recommend_top_k(k=3, flat=True)._jdf.queryExecution().executedPlan().toString()
+    plan = loaded.recommend_top_k(k=3)._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan
 
     # the lists shape comes straight out of the kernel, same order
@@ -203,21 +202,57 @@ def test_loaded_model_serves_identically_via_arrow(spark, ratings, tmp_path):
     uids = {r.userId for r in some.collect()}
     sub = {
         (r.userId, r.movieId, r.rank)
-        for r in loaded.recommend_for_users(some, k=3).collect()
+        for r in loaded.recommend_top_k(3, users=some).collect()
     }
     assert sub == {k3 for k3 in want if k3[0] in uids}
 
+    # fit after load replaces the loaded model and serves the same way
+    loaded.unpersist_factors().fit(ratings)
+    assert set(served(loaded)) == set(want)
 
-def test_loaded_model_refit_after_load_uses_mllib(spark, ratings, tmp_path):
-    """fit() after load_model() must clear the loaded flag — a freshly
-    fitted model serves through MLlib's cached block RDDs again."""
-    rec = _fit(ratings)
-    path = str(tmp_path / "als_model2")
-    rec.save_model(path)
-    loaded = AlsRecommender(rank=4, max_iter=2, reg_param=0.1, seed=7).load_model(path)
-    assert loaded._loaded
-    loaded.fit(ratings)
-    assert not loaded._loaded
+
+def _tiny_fit(spark):
+    """8 users x 6 items, every pair rated, rank 2."""
+    train = spark.createDataFrame(
+        [(u, i, float((u * i) % 5 + 1)) for u in range(1, 9) for i in range(1, 7)],
+        "userId int, movieId int, rating float",
+    )
+    return AlsRecommender(rank=2, max_iter=1).fit(train)
+
+
+def test_recommend_top_k_serves_a_repeated_user_once(spark):
+    """A user listed twice in ``users`` gets its k rows once, as MLlib's
+    recommendForUserSubset (a left-semi join) gives them."""
+    rec = _tiny_fit(spark)
+    once = spark.createDataFrame([(1,), (2,)], "userId int")
+    twice = spark.createDataFrame([(1,), (1,), (2,)], "userId int")
+
+    def rows(users):
+        return sorted(
+            (r.userId, r.movieId, r.rank) for r in rec.recommend_top_k(2, users=users).collect()
+        )
+
+    assert len(rows(twice)) == 2 * 2
+    assert rows(twice) == rows(once)
+    rec.unpersist_factors()
+
+
+def test_item_neighbors_serves_a_repeated_item_once(spark):
+    """An item listed twice in ``items`` keeps its true top-k: one row
+    per rank, not the rank-1 neighbor twice."""
+    rec = _tiny_fit(spark)
+    once = spark.createDataFrame([(1,), (2,)], "movieId int")
+    twice = spark.createDataFrame([(1,), (1,), (2,)], "movieId int")
+
+    def rows(items):
+        return sorted(
+            (r.movieId, r.neighbor_movieId, r.rank)
+            for r in rec.item_neighbors(k=2, items=items).collect()
+        )
+
+    assert [r[2] for r in rows(twice)] == [1, 2, 1, 2]
+    assert rows(twice) == rows(once)
+    rec.unpersist_factors()
 
 
 def test_arrow_dot_topk_empty_candidates(spark):
