@@ -14,19 +14,23 @@ who today runs ``spark-submit popularity_model.py`` / ``als.py`` /
 
 Inputs may be CSV (header userId,movieId,rating,timestamp — the
 MovieLens layout, reference als.py:24) or parquet (``--format
-parquet``).  The popularity/als/evaluate verbs accept EITHER
-``--ratings`` (each verb re-derives the deterministic split — fine for
-one-off runs) or ``--splits`` pointing at the `split` verb's output
-(the reference's own pipeline shape: als.py:24-34 reads the splitter's
-files; labels are identical, each verb saves one full scan + per-user
-window).  Outputs are parquet directories (``--format csv`` writes
-headered CSV like the reference's splitter).  Every verb is one lazy
-Spark plan; only `evaluate` prints scalars to stdout.
+parquet``).  The popularity/als/evaluate verbs take EITHER ``--ratings``
+(each verb re-derives the deterministic split) or ``--splits``, the
+`split` verb's output (the reference's own flow: als.py:24-34 reads the
+splitter's files).  ``evaluate`` also reuses ``--model-dir`` (from ``als
+--save-model``) and ``--popularity`` (the `popularity` verb's parquet
+table, stamped with the fingerprints of its train split and its rows).
+A reused artifact that is missing, unreadable or not what its verb
+writes exits naming its flag.  Outputs are parquet directories
+(``--format csv`` writes headered CSV like the reference's splitter).
+Every verb is one lazy Spark plan; only `evaluate` prints scalars to
+stdout.
 """
 
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import sys
 
@@ -37,11 +41,24 @@ def _spark(app: str):
     return get_spark(f"mres-{app}")
 
 
+@contextlib.contextmanager
+def _artifact(flag: str, path: str):
+    """Report a reused artifact that cannot be read, or is not what its
+    verb writes, as a usage error naming ``--flag``."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import AnalysisException
+
+    from .plans.movielens import InvalidArtifactError
+
+    try:
+        yield
+    except (InvalidArtifactError, AnalysisException, Py4JJavaError) as ex:
+        raise SystemExit(f"--{flag} {path}: {ex}") from None
+
+
 def _load(spark, args):
-    # args.ratings is always set here: `split` requires it, and the
-    # splits-capable verbs enforce exactly-one-of --ratings/--splits at
-    # parse time (mutually exclusive group), with _pipeline routing the
-    # --splits case away before calling _load
+    # args.ratings is set: `split` requires it, and the other verbs take
+    # exactly one of --ratings/--splits, with --splits routed away first
     from .sources.readers import read_ratings_csv
 
     if args.format == "parquet":
@@ -62,18 +79,8 @@ def _pipeline(spark, args):
     from .plans.movielens import MovieLensPipeline
 
     if getattr(args, "splits", None):
-        # (--ratings together with --splits is rejected at PARSE time by
-        # the argparse mutually-exclusive group — silently preferring
-        # --splits could mask a stale splits directory while the user
-        # believes fresh --ratings are in use; round-10 advisory)
-        # reuse the `split` verb's partitioned parquet instead of
-        # re-splitting from the raw ratings — the reference's own flow
-        # (als.py:24-34 reads the splitter's outputs).  Re-splitting is
-        # deterministic (content-hash) so results are identical either
-        # way; this path just skips a full scan + per-user window PER
-        # VERB (measured ~1.7x on the e2e after the round-9 cache-leak
-        # fix removed the accidental cross-verb cache that hid it).
-        return MovieLensPipeline.from_labeled(spark.read.parquet(args.splits))
+        with _artifact("splits", args.splits):
+            return MovieLensPipeline.from_labeled(spark.read.parquet(args.splits))
     p = MovieLensPipeline(_load(spark, args))
     p.split()
     return p
@@ -92,14 +99,10 @@ def cmd_popularity(args) -> int:
     spark = _spark("popularity")
     p = _pipeline(spark, args)
     try:
-        # popularity_table = popularity_top_k + the train_fp provenance
-        # stamp, so `evaluate --popularity` can detect a table fitted on
-        # different ratings or a stale split (round-12 advisory)
         _write(p.popularity_table(args.k), args.out, args.format_out)
     finally:
-        # verbs may run inside a shared session (the e2e registry
-        # query, a notebook): release the pipeline's cache entries so
-        # repeated runs don't pin one RDD each (round-9 soak finding)
+        # release the split cache: the verb may run inside a shared
+        # session (the e2e registry query, a notebook)
         p.unpersist()
     print(f"wrote top-{args.k} popularity ranking to {args.out}", file=sys.stderr)
     return 0
@@ -122,55 +125,29 @@ def cmd_als(args) -> int:
 
 
 def cmd_evaluate(args) -> int:
-    from .plans.movielens import InvalidArtifactError
+    from .session import run_concurrently
 
     spark = _spark("evaluate")
     p = _pipeline(spark, args)
     try:
-        ranked = None
+        # the --popularity check runs before the model load or fit, so a
+        # bad table does not cost the expensive step first
         if args.popularity:
-            # reuse the `popularity` verb's written table instead of
-            # refitting the top-k from train — at scale the refit is a
-            # full train-split aggregate per evaluate run (mirror of
-            # the --splits reuse pattern).  The FULL validation
-            # (schema, provenance stamp, k-contract slice — see
-            # validate_popularity) runs here, BEFORE the ALS fit: a
-            # typo'd path, a CSV-written table, a wider-than-k table
-            # without a score column, or a table fitted on different
-            # ratings must not cost minutes of fitting first (same
-            # fail-fast rationale as the parse-time --ratings/--splits
-            # group), and every violation surfaces as a named
-            # SystemExit, not a raw traceback (round-11 advisory).
-            try:
-                ranked = spark.read.parquet(args.popularity)
-            except Exception as ex:
-                raise SystemExit(
-                    f"--popularity {args.popularity} is not readable "
-                    "parquet (was the popularity verb run with "
-                    f"--format-out csv, or is the path wrong?): {ex}"
-                ) from None
-            try:
-                ranked = p.validate_popularity(ranked, args.k)
-            except InvalidArtifactError as ex:
-                raise SystemExit(f"--popularity {args.popularity}: {ex}") from None
+            with _artifact("popularity", args.popularity):
+                hit_plan = p.popularity_hit_ratio(
+                    args.k, ranked=spark.read.parquet(args.popularity)
+                )
+        else:
+            hit_plan = p.popularity_hit_ratio(args.k)
         if args.model_dir:
-            # reuse the `als` verb's saved model — the split is recomputed
-            # (deterministic content-hash, so train/validation are identical
-            # to the fitting run's) but the expensive ALS fit is not
-            p.load_als(args.model_dir)
+            with _artifact("model-dir", args.model_dir):
+                p.load_als(args.model_dir)
         else:
             p.fit_als(rank=args.rank, max_iter=args.max_iter, reg_param=args.reg, seed=args.seed)
         out = p.evaluate(k=args.k)
-        # The three metric plans are independent of each other (RMSE,
-        # ranking summary, popularity hit-ratio) and each is a straggler-
-        # tailed job; collect them concurrently so the next job's tasks
-        # back-fill cores freed by the current job's tail instead of
-        # serializing three ramp-downs.  Plans are built on this thread;
-        # only the actions run concurrently (Spark's scheduler is
-        # designed for concurrent jobs — FIFO back-fill).
-        from .session import run_concurrently
-
-        hit_plan = p.popularity_hit_ratio(args.k, ranked=ranked)
+        # the three metric plans are independent, straggler-tailed jobs:
+        # run them concurrently so each one's tasks back-fill the cores
+        # another's tail frees
         rmse, ranking, hit = run_concurrently(
             spark, "evaluate", out["rmse"].collect, out["ranking"].collect, hit_plan.collect
         )
@@ -179,6 +156,13 @@ def cmd_evaluate(args) -> int:
         p.unpersist()
     print(json.dumps(row))
     return 0
+
+
+def _positive_int(text: str) -> int:
+    n = int(text)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be at least 1, got {n}")
+    return n
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -211,16 +195,16 @@ def main(argv: list[str] | None = None) -> int:
     sp = sub.add_parser("popularity", help="weighted-rating popularity top-k")
     common(sp, splits=True)
     sp.add_argument("--out", required=True)
-    sp.add_argument("--k", type=int, default=100)
+    sp.add_argument("--k", type=_positive_int, default=100)
     sp.add_argument("--format-out", choices=["csv", "parquet"], default="parquet")
     sp.set_defaults(fn=cmd_popularity)
 
     def als_args(sp):
-        sp.add_argument("--rank", type=int, default=100)
+        sp.add_argument("--rank", type=_positive_int, default=100)
         sp.add_argument("--max-iter", type=int, default=3)
         sp.add_argument("--reg", type=float, default=0.15)
         sp.add_argument("--seed", type=int, default=42)
-        sp.add_argument("--k", type=int, default=100)
+        sp.add_argument("--k", type=_positive_int, default=100)
 
     sp = sub.add_parser("als", help="ALS fit + top-k recommendations")
     common(sp, splits=True)

@@ -23,6 +23,20 @@ from pyspark.sql import DataFrame, Window, functions as F
 from ..functions.hashing import uniform_hash
 
 
+def _hash_ranked(
+    df: DataFrame, group_col: str, key_cols: list[str], salt: str, order_cols: list[str]
+) -> DataFrame:
+    """``df`` plus ``__h`` (the content hash of ``key_cols``), ``__rn``
+    (the row's 1-based rank in its group by ``__h``, then ``order_cols``)
+    and ``__n`` (the group's size)."""
+    w = Window.partitionBy(group_col)
+    return (
+        df.withColumn("__h", uniform_hash(*key_cols, salt=salt))
+        .withColumn("__rn", F.row_number().over(w.orderBy("__h", *order_cols)))
+        .withColumn("__n", F.count(F.lit(1)).over(w))
+    )
+
+
 def per_group_fraction(
     df: DataFrame,
     group_col: str,
@@ -40,13 +54,7 @@ def per_group_fraction(
     group is represented (the FinalReport p.1 §1 requirement that every
     user appears in every split).
     """
-    h = uniform_hash(*key_cols, salt=salt)
-    w = Window.partitionBy(group_col)
-    ranked = (
-        df.withColumn("__h", h)
-        .withColumn("__rn", F.row_number().over(w.orderBy("__h", *key_cols)))
-        .withColumn("__n", F.count(F.lit(1)).over(w))
-    )
+    ranked = _hash_ranked(df, group_col, key_cols, salt, key_cols)
     out = ranked.filter(F.col("__rn") <= F.ceil(F.col("__n") * F.lit(fraction)))
     return out.drop("__h", "__rn", "__n")
 
@@ -87,13 +95,7 @@ def split_assign(
     if abs(total - 1.0) > 1e-9:
         raise ValueError(f"fractions must sum to 1, got {total}")
 
-    h = uniform_hash(*key_cols, salt=salt)
-    w = Window.partitionBy(group_col)
-    ranked = (
-        df.withColumn("__h", h)
-        .withColumn("__rn", F.row_number().over(w.orderBy("__h", *(order_cols or key_cols))))
-        .withColumn("__n", F.count(F.lit(1)).over(w))
-    )
+    ranked = _hash_ranked(df, group_col, key_cols, salt, order_cols or key_cols)
     # cumulative ceil boundaries: label = first bucket whose boundary >= rn
     expr = None
     cum = 0.0

@@ -41,7 +41,7 @@ def _pos_seq(recs: str, k: int) -> str:
     ``element_at(recs, 1)`` into an empty array — an ANSI
     INVALID_ARRAY_INDEX crash.  The empty-recs row is a real serving
     shape (a cold user's recommendations left-joined to empty — see
-    plans/extension.py), found by the round-5 review; it stayed latent
+    plans/extension.py); it stays latent
     because aggregate-side column pruning usually drops the crashing
     columns before evaluation."""
     n = f"size(slice({recs}, 1, {k}))"

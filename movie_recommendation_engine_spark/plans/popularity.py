@@ -12,10 +12,9 @@ Engine differences (each one a scale fix, SURVEY §7.2 M2):
   not a Python UDF — stays in whole-stage codegen;
 - top-k uses TakeOrderedAndProject (operators.topk.top_k_global), never a
   full collected sort;
-- `percentile` is exact by default (oracle-parity); pass
-  ``approx=True`` for the Greenwald-Khanna sketch the reference used
-  (percentile_approx, popularity_model.py:50), which is the right choice
-  at 100 TB where an exact percentile costs a full sort of the counts.
+- the count floor is the exact ``percentile`` (oracle parity), not the
+  reference's percentile_approx sketch (popularity_model.py:50); it
+  sorts only the per-item counts.
 """
 
 from __future__ import annotations
@@ -33,7 +32,6 @@ def popularity_scores(
     user_col: str = "userId",
     rating_col: str = "rating",
     count_quantile: float = 0.9,
-    approx: bool = False,
     round_to: int | None = 6,
 ) -> DataFrame:
     """Bayesian-weighted popularity score per item.
@@ -55,11 +53,7 @@ def popularity_scores(
         )
         .localCheckpoint(eager=False)
     )
-    pct = (
-        F.expr(f"percentile_approx(num_ratings, {count_quantile})")
-        if approx
-        else F.expr(f"percentile(num_ratings, {count_quantile})")
-    )
+    pct = F.expr(f"percentile(num_ratings, {count_quantile})")
     # exact-DECIMAL global mean: a cross-partition double avg is
     # summation-order-dependent; the decimal sum is exact, with one
     # double division on identical operands in any engine

@@ -12,8 +12,6 @@ the reference left at defaults (SURVEY §7.3):
   task per core; MLlib's own default is a fixed 10 on any cluster.
   Set it to pin the factors (they depend on the block count) or to
   make a factor block fit in executor memory;
-- ``checkpoint_interval`` (lineage truncation — without it, long
-  iteration chains blow up the DAG at scale);
 - seed (the reference relied on the default).
 
 Param introspection uses public getters, never ``_java_obj``
@@ -50,7 +48,7 @@ def als_rank1_factors(
     per-sweep numerator/denominator accumulate in DECIMAL — ratings and
     6-dp factors are exact decimals, so the sums are EXACT and
     order-independent (double sums would carry summation-order ulp
-    noise that can flip a round-6 boundary differently per run/engine).
+    noise that can flip a 6-dp rounding boundary differently per run/engine).
     Only the final division runs in double arithmetic, on identical
     operands in both engines.
 
@@ -114,12 +112,10 @@ class AlsRecommender:
     nonnegative: bool = True
     implicit_prefs: bool = False
     alpha: float = 1.0  # implicit-feedback confidence scale c = 1 + alpha*r
-    cold_start_strategy: str = "drop"
     seed: int = 42
     # user AND item block count; None = the fitting session's
     # defaultParallelism (see _estimator)
     num_blocks: int | None = None
-    checkpoint_interval: int = 10
     model: object = field(default=None, repr=False)
 
     def _estimator(self, spark: SparkSession):
@@ -140,9 +136,8 @@ class AlsRecommender:
             nonnegative=self.nonnegative,
             implicitPrefs=self.implicit_prefs,
             alpha=self.alpha,
-            coldStartStrategy=self.cold_start_strategy,
+            coldStartStrategy="drop",
             seed=self.seed,
-            checkpointInterval=self.checkpoint_interval,
             numUserBlocks=blocks,
             numItemBlocks=blocks,
         )
@@ -178,8 +173,8 @@ class AlsRecommender:
         registers in the session CacheManager, which pins the entry
         until an explicit unpersist — in a shared long-lived session
         (the e2e registry query, a notebook) every load/fit otherwise
-        leaves one more pinned RDD behind (round-9 six-sweep soak
-        finding).  Safe to call whether or not the frames were ever
+        leaves one more pinned RDD behind (a six-sweep session soak
+        measured it).  Safe to call whether or not the frames were ever
         cached."""
         if self.model is not None:
             self.model.userFactors.unpersist()
@@ -238,7 +233,7 @@ class AlsRecommender:
         plan; pass the slice you serve.  Scores through the engine's
         Arrow/BLAS brute-force path (one matmul per candidate batch;
         identical output to the JVM scorer, both hash-gated against the
-        same oracle): at the round-6 sf1 probe (64 probes x 147k
+        same oracle): at an sf1 probe (64 probes x 147k
         factors) the interpreted-HOF JVM scorer ran 4.8s steady-state
         vs 2.0s through the matmul, and the gap widens with catalog
         size and factor rank — per-pair interpretation vs
@@ -273,31 +268,6 @@ class AlsRecommender:
         """One-row RMSE over held-out ratings (reference als.py:103)."""
         return rmse_agg(
             self.transform(test), label_col=self.rating_col, pred_col="prediction"
-        )
-
-    def transform_manual(self, df: DataFrame) -> DataFrame:
-        """The J2 model-predict join spelled out (reference als.py:93):
-        df ⋈ userFactors ⋈ itemFactors + explicit dot product — must
-        equal ``transform`` exactly (coldStartStrategy='drop' ≡ the
-        inner joins).  Exists so the transform mechanics are testable
-        independently of MLlib's physical plan."""
-        assert self.model is not None, "fit first"
-        uf = self.model.userFactors.select(
-            F.col("id").alias(self.user_col), F.col("features").alias("__uf")
-        )
-        itf = self.model.itemFactors.select(
-            F.col("id").alias(self.item_col), F.col("features").alias("__if")
-        )
-        dot = F.aggregate(
-            F.zip_with("__uf", "__if", lambda a, b: a * b),
-            F.lit(0.0).cast("float"),
-            lambda acc, x: acc + x,
-        )
-        return (
-            df.join(uf, self.user_col)
-            .join(itf, self.item_col)
-            .withColumn("prediction", dot)
-            .drop("__uf", "__if")
         )
 
     def tune(

@@ -20,28 +20,18 @@ from pyspark.sql import DataFrame
 from ..operators.sampling import split_assign
 from ..sources.writers import write_partitioned
 
+# the MovieLens ratings columns (reference als.py:24)
+USER_COL, ITEM_COL, RATING_COL = "userId", "movieId", "rating"
 
-def split_ratings(
-    ratings: DataFrame,
-    user_col: str = "userId",
-    key_cols: list[str] | None = None,
-    fractions: dict[str, float] | None = None,
-    split_col: str = "split",
-) -> DataFrame:
+
+def split_ratings(ratings: DataFrame) -> DataFrame:
     """Label every rating train/validation/test, 25/25/50 per user."""
-    key_cols = key_cols or [user_col, "movieId"]
-    return split_assign(
-        ratings,
-        group_col=user_col,
-        key_cols=key_cols,
-        fractions=fractions,
-        split_col=split_col,
-    )
+    return split_assign(ratings, group_col=USER_COL, key_cols=[USER_COL, ITEM_COL])
 
 
-def split_and_write(ratings: DataFrame, path: str, **kwargs) -> DataFrame:
+def split_and_write(ratings: DataFrame, path: str) -> DataFrame:
     """Assign splits and persist a single partitioned dataset (one job —
     not the reference's three separate CSV writes)."""
-    labeled = split_ratings(ratings, **kwargs)
-    write_partitioned(labeled, path, partition_by=[kwargs.get("split_col", "split")])
+    labeled = split_ratings(ratings)
+    write_partitioned(labeled, path, partition_by=["split"])
     return labeled

@@ -6,6 +6,7 @@ from __future__ import annotations
 import csv
 import json
 import random
+import re
 
 import pytest
 
@@ -247,15 +248,12 @@ def test_cli_evaluate_popularity_reuse(spark, ratings_csv, tmp_path, capsys):
 
 
 def test_popularity_reuse_k_contract(spark, ratings_csv, tmp_path, capsys):
-    """Round-11 review fixes: a reused popularity table written at a
-    LARGER k is sliced to the call's top k by (score desc, item asc) —
-    the metric equals the refit's at that k — a wider-than-k table
-    WITHOUT a score column is refused instead of silently inflating the
-    hit-ratio, and an under-k table (possibly a smaller --k) warns on
-    stderr instead of silently deflating it."""
+    """A reused popularity table written at a LARGER k is sliced to the
+    call's top k by (score desc, item asc) — the metric equals the
+    refit's at that k — and an under-k table (possibly a smaller --k)
+    warns on stderr instead of silently deflating it."""
     from movie_recommendation_engine_spark.__main__ import main
     from movie_recommendation_engine_spark.plans.movielens import (
-        InvalidPopularityError,
         MovieLensPipeline,
     )
 
@@ -272,12 +270,6 @@ def test_popularity_reuse_k_contract(spark, ratings_csv, tmp_path, capsys):
         refit = p.popularity_hit_ratio(3).collect()[0][0]
         assert sliced == refit
 
-        # score-less AND wider than k: no deterministic slice exists
-        scoreless = table.select("movieId")
-        if scoreless.count() > 3:
-            with pytest.raises(InvalidPopularityError, match="score"):
-                p.popularity_hit_ratio(3, ranked=scoreless)
-
         # under-k table: accepted (refit's own threshold can truncate
         # below k) but traced on stderr
         capsys.readouterr()
@@ -288,15 +280,12 @@ def test_popularity_reuse_k_contract(spark, ratings_csv, tmp_path, capsys):
 
 
 def test_popularity_provenance_stamp(spark, ratings_csv, tmp_path, capsys):
-    """Round-12 (round-11 verdict #3 / advisory): the popularity verb
-    stamps its table with a train-split content fingerprint; evaluate
-    verifies the stamp against ITS split, so a table fitted on
-    different ratings (the stale-artifact failure mode — every shape
-    check passes, the metric is silently wrong) is caught by name.
-    An unstamped (pre-round-12) table warns and is trusted; since
-    round 14 the stamp also fingerprints the exported (item, score)
-    rows, so a doctored score column under an intact train stamp is
-    caught by name too (r12 verdict item 4 — the caveat-emptor gap)."""
+    """The popularity verb stamps its table with fingerprints of the
+    train split and of its own (item, score) rows; a reused table is
+    checked against the evaluating split, so a table fitted on different
+    ratings, or edited after it was written, fails by name.  A table the
+    verb does not write — a v1 train-only stamp, no stamp, no score
+    column — is refused."""
     from movie_recommendation_engine_spark.__main__ import main
     from movie_recommendation_engine_spark.plans.movielens import (
         POPULARITY_FP_COL,
@@ -327,73 +316,65 @@ def test_popularity_provenance_stamp(spark, ratings_csv, tmp_path, capsys):
             dst.write(line)
     splits_b = tmp_path / "splits_b"
     assert main(["split", "--ratings", str(other_csv), "--out", str(splits_b)]) == 0
-    with pytest.raises(SystemExit, match="provenance mismatch"):
+    with pytest.raises(SystemExit, match="--popularity .*provenance mismatch"):
         main(["evaluate", "--splits", str(splits_b), "--popularity", str(top_a),
               "--rank", "4", "--max-iter", "1", "--k", "5"])
 
     p = MovieLensPipeline.from_labeled(spark.read.parquet(str(splits_a)))
     try:
-        # matching provenance: validated table drops the stamp column,
-        # is marked for its k, and scores identically to the refit
-        ok = p.validate_popularity(table, 5)
-        assert POPULARITY_FP_COL not in ok.columns
-        assert ok._mres_popularity_validated == (p, 5)
-        reused = p.popularity_hit_ratio(5, ranked=ok).collect()[0][0]
+        # matching provenance: scores identically to the refit
+        reused = p.popularity_hit_ratio(5, ranked=table).collect()[0][0]
         assert reused == p.popularity_hit_ratio(5).collect()[0][0]
 
         # mismatching provenance via the API raises the named error
         pb = MovieLensPipeline.from_labeled(spark.read.parquet(str(splits_b)))
         try:
             with pytest.raises(InvalidPopularityError, match="provenance"):
-                pb.validate_popularity(table, 5)
+                pb.popularity_hit_ratio(5, ranked=table)
         finally:
             pb.unpersist()
 
-        # unstamped table: warns, then trusted (pre-round-12 contract)
-        capsys.readouterr()
-        p.validate_popularity(table.drop(POPULARITY_FP_COL), 5)
-        assert "no train_fp provenance stamp" in capsys.readouterr().err
-
         # doctored scores under an intact train stamp: caught by the
-        # rows fingerprint (stamp v2, round 14) — an in-place score
-        # edit raises by name
+        # rows fingerprint — an in-place score edit raises by name
         from pyspark.sql import functions as F
 
         doctored = table.withColumn("score", F.lit(9.0))
         with pytest.raises(InvalidPopularityError, match="integrity mismatch"):
-            p.validate_popularity(doctored, 5)
+            p.popularity_hit_ratio(5, ranked=doctored)
 
         # a doctored ITEM column is caught by the same fingerprint
         doctored_item = table.withColumn(
             "movieId", F.col("movieId") + F.lit(1)
         )
         with pytest.raises(InvalidPopularityError, match="integrity mismatch"):
-            p.validate_popularity(doctored_item, 5)
+            p.popularity_hit_ratio(5, ranked=doctored_item)
 
-        # a v1 (train-only) stamp stays accepted: integrity uncheckable,
-        # provenance still verified — backward compat with round-12
-        # tables
+        # tables the verb does not write are refused by name: a v1
+        # (train-only) stamp, no stamp, no score column
         v1 = table.withColumn(
             POPULARITY_FP_COL,
             F.split(F.col(POPULARITY_FP_COL), r"\|").getItem(0),
         )
-        p.validate_popularity(v1, 5)
+        with pytest.raises(InvalidPopularityError, match="v1 stamp"):
+            p.popularity_hit_ratio(5, ranked=v1)
+        with pytest.raises(InvalidPopularityError, match="no train_fp column"):
+            p.popularity_hit_ratio(5, ranked=table.drop(POPULARITY_FP_COL))
+        with pytest.raises(InvalidPopularityError, match="no score column"):
+            p.popularity_hit_ratio(5, ranked=table.drop("score"))
 
-        # v2 stamp with the score column stripped: integrity unchecked
-        # (warns), provenance still verified, k-contract path intact
-        capsys.readouterr()
-        p.validate_popularity(table.drop("score"), 5)
-        assert "integrity unchecked" in capsys.readouterr().err
+        # a 0-row table (the count floor left no items) is the verb's
+        # own output and stays accepted
+        assert p.popularity_hit_ratio(5, ranked=table.limit(0)).collect()[0][0] == 0.0
     finally:
         p.unpersist()
 
 
 def test_popularity_validation_runs_before_fit(spark, ratings_csv, tmp_path,
                                                monkeypatch):
-    """Round-11 advisory: EVERY --popularity violation (here the
-    wider-than-k-without-score k-contract case) surfaces as a named
-    SystemExit BEFORE the ALS fit — the fit is the expensive step and a
-    malformed table must not cost it first."""
+    """A --popularity violation (here a table without a score column)
+    surfaces as a SystemExit naming the flag BEFORE the ALS fit — the
+    fit is the expensive step and a malformed table must not cost it
+    first."""
     from movie_recommendation_engine_spark.__main__ import main
     from movie_recommendation_engine_spark.plans.movielens import (
         MovieLensPipeline,
@@ -414,7 +395,7 @@ def test_popularity_validation_runs_before_fit(spark, ratings_csv, tmp_path,
         raise AssertionError("ALS fit ran before --popularity validation")
 
     monkeypatch.setattr(MovieLensPipeline, "fit_als", boom)
-    with pytest.raises(SystemExit, match="no score column"):
+    with pytest.raises(SystemExit, match="--popularity .*no score column"):
         main(["evaluate", "--splits", str(splits), "--popularity",
               str(scoreless), "--rank", "4", "--max-iter", "1", "--k", "3"])
 
@@ -461,3 +442,121 @@ def test_from_labeled_label_edge_cases(spark, capsys):
     p = MovieLensPipeline.from_labeled(partial)
     assert "no ['test'] rows" in capsys.readouterr().err
     p.unpersist()
+
+
+@pytest.mark.parametrize(
+    "argv, flag",
+    [
+        (["popularity", "--ratings", "r.csv", "--out", "top", "--k", "0"], "--k"),
+        (["popularity", "--ratings", "r.csv", "--out", "top", "--k", "-3"], "--k"),
+        (["als", "--ratings", "r.csv", "--out", "recs", "--k", "-3"], "--k"),
+        (["als", "--ratings", "r.csv", "--out", "recs", "--rank", "0"], "--rank"),
+        (["evaluate", "--ratings", "r.csv", "--k", "0"], "--k"),
+    ],
+)
+def test_cli_rejects_nonpositive_k_and_rank_before_spark(argv, flag, monkeypatch, capsys):
+    """--k and --rank below 1 are usage errors at parse time: before, the
+    verbs wrote an empty table, fitted the whole model first, or failed
+    inside Spark."""
+    import movie_recommendation_engine_spark.__main__ as cli
+
+    def no_spark(app):
+        raise AssertionError(f"{app} reached Spark with a non-positive {flag}")
+
+    monkeypatch.setattr(cli, "_spark", no_spark)
+    with pytest.raises(SystemExit):
+        cli.main(argv)
+    assert f"argument {flag}: must be at least 1" in capsys.readouterr().err
+
+
+@pytest.fixture(scope="module")
+def verb_artifacts(spark, ratings_csv, tmp_path_factory):
+    """The split, popularity (k=5) and saved-model artifacts of one run."""
+    from movie_recommendation_engine_spark.__main__ import main
+
+    d = tmp_path_factory.mktemp("artifacts")
+    out = {name: str(d / name) for name in ("splits", "top", "model", "recs")}
+    assert main(["split", "--ratings", ratings_csv, "--out", out["splits"]]) == 0
+    assert main(["popularity", "--splits", out["splits"], "--k", "5",
+                 "--out", out["top"]]) == 0
+    assert main(["als", "--splits", out["splits"], "--rank", "4", "--max-iter", "1",
+                 "--k", "5", "--save-model", out["model"], "--out", out["recs"]]) == 0
+    return out
+
+
+def test_cli_names_a_bad_splits_flag(spark, verb_artifacts, tmp_path):
+    """A --splits path that is missing or is not the split verb's output
+    exits naming the flag."""
+    from movie_recommendation_engine_spark.__main__ import main
+
+    plain = tmp_path / "plain"
+    spark.createDataFrame(
+        [(1, 2, 3.0)], "userId int, movieId int, rating float"
+    ).write.parquet(str(plain))
+    for path in (plain, tmp_path / "missing"):
+        with pytest.raises(SystemExit, match=f"^--splits {re.escape(str(path))}: "):
+            main(["popularity", "--splits", str(path), "--k", "5",
+                  "--out", str(tmp_path / "top")])
+
+
+def test_cli_names_a_bad_model_dir_flag(verb_artifacts, tmp_path):
+    """A missing --model-dir exits naming the flag."""
+    from movie_recommendation_engine_spark.__main__ import main
+
+    missing = tmp_path / "no_model"
+    with pytest.raises(SystemExit, match=f"^--model-dir {re.escape(str(missing))}: "):
+        main(["evaluate", "--splits", verb_artifacts["splits"],
+              "--model-dir", str(missing), "--k", "5"])
+
+
+def test_cli_names_a_popularity_table_with_a_v1_stamp(spark, verb_artifacts, tmp_path,
+                                                      monkeypatch):
+    """A --popularity table with a v1 (train-only) stamp is refused,
+    naming the flag, before the ALS fit."""
+    from pyspark.sql import functions as F
+
+    from movie_recommendation_engine_spark.__main__ import main
+    from movie_recommendation_engine_spark.plans.movielens import (
+        POPULARITY_FP_COL,
+        MovieLensPipeline,
+    )
+
+    v1 = tmp_path / "v1"
+    spark.read.parquet(verb_artifacts["top"]).withColumn(
+        POPULARITY_FP_COL, F.split(F.col(POPULARITY_FP_COL), r"\|").getItem(0)
+    ).write.parquet(str(v1))
+
+    def boom(self, *a, **kw):
+        raise AssertionError("ALS fit ran before --popularity validation")
+
+    monkeypatch.setattr(MovieLensPipeline, "fit_als", boom)
+    with pytest.raises(SystemExit, match=f"^--popularity {re.escape(str(v1))}: .*v1 stamp"):
+        main(["evaluate", "--splits", verb_artifacts["splits"],
+              "--popularity", str(v1), "--k", "5"])
+
+
+def test_evaluate_fingerprints_train_once_before_model_load(verb_artifacts, monkeypatch,
+                                                            capsys):
+    """`evaluate --splits --model-dir --popularity` computes the train
+    fingerprint once, and before the model load."""
+    from movie_recommendation_engine_spark.__main__ import main
+    from movie_recommendation_engine_spark.plans.movielens import MovieLensPipeline
+
+    calls = []
+    fingerprint, load = MovieLensPipeline.train_fingerprint, MovieLensPipeline.load_als
+
+    def spy_fingerprint(self):
+        calls.append("fingerprint")
+        return fingerprint(self)
+
+    def spy_load(self, path):
+        calls.append("load")
+        return load(self, path)
+
+    monkeypatch.setattr(MovieLensPipeline, "train_fingerprint", spy_fingerprint)
+    monkeypatch.setattr(MovieLensPipeline, "load_als", spy_load)
+    assert main(["evaluate", "--splits", verb_artifacts["splits"],
+                 "--model-dir", verb_artifacts["model"],
+                 "--popularity", verb_artifacts["top"], "--k", "5"]) == 0
+    assert calls == ["fingerprint", "load"]
+    assert "popularity_hit_ratio" in capsys.readouterr().out

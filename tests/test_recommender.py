@@ -99,22 +99,6 @@ def test_recommend_for_user_subset(spark, ratings):
     assert got == want
 
 
-def test_transform_manual_matches_mllib(spark, ratings):
-    """J2 mechanics: the spelled-out factor-join dot product equals
-    MLlib's transform (reference als.py:93)."""
-    rec = _fit(ratings)
-    got = {
-        (r.userId, r.movieId): r.prediction
-        for r in rec.transform_manual(ratings).collect()
-    }
-    want = {
-        (r.userId, r.movieId): r.prediction for r in rec.transform(ratings).collect()
-    }
-    assert got.keys() == want.keys()
-    for k in want:
-        assert abs(got[k] - want[k]) < 1e-4, k
-
-
 def test_als_rank1_factors_closed_form(spark, ratings):
     """Rank-1 ALS sweeps equal a numpy replay of the closed-form ridge
     updates (round-6 at each half-sweep, ALS-WR count scaling)."""
