@@ -12,24 +12,33 @@
   the item catalog broadcast, users streamed through ``mapInPandas``.
 - Built on those: near-duplicate pairs, SemDeDup, SQ8 and JL
   compression, MMR re-ranking, nearest-centroid evaluation.
+
+Every JVM cosine scorer is built from one core: ``_side`` projects a
+frame to (id, double vector, L2 norm), ``_ranked`` is the ranked-
+neighbor tail (no self-matches, 6-dp cosine, top k by cosine desc then
+neighbor id asc), and ``_nearest`` assigns each vector its k nearest
+centroids (similarity desc, then centroid id asc).  The operators other
+than ``brute_force_topk``, ``arrow_brute_force_topk`` and
+``arrow_dot_topk`` read the embeddings table's ``vec_id`` / ``embedding``
+(and ``label``) columns.
 """
 
 from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
-from ..functions.arrays import cosine_similarity, dot_product, l2_norm
+from ..functions import arrays
 from ..session import env_positive_int
 from .topk import top_k_per_group
 
 
-def _cos(va: str, vb: str, na: str, nb: str, round_to: int):
-    """Cosine from a precomputed-norm pair: norms are per-vector, so
-    every scoring join attaches them BEFORE the join and divides the
-    per-pair dot by the product — cosine_similarity inline would re-run
-    both HOF norm folds for every candidate pair.
+def _cos(va: str, vb: str, na: str, nb: str) -> Column:
+    """6-dp cosine from a precomputed-norm pair: norms are per-vector, so
+    every scoring join attaches them BEFORE the join (``_side``) and
+    divides the per-pair dot by the product — cosine_similarity inline
+    would re-run both HOF norm folds for every candidate pair.
 
     ``try_divide`` not ``/`` — the same ANSI contract as
     ``functions.arrays.cosine_similarity``: Spark 4 runs ANSI mode by
@@ -39,7 +48,7 @@ def _cos(va: str, vb: str, na: str, nb: str, round_to: int):
     degenerate vectors degrade to worst-ranked instead of aborting a
     100 TB serving job."""
     return F.round(
-        F.try_divide(dot_product(va, vb), F.col(na) * F.col(nb)), round_to
+        F.try_divide(arrays.dot_product(va, vb), F.col(na) * F.col(nb)), 6
     )
 
 
@@ -52,60 +61,21 @@ def _dvec(col: Column | str) -> Column:
     return F.transform(c, lambda x: x.cast("double"))
 
 
-def hyperplane(plane: int, dim: int, salt: str = "lsh") -> list[float]:
-    """Deterministic pseudo-random hyperplane: component d is
-    uniform(-0.5, 0.5) derived from md5('{salt}|{plane}|{d}') — the same
-    construction as functions.hashing.uniform_hash, computed driver-side
-    (pure, no RNG state) and inlined as literals in both engines."""
-    out = []
-    for d in range(dim):
-        key = f"{salt}\x01{plane}\x01{d}".encode()
-        h = int(hashlib.md5(key).hexdigest()[:8], 16)
-        out.append(h / 2**32 - 0.5)
-    return out
-
-
-def lsh_signature(vec: Column, planes: list[list[float]]) -> Column:
-    """b-bit signature as int: bit p = 1 iff dot(vec, plane_p) > 0."""
-    sig = None
-    for p, w in enumerate(planes):
-        wcol = F.array(*[F.lit(float(x)) for x in w])
-        dot = F.aggregate(
-            F.zip_with(vec, wcol, lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x
-        )
-        bit = F.when(dot > 0, F.lit(2**p)).otherwise(F.lit(0))
-        sig = bit if sig is None else sig + bit
-    return sig.cast("int")
-
-
-def brute_force_topk(
-    queries: DataFrame,
-    candidates: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int = 6,
+def _side(
+    df: DataFrame, id_col: str, vec_col: str, id_as: str, v: str, *keep: Column
 ) -> DataFrame:
-    """Exact cosine top-k: (query_id, neighbor_id, cosine, rank).
+    """The scoring projection every vector and centroid side goes
+    through: (``id_as``, ``v`` = the vector as array<double>, ``v``+"n" =
+    its L2 norm), plus any ``keep`` columns."""
+    return df.select(
+        F.col(id_col).alias(id_as), _dvec(vec_col).alias(v), *keep
+    ).withColumn(v + "n", arrays.l2_norm(v))
 
-    Self-matches are excluded.  Physical plan: broadcast the smaller
-    side of queries x candidates, score JVM-side, then window top-k
-    partitioned by query (SURVEY §2.5 pattern).
-    """
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        _dvec(vec_col).alias("qv"),
-    ).withColumn("qn", l2_norm("qv"))
-    c = candidates.select(
-        F.col(id_col).alias("neighbor_id"),
-        _dvec(vec_col).alias("cv"),
-    ).withColumn("cn", l2_norm("cv"))
-    scored = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", _cos("qv", "cv", "qn", "cn", round_to))
-    )
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """Top k per query by (cosine desc, neighbor id asc) — a total order,
+    so per-batch top-k lists merge losslessly — as (query_id,
+    neighbor_id, cosine, rank)."""
     return top_k_per_group(
         scored,
         ["query_id"],
@@ -115,13 +85,121 @@ def brute_force_topk(
     ).select("query_id", "neighbor_id", "cosine", "rank")
 
 
+def _ranked(pairs: DataFrame, k: int) -> DataFrame:
+    """The ranked-neighbor tail: ``pairs`` joins a query side (query_id,
+    qv, qvn) to a candidate side (neighbor_id, cv, cvn); self-matches
+    drop, each pair is scored, and the top k per query are kept."""
+    return _top_k(
+        pairs.filter(F.col("query_id") != F.col("neighbor_id")).withColumn(
+            "cosine", _cos("qv", "cv", "qvn", "cvn")
+        ),
+        k,
+    )
+
+
+def _seed_centroids(df: DataFrame, mod: int) -> DataFrame:
+    """The oracle-reproducible coarse quantizer: every vector with
+    ``vec_id % mod == 1`` is a centroid (cent_id, cent_v, cent_vn)."""
+    return _side(
+        df.filter(F.col("vec_id") % mod == 1), "vec_id", "embedding", "cent_id", "cent_v"
+    )
+
+
+def _centroid_sims(side: DataFrame, v: str, cents: DataFrame) -> DataFrame:
+    """A ``_side`` frame crossed with the broadcast centroid table — one
+    narrow pass, no shuffle of vectors against each other — with each
+    pair's cosine as ``sim``."""
+    return (
+        side.crossJoin(F.broadcast(cents))
+        .withColumn("sim", _cos(v, "cent_v", v + "n", "cent_vn"))
+        .drop("cent_v", "cent_vn")
+    )
+
+
+def _nearest(pairs: DataFrame, by: str, k: int) -> DataFrame:
+    """Nearest-centroid assignment: of each ``by`` vector's (cent_id,
+    sim) pairs keep the k most similar, ties to the lower cent_id."""
+    return top_k_per_group(
+        pairs, [by], [F.col("sim").desc(), F.col("cent_id").asc()], k=k
+    )
+
+
+def hyperplane(plane: int, dim: int) -> list[float]:
+    """Deterministic pseudo-random hyperplane: component d is
+    uniform(-0.5, 0.5) derived from md5('lsh|{plane}|{d}') — the same
+    construction as functions.hashing.uniform_hash, computed driver-side
+    (pure, no RNG state) and inlined as literals in both engines."""
+    out = []
+    for d in range(dim):
+        key = f"lsh\x01{plane}\x01{d}".encode()
+        h = int(hashlib.md5(key).hexdigest()[:8], 16)
+        out.append(h / 2**32 - 0.5)
+    return out
+
+
+def lsh_signature(vec_col: str, planes: list[list[float]]) -> Column:
+    """b-bit signature as int: bit p = 1 iff dot(vec, plane_p) > 0.
+
+    One SQL expression, so the plane literals cost one py4j call instead
+    of one per component; the ``D`` suffix keeps each literal the exact
+    DOUBLE (unsuffixed, it would parse as DECIMAL)."""
+    bits = " + ".join(
+        f"CASE WHEN aggregate(zip_with({vec_col}, array("
+        + ", ".join(f"{x!r}D" for x in w)
+        + f"), (a, b) -> a * b), 0.0D, (acc, x) -> acc + x) > 0 THEN {2**p} ELSE 0 END"
+        for p, w in enumerate(planes)
+    )
+    return F.expr(f"CAST({bits} AS INT)")
+
+
+def _bucketed(n_planes: int, dim: int):
+    """The LSH-bucketed side shared by ``lsh_bucketed_topk`` and
+    ``embedding_neardup_pairs``: the planes and signature are built once
+    per operator call; the returned function projects a frame to
+    ``_side(..., bucket)``."""
+    bucket = lsh_signature(
+        "embedding", [hyperplane(p, dim) for p in range(n_planes)]
+    ).alias("bucket")
+    return lambda df, id_as, v: _side(df, "vec_id", "embedding", id_as, v, bucket)
+
+
+def brute_force_topk(
+    queries: DataFrame,
+    candidates: DataFrame,
+    k: int = 5,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Exact cosine top-k: (query_id, neighbor_id, cosine, rank).
+
+    Self-matches are excluded.  Physical plan: broadcast the smaller
+    side of queries x candidates, score JVM-side, then window top-k
+    partitioned by query (SURVEY §2.5 pattern).
+    """
+    q = _side(queries, id_col, vec_col, "query_id", "qv")
+    c = _side(candidates, id_col, vec_col, "neighbor_id", "cv")
+    return _ranked(F.broadcast(q).crossJoin(c), k)
+
+
+def _stack(vecs, dim: int):
+    """Vectors -> an (n, dim) float64 matrix.  A NULL vector (or one of
+    another length) becomes a zero row, which scores 0/0 = NaN: Arrow
+    returns that as SQL NULL, ranked last like the JVM path's NULL."""
+    import numpy as np
+
+    out = np.zeros((len(vecs), dim))
+    for i, v in enumerate(vecs):
+        if v is not None and len(v) == dim:
+            out[i] = v
+    return out
+
+
 def arrow_brute_force_topk(
     queries: DataFrame,
     candidates: DataFrame,
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_to: int = 6,
 ) -> DataFrame:
     """Exact cosine top-k through the Arrow/numpy path — identical
     results to ``brute_force_topk``, different physical engine.
@@ -130,7 +208,7 @@ def arrow_brute_force_topk(
     per pair; here each candidate partition is scored against the whole
     query matrix with ONE BLAS matmul (`C @ Q.T`) inside `mapInPandas`,
     then reduced to a per-batch top-k under the exact global comparator
-    (round-6 cosine desc, neighbor id asc — a total order, so per-batch
+    (6-dp cosine desc, neighbor id asc — a total order, so per-batch
     top-k composes losslessly into the global window top-k).  This is
     the SIMD scale path for wide embeddings: per-batch work is
     memory-bandwidth-bound matmul instead of expression interpretation.
@@ -145,18 +223,18 @@ def arrow_brute_force_topk(
     import pandas as pd
 
     qrows = queries.select(id_col, vec_col).collect()  # bounded query set
+    spark = queries.sparkSession
     if not qrows:
         # no queries -> no rows; short-circuit before the numpy matrix
         # build, where a zero-row array is 1-D and axis-1 reductions
         # raise (degenerate-input contract: empty in, empty out)
-        spark = queries.sparkSession
         return spark.createDataFrame(
             [], "query_id long, neighbor_id long, cosine double, rank int"
         )
     qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qmat = np.array([list(r[1]) for r in qrows], dtype=np.float64)
+    dim = next((len(r[1]) for r in qrows if r[1] is not None), 0)
+    qmat = _stack([r[1] for r in qrows], dim)
     qnorm = np.sqrt((qmat * qmat).sum(axis=1))
-    spark = queries.sparkSession
     bq = spark.sparkContext.broadcast((qids, qmat, qnorm))
 
     def score(batches):
@@ -165,7 +243,7 @@ def arrow_brute_force_topk(
             if len(pdf) == 0:
                 continue
             cids = pdf[id_col].to_numpy(dtype=np.int64)
-            cmat = np.array([list(v) for v in pdf[vec_col]], dtype=np.float64)
+            cmat = _stack(pdf[vec_col].tolist(), qm.shape[1])
             cnorm = np.sqrt((cmat * cmat).sum(axis=1))
             # oracle formula exactly: dot / (|q| * |c|), float64 matmul.
             # A 0-norm pair divides 0/0 -> NaN: np.lexsort sorts NaN
@@ -174,7 +252,7 @@ def arrow_brute_force_topk(
             # degenerate vector lands exactly like the JVM path's
             # try_divide NULL, worst-ranked, never an exception.
             with np.errstate(invalid="ignore", divide="ignore"):
-                s = np.round(cmat @ qm.T / np.outer(cnorm, qn), round_to)
+                s = np.round(cmat @ qm.T / np.outer(cnorm, qn), 6)
             out_q, out_n, out_c = [], [], []
             for j in range(len(ids_q)):
                 col = s[:, j]
@@ -191,13 +269,7 @@ def arrow_brute_force_topk(
     partial = candidates.select(id_col, vec_col).mapInPandas(
         score, "query_id long, neighbor_id long, cosine double"
     )
-    return top_k_per_group(
-        partial,
-        ["query_id"],
-        [F.col("cosine").desc(), F.col("neighbor_id").asc()],
-        k=k,
-        keep_rank=True,
-    ).select("query_id", "neighbor_id", "cosine", "rank")
+    return _top_k(partial, k)
 
 
 def dot_topk_rows(s, ids_c, kk):
@@ -208,7 +280,7 @@ def dot_topk_rows(s, ids_c, kk):
 
     Selection is sampled-threshold, not row-wise np.argpartition: the
     naive kernel is memory-bound (67 s of 70 s single-thread at
-    147k x 20k, measured round 8).  Each row's kth-largest is estimated
+    147k x 20k).  Each row's kth-largest is estimated
     from a FIXED column sample (linspace, no RNG — bit-reproducible
     across runs and partitionings), everything >= the estimate is kept
     with one SIMD compare pass, and only the rows the estimate
@@ -247,8 +319,8 @@ def dot_topk_rows(s, ids_c, kk):
     # desc, candidate id asc).  The id must be an explicit sort key: a
     # stable sort on (row, score) would break ties by column POSITION,
     # which equals id order only when ids_c happens to be monotonic —
-    # a hypothesis sweep with permuted ids caught exactly that (round
-    # 8).  Float comparison also treats -0.0 == 0.0 here, matching the
+    # a hypothesis sweep with permuted ids caught exactly that.  Float
+    # comparison also treats -0.0 == 0.0 here, matching the
     # reference comparator, where a bit-level key would not.
     order = np.lexsort((ids_c[cols], -sc, rows))
     rows_s, cols_s, sc_s = rows[order], cols[order], sc[order]
@@ -399,9 +471,6 @@ def lsh_bucketed_topk(
     k: int = 5,
     n_planes: int = 8,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int = 6,
 ) -> DataFrame:
     """ANN top-k: score only same-LSH-bucket pairs.
 
@@ -410,29 +479,10 @@ def lsh_bucketed_topk(
     hyperplane.  The scale path: the bucket join is a plain equi-join
     (shuffle on a small int key), never a cross product.
     """
-    planes = [hyperplane(p, dim) for p in range(n_planes)]
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        _dvec(vec_col).alias("qv"),
-        lsh_signature(F.col(vec_col), planes).alias("bucket"),
-    ).withColumn("qn", l2_norm("qv"))
-    c = candidates.select(
-        F.col(id_col).alias("neighbor_id"),
-        _dvec(vec_col).alias("cv"),
-        lsh_signature(F.col(vec_col), planes).alias("bucket"),
-    ).withColumn("cn", l2_norm("cv"))
-    scored = (
-        q.join(c, "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", _cos("qv", "cv", "qn", "cn", round_to))
-    )
-    return top_k_per_group(
-        scored,
-        ["query_id"],
-        [F.col("cosine").desc(), F.col("neighbor_id").asc()],
-        k=k,
-        keep_rank=True,
-    ).select("query_id", "neighbor_id", "cosine", "rank")
+    side = _bucketed(n_planes, dim)
+    q = side(queries, "query_id", "qv")
+    c = side(candidates, "neighbor_id", "cv")
+    return _ranked(q.join(c, "bucket"), k)
 
 
 def ivf_topk(
@@ -441,9 +491,6 @@ def ivf_topk(
     k: int = 5,
     stride: int = 29,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int = 6,
 ) -> DataFrame:
     """IVF-Flat ANN top-k: inverted-file index with a deterministic
     coarse quantizer, ``nprobe`` cell probing, exact re-rank in-cell.
@@ -469,10 +516,7 @@ def ivf_topk(
     cell id — |Q| x |C| / #cells * nprobe work instead of |Q| x |C|.
     Output: (query_id, neighbor_id, cosine, rank).
     """
-    cents = candidates.filter((F.col(id_col) % stride) == 1).select(
-        F.col(id_col).alias("cent_id"), _dvec(vec_col).alias("cent_v")
-    )
-    return _ivf_probe(queries, candidates, cents, k, nprobe, id_col, vec_col, round_to)
+    return _ivf_probe(queries, candidates, _seed_centroids(candidates, stride), k, nprobe)
 
 
 def ivf_kmeans_topk(
@@ -481,178 +525,129 @@ def ivf_kmeans_topk(
     k: int = 5,
     n_cells: int = 16,
     nprobe: int = 2,
-    max_iter: int = 5,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int = 6,
 ) -> DataFrame:
     """IVF-Flat with a k-means-refined coarse quantizer (the production
     variant ``ivf_topk``'s docstring promises): MLlib KMeans learns
-    ``n_cells`` centroids (distributed Lloyd iterations), then the same
-    assign / nprobe-probe / exact re-rank path runs against them.
-    Better cell balance than seed centroids on clustered data — the
-    probe path and cost model are identical.  Not SQL-reproducible
-    (iterative k-means), so queries built on it register rows-only.
+    ``n_cells`` centroids (5 distributed Lloyd iterations, seed 42),
+    then the same assign / nprobe-probe / exact re-rank path runs
+    against them.  Better cell balance than seed centroids on clustered
+    data — the probe path and cost model are identical.  Not
+    SQL-reproducible (iterative k-means), so queries built on it
+    register rows-only.
     """
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    train = candidates.select(array_to_vector(_dvec(vec_col)).alias("features"))
-    km = KMeans(k=n_cells, seed=seed, maxIter=max_iter).fit(train)
-    spark = candidates.sparkSession
-    cents = spark.createDataFrame(
+    train = candidates.select(array_to_vector(_dvec("embedding")).alias("features"))
+    km = KMeans(k=n_cells, seed=42, maxIter=5).fit(train)
+    cents = candidates.sparkSession.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(km.clusterCenters())],
         "cent_id int, cent_v array<double>",
     )
-    return _ivf_probe(queries, candidates, cents, k, nprobe, id_col, vec_col, round_to)
+    return _ivf_probe(
+        queries, candidates, _side(cents, "cent_id", "cent_v", "cent_id", "cent_v"), k, nprobe
+    )
 
 
 def _ivf_probe(
-    queries: DataFrame,
-    candidates: DataFrame,
-    cents: DataFrame,
-    k: int,
-    nprobe: int,
-    id_col: str,
-    vec_col: str,
-    round_to: int,
+    queries: DataFrame, candidates: DataFrame, cents: DataFrame, k: int, nprobe: int
 ) -> DataFrame:
-    cents_n = cents.withColumn("cent_n", l2_norm("cent_v"))
-    c = candidates.select(
-        F.col(id_col).alias("neighbor_id"), _dvec(vec_col).alias("cv")
-    ).withColumn("cn", l2_norm("cv"))
-    assign = top_k_per_group(
-        c.crossJoin(F.broadcast(cents_n)).withColumn(
-            "sim", _cos("cv", "cent_v", "cn", "cent_n", round_to)
-        ),
-        ["neighbor_id"],
-        [F.col("sim").desc(), F.col("cent_id").asc()],
-        k=1,
-    ).select("neighbor_id", "cent_id", "cv", "cn")
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _dvec(vec_col).alias("qv")
-    ).withColumn("qn", l2_norm("qv"))
-    probe = top_k_per_group(
-        q.crossJoin(F.broadcast(cents_n)).withColumn(
-            "sim", _cos("qv", "cent_v", "qn", "cent_n", round_to)
-        ),
-        ["query_id"],
-        [F.col("sim").desc(), F.col("cent_id").asc()],
-        k=nprobe,
-    ).select("query_id", "qv", "qn", "cent_id")
-    scored = (
-        probe.join(assign, "cent_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", _cos("qv", "cv", "qn", "cn", round_to))
-    )
-    return top_k_per_group(
-        scored,
-        ["query_id"],
-        [F.col("cosine").desc(), F.col("neighbor_id").asc()],
-        k=k,
-        keep_rank=True,
-    ).select("query_id", "neighbor_id", "cosine", "rank")
+    """Assign every candidate to its nearest cell, probe each query's
+    ``nprobe`` nearest cells, and re-rank the probed members exactly."""
+    c = _side(candidates, "vec_id", "embedding", "neighbor_id", "cv")
+    q = _side(queries, "vec_id", "embedding", "query_id", "qv")
+    assign = _nearest(_centroid_sims(c, "cv", cents), "neighbor_id", 1).drop("sim")
+    probe = _nearest(_centroid_sims(q, "qv", cents), "query_id", nprobe).drop("sim")
+    return _ranked(probe.join(assign, "cent_id"), k)
 
 
 def embedding_neardup_pairs(
     df: DataFrame,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_planes: int = 8,
     dim: int = 64,
-    round_to: int = 6,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cosine >=
     threshold), LSH-bucketed: only same-bucket pairs are scored."""
-    planes = [hyperplane(p, dim) for p in range(n_planes)]
-    sig = df.select(
-        F.col(id_col).alias("id"),
-        _dvec(vec_col).alias("v"),
-        lsh_signature(F.col(vec_col), planes).alias("bucket"),
-    )
-    a = sig.select(
-        F.col("id").alias("id_a"), F.col("v").alias("va"), "bucket"
-    ).withColumn("na", l2_norm("va"))
-    b = sig.select(
-        F.col("id").alias("id_b"), F.col("v").alias("vb"), "bucket"
-    ).withColumn("nb", l2_norm("vb"))
+    s = _bucketed(n_planes, dim)(df, "id", "v")
+    a, b = s.alias("a"), s.alias("b")
     return (
         a.join(b, "bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", _cos("va", "vb", "na", "nb", round_to))
+        .filter(F.col("a.id") < F.col("b.id"))
+        .select(
+            F.col("a.id").alias("id_a"),
+            F.col("b.id").alias("id_b"),
+            _cos("a.v", "b.v", "a.vn", "b.vn").alias("cosine"),
+        )
         .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
     )
 
 
-def centroid_classifier_eval(
-    vecs: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
+def micro_centroids(vecs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Embeddings as integer MICRO-UNITS and their per-label centroids,
+    exact on every engine: a component is floor(x * 1e6) (the
+    float->double cast is exact, multiply and floor are single IEEE
+    ops), and a (label, dim) centroid is the integer sum DIV count
+    (Spark DIV and DuckDB // both truncate toward zero — verified
+    including negatives).
+
+    Returns (units: vec_id, label, dim, u — checkpointed, as it feeds
+    the centroids and the caller; centroids: label, dim, c)."""
+    units = (
+        vecs.select("vec_id", "label", F.posexplode("embedding").alias("dim", "val"))
+        .select(
+            "vec_id",
+            "label",
+            "dim",
+            F.floor(F.col("val").cast("double") * 1_000_000).cast("long").alias("u"),
+        )
+        .localCheckpoint(eager=False)
+    )
+    cents = units.groupBy("label", "dim").agg(F.expr("sum(u) DIV count(*)").alias("c"))
+    return units, cents
+
+
+def centroid_classifier_eval(vecs: DataFrame) -> DataFrame:
     """Nearest-centroid classification accuracy per label — the standard
     cheap read on embedding quality ("are classes linearly separated?").
 
-    Determinism is engineered like pagerank: vector components are
-    integer MICRO-UNITS (floor(val * 1e6) — float->double cast is exact,
-    multiply and floor are single IEEE ops), per-(label, dim) centroids
-    are integer sums DIV counts (Spark DIV and DuckDB // both truncate
-    toward zero — verified including negatives), and the per-(vector,
-    label) score sum(u * c) is an exact integer; only the final
-    norm division runs in double, on identical operands.  Prediction =
-    max score with label-ascending tie-break.
+    Determinism is engineered like pagerank: ``micro_centroids`` gives
+    integer components and centroids, and the per-(vector, label) score
+    sum(u * c) is an exact integer; only the final norm division runs
+    in double, on identical operands.  Prediction = max score with
+    label-ascending tie-break.
 
     Physically: explode to (id, dim, u) once, broadcast the tiny
     (labels x dims) centroid table, one grouped integer dot per
-    (vector, candidate label), a rank-1 window per vector.  Returns
-    (label, n, n_correct, accuracy).
+    (vector, candidate label), a rank-1 nearest-centroid pick per
+    vector.  Returns (label, n, n_correct, accuracy).
     """
     from ..functions.rounding import det_round
 
-    ex = vecs.select(
-        F.col(id_col),
-        F.col(label_col),
-        F.posexplode(vec_col).alias("dim", "val"),
-    ).select(
-        id_col,
-        label_col,
-        "dim",
-        F.floor(F.col("val").cast("double") * 1_000_000).cast("long").alias("u"),
-    ).localCheckpoint(eager=False)
-    cents = (
-        ex.groupBy(F.col(label_col).alias("c_label"), "dim")
-        .agg(F.expr("sum(u) DIV count(*)").alias("c"))
-    )
-    nc = cents.groupBy("c_label").agg(F.sum(F.col("c") * F.col("c")).alias("nc"))
+    ex, cents = micro_centroids(vecs)
+    cents = cents.withColumnRenamed("label", "cent_id")
+    nc = cents.groupBy("cent_id").agg(F.sum(F.col("c") * F.col("c")).alias("nc"))
     scores = (
         ex.join(F.broadcast(cents), "dim")
-        .groupBy(id_col, label_col, "c_label")
+        .groupBy("vec_id", "label", "cent_id")
         .agg(F.sum(F.col("u") * F.col("c")).alias("dot"))
-        .join(F.broadcast(nc), "c_label")
+        .join(F.broadcast(nc), "cent_id")
         .select(
-            id_col,
-            label_col,
-            "c_label",
-            (F.col("dot").cast("double") / F.sqrt(F.col("nc").cast("double"))).alias("s"),
+            "vec_id",
+            "label",
+            "cent_id",
+            (F.col("dot").cast("double") / F.sqrt(F.col("nc").cast("double"))).alias("sim"),
         )
-    )
-    w = Window.partitionBy(id_col).orderBy(F.col("s").desc(), F.col("c_label").asc())
-    pred = (
-        scores.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select(id_col, label_col, F.col("c_label").alias("pred"))
     )
     return (
-        pred.groupBy(label_col)
+        _nearest(scores, "vec_id", 1)
+        .groupBy("label")
         .agg(
             F.count("*").alias("n"),
-            F.sum((F.col("pred") == F.col(label_col)).cast("long")).alias("n_correct"),
+            F.sum((F.col("cent_id") == F.col("label")).cast("long")).alias("n_correct"),
         )
         .select(
-            label_col,
+            "label",
             "n",
             "n_correct",
             det_round(F.col("n_correct") / F.col("n")).alias("accuracy"),
@@ -660,16 +655,7 @@ def centroid_classifier_eval(
     )
 
 
-def semdedup(
-    candidates: DataFrame,
-    tau: float = 0.4,
-    cent_mod: int = 29,
-    cent_rem: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int = 6,
-    checkpoint: bool = True,
-) -> DataFrame:
+def semdedup(candidates: DataFrame, tau: float = 0.4, cent_mod: int = 29) -> DataFrame:
     """Semantic deduplication, SemDeDup-style (Abbas et al. 2023,
     arXiv:2303.09540): cluster embeddings with a coarse quantizer, then
     drop within-cluster semantic duplicates — pairs with cosine >= tau
@@ -680,81 +666,50 @@ def semdedup(
     never globally, so with n_cells ~ sqrt(n) the pair join is ~n^1.5
     dot products total instead of n^2 — the same reason the paper
     k-means-clusters 100M embeddings before comparing any.  Centroids
-    here are deterministic seed vectors (id % cent_mod == cent_rem),
-    the engine's oracle-reproducible quantizer (swap in
+    here are deterministic seed vectors (vec_id % cent_mod == 1), the
+    engine's oracle-reproducible quantizer (swap in
     ``ivf_kmeans_topk``'s MLlib KMeans for better balance when oracle
     replay isn't needed).  SIZE ``cent_mod`` ~ isqrt(n): n_cells is
     n/cent_mod, so a FIXED modulus silently makes the broadcast-assign
-    pass n^2/cent_mod (the round-6 sf1 probe measured it; the registry
-    query derives the modulus from a count for exactly this reason).  At 100 TB: centroids broadcast (one narrow
-    pass to assign), the pair join shuffles on cluster id only, and a
-    cluster-size cap (re-split oversized cells by a secondary hash)
-    guards the skewed-cell worst case.
+    pass n^2/cent_mod (the registry query derives the modulus from a
+    count for exactly this reason).  At 100 TB: centroids broadcast
+    (one narrow pass to assign), the pair join shuffles on cluster id
+    only, and a cluster-size cap (re-split oversized cells by a
+    secondary hash) guards the skewed-cell worst case.
 
-    Returns one row per vector: (id, cent_id, cent_cos, is_dup).
+    Returns one row per vector: (vec_id, cent_id, cent_cos, is_dup).
     """
-    c = candidates.select(F.col(id_col).alias("__vid"), _dvec(vec_col).alias("v"))
-    c = c.withColumn("vn", l2_norm("v"))
-    cents = (
-        candidates.filter((F.col(id_col) % cent_mod) == cent_rem)
-        .select(F.col(id_col).alias("cent_id"), _dvec(vec_col).alias("cv"))
-        .withColumn("cn", l2_norm("cv"))
-    )
-    scored = c.crossJoin(F.broadcast(cents)).withColumn(
-        "cent_cos", _cos("v", "cv", "vn", "cn", round_to)
-    )
-    w = Window.partitionBy("__vid").orderBy(F.col("cent_cos").desc(), F.col("cent_id").asc())
+    side = _side(candidates, "vec_id", "embedding", "vec_id", "v")
     # assign feeds three consumers (the output row, both sides of the
     # pair self-join) — truncate once so the broadcast-assign pass runs
     # once, not three times (engine-wide localCheckpoint policy: blocks
-    # freed by the ContextCleaner when the py4j ref drops).
-    # checkpoint=False keeps the full lineage visible for plan audits.
-    assign = (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("__vid", "v", "vn", "cent_id", "cent_cos")
-    )
-    if checkpoint:
-        assign = assign.localCheckpoint(eager=False)
+    # freed by the ContextCleaner when the py4j ref drops)
+    assign = _nearest(
+        _centroid_sims(side, "v", _seed_centroids(candidates, cent_mod)), "vec_id", 1
+    ).localCheckpoint(eager=False)
     a, b = assign.alias("a"), assign.alias("b")
     dups = (
         a.join(
             b,
             (F.col("a.cent_id") == F.col("b.cent_id"))
-            & (F.col("a.__vid") > F.col("b.__vid")),
+            & (F.col("a.vec_id") > F.col("b.vec_id")),
         )
-        .filter(
-            # try_divide: a 0-norm member yields NULL cosine, and
-            # NULL >= tau is NULL -> filtered out — a degenerate vector
-            # is never marked duplicate instead of raising under ANSI
-            F.round(
-                F.try_divide(
-                    dot_product("a.v", "b.v"), F.col("a.vn") * F.col("b.vn")
-                ),
-                round_to,
-            )
-            >= F.lit(tau)
-        )
-        .select(F.col("a.__vid").alias("__vid"))
+        # a 0-norm member yields NULL cosine, and NULL >= tau is NULL ->
+        # filtered out: a degenerate vector is never marked duplicate
+        .filter(_cos("a.v", "b.v", "a.vn", "b.vn") >= F.lit(tau))
+        .select(F.col("a.vec_id").alias("vec_id"))
         .distinct()
         .withColumn("__dup", F.lit(True))
     )
-    return (
-        assign.join(dups, "__vid", "left")
-        .select(
-            F.col("__vid").alias(id_col),
-            "cent_id",
-            "cent_cos",
-            F.coalesce(F.col("__dup"), F.lit(False)).alias("is_dup"),
-        )
+    return assign.join(dups, "vec_id", "left").select(
+        "vec_id",
+        "cent_id",
+        F.col("sim").alias("cent_cos"),
+        F.coalesce(F.col("__dup"), F.lit(False)).alias("is_dup"),
     )
 
 
-def sq8_reconstruct(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def sq8_reconstruct(df: DataFrame) -> DataFrame:
     """Scalar 8-bit quantization (the IVF-SQ8 storage path): per
     dimension, map [min, max] linearly onto 0..255 codes, then
     reconstruct — searching the reconstructed vectors is exactly what an
@@ -765,9 +720,9 @@ def sq8_reconstruct(
     row of (lo[], hi[]) arrays — the quantize/reconstruct step is then a
     narrow per-row ``transform``, no second shuffle of the vectors.
     Codes use floor(y + 0.5), bit-stable across engines (round() ties
-    diverge).  Returns (id_col, v: array<double> reconstructed).
+    diverge).  Returns (vec_id, v: array<double> reconstructed).
     """
-    d = df.select(F.col(id_col), _dvec(vec_col).alias("v"))
+    d = df.select("vec_id", _dvec("embedding").alias("v"))
     dims = d.select(F.posexplode("v").alias("pos", "x"))
     rng = dims.groupBy("pos").agg(F.min("x").alias("lo"), F.max("x").alias("hi"))
     ranges = rng.agg(
@@ -778,8 +733,8 @@ def sq8_reconstruct(
             F.sort_array(F.collect_list(F.struct("pos", "hi"))), lambda s: s["hi"]
         ).alias("his"),
     )
-    rec = d.crossJoin(F.broadcast(ranges)).select(
-        F.col(id_col),
+    return d.crossJoin(F.broadcast(ranges)).select(
+        "vec_id",
         F.expr(
             "transform(v, (x, i) -> CASE"
             " WHEN element_at(his, i + 1) = element_at(los, i + 1)"
@@ -791,98 +746,71 @@ def sq8_reconstruct(
             " END)"
         ).alias("v"),
     )
-    return rec
 
 
 # --- Johnson-Lindenstrauss random projection ------------------------------
 
 
-def jl_signs(in_dim: int, out_dim: int, salt: str = "jl") -> list[list[int]]:
+def jl_signs(in_dim: int, out_dim: int) -> list[list[int]]:
     """Deterministic +-1 projection matrix (out_dim x in_dim), each sign
-    the parity of md5(salt|j|i) — the Achlioptas (2001) database-friendly
+    the parity of md5('jl|j|i') — the Achlioptas (2001) database-friendly
     JL construction with sign entries.  Derived at PLAN BUILD time in
     plain Python (no Spark, no RNG state), so the Spark expression and
     the DuckDB oracle embed the identical literal matrix."""
-    import hashlib
-
     return [
         [
-            1
-            if int(hashlib.md5(f"{salt}|{j}|{i}".encode()).hexdigest()[:8], 16) % 2
-            == 0
-            else -1
+            1 if int(hashlib.md5(f"jl|{j}|{i}".encode()).hexdigest()[:8], 16) % 2 == 0 else -1
             for i in range(in_dim)
         ]
         for j in range(out_dim)
     ]
 
 
-def jl_project(
-    vecs: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    in_dim: int = 64,
-    out_dim: int = 16,
-    salt: str = "jl",
-) -> DataFrame:
+def jl_project(vecs: DataFrame, in_dim: int = 64, out_dim: int = 16) -> DataFrame:
     """Project embeddings to ``out_dim`` dims: p_j = sum_i s_ji * u_i
     over integer MICRO-UNIT components (floor(x*1e6) — the engine's
-    exact-arithmetic trick, cf. centroid_classifier_eval), so every
-    projected coordinate is an exact integer, bit-identical across
-    engines and summation orders.  Cosine is scale-invariant, so the
-    unnormalized signed sum preserves JL geometry exactly as the
+    exact-arithmetic trick, cf. micro_centroids), so every projected
+    coordinate is an exact integer, bit-identical across engines and
+    summation orders.  Cosine is scale-invariant, so the unnormalized
+    signed sum preserves JL geometry exactly as the
     1/sqrt(out_dim)-scaled version would.
 
     Why this shape at 100 TB: the projection is a NARROW per-row map
     (no shuffle, no state); downstream ANN then scores out_dim-wide
     vectors — a 4x FLOP/bandwidth cut at out_dim=16 over 64 — with
-    recall governed by the JL lemma.  Returns (id_col, jl: array<long>).
+    recall governed by the JL lemma.  The sign matrix is one SQL
+    expression (one py4j call, not one per entry).  Returns (vec_id,
+    jl: array<long>).
     """
-    signs = jl_signs(in_dim, out_dim, salt)
-    u = F.transform(
-        F.col(vec_col), lambda x: F.floor(x.cast("double") * 1_000_000).cast("long")
+    proj = ", ".join(
+        "aggregate(zip_with(__u, array("
+        + ", ".join(f"{s}L" for s in row)
+        + "), (x, s) -> x * s), 0L, (acc, x) -> acc + x)"
+        for row in jl_signs(in_dim, out_dim)
     )
-    out = vecs.withColumn("__u", u)
-    proj = F.array(
-        *[
-            F.aggregate(
-                F.zip_with(
-                    F.col("__u"),
-                    F.array(*[F.lit(s) for s in signs[j]]),
-                    lambda x, s: x * s.cast("long"),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            )
-            for j in range(out_dim)
-        ]
+    u = "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT))"
+    return vecs.select("vec_id", F.expr(u).alias("__u")).select(
+        "vec_id", F.expr(f"array({proj})").alias("jl")
     )
-    return out.select(id_col, proj.alias("jl"))
 
 
-def mmr_select(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_id: int,
-    k: int = 5,
-    scale: int = 10**6,
-) -> DataFrame:
+def mmr_select(df: DataFrame, query_id: int, k: int = 5) -> DataFrame:
     """Greedy Maximal Marginal Relevance selection (Carbonell & Goldstein,
-    SIGIR'98) — the diversified-retrieval step a RAG pipeline runs after
-    ANN recall: pick k items maximizing relevance to the query while
-    penalizing similarity to what is already selected.
+    SIGIR'98) over the embeddings table — the diversified-retrieval step
+    a RAG pipeline runs after ANN recall: pick k items maximizing
+    relevance to the query while penalizing similarity to what is
+    already selected.
 
     score(c) = 2*rel(c) - max_{s in S} sim(c, s)   (lambda = 0.5, scaled
     by 2 so the whole objective stays in integers.)
 
     Determinism at the engine level: vectors quantize to integer
-    micro-units (floor(v*scale + 0.5) — float->double is exact, one
-    IEEE multiply each), every dot product is an exact BIGINT
-    array-fold, and the per-step argmax is a struct-max aggregate with
-    min-id tiebreak — so the k-step greedy trajectory is bit-identical
-    on any engine or partitioning and oracle-replayable as unrolled SQL
-    (the BPE/PCA gating pattern applied to retrieval).
+    micro-units (floor(v*1e6 + 0.5) — float->double is exact, one IEEE
+    multiply each), every dot product is an exact BIGINT array-fold,
+    and the per-step argmax is a struct-max aggregate with min-id
+    tiebreak — so the k-step greedy trajectory is bit-identical on any
+    engine or partitioning and oracle-replayable as unrolled SQL (the
+    BPE/PCA gating pattern applied to retrieval).
 
     Scale shape: k is FIXED and small, so the plan is k chained rounds;
     each round = one anti-join against the (<= k-row, broadcast)
@@ -893,10 +821,10 @@ def mmr_select(
     Output: (step, id, rel, score), step 1..k in selection order.
     """
     micro = df.select(
-        F.col(id_col).alias("id"),
+        F.col("vec_id").alias("id"),
         F.transform(
-            vec_col,
-            lambda x: F.floor(x.cast("double") * scale + F.lit(0.5)).cast("long"),
+            "embedding",
+            lambda x: F.floor(x.cast("double") * 10**6 + F.lit(0.5)).cast("long"),
         ).alias("m"),
     ).localCheckpoint(eager=False)
 

@@ -11,16 +11,24 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions.rounding import det_round
 from ..operators.similarity import (
     arrow_brute_force_topk,
     brute_force_topk,
+    centroid_classifier_eval,
     embedding_neardup_pairs,
     hyperplane,
     ivf_kmeans_topk,
     ivf_topk,
+    jl_project,
+    jl_signs,
     lsh_bucketed_topk,
+    micro_centroids,
+    mmr_select,
+    semdedup,
+    sq8_reconstruct,
 )
-from ..functions.rounding import det_round
+from ..operators.topk import top_k_per_group
 from . import _t, register
 
 _DIM = 64
@@ -43,20 +51,16 @@ _COS = (
 )
 
 # Structural bound on every brute-force-crossed (or driver-collected)
-# ANN query relation, mirroring ann_jl_top5's round-4 fix: the `% 97`
-# filter alone defines ~1% of the corpus, which grows without bound at
-# scale; ORDER BY vec_id LIMIT _Q_CAP on BOTH engines makes the
-# broadcast/collect side a hard <=32-row ceiling.  Non-binding at every
-# test SF (6 queries at sf0.01, 21 at sf0.1) so all oracle hashes are
-# unchanged.  The LSH/IVF paths keep the uncapped set where the query
-# side only feeds bucketed equi-joins (linear, never broadcast-crossed);
-# ann_lsh_recall caps BOTH of its legs so exact and ANN score the same
-# query set.
+# ANN query relation: the `% 97` filter alone defines ~1% of the corpus,
+# which grows without bound at scale; ORDER BY vec_id LIMIT _Q_CAP on
+# BOTH engines makes the broadcast/collect side a hard <=32-row ceiling.
+# Non-binding at every test SF (6 queries at sf0.01, 21 at sf0.1).  The
+# LSH/IVF paths keep the uncapped set where the query side only feeds
+# bucketed equi-joins (linear, never broadcast-crossed); ann_lsh_recall
+# caps BOTH of its legs so exact and ANN score the same query set.
 _Q_CAP = 32
-# derived, never written out by hand: changing _Q_CAP alone must move
-# the Spark cap, the oracle cap, and the JL cap together (round-4
-# ADVICE: three independent 32s would desynchronize the engines' query
-# sets and flip every brute-force ANN hash)
+# derived, never written out by hand: _Q_CAP alone moves the Spark and
+# the oracle caps together, so the engines' query sets cannot diverge
 _Q_SQL = f"ORDER BY vec_id LIMIT {_Q_CAP}"
 
 
@@ -119,7 +123,7 @@ def q_knn_arrow_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the Arrow/numpy BLAS-matmul path (mapInPandas partial top-k
     + window merge) — the vectorized physical plan for wide embeddings,
     hash-checked against the identical oracle to prove the two engines'
-    physical strategies agree bit-for-bit after round-6."""
+    physical strategies agree bit-for-bit after 6-dp rounding."""
     emb = _t(spark, sf_dir, "embeddings")
     queries = _capped_queries(emb)
     return arrow_brute_force_topk(queries, emb, k=5).orderBy("query_id", "rank")
@@ -156,7 +160,7 @@ def q_ann_lsh_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVF_ASSIGN_COS = (
+_ASSIGN_COS = (
     "round(list_dot_product(e.v, c.cv) / "
     "(sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv))), 6)"
 )
@@ -172,13 +176,13 @@ assign AS (
   SELECT neighbor_id, cent_id, v FROM (
     SELECT e.vec_id AS neighbor_id, c.cent_id, e.v,
            row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {_IVF_ASSIGN_COS} DESC, c.cent_id) AS rn
+                              ORDER BY {_ASSIGN_COS} DESC, c.cent_id) AS rn
     FROM e, cents c) WHERE rn = 1),
 probe AS (
   SELECT query_id, qv, cent_id FROM (
     SELECT e.vec_id AS query_id, e.v AS qv, c.cent_id,
            row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {_IVF_ASSIGN_COS} DESC, c.cent_id) AS rn
+                              ORDER BY {_ASSIGN_COS} DESC, c.cent_id) AS rn
     FROM e, cents c WHERE e.vec_id % 97 = 0) WHERE rn <= 2),
 scored AS (
   SELECT query_id, a.neighbor_id, qv, a.v AS cv
@@ -198,7 +202,7 @@ def q_ann_ivf_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same query subset as knn_bruteforce_top5 — the inverted-file
     scale path; compare against the brute-force oracle for recall.
 
-    The centroid stride scales with the corpus (round-6, same fix as
+    The centroid stride scales with the corpus (as in
     semantic_dedup_semdedup): fixed stride 29 made the centroid count
     linear in n, so the one-pass broadcast ASSIGN was n^2/29 cosines in
     disguise; ``max(29, isqrt(n))`` keeps ~sqrt(n) cells of ~sqrt(n)
@@ -243,19 +247,17 @@ FROM embeddings WHERE vec_id % 97 = 0
 )
 def q_ann_ivf_kmeans_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The k-means-quantizer ANN surface under the FULL value-hash gate
-    via its SQL-expressible serving contract (round-3 verdict task 7,
-    the ``als_recommend_invariants`` recipe): the learned centroids are
+    via its SQL-expressible serving contract (the
+    ``als_recommend_invariants`` recipe): the learned centroids are
     not SQL-reproducible, but the probe contract is — every query
     (vec_id % 97 == 0) is covered, exactly k=5 rows each (16 cells over
     the corpus leave >= 5 candidates in every nprobe=2 probe set; dense
     ranks would shrink, and the hash flip, if a degenerate clustering
-    ever starved one), round-6 cosines inside [-1, 1] and non-increasing
+    ever starved one), 6-dp cosines inside [-1, 1] and non-increasing
     in rank, and no self-matches.  Verified bit-stable across local[3]
     vs local[32] partitionings at sf0.01 and sf0.1.  Companion to the
     rows-only ``ann_ivf_kmeans_top5`` (which exports the
     centroid-dependent neighbor lists themselves)."""
-    from ..operators.similarity import ivf_kmeans_topk
-
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 97 == 0)
     out = ivf_kmeans_topk(queries, emb, k=5, n_cells=16, nprobe=2)
@@ -472,16 +474,7 @@ def q_embedding_centroid_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame
     per label, with integer micro-unit centroids and exact integer dot
     products so the whole eval hash-matches the SQL oracle (see
     operators.similarity.centroid_classifier_eval)."""
-    from ..operators.similarity import centroid_classifier_eval
-
-    vecs = _t(spark, sf_dir, "embeddings")
-    return centroid_classifier_eval(vecs).orderBy("label")
-
-
-_SD_ASSIGN_COS = (
-    "round(list_dot_product(e.v, c.cv) / "
-    "(sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv))), 6)"
-)
+    return centroid_classifier_eval(_t(spark, sf_dir, "embeddings")).orderBy("label")
 
 
 @register(
@@ -492,9 +485,9 @@ m AS (SELECT greatest(29, CAST(floor(sqrt(count(*))) AS BIGINT)) AS cent_mod FRO
 cents AS (SELECT vec_id AS cent_id, v AS cv FROM e, m WHERE vec_id % m.cent_mod = 1),
 assign AS (
   SELECT vec_id, v, cent_id, cent_cos FROM (
-    SELECT e.vec_id, e.v, c.cent_id, {_SD_ASSIGN_COS} AS cent_cos,
+    SELECT e.vec_id, e.v, c.cent_id, {_ASSIGN_COS} AS cent_cos,
            row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {_SD_ASSIGN_COS} DESC, c.cent_id) AS rn
+                              ORDER BY {_ASSIGN_COS} DESC, c.cent_id) AS rn
     FROM e, cents c) WHERE rn = 1),
 dups AS (
   SELECT DISTINCT a.vec_id
@@ -514,8 +507,8 @@ def q_semantic_dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     >= 0.4 keeping the lowest id (operators.similarity.semdedup — the
     clustering bounds the pair join, never all-pairs).
 
-    The quantizer granularity scales with the corpus (round-6 scale
-    probe): ``cent_mod = max(29, isqrt(n))`` gives ~sqrt(n) centroids
+    The quantizer granularity scales with the corpus:
+    ``cent_mod = max(29, isqrt(n))`` gives ~sqrt(n) centroids
     of ~sqrt(n) members each, so BOTH the broadcast-assign pass and the
     within-cluster pair join are ~n^1.5 — the cost model the operator
     documents.  The old fixed mod 29 made the centroid count LINEAR in
@@ -526,8 +519,6 @@ def q_semantic_dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same modulus with floor(sqrt(count(*))) — exact for any corpus
     below 2^52."""
     import math
-
-    from ..operators.similarity import semdedup
 
     emb = _t(spark, sf_dir, "embeddings")
     mod = max(29, math.isqrt(emb.count()))
@@ -568,33 +559,16 @@ def q_ann_sq8_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
     [min,max] -> 0..255 codes via one broadcast (lo[], hi[]) row, then
     the standard cosine top-k on the reconstructions.  The oracle
     replays quantize+reconstruct+search; hash-equality proves the codes
-    and the dequantized scores bit-match after round-6."""
-    from ..operators.similarity import sq8_reconstruct
-
-    emb = _t(spark, sf_dir, "embeddings")
-    rec = sq8_reconstruct(emb)
-    queries = rec.filter(F.col("vec_id") % 97 == 0).orderBy("vec_id").limit(_Q_CAP)
-    return brute_force_topk(queries, rec, k=5, id_col="vec_id", vec_col="v").orderBy(
+    and the dequantized scores bit-match after 6-dp rounding."""
+    rec = sq8_reconstruct(_t(spark, sf_dir, "embeddings"))
+    return brute_force_topk(_capped_queries(rec), rec, k=5, vec_col="v").orderBy(
         "query_id", "rank"
     )
 
 
 # --- JL random-projection ANN ---------------------------------------------
 
-from ..operators.similarity import jl_signs  # noqa: E402
-
 _JL_OUT = 16
-# Bounded-query contract, made STRUCTURAL: the broadcast/cross-join side
-# is capped at _JL_QCAP rows by a deterministic ORDER BY vec_id LIMIT in
-# BOTH engines.  Without it the `vec_id % 97 == 0` filter alone defines a
-# query set that grows linearly with the corpus (~1% of all vectors), so
-# at 100x scale the broadcast and the cross product grow without bound.
-# The limit is non-binding at every test SF (6 queries at sf0.01, 21 at
-# sf0.1), so the oracle hash is unchanged; at production scale it is the
-# hard ceiling a real ANN serving path would impose (a bounded query
-# batch, never "search for 1% of the corpus in one job").  Derived from
-# _Q_CAP so the whole brute-force family moves as one knob.
-_JL_QCAP = _Q_CAP
 _JL_ROWS = jl_signs(_DIM, _JL_OUT)
 _JL_PROJ_SQL = "[" + ", ".join(
     "list_dot_product(u, [" + ", ".join(str(s) for s in row) + "])"
@@ -621,7 +595,7 @@ WITH e AS (
   FROM embeddings),
 p AS (SELECT vec_id, CAST({_JL_PROJ_SQL} AS BIGINT[]) AS v FROM e),
 q AS (SELECT vec_id AS query_id, v AS qv FROM p
-      WHERE vec_id % 97 = 0 ORDER BY vec_id LIMIT {_JL_QCAP}),
+      WHERE vec_id % 97 = 0 {_Q_SQL}),
 scored AS (
   SELECT query_id, c.vec_id AS neighbor_id, c.v AS cv, qv
   FROM q, p c WHERE c.vec_id <> query_id),
@@ -646,22 +620,12 @@ def q_ann_jl_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole reduced-space search hash-matches the oracle's replay.
 
     The query relation is bounded BY CONSTRUCTION (sorted limit
-    ``_JL_QCAP``), so the broadcast side cannot grow with the corpus —
-    the round-3 verdict's scale caveat.  The limit compiles to
-    TakeOrderedAndProject (pinned by
+    ``_Q_CAP``), so the broadcast side cannot grow with the corpus.
+    The limit compiles to TakeOrderedAndProject (pinned by
     tests/test_plans.py::test_jl_query_side_is_bounded_limit)."""
-    from pyspark.sql import Window
-
-    from ..operators.similarity import jl_project
-
     emb = _t(spark, sf_dir, "embeddings")
     p = jl_project(emb, in_dim=_DIM, out_dim=_JL_OUT).localCheckpoint(eager=False)
-    q = (
-        p.filter(F.col("vec_id") % 97 == 0)
-        .orderBy("vec_id")
-        .limit(_JL_QCAP)
-        .select(F.col("vec_id").alias("query_id"), F.col("jl").alias("qv"))
-    )
+    q = _capped_queries(p).select(F.col("vec_id").alias("query_id"), F.col("jl").alias("qv"))
     c = p.select(F.col("vec_id").alias("neighbor_id"), F.col("jl").alias("cv"))
     zero = F.lit(0).cast("long")
     dot = F.aggregate(
@@ -685,14 +649,13 @@ def q_ann_jl_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .orderBy("query_id", "rank")
-    )
+    return top_k_per_group(
+        scored,
+        ["query_id"],
+        [F.col("cosine").desc(), F.col("neighbor_id").asc()],
+        k=5,
+        keep_rank=True,
+    ).orderBy("query_id", "rank")
 
 
 @register(
@@ -728,24 +691,10 @@ def q_label_centroid_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same exactness engineering as embedding_centroid_accuracy: integer
     micro-unit centroids (sum DIV count), exact BIGINT pairwise dots
     over the tiny (labels x dims) table, one double sqrt/division at
-    the end.  The data-sized work is ONE aggregate; the pair join runs
-    over |labels| x dims rows regardless of corpus size."""
-    from ..functions.rounding import det_round
-
-    emb = _t(spark, sf_dir, "embeddings")
-    ex = emb.select(
-        "label",
-        F.posexplode("embedding").alias("dim", "val"),
-    ).select(
-        "label",
-        "dim",
-        F.floor(F.col("val").cast("double") * 1_000_000).cast("long").alias("u"),
-    )
-    cents = (
-        ex.groupBy("label", "dim")
-        .agg(F.expr("sum(u) DIV count(*)").alias("c"))
-        .localCheckpoint(eager=False)
-    )
+    the end (``operators.similarity.micro_centroids``).  The data-sized
+    work is ONE aggregate; the pair join runs over |labels| x dims rows
+    regardless of corpus size."""
+    _, cents = micro_centroids(_t(spark, sf_dir, "embeddings"))
     nc = cents.groupBy("label").agg(F.sum(F.col("c") * F.col("c")).alias("nc"))
     a = cents.select(
         F.col("label").alias("label_a"), "dim", F.col("c").alias("ca")
@@ -831,7 +780,4 @@ def q_embedding_mmr_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINT micro-unit dots and ties break on vec_id.  See
     operators/similarity.py::mmr_select for the scale shape (k linear
     passes, <= k-row broadcast state, no pairwise materialization)."""
-    from ..operators.similarity import mmr_select
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return mmr_select(emb, "vec_id", "embedding", query_id=0, k=5)
+    return mmr_select(_t(spark, sf_dir, "embeddings"), query_id=0, k=5)

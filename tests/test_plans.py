@@ -339,18 +339,25 @@ def test_global_rank_matches_window_row_number(spark):
 
 
 def test_semdedup_broadcasts_centroids(spark):
-    """The SemDeDup assignment step must broadcast the centroid table
-    (narrow pass over the corpus), and the within-cluster pair join must
-    be a real equi-join on the cluster id, never a cartesian.
-    checkpoint=False exposes the full lineage (the gated query truncates
-    it so the assign pass runs once, not three times)."""
-    from movie_recommendation_engine_spark.operators.similarity import semdedup
+    """The nearest-centroid assignment (SemDeDup's assign step, IVF's
+    assign and probe) must broadcast the centroid table (narrow pass
+    over the corpus), and SemDeDup's within-cluster pair join must be a
+    real equi-join on the cluster id, never a cartesian.  semdedup
+    checkpoints the assignment (so it runs once, not three times), so
+    its lineage is planned through the helpers directly."""
+    from movie_recommendation_engine_spark.operators.similarity import (
+        _centroid_sims,
+        _nearest,
+        _seed_centroids,
+        _side,
+    )
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    plan = _plan(semdedup(emb, tau=0.4, checkpoint=False))
+    side = _side(emb, "vec_id", "embedding", "vec_id", "v")
+    plan = _plan(_nearest(_centroid_sims(side, "v", _seed_centroids(emb, 29)), "vec_id", 1))
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
     assert "CartesianProduct" not in plan
-    # and the gated (checkpointed) variant must not degenerate either
+    # and the gated (checkpointed) query must not degenerate either
     assert "CartesianProduct" not in _plan(QUERIES["semantic_dedup_semdedup"](spark, SF))
 
 

@@ -325,7 +325,7 @@ def test_semdedup_invariants_any_corpus(spark_global, vecs):
     if len(rows) < 2:
         return
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = semdedup(df, tau=0.95, cent_mod=3, cent_rem=1).collect()
+    out = semdedup(df, tau=0.95, cent_mod=3).collect()
     assert sorted(r.vec_id for r in out) == sorted(i for i, _ in rows)
     by_cent: dict[int, list] = {}
     for r in out:
@@ -338,7 +338,7 @@ def test_semdedup_invariants_any_corpus(spark_global, vecs):
         )
         if len(members) == 1:
             assert not members[0].is_dup
-    again = semdedup(df.repartition(5), tau=0.95, cent_mod=3, cent_rem=1).collect()
+    again = semdedup(df.repartition(5), tau=0.95, cent_mod=3).collect()
     assert sorted(map(tuple, out)) == sorted(map(tuple, again))
 
 

@@ -140,7 +140,7 @@ def test_ivf_kmeans_recall_and_no_invented_neighbors(spark):
 
 def test_arrow_topk_equals_jvm_bruteforce(spark, vectors):
     """The Arrow/numpy matmul path must equal the JVM HOF path exactly
-    (same round-6 total order) — on the fixture and on real testdata."""
+    (same 6-dp total order) — on the fixture and on real testdata."""
     from movie_recommendation_engine_spark.operators.similarity import (
         arrow_brute_force_topk,
     )
@@ -157,34 +157,43 @@ def test_arrow_topk_equals_jvm_bruteforce(spark, vectors):
 
 
 def test_zero_norm_vectors_rank_last_never_raise(spark):
-    """Degenerate-input contract on the SERVING path (round-5 review):
-    an all-zero embedding must not abort the job under Spark 4's ANSI
-    divide — both engines yield NULL cosine for 0-norm pairs, ranked
-    LAST (cosine DESC = NULLS LAST), and the two paths stay equal."""
+    """Degenerate-input contract on the SERVING path: an all-zero or a
+    NULL embedding must not abort the job (Spark 4's ANSI divide, the
+    Arrow path's matrix build) — both engines yield NULL cosine for
+    0-norm and NULL pairs, ranked LAST (cosine DESC = NULLS LAST), and
+    the two paths stay equal."""
     from movie_recommendation_engine_spark.operators.similarity import (
         arrow_brute_force_topk,
         lsh_bucketed_topk,
     )
 
     vec = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.0, 0.0]), (3, [0.5, 0.5])],
+        [(1, [1.0, 0.0]), (2, [0.0, 0.0]), (3, [0.5, 0.5]), (4, None)],
         "vec_id long, embedding array<double>",
     )
     jvm = brute_force_topk(vec, vec, k=3).collect()
     by_q = {}
     for r in jvm:
         by_q.setdefault(r.query_id, []).append(r)
-    # query 1: the real neighbor (3) outranks the zero-norm one (2)
+    # query 1: the real neighbor (3) outranks the zero-norm (2) and the
+    # NULL (4) ones, which tie on NULL and order by id
     q1 = sorted(by_q[1], key=lambda r: r.rank)
-    assert [r.neighbor_id for r in q1] == [3, 2]
-    assert q1[0].cosine is not None and q1[1].cosine is None
-    # query 2 (itself zero-norm): all cosines NULL, ties by id asc
+    assert [r.neighbor_id for r in q1] == [3, 2, 4]
+    assert q1[0].cosine is not None and q1[1].cosine is None and q1[2].cosine is None
+    # queries 2 (zero-norm) and 4 (NULL): all cosines NULL, ties by id asc
     q2 = sorted(by_q[2], key=lambda r: r.rank)
-    assert [r.neighbor_id for r in q2] == [1, 3]
+    assert [r.neighbor_id for r in q2] == [1, 3, 4]
     assert all(r.cosine is None for r in q2)
-    # the Arrow path (NaN -> SQL NULL via the Arrow return) matches
+    q4 = sorted(by_q[4], key=lambda r: r.rank)
+    assert [r.neighbor_id for r in q4] == [1, 2, 3]
+    assert all(r.cosine is None for r in q4)
+    # the Arrow path (NaN -> SQL NULL via the Arrow return) matches, on
+    # the whole set and with the NULL vector on one side only
     arw = {tuple(r) for r in arrow_brute_force_topk(vec, vec, k=3).collect()}
     assert arw == {tuple(r) for r in jvm}
+    for q, c in ((vec.filter("vec_id = 4"), vec), (vec.filter("vec_id = 1"), vec)):
+        want = {tuple(r) for r in brute_force_topk(q, c, k=3).collect()}
+        assert {tuple(r) for r in arrow_brute_force_topk(q, c, k=3).collect()} == want
     # the LSH serving path shares _cos — must not raise either
     lsh_bucketed_topk(vec, vec, k=3, n_planes=2, dim=2).collect()
 
@@ -205,7 +214,7 @@ def test_semdedup_drop_policy(spark):
         (5, [0.0, 0.6, 0.8, 0.0]),  # cos(4,5)=0.96 < tau
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = {r.vec_id: r for r in semdedup(df, tau=0.99, cent_mod=29, cent_rem=1).collect()}
+    out = {r.vec_id: r for r in semdedup(df, tau=0.99, cent_mod=29).collect()}
     assert len(out) == 6
     # lowest id of the identical trio survives; the other two drop
     assert not out[2].is_dup and out[3].is_dup and out[30].is_dup
@@ -304,7 +313,7 @@ def test_mmr_matches_bruteforce_greedy(spark):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     got = [
         (r["step"], r["id"], r["rel"], r["score"])
-        for r in mmr_select(emb, "vec_id", "embedding", query_id=0, k=5).collect()
+        for r in mmr_select(emb, query_id=0, k=5).collect()
     ]
 
     rows = {r["vec_id"]: r["embedding"] for r in emb.collect()}
@@ -331,3 +340,32 @@ def test_mmr_matches_bruteforce_greedy(spark):
         want.append((step, best[0], rel[best[0]], best[1]))
     assert got == want
     assert len({i for _, i, _, _ in got}) == 5 and 0 not in {i for _, i, _, _ in got}
+
+
+def test_lsh_and_jl_builds_stay_under_2000_py4j_calls(spark):
+    """A warm plan build of ann_lsh_top5 or ann_jl_top5 issues fewer than
+    2,000 py4j commands: the hyperplanes and the JL sign matrix go to
+    the JVM as one SQL expression each, not one literal per entry (one
+    per entry cost 7.7k-8.9k commands per build)."""
+    import gc
+
+    from movie_recommendation_engine_spark.registry import QUERIES
+
+    client_cls = type(spark.sparkContext._gateway._gateway_client)
+    send = client_cls.send_command
+    for name in ("ann_lsh_top5", "ann_jl_top5"):
+        QUERIES[name](spark, "/root/testdata/sf0.001")  # warm build
+        calls = []
+
+        def counting(self, *args, **kwargs):
+            calls.append(1)
+            return send(self, *args, **kwargs)
+
+        gc.disable()
+        client_cls.send_command = counting
+        try:
+            QUERIES[name](spark, "/root/testdata/sf0.001")
+        finally:
+            client_cls.send_command = send
+            gc.enable()
+        assert 0 < len(calls) < 2000, (name, len(calls))
