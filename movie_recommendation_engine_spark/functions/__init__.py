@@ -1,4 +1,4 @@
-from .hashing import uniform_hash, hash_bucket, md5_long, char_shingles, word_shingles
+from .hashing import uniform_hash, hash_bucket, md5_long
 from .weighted import weighted_rating
 from .arrays import cosine_similarity, dot_product, l2_norm, split_genres, title_year
 
@@ -6,8 +6,6 @@ __all__ = [
     "uniform_hash",
     "hash_bucket",
     "md5_long",
-    "char_shingles",
-    "word_shingles",
     "weighted_rating",
     "dot_product",
     "cosine_similarity",

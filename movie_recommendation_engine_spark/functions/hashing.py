@@ -80,63 +80,3 @@ def uniform_hash(*cols: Column | str, salt: str = "") -> Column:
 def hash_bucket(n_buckets: int, *cols: Column | str, salt: str = "") -> Column:
     """Deterministic bucket id in [0, n_buckets)."""
     return (md5_long(*cols, salt=salt) % F.lit(n_buckets)).cast("int")
-
-
-def char_shingles(col: Column | str, n: int = 5, lowercase: bool = True) -> Column:
-    """Distinct character n-grams of a string column -> array<string>.
-
-    JVM-side only: sequence + transform + substring; no Python UDF.
-    Whitespace is collapsed first so formatting doesn't change the
-    shingle set.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    s = F.regexp_replace(F.trim(c), r"\s+", " ")
-    if lowercase:
-        s = F.lower(s)
-    # zip_with chain over shifted slices of the char array, NOT
-    # transform(sequence, i -> s.substr(i, n)): expressions inside an
-    # HOF lambda re-evaluate per element, so the substr spelling re-ran
-    # the normalization regexp once per character (4.6x slower at
-    # sf0.01) — same pitfall as word_shingles above
-    chars = F.split(s, "")
-    size = F.size(chars)
-    chain = chars
-    for k in range(1, n):
-        chain = F.zip_with(
-            chain, F.slice(chars, k + 1, size), lambda a, b: F.concat(a, b)
-        )
-    grams = F.filter(chain, lambda x: x.isNotNull())
-    return F.when(size >= n, F.array_distinct(grams)).otherwise(F.array(s))
-
-
-def word_shingles(col: Column | str, n: int = 3, lowercase: bool = True) -> Column:
-    """Distinct word n-grams -> array<string> (space-joined); fewer than
-    n words collapse to one (short) whole-text shingle.
-
-    Built as a zip_with chain over n-1 shifted slices of the word array
-    rather than ``transform(sequence(...), i -> slice(words, i+1, n))``:
-    expressions referenced inside a higher-order-function lambda are
-    re-evaluated PER ELEMENT (no hoisting/CSE inside lambdas), so the
-    transform spelling re-runs the regexp split and array build once per
-    shingle position — measured 8.2 s vs 1.1 s over sf0.1 documents.
-    The slices here are lambda-free arguments, evaluated once per row;
-    zip_with null-pads the shorter side, and the null-propagating
-    ``concat`` turns the ragged tail into nulls the filter drops.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    s = F.regexp_replace(F.trim(c), r"\s+", " ")
-    if lowercase:
-        s = F.lower(s)
-    words = F.split(s, " ")
-    size = F.size(words)
-    chain = words
-    for k in range(1, n):
-        chain = F.zip_with(
-            chain,
-            F.slice(words, k + 1, size),
-            lambda a, b: F.concat(a, F.lit(" "), b),
-        )
-    grams = F.filter(chain, lambda x: x.isNotNull())
-    return F.when(size >= n, F.array_distinct(grams)).otherwise(
-        F.array(F.concat_ws(" ", words))
-    )

@@ -1,6 +1,15 @@
 """Deduplication operators: exact, n-gram Jaccard, MinHash+LSH, SimHash,
 embedding-cosine near-dup (prompt §"Deduplication").
 
+Every fuzzy operator is filter-and-verify over one core: it builds a
+posting list its own way (shingle tokens, LSH band buckets, SimHash bit
+blocks), turns co-bucketed ids into (id_a, id_b) candidates —
+``_bucket_pairs`` for all within-bucket pairs, ``_bucket_stars`` for
+star edges to each bucket's minimum, ``_token_pairs`` for the shingle
+index with its packed pair key — and scores them in one verify tail,
+``_verify``.  Shingles are ``operators.text.word_shingles``: the same
+normalized words as the exact fingerprint.
+
 Scale design notes (the part that matters at 100 TB):
 
 - **exact**: hash-groupBy on a content fingerprint — one shuffle keyed
@@ -12,20 +21,20 @@ Scale design notes (the part that matters at 100 TB):
   pairs, not quadratic in docs — but a shingle in 1M docs still
   contributes 10^12 pairs, so at scale use the prefix-filtered join
   (exact, indexes only each doc's rarest shingles) or MinHash LSH.
-- **MinHash LSH**: each shingle is md5-hashed ONCE; the ``n_hashes``
-  hash functions are derived from that single digest by affine integer
+- **MinHash LSH**: each shingle is md5-hashed ONCE; the 16 hash
+  functions are derived from that single digest by affine integer
   rehash ``(a_i*h + b_i) mod p`` (classic universal-hashing MinHash) —
   16x fewer digest computations than hashing per (seed, shingle).  The
   signature is a partial-aggregated groupBy (map-side combine shrinks
-  the shuffle to 16 longs per doc); only the ``n_bands`` short band
-  keys are exploded for the bucket join.  Candidates are then verified
-  with exact Jaccard on the full shingle sets.
-- **SimHash**: 32-bit fingerprint per doc via one explode + 32 partial
-  aggregates; near-dup pairs come from a **pigeonhole band equi-join**:
-  the fingerprint is cut into ``max_hamming + 1`` disjoint bit blocks,
-  so any pair within the Hamming budget must agree on at least one
-  whole block — candidate generation is a shuffle hash join on
-  (block index, block value) with *guaranteed* recall, never an
+  the shuffle to 16 longs per doc); only the 8 short band keys are
+  exploded for the bucket join.  Candidates are then verified with
+  exact Jaccard on the full shingle sets.
+- **SimHash**: fingerprint per doc via one explode + lane-packed
+  partial aggregates; near-dup pairs come from a **pigeonhole band
+  equi-join**: the fingerprint is cut into ``max_hamming + 1`` disjoint
+  bit blocks, so any pair within the Hamming budget must agree on at
+  least one whole block — candidate generation is a shuffle hash join
+  on (block index, block value) with *guaranteed* recall, never an
   O(n^2) nested-loop cross join.
 - **embedding cosine**: see operators.similarity — near-dup is
   ``embedding_neardup_pairs`` with a threshold.
@@ -46,27 +55,37 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from ..functions.rounding import det_round
 from ..functions.hashing import md5_long, md5_long60
+from ..functions.rounding import det_round
 from .text import exact_fingerprint, word_shingles
 
+#: MinHash signature length and LSH band width: 8 bands of 2 minhashes.
+#: The registry oracle spells them as ``range(16)`` and ``floor(seed / 2)``.
+N_HASHES = 16
+BAND_SIZE = 2
 
-def exact_dedup(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    keep: str = "min",
-) -> DataFrame:
+#: Per-bucket candidate cap of ``minhash_lsh_pairs`` (the registry oracle
+#: embeds the same constant): each band bucket contributes at most its 64
+#: smallest ids, <= 64^2/2 candidates.  Uniform-corpus buckets hold a
+#: handful of docs, so only a duplicate mega-clique is ever truncated.
+LSH_MAX_BUCKET = 64
+
+#: modulus for the affine MinHash family — Mersenne prime 2^31 - 1.
+#: base hashes are < 2^32 and multipliers < 2^5, so a*h + b stays far
+#: below 2^63: no bigint overflow in Spark or DuckDB.
+MINHASH_PRIME = 2147483647
+
+
+def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """One canonical row per distinct normalized text.
 
-    Returns (id_col, fingerprint, n_copies) — the kept id (min/max) and
-    how many rows collapsed into it.
+    Returns (id_col, fingerprint, n_copies) — the kept (min) id and how
+    many rows collapsed into it.
     """
-    agg_id = F.min(id_col) if keep == "min" else F.max(id_col)
     return (
         df.select(F.col(id_col), exact_fingerprint(text_col).alias("fingerprint"))
         .groupBy("fingerprint")
-        .agg(agg_id.alias(id_col), F.count("*").alias("n_copies"))
+        .agg(F.min(id_col).alias(id_col), F.count("*").alias("n_copies"))
         .select(id_col, "fingerprint", "n_copies")
     )
 
@@ -75,19 +94,128 @@ def _shingled(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     return df.select(id_col, word_shingles(text_col, n=n).alias("shingles"))
 
 
-def _checked_packable_id(op: str, col: str = "id") -> Column:
-    """Pass-through of ``col`` that enforces the pair-packing
+# ---- the candidate-and-verify core -----------------------------------------
+
+
+def _bucket_pairs(post: DataFrame, keys: list[str]) -> DataFrame:
+    """Every within-bucket pair of a posting list (id, *keys): distinct
+    (id_a, id_b), id_a < id_b, for ids sharing at least one bucket —
+    quadratic in bucket width."""
+    on = F.col("a.id") < F.col("b.id")
+    for k in keys:
+        on = on & (F.col(f"a.{k}") == F.col(f"b.{k}"))
+    return (
+        post.alias("a")
+        .join(post.alias("b"), on)
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .distinct()
+    )
+
+
+def _bucket_stars(post: DataFrame, keys: list[str]) -> DataFrame:
+    """Star edges of a posting list (id, *keys): distinct (id_a, id_b)
+    from each bucket's minimum id to every other member — linear in
+    bucket width where ``_bucket_pairs`` is quadratic.
+
+    A k-member duplicate clique (one hot bucket) contributes k-1 edges
+    instead of k^2/2 pairs, and for connected components the star is the
+    right graph: members connect through the minimum, and min-label
+    propagation (``operators.graph``) converges in one sweep on a star.
+    Recall note: within a bucket {a, b, c} (a = min) the star tests only
+    (a,b) and (a,c); a qualifying (b,c) whose star edges both fail
+    verification is found only if b and c share another bucket without
+    a smaller non-matching id.
+    """
+    bmin = post.groupBy(*keys).agg(F.min("id").alias("id_a"))
+    return (
+        post.join(bmin, keys)
+        .filter(F.col("id") > F.col("id_a"))
+        .select("id_a", F.col("id").alias("id_b"))
+        .distinct()
+    )
+
+
+def _checked_packable_id(op: str) -> Column:
+    """Pass-through of ``id`` that enforces the pair-packing
     precondition 0 <= id < 2^31 per row (whole-stage-codegen check):
     an out-of-range id would silently decode to a WRONG (id_a, id_b)
     pair, so it raises instead."""
-    return F.when((F.col(col) >= 0) & (F.col(col) < 2147483648), F.col(col)).otherwise(
+    return F.when((F.col("id") >= 0) & (F.col("id") < 2147483648), F.col("id")).otherwise(
         F.raise_error(
             F.concat(
                 F.lit(f"{op}: id outside packable range [0, 2^31): "),
-                F.col(col).cast("string"),
+                F.col("id").cast("string"),
             )
         )
     )
+
+
+def _token_pairs(
+    post: DataFrame, prune: Column | None, op: str, aggs: list[Column]
+) -> DataFrame:
+    """Pairs of a hashed-token posting list (id, g, ...): its self-join
+    on the token with a.id < b.id (and ``prune`` over the a/b sides),
+    one row per (id_a, id_b) — distinct, or grouped with ``aggs``.
+
+    An integral id travels through the distinct/aggregate as ONE packed
+    long ``a.id * 2^32 + b.id``: one 8-byte key to hash and shuffle
+    instead of two made ``ngram_jaccard_pairs``' count phase 1.9x faster
+    at sf0.1 (29.7 -> 15.9 s).  Packing needs 0 <= id < 2^31, checked
+    per posting row before the join fans out (``op`` names the operator
+    in the error); any other id type is grouped unpacked.
+    """
+    on = (F.col("a.g") == F.col("b.g")) & (F.col("a.id") < F.col("b.id"))
+    if prune is not None:
+        on = on & prune
+    if dict(post.dtypes)["id"] not in ("tinyint", "smallint", "int", "bigint"):
+        ids = (
+            post.alias("a")
+            .join(post.alias("b"), on)
+            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        )
+        return ids.groupBy("id_a", "id_b").agg(*aggs) if aggs else ids.distinct()
+    post = post.withColumn("id", _checked_packable_id(op))
+    two32 = 4294967296
+    pk = F.col("a.id").cast("long") * F.lit(two32).cast("long") + F.col("b.id").cast("long")
+    keys = post.alias("a").join(post.alias("b"), on).select(pk.alias("pk"))
+    keys = keys.groupBy("pk").agg(*aggs) if aggs else keys.distinct()
+    return keys.select(
+        F.expr(f"pk DIV {two32}").alias("id_a"),
+        (F.col("pk") % two32).alias("id_b"),
+        *[c for c in keys.columns if c != "pk"],
+    )
+
+
+def _verify(cand: DataFrame, side: DataFrame, name: str, score, keep) -> DataFrame:
+    """Verify (id_a, id_b) candidates on a two-column (id, value) side:
+    join it once per pair end, ``score(value_a, value_b)`` into column
+    ``name`` and keep the rows where ``keep(score)`` holds.  The side is
+    one row per doc, so AQE broadcast-joins it when small and shuffles
+    on id at corpus scale.  Output (id_a, id_b, name)."""
+    i, v = side.columns
+    a = side.select(F.col(i).alias("id_a"), F.col(v).alias("v_a"))
+    b = side.select(F.col(i).alias("id_b"), F.col(v).alias("v_b"))
+    return (
+        cand.join(a, "id_a")
+        .join(b, "id_b")
+        .withColumn(name, score(F.col("v_a"), F.col("v_b")))
+        .filter(keep(F.col(name)))
+        .select("id_a", "id_b", name)
+    )
+
+
+def _verify_jaccard(cand: DataFrame, sets: DataFrame, threshold: float) -> DataFrame:
+    """Exact Jaccard of (id_a, id_b) candidates on a per-doc (id, set
+    array) side; keeps pairs at or above ``threshold``."""
+
+    def jaccard(a: Column, b: Column) -> Column:
+        inter = F.size(F.array_intersect(a, b))
+        return det_round(inter / (F.size(a) + F.size(b) - inter))
+
+    return _verify(cand, sets, "jaccard", jaccard, lambda j: j >= threshold)
+
+
+# ---- n-gram Jaccard ---------------------------------------------------------
 
 
 def prefix_filtered_jaccard_pairs(
@@ -118,12 +246,9 @@ def prefix_filtered_jaccard_pairs(
       verification arrays) — never as strings (same 2^-64 collision
       caveat as ``ngram_jaccard_pairs``'s exact-count path);
     - candidate pairs shuffle as ONE packed 64-bit key when the id
-      dtype is integral (range-guarded: 0 <= id < 2^31 enforced per
-      posting row);
+      dtype is integral (``_token_pairs``);
     - verification joins the candidate list back to per-doc *hashed*
-      shingle arrays and intersects long arrays in codegen; the array
-      side is one row per doc, so AQE broadcast-joins it when small
-      and shuffles on id at corpus scale — no manual strategy pin.
+      shingle arrays and intersects long arrays in codegen.
 
     Measured at sf0.1 (5000 docs, adversarial 931-token uniform-df
     vocab where prefix pruning is weakest: index Σdf² only drops
@@ -145,11 +270,10 @@ def prefix_filtered_jaccard_pairs(
     dfreq = ex.groupBy("g").agg(F.count("*").alias("df"))
     w = Window.partitionBy("id").orderBy("df", "g")
     # localCheckpoint: the prefix index is BOTH sides of the candidate
-    # self-join below — without the truncation the whole df-join + two-
-    # window subtree executed once per side (r13 plan: the sort+window
-    # tower appears twice, nodes 12-18 and 32-38; guide §2.4 compute
-    # once, reuse).  The checkpointed frame is the pruned (id, g, rn,
-    # sz) posting list — far smaller than the work that builds it.
+    # self-join — without the truncation the whole df-join + two-window
+    # subtree (the sort+window tower) executes once per side.  The
+    # checkpointed frame is the pruned (id, g, rn, sz) posting list —
+    # far smaller than the work that builds it.
     prefix = (
         ex.join(dfreq, "g")
         .withColumn("rn", F.row_number().over(w))
@@ -174,48 +298,8 @@ def prefix_filtered_jaccard_pairs(
         1 + F.least(_sa - F.col("a.rn"), _sb - F.col("b.rn"))
         >= F.lit(threshold / (1.0 + threshold)) * (_sa + _sb)
     )
-    _join_cond = (
-        (F.col("a.g") == F.col("b.g"))
-        & (F.col("a.id") < F.col("b.id"))
-        & _len_ok
-        & _pos_ok
-    )
-    pack = dict(df.dtypes).get(id_col) in ("tinyint", "smallint", "int", "bigint")
-    if pack:
-        prefix = prefix.withColumn(
-            "id", _checked_packable_id("prefix_filtered_jaccard_pairs")
-        )
-        pk = F.col("a.id").cast("long") * F.lit(4294967296).cast("long") + F.col(
-            "b.id"
-        ).cast("long")
-        cand = (
-            prefix.alias("a")
-            .join(prefix.alias("b"), _join_cond)
-            .select(pk.alias("pk"))
-            .distinct()
-            .select(
-                F.expr("pk DIV 4294967296").alias("id_a"),
-                (F.col("pk") % 4294967296).alias("id_b"),
-            )
-        )
-    else:
-        cand = (
-            prefix.alias("a")
-            .join(prefix.alias("b"), _join_cond)
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .distinct()
-        )
-    sa = hsh.select(F.col("id").alias("id_a"), F.col("hs").alias("hs_a"))
-    sb = hsh.select(F.col("id").alias("id_b"), F.col("hs").alias("hs_b"))
-    inter = F.size(F.array_intersect("hs_a", "hs_b"))
-    union = F.size("hs_a") + F.size("hs_b") - inter
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("jaccard", det_round(inter / union))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    cand = _token_pairs(prefix, _len_ok & _pos_ok, "prefix_filtered_jaccard_pairs", [])
+    return _verify_jaccard(cand, hsh, threshold)
 
 
 def ngram_jaccard_pairs(
@@ -248,55 +332,16 @@ def ngram_jaccard_pairs(
         .select("id", F.xxhash64("g").alias("g"))
         .localCheckpoint(eager=False)
     )
-    # pack the (id_a, id_b) pair into ONE long when the id is an
-    # integral type: the pair aggregate over the O(sum df^2)
-    # join output then hashes and shuffles an 8-byte key instead of two
-    # — measured 1.9x on the whole count phase at sf0.1 (29.7 -> 15.9 s).
-    # Requires 0 <= id < 2^31; doc ids are — non-integral ids skip it.
-    pack = dict(df.dtypes).get(id_col) in ("tinyint", "smallint", "int", "bigint")
-    if pack:
-        # enforce the packing precondition per posting row instead of
-        # trusting the dtype (checked before the O(sum df^2) join fans out)
-        ex = ex.withColumn("id", _checked_packable_id("ngram_jaccard_pairs"))
-    pk = F.col("a.id").cast("long") * F.lit(4294967296).cast("long") + F.col("b.id").cast(
-        "long"
-    )
-    joined = ex.alias("a").join(
-        ex.alias("b"), (F.col("a.g") == F.col("b.g")) & (F.col("a.id") < F.col("b.id"))
-    )
-    if pack:
-        shared = (
-            joined.select(pk.alias("pk"))
-            .groupBy("pk")
-            .agg(F.count("*").alias("shared"))
-            .select(
-                F.expr("pk DIV 4294967296").alias("id_a"),
-                (F.col("pk") % 4294967296).alias("id_b"),
-                "shared",
-            )
-        )
-    else:
-        shared = joined.groupBy(
-            F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
-        ).agg(F.count("*").alias("shared"))
+    shared = _token_pairs(ex, None, "ngram_jaccard_pairs", [F.count("*").alias("shared")])
     sizes = sh.select(F.col(id_col).alias("id"), F.size("shingles").alias("sz"))
-    out = (
-        shared.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
-        .withColumn(
-            "jaccard",
-            det_round(F.col("shared") / (F.col("sz_a") + F.col("sz_b") - F.col("shared"))),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+    s = F.col("shared")
+    return _verify(
+        shared, sizes, "jaccard",
+        lambda a, b: det_round(s / (a + b - s)), lambda j: j >= threshold,
     )
-    return out
 
 
-#: modulus for the affine MinHash family — Mersenne prime 2^31 - 1.
-#: base hashes are < 2^32 and multipliers < 2^5, so a*h + b stays far
-#: below 2^63: no bigint overflow in Spark or DuckDB.
-MINHASH_PRIME = 2147483647
+# ---- MinHash LSH ------------------------------------------------------------
 
 
 def _affine(seed: int, h: Column) -> Column:
@@ -304,39 +349,28 @@ def _affine(seed: int, h: Column) -> Column:
     return (F.lit(2 * seed + 1) * h + F.lit(98765 * seed + 12345)) % F.lit(MINHASH_PRIME)
 
 
-def minhash_signatures(
-    sh: DataFrame,
-    id_col: str,
-    shingles_col: str = "shingles",
-    n_hashes: int = 16,
-    salt: str = "mh",
-) -> DataFrame:
-    """(id, sig: array<bigint>[n_hashes]) MinHash signatures.
+def _minhash_signatures(sh: DataFrame, id_col: str) -> DataFrame:
+    """(id, sig: array<bigint>[N_HASHES]) MinHash signatures of the
+    ``shingles`` sets.
 
     Each shingle is digested once (md5 -> long in a projection *below*
     the aggregate, so Catalyst cannot inline it per hash function); the
-    n_hashes minima are partial-aggregated map-side, so the shuffle
-    carries only (id, 16 longs) per document — independent of document
-    size.
+    minima are partial-aggregated map-side, so the shuffle carries only
+    (id, 16 longs) per document — independent of document size.
     """
     hashed = sh.select(
-        F.col(id_col), F.explode(shingles_col).alias("g")
-    ).select(id_col, md5_long("g", salt=salt).alias("h"))
-    mins = [F.min(_affine(i, F.col("h"))).alias(f"m{i}") for i in range(n_hashes)]
+        F.col(id_col), F.explode("shingles").alias("g")
+    ).select(id_col, md5_long("g", salt="mh").alias("h"))
+    mins = [F.min(_affine(i, F.col("h"))).alias(f"m{i}") for i in range(N_HASHES)]
     return (
         hashed.groupBy(id_col)
         .agg(*mins)
-        .select(F.col(id_col), F.array(*[f"m{i}" for i in range(n_hashes)]).alias("sig"))
+        .select(F.col(id_col), F.array(*[f"m{i}" for i in range(N_HASHES)]).alias("sig"))
     )
 
 
 def _lsh_bands(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int,
-    n_hashes: int,
-    band_size: int,
+    df: DataFrame, id_col: str, text_col: str, n: int
 ) -> tuple[DataFrame, DataFrame]:
     """Shared LSH front end: shingle -> signature -> exploded band keys.
 
@@ -345,16 +379,14 @@ def _lsh_bands(
     (doc, band bucket).  Both are localCheckpointed: every consumer
     joins them at least twice.
     """
-    assert n_hashes % band_size == 0
-    n_bands = n_hashes // band_size
     sh = _shingled(df, id_col, text_col, n).localCheckpoint(eager=False)
-    sig = minhash_signatures(sh, id_col, n_hashes=n_hashes)
+    sig = _minhash_signatures(sh, id_col)
     # band key: md5 over (band index, its slice of the signature)
     bands = sig.select(
         F.col(id_col).alias("id"),
         F.explode(
             F.transform(
-                F.sequence(F.lit(0), F.lit(n_bands - 1)),
+                F.sequence(F.lit(0), F.lit(N_HASHES // BAND_SIZE - 1)),
                 lambda b: F.md5(
                     F.concat_ws(
                         "\x01",
@@ -362,7 +394,7 @@ def _lsh_bands(
                         F.concat_ws(
                             "\x01",
                             F.transform(
-                                F.slice(F.col("sig"), b * band_size + 1, band_size),
+                                F.slice(F.col("sig"), b * BAND_SIZE + 1, BAND_SIZE),
                                 lambda m: m.cast("string"),
                             ),
                         ),
@@ -374,47 +406,17 @@ def _lsh_bands(
     return sh, bands
 
 
-def _verify_jaccard(
-    cand: DataFrame, sh: DataFrame, id_col: str, threshold: float
-) -> DataFrame:
-    """Exact-Jaccard verification of (id_a, id_b) candidates on the full
-    shingle sets; keeps pairs at or above ``threshold``."""
-    sa = sh.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a"))
-    sb = sh.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("jaccard", det_round(inter / union))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
-# Default per-bucket candidate cap for minhash_lsh_pairs.  Generous:
-# uniform-corpus buckets are a handful of docs wide, so anything under
-# the cap behaves exhaustively — only an adversarial bucket (a
-# duplicate mega-clique) gets truncated, and THAT is the 5e11-pair
-# failure mode the default exists to prevent (round-10: a bare call
-# must be scale-safe; round 9 left None the default and every registry
-# consumer had to know to pass a cap).
-DEFAULT_MAX_BUCKET = 256
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
     n: int = 2,
-    n_hashes: int = 16,
-    band_size: int = 2,
     threshold: float = 0.5,
-    max_bucket: int | None = DEFAULT_MAX_BUCKET,
+    max_bucket: int | None = LSH_MAX_BUCKET,
 ) -> DataFrame:
     """MinHash + banded LSH near-dup pairs, verified with exact Jaccard.
 
-    n_hashes/band_size bands; docs sharing any band bucket become
+    16 minhashes in 8 bands of 2; docs sharing any band bucket become
     candidates; candidates are verified on their full shingle sets.
     Output: (id_a, id_b, jaccard) with jaccard >= threshold.
 
@@ -423,55 +425,32 @@ def minhash_lsh_pairs(
     docs and the cap is invisible, but a duplicate-heavy corpus (20% of
     documents near-copies of one template — common in real crawls)
     lands the whole clique in ONE bucket per band and both the
-    candidate join and the OUTPUT are k^2/2 on it.  Measured at the
-    round-9 dup-clique probe (sf0.1, 1044-copy clique): uncapped
-    6.8 s / 544,601 pairs vs capped-64 3.5 s / 2,621 pairs — tolerable
-    at 5k docs, but the pair count scales as the SQUARE of clique
-    size, so a 100k-copy clique in a real crawl emits 5e9 pairs and a
-    1M-copy one 5e11: the cap is what makes the 100 TB run finish.
-    Each bucket contributes at most its ``max_bucket`` smallest ids as
-    candidates (row_number over id asc — deterministic and mirrorable
-    in SQL), so an adversarial bucket yields <= cap^2/2 candidates per
-    band.  PAIR RECALL inside a mega-clique is deliberately truncated
-    (the full pair list IS the scale bug); for dedup COMPONENTS use
-    ``minhash_lsh_edges``, which keeps every clique member via linear
-    star edges (1.8 s / 1,182 edges on the same corpus).
-
-    The DEFAULT is ``DEFAULT_MAX_BUCKET`` (256) — wide enough that
-    every non-adversarial bucket behaves exhaustively, so a bare call
-    on a crawl corpus is scale-safe out of the box (round-10: round 9
-    shipped ``None`` as the default and a user calling the operator
-    bare got the quadratic failure mode the probe had just
-    demonstrated).  Pass ``None`` to opt INTO exhaustive enumeration
-    deliberately (small corpora, recall studies).
+    candidate join and the OUTPUT are k^2/2 on it.  Measured with
+    tools/dup_clique_probe.py (sf0.1, 1044-copy clique): uncapped
+    6.8 s / 544,601 pairs vs capped-64 3.5 s / 2,621 pairs — the pair
+    count scales as the SQUARE of clique size, so a 1M-copy clique
+    emits 5e11.  Each bucket contributes at most its ``max_bucket``
+    smallest ids as candidates (row_number over id asc — deterministic
+    and mirrorable in SQL).  PAIR RECALL inside a mega-clique is
+    deliberately truncated (the full pair list IS the scale bug); for
+    dedup COMPONENTS use ``minhash_lsh_edges`` (1.8 s / 1,182 edges on
+    the same corpus).  Pass ``None`` for exhaustive enumeration (small
+    corpora, recall studies).
     """
-    sh, bands = _lsh_bands(df, id_col, text_col, n, n_hashes, band_size)
+    sh, bands = _lsh_bands(df, id_col, text_col, n)
     if max_bucket is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("band").orderBy("id")
         # The capped posting list feeds BOTH sides of the bucket
-        # self-join, so the sort+WindowGroupLimit cap tower executes
-        # once per side.  A localCheckpoint here would dedupe it, but
-        # measured at sf0.1 (r14 A/B, quiet windows) the materialization
-        # barrier costs MORE than the duplicated tower (5.20 s vs
-        # 4.59 s min-of-4): the tower reads the already-checkpointed
-        # band list and pipelines into each join side, while the
-        # checkpoint forces a block write + two cold reads.  Left
-        # duplicated deliberately; revisit if |bands| grows to where a
-        # second full exchange of the posting list dominates.
+        # self-join, so the sort+WindowGroupLimit cap tower executes once
+        # per side: measured at sf0.1 a localCheckpoint of it costs more
+        # than the duplicated tower (5.20 s vs 4.59 s min-of-4), which
+        # pipelines from the already-checkpointed band list.
+        w = Window.partitionBy("band").orderBy("id")
         bands = (
             bands.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") <= max_bucket)
             .drop("rn")
         )
-    cand = (
-        bands.alias("a")
-        .join(bands.alias("b"), (F.col("a.band") == F.col("b.band")) & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    return _verify_jaccard(cand, sh, id_col, threshold)
+    return _verify_jaccard(_bucket_pairs(bands, ["band"]), sh, threshold)
 
 
 def minhash_lsh_edges(
@@ -479,44 +458,22 @@ def minhash_lsh_edges(
     id_col: str,
     text_col: str,
     n: int = 2,
-    n_hashes: int = 16,
-    band_size: int = 2,
     threshold: float = 0.5,
 ) -> DataFrame:
-    """Near-dup EDGES for component-style dedup: star edges to the
-    bucket minimum instead of all within-bucket pairs — linear in
-    bucket width where the pair join is quadratic.
-
-    Each band bucket emits (min_id_in_bucket, id) for every other
-    member, verified with exact Jaccard like the pair path.  A k-member
-    duplicate clique (one hot bucket) contributes k-1 edges per band
-    instead of k^2/2 pairs — the round-9 dup-clique probe's fix for the
-    one scale axis the uniform generators never exercised (round-8
-    verdict #1).  For connected components the star is the RIGHT
-    graph: clique members connect through the minimum, and the
-    min-label propagation in ``operators.graph`` converges in one
-    sweep on a star where a full clique adds k^2 edges for zero extra
-    connectivity.
-
-    Recall note: within a bucket {a, b, c} (a = min) the star tests
-    only (a,b) and (a,c); a pair (b,c) passing the Jaccard threshold
-    while both star edges fail is found only if b and c co-occur in
-    some OTHER bucket without a smaller non-matching doc.  Band
-    collisions of non-matching docs are rare by construction (the band
-    key is band_size independent minhashes), so this trades a
-    vanishing recall sliver for boundedness — same contract precedent
-    as cap_basket (registry/breadth.py).  Output shape matches
-    ``minhash_lsh_pairs``: (id_a, id_b, jaccard), id_a < id_b.
+    """Near-dup EDGES for component-style dedup: ``_bucket_stars`` over
+    the band buckets, verified with exact Jaccard like the pair path —
+    k-1 edges per band on a k-member duplicate clique instead of k^2/2
+    pairs.  Band collisions of non-matching docs are rare by
+    construction (the band key is 2 independent minhashes), so the star
+    recall sliver is vanishing — same contract precedent as cap_basket
+    (registry/breadth.py).  Output shape matches ``minhash_lsh_pairs``:
+    (id_a, id_b, jaccard), id_a < id_b.
     """
-    sh, bands = _lsh_bands(df, id_col, text_col, n, n_hashes, band_size)
-    bmin = bands.groupBy("band").agg(F.min("id").alias("id_a"))
-    cand = (
-        bands.join(bmin, "band")
-        .filter(F.col("id") > F.col("id_a"))
-        .select("id_a", F.col("id").alias("id_b"))
-        .distinct()
-    )
-    return _verify_jaccard(cand, sh, id_col, threshold)
+    sh, bands = _lsh_bands(df, id_col, text_col, n)
+    return _verify_jaccard(_bucket_stars(bands, ["band"]), sh, threshold)
+
+
+# ---- SimHash ----------------------------------------------------------------
 
 
 def simhash_fingerprint(
@@ -525,10 +482,9 @@ def simhash_fingerprint(
     text_col: str,
     n: int = 2,
     bits: int = 32,
-    salt: str = "sh",
     packed: bool = True,
 ) -> DataFrame:
-    """32-bit SimHash per document: sign of the per-bit vote over shingle
+    """SimHash per document: sign of the per-bit vote over shingle
     hashes.  Integer arithmetic only, so it is bit-identical across
     engines.
 
@@ -541,19 +497,16 @@ def simhash_fingerprint(
     ``2*ones_j > n_shingles``, which is the same predicate exactly.
     Lane budget: a document may have at most 2_097_151 (2^21 - 1)
     distinct shingles; pass ``packed=False`` for corpora beyond that
-    (identical output).  21-bit lanes, not 16: with four 16-bit lanes
-    the TOP lane's partial sum (count * 2^48) overflowed SIGNED 64 at
-    just 32768 shingles — half the budget the old docstring claimed —
-    raising under ANSI or silently corrupting the fingerprint without
-    it (round-5 review finding).
+    (identical output).  21-bit lanes, not 16: the top 16-bit lane's
+    partial sum (count * 2^48) overflows SIGNED 64 at 32768 shingles.
 
     ``bits`` may be up to 60 (the widest prefix both engines parse into
     a signed 64-bit integer): bits <= 32 hash shingles with
     ``md5_long``, wider fingerprints with ``md5_long60``.  WIDTH IS THE
     SCALE LEVER — chance Hamming-<=k collisions between unrelated
     documents scale as n^2 * P(ham<=k), and P is ~2.6e-4 at 32/6 (a
-    false-pair EXPLOSION past ~10k docs, measured x61 wall at the
-    round-6 sf1 probe) versus ~3e-14 at 60/3 (the Manku et al. 2007
+    false-pair EXPLOSION past ~10k docs, measured x61 wall at an sf1
+    probe) versus ~3e-14 at 60/3 (the Manku et al. 2007
     wide-fingerprint/small-radius regime; zero expected chance pairs at
     any realistic corpus).
     """
@@ -563,7 +516,7 @@ def simhash_fingerprint(
         F.col(id_col).alias("id"), F.explode("shingles").alias("g")
     )
     hash_fn = md5_long if bits <= 32 else md5_long60
-    h = hash_fn(F.concat_ws("\x01", F.lit(salt), F.col("g")))
+    h = hash_fn(F.concat_ws("\x01", F.lit("sh"), F.col("g")))
     if not packed:
         votes = ex.groupBy("id").agg(
             *[
@@ -612,6 +565,33 @@ def simhash_fingerprint(
     return votes.select(F.col("id").alias(id_col), fp.alias("simhash"))
 
 
+def _hamming_edges(
+    fp: DataFrame, id_col: str, max_hamming: int, bits: int, candidates
+) -> DataFrame:
+    """Hamming-verified edges of a fingerprint table (id_col, simhash):
+    pigeonhole banding into ``max_hamming + 1`` disjoint bit blocks —
+    two fingerprints within ``max_hamming`` bits are identical in at
+    least one block — then ``candidates`` (``_bucket_pairs`` or
+    ``_bucket_stars``) over the (blk, key) buckets and an exact Hamming
+    verify on the full fingerprints.  Takes the fingerprints rather than
+    text so boundary tests drive the real construction on hand-crafted
+    fingerprints."""
+    n_blocks = max_hamming + 1
+    width = -(-bits // n_blocks)  # ceil
+    mask = (1 << width) - 1
+    keys = [
+        F.shiftrightunsigned("simhash", b * width).bitwiseAND(F.lit(mask))
+        for b in range(n_blocks)
+    ]
+    blocks = fp.select(
+        F.col(id_col).alias("id"), F.posexplode(F.array(*keys))
+    ).select("id", F.col("pos").alias("blk"), F.col("col").alias("key"))
+    return _verify(
+        candidates(blocks, ["blk", "key"]), fp, "hamming",
+        lambda a, b: F.bit_count(a.bitwiseXOR(b)), lambda h: h <= max_hamming,
+    )
+
+
 def simhash_pairs(
     df: DataFrame,
     id_col: str,
@@ -621,86 +601,24 @@ def simhash_pairs(
     bits: int = 32,
 ) -> DataFrame:
     """Document pairs whose SimHash fingerprints are within max_hamming
-    bits, via pigeonhole banding.
-
-    The fingerprint is cut into ``max_hamming + 1`` disjoint bit blocks;
-    two fingerprints differing in <= max_hamming bits must be *identical*
-    in at least one block (pigeonhole), so an equi-join on (block index,
-    block value) generates candidates with guaranteed recall — results
-    are bit-identical to the naive O(n^2) cross join the oracle runs.
-    The fingerprint table is cached so the candidate join and the verify
-    join share one computation.  Output: (id_a, id_b, hamming).
+    bits, via pigeonhole banding (``_hamming_edges`` over every
+    within-bucket pair) — guaranteed recall, so results are
+    bit-identical to the naive O(n^2) cross join the oracle runs.  The
+    fingerprint table is checkpointed so the candidate join and the
+    verify join share one computation.  Output: (id_a, id_b, hamming).
 
     SCALE CONTRACT — block width bounds everything: expected bucket size
     is n / 2^(bits // (max_hamming+1)), so candidate volume is
-    ~(max_hamming+1) * n^2 / 2^width.  The round-6 sf1 probe measured
-    the default-width failure concretely: 32/6 gives 5-bit blocks (32
-    bucket values — n^2/32 candidates, x61 wall on 10x docs), while
-    60/3 gives 15-bit blocks (32768 values — the same probe runs
-    linearly).  Keep ``2^(bits // (max_hamming+1)) >> n / desired
-    bucket size``; past ~5M docs move to multiple permuted fingerprint
-    tables (Manku et al. 2007 §3) rather than wider single blocks.
+    ~(max_hamming+1) * n^2 / 2^width.  Measured at an sf1 probe: 32/6
+    gives 5-bit blocks (32 bucket values — n^2/32 candidates, x61 wall
+    on 10x docs), while 60/3 gives 15-bit blocks (32768 values — the
+    same probe runs linearly).  Keep ``2^(bits // (max_hamming+1)) >> n
+    / desired bucket size``; past ~5M docs move to multiple permuted
+    fingerprint tables (Manku et al. 2007 §3) rather than wider single
+    blocks.
     """
     fp = simhash_fingerprint(df, id_col, text_col, n=n, bits=bits).localCheckpoint(eager=False)
-    return _simhash_pair_edges(fp, id_col, max_hamming, bits)
-
-
-def _simhash_pair_edges(
-    fp: DataFrame, id_col: str, max_hamming: int, bits: int
-) -> DataFrame:
-    """The pair-graph stage of ``simhash_pairs`` on an already-computed
-    fingerprint table: all within-bucket pairs, Hamming-verified.
-    Factored out (round 12) so boundary tests can drive the REAL
-    candidate construction with hand-crafted fingerprints instead of
-    re-deriving it — the registry oracle mirrors this construction, so
-    only a test on the code itself can pin its edge behavior."""
-    blocks = _simhash_blocks(fp, id_col, max_hamming, bits)
-    cand = (
-        blocks.alias("a")
-        .join(
-            blocks.alias("b"),
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    return _verify_hamming(cand, fp, id_col, max_hamming)
-
-
-def _simhash_blocks(fp: DataFrame, id_col: str, max_hamming: int, bits: int) -> DataFrame:
-    """Pigeonhole banding of a fingerprint table: (id, blk, key) with one
-    row per disjoint bit block — two fingerprints within ``max_hamming``
-    bits are identical in at least one of the ``max_hamming + 1`` blocks,
-    so an equi-join on (blk, key) has guaranteed recall."""
-    n_blocks = max_hamming + 1
-    width = -(-bits // n_blocks)  # ceil
-    mask = (1 << width) - 1
-    keys = [
-        F.shiftrightunsigned("simhash", b * width).bitwiseAND(F.lit(mask))
-        for b in range(n_blocks)
-    ]
-    return fp.select(
-        F.col(id_col).alias("id"), F.posexplode(F.array(*keys))
-    ).select("id", F.col("pos").alias("blk"), F.col("col").alias("key"))
-
-
-def _verify_hamming(
-    cand: DataFrame, fp: DataFrame, id_col: str, max_hamming: int
-) -> DataFrame:
-    """Exact Hamming verification of (id_a, id_b) candidates on the full
-    fingerprints; keeps pairs within ``max_hamming`` bits."""
-    a = fp.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("fp_a"))
-    b = fp.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("fp_b"))
-    ham = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
-    return (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("hamming", ham)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
+    return _hamming_edges(fp, id_col, max_hamming, bits, _bucket_pairs)
 
 
 def simhash_edges(
@@ -712,55 +630,21 @@ def simhash_edges(
     bits: int = 32,
 ) -> DataFrame:
     """Near-dup EDGES under Hamming banding for component-style dedup:
-    star edges to each block bucket's minimum id instead of all
-    within-bucket pairs — the SimHash twin of ``minhash_lsh_edges``
-    (round-11: the dedup-family API is symmetric; until now clique-heavy
-    corpora only had a linear component path under Jaccard banding).
+    ``_bucket_stars`` over the block buckets, verified on the full
+    fingerprints like the pair path — the SimHash twin of
+    ``minhash_lsh_edges``.  A k-member duplicate clique (identical
+    fingerprints, one hot bucket per block) contributes k-1 edges per
+    block instead of ``simhash_pairs``' k^2/2.
 
-    Each (block, key) bucket emits (min_id_in_bucket, id) for every
-    other member, verified on the full fingerprints like the pair path.
-    A k-member duplicate clique — identical fingerprints, so one hot
-    bucket per block — contributes k-1 edges per block instead of
-    ``simhash_pairs``'s k^2/2 enumerated pairs, which is the right graph
-    for connected components: clique members connect through the
-    minimum, and min-label propagation (``operators.graph``) converges
-    in one sweep on a star.
-
-    Recall note (same contract as ``minhash_lsh_edges``): within a
-    bucket {a, b, c} (a = min) the star tests only (a,b) and (a,c); a
-    qualifying pair (b,c) whose star edges both fail is found only if b
-    and c share some other block without a smaller non-matching doc.
     Pigeonhole guarantees every pair within ``max_hamming`` shares a
-    block, so the sliver is pairs co-bucketed ONLY under a smaller
-    fingerprint that matches neither — rare by construction at the
-    60/3 operating point where chance block collisions are ~n/32768
-    per bucket.  Output shape matches ``simhash_pairs``:
+    block, so the star recall sliver is pairs co-bucketed ONLY under a
+    smaller fingerprint that matches neither — rare by construction at
+    the 60/3 operating point where chance block collisions are
+    ~n/32768 per bucket.  Output shape matches ``simhash_pairs``:
     (id_a, id_b, hamming), id_a < id_b.
     """
     fp = simhash_fingerprint(df, id_col, text_col, n=n, bits=bits).localCheckpoint(eager=False)
-    return _simhash_star_edges(fp, id_col, max_hamming, bits)
-
-
-def _simhash_star_edges(
-    fp: DataFrame, id_col: str, max_hamming: int, bits: int
-) -> DataFrame:
-    """The star-edge stage of ``simhash_edges`` on an already-computed
-    fingerprint table: (bucket-min, member) candidates per block
-    bucket, Hamming-verified.  Factored out (round 12) with
-    ``_simhash_pair_edges`` so the recall-sliver boundary — a
-    qualifying pair both of whose star edges fail verification against
-    a shadowing bucket minimum — is pinned by tests on the real
-    construction (see tests/test_text_dedup.py::
-    test_simhash_star_sliver_boundary)."""
-    blocks = _simhash_blocks(fp, id_col, max_hamming, bits)
-    bmin = blocks.groupBy("blk", "key").agg(F.min("id").alias("id_a"))
-    cand = (
-        blocks.join(bmin, ["blk", "key"])
-        .filter(F.col("id") > F.col("id_a"))
-        .select("id_a", F.col("id").alias("id_b"))
-        .distinct()
-    )
-    return _verify_hamming(cand, fp, id_col, max_hamming)
+    return _hamming_edges(fp, id_col, max_hamming, bits, _bucket_stars)
 
 
 def cross_split_contamination(

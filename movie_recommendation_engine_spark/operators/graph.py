@@ -2,10 +2,11 @@
 forest roots over DataFrame edge lists.
 
 Why this lives in a data-pipeline engine: near-duplicate detection
-(dedup.minhash_lsh_pairs / simhash_pairs / similarity.embedding_neardup
-_pairs) emits PAIRS, but deduplication needs CLUSTERS — "keep one doc
-per group of mutual near-dups" is exactly connected components over the
-pair graph, with the min id as the canonical representative.
+(dedup.minhash_lsh_edges / simhash_edges /
+similarity.embedding_neardup_pairs) emits PAIRS, but deduplication
+needs CLUSTERS — "keep one doc per group of mutual near-dups" is
+exactly connected components over the pair graph, with the min id as
+the canonical representative.
 
 Connected components: a driver-side union-find when the observed edge
 count is small, else iterative min-label propagation expressed as
@@ -14,7 +15,7 @@ itself and its neighbors; convergence when no label changes.  Rounds
 are bounded by the graph diameter (near-dup graphs are shallow —
 cliques and short chains — so a handful of rounds suffices).  Each
 round is one shuffle join + one aggregation; lineage is truncated with
-localCheckpoint every few rounds so the plan does not grow with the
+localCheckpoint every 5 rounds so the plan does not grow with the
 iteration count (the reference hit exactly this class of failure with
 long lineages, SURVEY §2.13.5).
 """
@@ -34,17 +35,17 @@ from pyspark.sql import DataFrame, functions as F
 # default level: they are O(|V|) and re-read immediately.
 _EDGE_LEVEL = StorageLevel.DISK_ONLY
 
+# min-label propagation: round budget, and lineage truncation cadence
+_MAX_ITER = 25
+_CHECKPOINT_EVERY = 5
+
 
 def connected_components(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 25,
-    checkpoint_every: int = 5,
-    small_graph_threshold: int = 1_000_000,
+    edges: DataFrame, small_graph_threshold: int = 1_000_000
 ) -> DataFrame:
-    """(id, component) for every node in ``edges``; ``component`` is the
-    smallest node id reachable from ``id`` (undirected).
+    """(id, component) for every node of the (id_a, id_b) ``edges``;
+    ``component`` is the smallest node id reachable from ``id``
+    (undirected).
 
     Adaptive execution, same spirit as AQE's broadcast decision: the
     edge list is materialized (it is consumed every round anyway) and
@@ -58,7 +59,7 @@ def connected_components(
     distributed min-label propagation below runs unchanged.
 
     Raises RuntimeError if propagation has not converged after
-    ``max_iter`` rounds (diameter larger than max_iter).
+    ``_MAX_ITER`` rounds (diameter larger than that).
     """
     # Materialize the edge list ONCE before symmetrizing: the union
     # references it in both branches, and without this the upstream
@@ -67,7 +68,7 @@ def connected_components(
     # localCheckpoint (not cache) so lineage is truncated for the
     # propagation rounds AND the blocks are freed by the ContextCleaner
     # when the frame goes out of scope — no cross-query cache leak.
-    e0 = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).localCheckpoint(
+    e0 = edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v")).localCheckpoint(
         eager=True
     )
     e = (
@@ -80,7 +81,7 @@ def connected_components(
     labels = (
         e.select(F.col("u").alias("id")).distinct().withColumn("comp", F.col("id")).cache()
     )
-    for i in range(max_iter):
+    for i in range(_MAX_ITER):
         nb_min = (
             e.join(labels.withColumnRenamed("id", "v"), "v")
             .groupBy("u")
@@ -95,7 +96,7 @@ def connected_components(
             new_comp.alias("comp"),
             (new_comp < F.col("comp")).alias("__changed"),
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
+        if (i + 1) % _CHECKPOINT_EVERY == 0:
             flagged = flagged.localCheckpoint(eager=False)
         flagged = flagged.cache()
         changed = flagged.filter("__changed").count()
@@ -109,7 +110,7 @@ def connected_components(
             out = labels.localCheckpoint(eager=True)
             flagged.unpersist()
             return out
-    raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+    raise RuntimeError(f"connected_components did not converge in {_MAX_ITER} rounds")
 
 
 def _driver_union_find(spark, e: DataFrame) -> DataFrame:
@@ -141,19 +142,13 @@ def _driver_union_find(spark, e: DataFrame) -> DataFrame:
 
 
 def dedup_canonical(
-    all_ids: DataFrame,
-    pair_edges: DataFrame,
-    id_col: str = "doc_id",
-    src: str = "id_a",
-    dst: str = "id_b",
+    all_ids: DataFrame, pair_edges: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
-    """Collapse near-dup PAIRS into canonical assignments for a whole
-    corpus: every id maps to the min id of its near-dup component;
-    ids with no near-dup map to themselves.  Output: (id_col,
-    component, is_canonical)."""
-    comps = connected_components(pair_edges, src=src, dst=dst).withColumnRenamed(
-        "id", id_col
-    )
+    """Collapse near-dup (id_a, id_b) PAIRS into canonical assignments
+    for a whole corpus: every id maps to the min id of its near-dup
+    component; ids with no near-dup map to themselves.  Output:
+    (id_col, component, is_canonical)."""
+    comps = connected_components(pair_edges).withColumnRenamed("id", id_col)
     out = (
         all_ids.select(id_col)
         .join(comps, id_col, "left")

@@ -12,8 +12,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions.hashing import uniform_hash
 from ..functions.rounding import det_round
 from ..operators.dedup import (
+    LSH_MAX_BUCKET,
+    cross_split_contamination,
     exact_dedup,
     minhash_lsh_edges,
     minhash_lsh_pairs,
@@ -22,6 +25,7 @@ from ..operators.dedup import (
     simhash_pairs,
 )
 from ..operators.graph import dedup_canonical
+from ..operators.relational import with_scalars
 from .text import NORM, WORDS
 from . import _t, duck_hash_sql, register
 
@@ -35,6 +39,24 @@ sh AS (SELECT doc_id,
 ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
 sizes AS (SELECT doc_id, len(s) AS sz FROM sh)
 """
+
+# connected components of the verified `pairs` as a transitive closure
+# (the query opens WITH RECURSIVE), and every document's canonical id —
+# the SQL side of operators.graph.dedup_canonical
+CLOSURE = """edges AS (SELECT id_a AS u, id_b AS v FROM pairs
+          UNION SELECT id_b, id_a FROM pairs),
+reach(src, dst) AS (
+  SELECT u, v FROM edges
+  UNION
+  SELECT r.src, e.v FROM reach r JOIN edges e ON r.dst = e.u),
+comp AS (
+  SELECT src AS doc_id, least(src, min(dst)) AS component
+  FROM reach GROUP BY src)"""
+CANONICAL = """SELECT d.doc_id,
+       coalesce(c.component, d.doc_id) AS component,
+       (coalesce(c.component, d.doc_id) = d.doc_id) AS is_canonical
+FROM documents d LEFT JOIN comp c ON c.doc_id = d.doc_id
+ORDER BY d.doc_id"""
 
 
 @register(
@@ -100,17 +122,6 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("id_a", "id_b")
 
 
-# Per-bucket candidate width cap for the LSH PAIR self-join (engine and
-# oracle embed the same constant).  A duplicate-heavy corpus lands a
-# whole copy-clique in one bucket per band, making the within-bucket
-# self-join quadratic in clique size (round-9 dup-clique probe) — the
-# cap keeps each bucket's candidate contribution to its 64 smallest ids
-# (<= 64^2/2 candidates per band).  Uniform-corpus buckets are a
-# handful of docs wide, so below the adversarial regime the capped and
-# uncapped plans emit identical pairs.  Component-style dedup uses the
-# linear star-edge path instead (MINHASH_EDGES / minhash_lsh_edges).
-LSH_MAX_BUCKET = 64
-
 # MinHash LSH front end (shared by the pair and star-edge pipelines):
 # shingle-hash once, affine rehash, band.
 MINHASH_BANDS = """
@@ -142,8 +153,9 @@ pairs AS (
               (len(sa.s) + len(sb.s) - len(list_intersect(sa.s, sb.s)))) * 1000000 + 0.5) / 1000000) >= 0.5)
 """
 
-# pair pipeline: capped bucket-join candidates, exact-Jaccard verify —
-# mirrors minhash_lsh_pairs(max_bucket=LSH_MAX_BUCKET)
+# pair pipeline: bucket-join candidates capped at the operator's
+# LSH_MAX_BUCKET smallest ids per bucket, exact-Jaccard verify — mirrors
+# minhash_lsh_pairs
 MINHASH_PAIRS = f"""{MINHASH_BANDS},
 bandsc AS (
   SELECT doc_id, band FROM (
@@ -177,14 +189,13 @@ ORDER BY id_a, id_b
 )
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(16) + 8 bands of 2 -> capped candidates -> exact-Jaccard
-    verify.  max_bucket=LSH_MAX_BUCKET bounds the within-bucket
-    self-join against duplicate-clique corpora (round-9 probe); the
-    oracle embeds the identical cap."""
+    verify.  The default max_bucket=LSH_MAX_BUCKET bounds the
+    within-bucket self-join against duplicate-clique corpora
+    (tools/dup_clique_probe.py); the oracle embeds the identical cap."""
     docs = _t(spark, sf_dir, "documents")
-    return minhash_lsh_pairs(
-        docs, "doc_id", "text", n=2, n_hashes=16, band_size=2,
-        threshold=0.5, max_bucket=LSH_MAX_BUCKET,
-    ).orderBy("id_a", "id_b")
+    return minhash_lsh_pairs(docs, "doc_id", "text", n=2, threshold=0.5).orderBy(
+        "id_a", "id_b"
+    )
 
 
 @register(
@@ -192,20 +203,8 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH RECURSIVE {SHINGLES},
 {MINHASH_EDGES},
-edges AS (SELECT id_a AS u, id_b AS v FROM pairs
-          UNION SELECT id_b, id_a FROM pairs),
-reach(src, dst) AS (
-  SELECT u, v FROM edges
-  UNION
-  SELECT r.src, e.v FROM reach r JOIN edges e ON r.dst = e.u),
-comp AS (
-  SELECT src AS doc_id, least(src, min(dst)) AS component
-  FROM reach GROUP BY src)
-SELECT d.doc_id,
-       coalesce(c.component, d.doc_id) AS component,
-       (coalesce(c.component, d.doc_id) = d.doc_id) AS is_canonical
-FROM documents d LEFT JOIN comp c ON c.doc_id = d.doc_id
-ORDER BY d.doc_id
+{CLOSURE}
+{CANONICAL}
 """,
 )
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -214,14 +213,14 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     propagation), every doc mapped to its canonical (min-id)
     representative.  Edges come from minhash_lsh_edges — per-bucket
     stars to the bucket minimum, linear where the all-pairs bucket
-    join is quadratic on a duplicate clique (round-9 probe) — and the
+    join is quadratic on a duplicate clique — and the
     star reaches exactly the same components wherever bucket-mates
     share their threshold relation through the minimum.  The oracle
     recomputes components from the SAME star edges via a recursive
     transitive-closure CTE — two entirely different closure algorithms
     agreeing exactly."""
     docs = _t(spark, sf_dir, "documents")
-    edges = minhash_lsh_edges(docs, "doc_id", "text", n=2, n_hashes=16, band_size=2, threshold=0.5)
+    edges = minhash_lsh_edges(docs, "doc_id", "text", n=2, threshold=0.5)
     return dedup_canonical(docs, edges).orderBy("doc_id")
 
 
@@ -255,8 +254,8 @@ ORDER BY id_a, id_b
 )
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """60-bit SimHash, pairs within Hamming distance 3 — the wide-
-    fingerprint/small-radius regime (Manku et al. 2007).  Upgraded from
-    32/6 in round 6: at 32 bits, CHANCE Hamming-<=6 collisions between
+    fingerprint/small-radius regime (Manku et al. 2007).  Not 32/6:
+    at 32 bits, CHANCE Hamming-<=6 collisions between
     unrelated documents (P ~ 2.6e-4 per pair) made both the candidate
     volume and the RESULT itself grow quadratically with corpus size —
     the sf1 scale probe measured x61 wall on 10x documents.  At 60/3
@@ -287,20 +286,8 @@ pairs AS (
   SELECT id_a, id_b
   FROM cand JOIN fp fa ON fa.doc_id = id_a JOIN fp fb ON fb.doc_id = id_b
   WHERE bit_count(xor(fa.f, fb.f)) <= 3),
-edges AS (SELECT id_a AS u, id_b AS v FROM pairs
-          UNION SELECT id_b, id_a FROM pairs),
-reach(src, dst) AS (
-  SELECT u, v FROM edges
-  UNION
-  SELECT r.src, e.v FROM reach r JOIN edges e ON r.dst = e.u),
-comp AS (
-  SELECT src AS doc_id, least(src, min(dst)) AS component
-  FROM reach GROUP BY src)
-SELECT d.doc_id,
-       coalesce(c.component, d.doc_id) AS component,
-       (coalesce(c.component, d.doc_id) = d.doc_id) AS is_canonical
-FROM documents d LEFT JOIN comp c ON c.doc_id = d.doc_id
-ORDER BY d.doc_id
+{CLOSURE}
+{CANONICAL}
 """,
 )
 def q_dedup_simhash_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -308,9 +295,9 @@ def q_dedup_simhash_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     <=3 STAR-EDGE graph (simhash_edges — per-block-bucket stars to the
     bucket minimum, k-1 edges per clique per block where simhash_pairs
     enumerates k^2/2), every doc mapped to its canonical (min-id)
-    representative.  The SimHash twin of dedup_components (round-11:
-    clique-heavy corpora get a linear component path under Hamming
-    banding too, closing the dedup-family asymmetry).  The oracle
+    representative.  The SimHash twin of dedup_components: clique-heavy
+    corpora get a linear component path under Hamming banding too.  The
+    oracle
     rebuilds the SAME star edges in SQL — fingerprint votes, 4x15-bit
     pigeonhole blocks, bucket-min stars, exact-Hamming verify — then
     recomputes components via a recursive transitive-closure CTE, so two
@@ -354,10 +341,6 @@ def q_split_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     eval docs sharing any word-5-gram with the train side (planted
     near-dup pairs make this nonzero by construction).  The id
     fingerprint pins exactly WHICH docs were flagged."""
-    from ..functions.hashing import uniform_hash
-    from ..operators.dedup import cross_split_contamination
-    from ..operators.relational import with_scalars
-
     docs = _t(spark, sf_dir, "documents")
     labeled = docs.withColumn(
         "in_train", uniform_hash("doc_id", salt="contam") < 0.8
@@ -391,15 +374,7 @@ def q_split_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH RECURSIVE {SHINGLES},
 {MINHASH_EDGES},
-edges AS (SELECT id_a AS u, id_b AS v FROM pairs
-          UNION SELECT id_b, id_a FROM pairs),
-reach(src, dst) AS (
-  SELECT u, v FROM edges
-  UNION
-  SELECT r.src, e.v FROM reach r JOIN edges e ON r.dst = e.u),
-comp AS (
-  SELECT src AS doc_id, least(src, min(dst)) AS component
-  FROM reach GROUP BY src),
+{CLOSURE},
 verdicts AS (
   SELECT d.doc_id, d.n_chars,
          coalesce(c.component, d.doc_id) AS component,
@@ -423,12 +398,8 @@ def q_dedup_pipeline_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint.  This is the report a curation run ships; every
     upstream stage is independently oracle-gated, this gates their
     COMPOSITION (one wrong edge anywhere changes kept_id_sum)."""
-    from ..functions.rounding import det_round as _dr
-
     docs = _t(spark, sf_dir, "documents")
-    edges = minhash_lsh_edges(
-        docs, "doc_id", "text", n=2, n_hashes=16, band_size=2, threshold=0.5
-    )
+    edges = minhash_lsh_edges(docs, "doc_id", "text", n=2, threshold=0.5)
     verdicts = dedup_canonical(docs, edges).join(
         docs.select("doc_id", "n_chars"), "doc_id"
     )
@@ -438,6 +409,6 @@ def q_dedup_pipeline_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(keep.cast("long")).alias("n_docs_kept"),
         F.countDistinct("component").alias("n_groups"),
         F.sum(F.when(~keep, F.col("n_chars")).otherwise(0)).cast("long").alias("chars_removed"),
-        _dr(F.sum((~keep).cast("long")) / F.count("*")).alias("dup_rate"),
+        det_round(F.sum((~keep).cast("long")) / F.count("*")).alias("dup_rate"),
         F.sum(F.when(keep, F.col("doc_id")).otherwise(0)).cast("long").alias("kept_id_sum"),
     )

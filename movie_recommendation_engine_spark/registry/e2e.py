@@ -39,8 +39,12 @@ import os
 import shutil
 from functools import partial
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..operators.dedup import minhash_lsh_edges
+from ..operators.graph import dedup_canonical
+from ..operators.sampling import mixture_sample
+from ..operators.text import filter_funnel_verdicts, normalize_text, ws_token_count
 from ..session import run_concurrently
 from . import _t, duck_hash_sql, register
 
@@ -268,7 +272,7 @@ def q_movielens_e2e_cli(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---- corpus curation end-to-end ------------------------------------------
 
 from .text import FUNNEL_VERDICTS_SQL, NORM, WORDS  # noqa: E402
-from .dedup import MINHASH_EDGES, SHINGLES  # noqa: E402
+from .dedup import CLOSURE, MINHASH_EDGES, SHINGLES  # noqa: E402
 
 _CUR_W = {"en": 4, "de": 1, "es": 1, "fr": 1}
 _CUR_W_SQL = ", ".join(f"('{k}', {w})" for k, w in sorted(_CUR_W.items()))
@@ -286,15 +290,7 @@ e2 AS MATERIALIZED (
   WHERE doc_id = keep_id),
 {SHINGLES.replace("FROM documents", "FROM e2")},
 {MINHASH_EDGES},
-edges AS (SELECT id_a AS u, id_b AS v FROM pairs
-          UNION SELECT id_b, id_a FROM pairs),
-reach(src, dst) AS (
-  SELECT u, v FROM edges
-  UNION
-  SELECT r.src, e.v FROM reach r JOIN edges e ON r.dst = e.u),
-comp AS (
-  SELECT src AS doc_id, least(src, min(dst)) AS component
-  FROM reach GROUP BY src),
+{CLOSURE},
 e3 AS MATERIALIZED (
   SELECT e2.doc_id, e2.text, e2.lang
   FROM e2 LEFT JOIN comp c USING (doc_id)
@@ -337,17 +333,6 @@ def q_corpus_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact sampled id list, so one wrong document anywhere in the chain
     flips the hash.  Each stage output is localCheckpointed: consumed
     by both the next stage and its own count, computed once."""
-    from pyspark.sql import Window
-
-    from ..operators.dedup import minhash_lsh_edges
-    from ..operators.graph import dedup_canonical
-    from ..operators.sampling import mixture_sample
-    from ..operators.text import (
-        filter_funnel_verdicts,
-        normalize_text,
-        ws_token_count,
-    )
-
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text", "lang")
     v = filter_funnel_verdicts(docs, "doc_id", "text")
     e1 = docs.join(
@@ -362,9 +347,7 @@ def q_corpus_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text", "lang")
         .localCheckpoint(eager=False)
     )
-    edges = minhash_lsh_edges(
-        e2, "doc_id", "text", n=2, n_hashes=16, band_size=2, threshold=0.5
-    )
+    edges = minhash_lsh_edges(e2, "doc_id", "text", n=2, threshold=0.5)
     canon = dedup_canonical(e2, edges)
     e3 = e2.join(
         canon.filter(F.col("is_canonical")).select("doc_id"), "doc_id"

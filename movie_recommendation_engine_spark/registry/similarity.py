@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.rounding import det_round
+from ..operators.graph import dedup_canonical
 from ..operators.similarity import (
     arrow_brute_force_topk,
     brute_force_topk,
@@ -354,8 +355,6 @@ def q_embedding_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same pairs->clusters composition as dedup_components, driven by
     vector similarity instead of token shingles (the oracle replays it
     with a recursive transitive-closure CTE)."""
-    from ..operators.graph import dedup_canonical
-
     emb = _t(spark, sf_dir, "embeddings")
     pairs = embedding_neardup_pairs(emb, threshold=0.35, n_planes=_N_PLANES, dim=_DIM)
     return dedup_canonical(emb.select("vec_id"), pairs, id_col="vec_id").orderBy(

@@ -219,7 +219,7 @@ def q_doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select(
         "doc_id",
         X.exact_fingerprint("text").alias("fingerprint"),
-        X.shingle_fingerprint("text", n=2, salt="fp").alias("min_shingle_hash"),
+        X.shingle_fingerprint("text", n=2).alias("min_shingle_hash"),
     ).orderBy("doc_id")
 
 

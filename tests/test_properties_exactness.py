@@ -26,8 +26,8 @@ docs_strategy = st.lists(
 
 
 def _shingle_set(text: str, n: int) -> frozenset[str]:
-    """Python mirror of functions.hashing.word_shingles: distinct word
-    n-grams of the whitespace-normalized, lowercased text; fewer than n
+    """Python mirror of operators.text.word_shingles: distinct word
+    n-grams of the whitespace-normalized, lower-cased text; fewer than n
     words collapse to the whole text as one shingle."""
     words = text.strip().lower().split()
     if len(words) < n:

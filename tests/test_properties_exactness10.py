@@ -67,42 +67,6 @@ def test_hashing_primitives_match_python_md5(spark_global, keys, salt, n_buckets
 
 @settings(max_examples=6, deadline=None)
 @given(
-    texts=st.lists(
-        st.text(alphabet=" \tabcdeXY", max_size=14), min_size=1, max_size=12
-    ),
-    n=st.sampled_from([2, 3, 5]),
-)
-def test_char_shingles_match_python_reference(spark_global, texts, n):
-    """char_shingles == Python: trim + collapse whitespace + lowercase,
-    then DISTINCT n-grams in first-occurrence order; shorter-than-n
-    strings collapse to the single whole-text shingle.
-
-    Pinned subtlety (found by this property): Spark's ``trim`` strips
-    ASCII SPACES only, so a leading tab survives the trim and the
-    later ``\\s+`` collapse leaves a leading ' ' — the reference must
-    use ``strip(' ')``, not ``strip()``."""
-    from movie_recommendation_engine_spark.functions.hashing import char_shingles
-
-    spark = spark_global
-    rows = [(i, t) for i, t in enumerate(texts)]
-    df = spark.createDataFrame(rows, "i long, t string")
-    got = {r.i: r.sh for r in df.select("i", char_shingles("t", n=n).alias("sh")).collect()}
-    for i, t in rows:
-        s = re.sub(r"\s+", " ", t.strip(" ")).lower()
-        if len(s) < n:
-            want = [s]
-        else:
-            seen, want = set(), []
-            for j in range(len(s) - n + 1):
-                g = s[j : j + n]
-                if g not in seen:
-                    seen.add(g)
-                    want.append(g)
-        assert got[i] == want, (t, s, n, got[i], want)
-
-
-@settings(max_examples=6, deadline=None)
-@given(
     pairs=st.lists(
         st.tuples(
             st.lists(st.integers(-9, 9), min_size=3, max_size=3),

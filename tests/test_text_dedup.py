@@ -91,6 +91,37 @@ def test_simhash_identical_docs_zero_hamming(spark, docs):
     assert pairs[(1, 2)] == 0
 
 
+def test_edge_whitespace_is_one_document_to_every_dedup_operator(spark):
+    """A tab-led, newline-ended copy is the same document to the fuzzy
+    operators as to exact dedup: shingles come from ``normalize_text``'s
+    words, so the padding adds no ' red' / 'ship ' shingles (a trim that
+    strips spaces only, before collapsing whitespace, left both and
+    scored the pair Jaccard 0.5)."""
+    from test_properties_exactness import _shingle_set
+
+    texts = {1: "\tred blue ship\n", 2: "red blue ship"}
+    df = spark.createDataFrame(sorted(texts.items()), "doc_id int, text string")
+    for op in (prefix_filtered_jaccard_pairs, ngram_jaccard_pairs, minhash_lsh_pairs):
+        got = [(r.id_a, r.id_b, r.jaccard) for r in op(
+            df, "doc_id", "text", n=2, threshold=0.5
+        ).collect()]
+        assert got == [(1, 2, 1.0)], op.__name__
+    got = [(r.id_a, r.id_b, r.hamming) for r in simhash_pairs(
+        df, "doc_id", "text", n=2, max_hamming=3, bits=60
+    ).collect()]
+    assert got == [(1, 2, 0)]
+    out = exact_dedup(df, "doc_id", "text").collect()
+    assert [(r.doc_id, r.n_copies) for r in out] == [(1, 2)]
+
+    from movie_recommendation_engine_spark.operators.text import word_shingles
+
+    sh = {r.doc_id: r.s for r in df.select(
+        "doc_id", word_shingles("text", n=2).alias("s")
+    ).collect()}
+    for i, t in texts.items():
+        assert len(sh[i]) == len(set(sh[i])) and set(sh[i]) == _shingle_set(t, 2)
+
+
 def test_simhash_packed_equals_per_bit(spark, docs):
     """The lane-packed vote aggregation is a physical optimization only:
     fingerprints must equal the 32-sum per-bit path bit-for-bit."""
@@ -314,7 +345,7 @@ def test_pagerank_micro_unit_hand_computed(spark):
 def test_ngram_pack_guard_rejects_out_of_range_ids(spark):
     """Pair-key packing requires 0 <= id < 2^31; a bigint id outside that
     range must raise loudly, never silently decode to a wrong pair
-    (ADVICE r02: dtype alone doesn't prove the bound)."""
+    (the dtype alone doesn't prove the bound)."""
     import pytest
     from py4j.protocol import Py4JJavaError
 
@@ -348,7 +379,7 @@ def test_ngram_pack_guard_rejects_out_of_range_ids(spark):
 
 
 def test_simhash_packed_survives_33k_shingles(spark):
-    """Lane-packing budget (round-5 review): with four 16-bit lanes the
+    """Lane-packing budget: with four 16-bit lanes the
     TOP lane's sum overflowed signed 64 at 32768 shingles — half the
     documented budget.  Three 21-bit lanes hold to ~2.1M; a 33k-distinct-
     shingle document must fingerprint identically packed and unpacked."""
@@ -384,7 +415,7 @@ def test_repetition_top_bigram_linear_fold_matches_counting(spark):
 
 
 def test_ancestor_roots_raises_when_forest_deeper_than_rounds(spark):
-    """Silent-truncation guard (round-5 review): a chain deeper than
+    """Silent-truncation guard: a chain deeper than
     2^rounds raises instead of returning a non-root 'root'."""
     import pytest
 
@@ -399,7 +430,7 @@ def test_ancestor_roots_raises_when_forest_deeper_than_rounds(spark):
     assert out.filter("node = 39").collect()[0].depth == 39
 
 
-# ---- round-9 duplicate-clique boundedness ---------------------------------
+# ---- duplicate-clique boundedness -------------------------------------------
 
 
 @pytest.fixture(scope="module")
@@ -426,8 +457,7 @@ def test_star_edges_linear_on_clique(spark, clique_docs):
     )
 
     edges = minhash_lsh_edges(
-        clique_docs, "doc_id", "text", n=2, n_hashes=16, band_size=2,
-        threshold=0.5,
+        clique_docs, "doc_id", "text", n=2, threshold=0.5
     ).collect()
     clique = [(r.id_a, r.id_b) for r in edges if r.id_b <= 12]
     assert sorted(clique) == [(1, b) for b in range(2, 13)]  # star to min
@@ -446,7 +476,7 @@ def test_star_components_match_full_pair_components(spark, clique_docs):
         dedup_canonical,
     )
 
-    kw = dict(n=2, n_hashes=16, band_size=2, threshold=0.5)
+    kw = dict(n=2, threshold=0.5)
     star = dedup_canonical(
         clique_docs, minhash_lsh_edges(clique_docs, "doc_id", "text", **kw)
     )
@@ -458,9 +488,9 @@ def test_star_components_match_full_pair_components(spark, clique_docs):
 
 
 def test_simhash_star_edges_linear_on_clique(spark, clique_docs):
-    """Round-11 (round-10 verdict #4): the SimHash twin of the minhash
-    star path — a k-clique of exact copies (identical fingerprints)
-    yields k-1 star edges to the minimum id, not k(k-1)/2 pairs."""
+    """The SimHash twin of the minhash star path — a k-clique of exact
+    copies (identical fingerprints) yields k-1 star edges to the minimum
+    id, not k(k-1)/2 pairs."""
     from movie_recommendation_engine_spark.operators.dedup import (
         simhash_edges,
     )
@@ -503,7 +533,7 @@ def test_capped_pairs_equal_uncapped_below_cap(spark, clique_docs, docs):
         minhash_lsh_pairs,
     )
 
-    kw = dict(n=2, n_hashes=16, band_size=2, threshold=0.5)
+    kw = dict(n=2, threshold=0.5)
     for frame in (docs, clique_docs):
         uncapped = sorted(
             minhash_lsh_pairs(
@@ -529,31 +559,32 @@ def test_capped_pairs_equal_uncapped_below_cap(spark, clique_docs, docs):
 
 
 def test_bare_minhash_lsh_pairs_caps_mega_clique(spark):
-    """Round-10 safe default: a BARE minhash_lsh_pairs call (no
-    max_bucket) on a duplicate mega-clique truncates the within-bucket
-    candidates to DEFAULT_MAX_BUCKET smallest ids instead of emitting
-    the full k^2/2 pair explosion — the 5e11-pair crawl failure mode
-    the round-9 probe demonstrated must not be the default behavior."""
+    """Safe default: a BARE minhash_lsh_pairs call (no max_bucket) on a
+    duplicate mega-clique truncates the within-bucket candidates to the
+    LSH_MAX_BUCKET smallest ids instead of emitting the full k^2/2 pair
+    explosion — the quadratic crawl failure mode
+    tools/dup_clique_probe.py demonstrates must not be the default."""
     from movie_recommendation_engine_spark.operators.dedup import (
-        DEFAULT_MAX_BUCKET,
+        LSH_MAX_BUCKET,
         minhash_lsh_pairs,
     )
 
-    k = DEFAULT_MAX_BUCKET + 44  # one clique wider than the cap
+    k = LSH_MAX_BUCKET + 44  # one clique wider than the cap
     text = "golf hotel india juliett kilo lima mike november oscar papa"
     docs = spark.createDataFrame(
         [(i, text) for i in range(1, k + 1)], "doc_id int, text string"
     )
     pairs = minhash_lsh_pairs(docs, "doc_id", "text").collect()
-    cap = DEFAULT_MAX_BUCKET
+    cap = LSH_MAX_BUCKET
     assert len(pairs) == cap * (cap - 1) // 2  # capped, not k*(k-1)/2
     assert max(max(r.id_a, r.id_b) for r in pairs) == cap  # smallest ids kept
 
 
 def test_simhash_star_sliver_boundary(spark):
-    """Round-12 advisory: the ``simhash_edges`` recall sliver, pinned on
-    the REAL construction (the factored ``_simhash_star_edges`` /
-    ``_simhash_pair_edges`` stages) with hand-crafted fingerprints —
+    """The ``simhash_edges`` recall sliver, pinned on the REAL
+    construction (``_hamming_edges`` over ``_bucket_stars`` /
+    ``_bucket_pairs``, the stages ``simhash_edges`` / ``simhash_pairs``
+    run on their fingerprint tables) with hand-crafted fingerprints —
     the registry oracle mirrors the star construction, so it can never
     see this boundary, and identical-fingerprint cliques can never
     exercise it (verification cannot fail at hamming 0).
@@ -570,8 +601,9 @@ def test_simhash_star_sliver_boundary(spark):
     there, and the pair is RECOVERED via another block — the
     pigeonhole recovery path the docstring describes."""
     from movie_recommendation_engine_spark.operators.dedup import (
-        _simhash_pair_edges,
-        _simhash_star_edges,
+        _bucket_pairs,
+        _bucket_stars,
+        _hamming_edges,
     )
 
     B, C = 0, 0b111  # hamming(B, C) = 3, all inside block 0
@@ -582,9 +614,9 @@ def test_simhash_star_sliver_boundary(spark):
         [(1, A_SHADOW), (2, B), (3, C)], "doc_id int, simhash long"
     )
     star = {(r.id_a, r.id_b, r.hamming)
-            for r in _simhash_star_edges(shadowed, "doc_id", 3, 60).collect()}
+            for r in _hamming_edges(shadowed, "doc_id", 3, 60, _bucket_stars).collect()}
     pairs = {(r.id_a, r.id_b, r.hamming)
-             for r in _simhash_pair_edges(shadowed, "doc_id", 3, 60).collect()}
+             for r in _hamming_edges(shadowed, "doc_id", 3, 60, _bucket_pairs).collect()}
     assert pairs == {(2, 3, 3)}  # the pair graph finds the qualifying pair
     assert star == set()         # the star path drops it: both edges to the
     # shadowing minimum fail verification — components under star edges
@@ -599,18 +631,18 @@ def test_simhash_star_sliver_boundary(spark):
         [(1, A_OPEN), (2, B), (3, C)], "doc_id int, simhash long"
     )
     star2 = {(r.id_a, r.id_b, r.hamming)
-             for r in _simhash_star_edges(opened, "doc_id", 3, 60).collect()}
+             for r in _hamming_edges(opened, "doc_id", 3, 60, _bucket_stars).collect()}
     pairs2 = {(r.id_a, r.id_b, r.hamming)
-              for r in _simhash_pair_edges(opened, "doc_id", 3, 60).collect()}
+              for r in _hamming_edges(opened, "doc_id", 3, 60, _bucket_pairs).collect()}
     assert pairs2 == {(2, 3, 3)}
     assert star2 == {(2, 3, 3)}  # recovered via the un-shadowed block
 
 
 def test_simhash_star_recall_on_near_dups(spark):
-    """Round-12 (round-11 verdict #4): quantify the simhash_edges recall
-    sliver on a NEAR-dup corpus (perturbed copies, hamming > 0) — the
-    clique equality test uses identical fingerprints where verification
-    cannot fail, so it can never exercise the sliver.  Mirrors the
+    """Quantify the simhash_edges recall sliver on a NEAR-dup corpus
+    (perturbed copies, hamming > 0) — the clique equality test uses
+    identical fingerprints where verification cannot fail, so it can
+    never exercise the sliver.  Mirrors the
     MinHash ``test_star_recall_matches_exhaustive_on_near_dups``.
 
     Measured at this seed: at the documented 60/3 operating point the
@@ -680,7 +712,7 @@ def test_simhash_star_recall_on_near_dups(spark):
 
 
 def test_star_recall_matches_exhaustive_on_near_dups(spark):
-    """Round-10 ADVICE cross-check: dedup components from star edges are
+    """Cross-check: dedup components from star edges are
     verified against the EXHAUSTIVE (uncapped pair-graph) components on
     a corpus of NEAR-duplicates (perturbed copies, jaccard < 1), not
     just exact clones — independent of the registry oracle, which
@@ -717,7 +749,7 @@ def test_star_recall_matches_exhaustive_on_near_dups(spark):
     rng.shuffle(rows)  # ids not grouped -> bucket minima are arbitrary
     docs = spark.createDataFrame(rows, "doc_id int, text string")
 
-    kw = dict(n=2, n_hashes=16, band_size=2, threshold=0.5)
+    kw = dict(n=2, threshold=0.5)
     star = dedup_canonical(
         docs, minhash_lsh_edges(docs, "doc_id", "text", **kw)
     )
